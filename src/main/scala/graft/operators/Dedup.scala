@@ -263,9 +263,8 @@ object Dedup {
     * full shuffle per hop; the jump step collapses label paths
     * geometrically, so convergence is O(log diameter) rounds. Each
     * round is two shuffles keyed by vertex/label id, and stops when no
-    * label changed; `localCheckpoint` cuts the growing lineage each
-    * round (on a cluster prefer `checkpoint` with a checkpoint dir for
-    * fault tolerance).
+    * label changed. The rounds run on [[Fixpoint.run]], whose scaladoc
+    * has the checkpoint lifecycle and the fault-tolerance trade.
     *
     * Input: `vertices` with column `id`; `edges` with columns
     * (`a_id`, `b_id`). Output: (`id`, `cluster_id`). */
@@ -282,34 +281,6 @@ object Dedup {
     val sym = edges.select(col("a_id").as("src"), col("b_id").as("dst"))
       .union(edges.select(col("b_id").as("src"), col("a_id").as("dst")))
       .persist()
-    // Convergence probe: labels only ever decrease (least), so the label
-    // sum is strictly monotone while anything changes. The per-round sum
-    // rides the jump's own eager-checkpoint job via observe() (round
-    // 15 — the separate labelSum traversal was one extra aggregate job
-    // per round); the seed's sum is the one explicit aggregate left.
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val s = df.agg(sum(col("cluster_id").cast(DecimalType(38, 0))).as("s"))
-        .first().getDecimal(0)
-      if (s == null) java.math.BigDecimal.ZERO else s // no edges at all
-    }
-    // observe()-delivered decimal sum, with the same fail-loudly rules
-    // as GraphIterate.requireLongMetric: a NULL sum (zero rows) is a
-    // legitimate 0; a missing or non-decimal metric means the
-    // CollectMetrics node was lost and silently faking convergence
-    // would return wrong clusters.
-    def requireDecimalMetric(obs: org.apache.spark.sql.Observation,
-        key: String): java.math.BigDecimal =
-      obs.get.get(key) match {
-        case Some(d: java.math.BigDecimal) => d
-        case Some(null) => java.math.BigDecimal.ZERO
-        case Some(other) => throw new IllegalStateException(
-          s"observe() metric '$key' delivered as ${other.getClass.getName} " +
-            s"($other), expected java.math.BigDecimal — the convergence " +
-            "probe cannot be trusted")
-        case None => throw new IllegalStateException(
-          s"observe() metric '$key' missing from ${obs.get.keySet} — the " +
-            "CollectMetrics node was lost; refusing to fake convergence")
-      }
     // Iterate only over vertices that appear in an edge: a pair-free
     // vertex can never change its label, and near-dup graphs are sparse
     // (most of a corpus is in no pair), so the per-round shuffle domain
@@ -325,13 +296,14 @@ object Dedup {
     // on the near-dup fixtures (components are mostly pairs; the jump
     // round already collapses them), so the extra aggregate work per
     // seed buys nothing. Plain distinct() seeding restored.
-    var labels = sym.select(col("src").as("id")).distinct()
+    val seed = sym.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("cluster_id"))
-      .localCheckpoint(false)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
+    // Convergence probe: labels only ever decrease (least), so the label
+    // sum is strictly monotone while anything changes — converged once
+    // it stops moving.
+    val (clusters, rounds) = Fixpoint.run(seed,
+        sum(col("cluster_id").cast(DecimalType(38, 0))),
+        java.math.BigDecimal.ZERO, Fixpoint.Stable, maxIter) { labels =>
       // UNION-propagate (round 15): the per-vertex neighbor-min rides
       // ONE min-aggregate fed by the edge-join contributions unioned
       // with the current labels — replacing the previous round shape's
@@ -358,30 +330,18 @@ object Dedup {
       // pointer jump: follow the label one more hop (its own current
       // label), halving every label path — labels only decrease, so
       // the convergence probe stays monotone
-      val obs = org.apache.spark.sql.Observation()
-      val updated = propagated.alias("p")
+      propagated.alias("p")
         .join(propagated.select(col("id").as("cluster_id"),
           col("cluster_id").as("jump")).alias("j"), Seq("cluster_id"), "left")
         .select(col("id"),
           least(col("cluster_id"), coalesce(col("jump"), col("cluster_id")))
             .as("cluster_id"))
-        .observe(obs, sum(col("cluster_id").cast(DecimalType(38, 0))).as("s"))
-        // EAGER: the checkpoint's own action is the round's one job and
-        // the observation completes with it (GraphIterate's pattern —
-        // a lazy checkpoint + separate aggregate action would lose the
-        // metric and pay an extra per-round traversal)
-        .localCheckpoint(true)
-      val newSum = requireDecimalMetric(obs, "s")
-      labels = updated
-      converged = newSum.compareTo(prevSum) == 0
-      prevSum = newSum
-      i += 1
     }
     sym.unpersist()
     (vertices.select(col("id"))
-      .join(labels, Seq("id"), "left")
+      .join(clusters, Seq("id"), "left")
       .select(col("id"),
-        coalesce(col("cluster_id"), col("id")).as("cluster_id")), i)
+        coalesce(col("cluster_id"), col("id")).as("cluster_id")), rounds)
   }
 
   /** SemDeDup-style semantic dedup (public recipe: k-means-cluster the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -8,24 +8,21 @@ import org.apache.spark.sql.types.DecimalType
   * fixed-round demos in [[GraphQueries]]. Same per-round plan shapes
   * (one equi-join + one aggregate keyed on node ids, never a global
   * window or collect), but the round count comes from a convergence
-  * probe instead of an unrolled constant, the
-  * [[Dedup.connectedComponents]] pattern:
-  *  - each round's output is checkpointed and ONE action materializes
-  *    it — one Spark job per round, round n+1 reading round n's
-  *    checkpointed blocks instead of re-deriving the whole lineage
-  *    chain;
-  *  - the probe metric (changed-label count for LPA, L1 rank delta for
-  *    PageRank) is FUSED into that same job via `observe()` (round 10):
-  *    the previous state is LEFT-joined into the round plan and the
-  *    delta aggregates in a `CollectMetrics` accumulator — no separate
-  *    probe traversal, no post-join aggregate exchange, no second
-  *    collect; `sum` ignoring NULLs makes the left join's delta
-  *    bit-identical to the old inner-join probe while the state keeps
-  *    every step-output row exactly as before. k-core's probe is the
-  *    bare edge count itself — already the minimal materializing
-  *    action, nothing to fuse;
-  *  - either way the probe is node-table-sized — cheap at any graph
-  *    size because the iterated state is node-sized, ≪ edges;
+  * probe instead of an unrolled constant. Every loop runs on
+  * [[Fixpoint.run]], whose scaladoc has the one-job-per-round
+  * checkpoint, the checkpoint lifecycle and the fault-tolerance trade:
+  *  - the probe (changed-label count for LPA, improved-distance count
+  *    for SSSP, L1 rank delta for PageRank) LEFT-joins the previous
+  *    state into the round plan, so the state keeps every step-output
+  *    row; k-core's probe is the bare edge count. Either way the probe
+  *    is node-table-sized — cheap at any graph size because the
+  *    iterated state is node-sized, ≪ edges;
+  *  - static inputs are materialized ONCE at entry, pre-partitioned on
+  *    the per-round join key: the checkpointed blocks keep their
+  *    partitioning, so each round shuffles only the node-sized
+  *    aggregate instead of re-deriving and re-exchanging the edge list
+  *    (at fixture scale this halved the per-round cost; at real graph
+  *    scale the edge list would dominate everything);
   *  - `maxRounds` caps runaway iteration: synchronous LPA can
   *    oscillate forever on bipartite structure, and integer PageRank
   *    provably never reaches delta == 0 in general (floor division
@@ -33,74 +30,24 @@ import org.apache.spark.sql.types.DecimalType
   *    L1 delta 11 µ-units on the [[GraphQueries]] fixture), which is
   *    WHY the criterion is `delta <= eps`, not exact equality.
   *
-  * Checkpoint lifecycle matches graph_kcore's: per-call blocks are
-  * transient, freed by Spark's ContextCleaner when the frames are
-  * collected — nothing here registers in the shared [[StageCaches]].
-  *
-  * Fault-tolerance trade (guide §5, named explicitly): localCheckpoint
-  * truncates lineage onto executor-local storage, so on a CLUSTER an
-  * executor loss mid-loop aborts the job instead of recomputing — the
-  * round state would have to be rebuilt from round 0. The alternatives
-  * are a reliable `checkpoint` to a checkpoint dir (adds a distributed
-  * write per round — the right call for long multi-hour fixpoints) or
-  * `persist(MEMORY_AND_DISK)` (keeps lineage, but the lineage GROWS
-  * per round, which is the O(rounds²) re-planning problem checkpointing
-  * exists to cut, and CacheManager entries leak without an explicit
-  * unpersist point). For these node-sized states recomputing a lost
-  * round is cheap and restarts are rare; production deployments of the
-  * multi-hour variants should pass a checkpoint dir and swap the two
-  * calls — the loop structure is unchanged.
-  *
-  * Each operator returns (result, rounds) — rounds is the number of
-  * iteration steps executed INCLUDING the final confirming/accepted
-  * round, so callers (and GraphSpec) can assert convergence really was
-  * probe-driven rather than a round-count coincidence. */
+  * Each operator returns (result, rounds), rounds counted as in
+  * [[Fixpoint.run]]. */
 object GraphIterate {
-
-  /** Read an `observe()` metric that MUST be delivered as a Long.
-    * Distinguishes the two look-alike cases a silent `getOrElse(0L)`
-    * would conflate: a metric row whose sum is NULL (the aggregate ran
-    * over zero rows — legitimately "no change", converged) versus the
-    * metric being ABSENT or non-Long (a lost CollectMetrics node or a
-    * metric-type change across Spark versions), which must FAIL loudly —
-    * coercing it to 0 would silently declare immediate convergence and
-    * return a wrong fixpoint. */
-  private[operators] def requireLongMetric(
-      obs: org.apache.spark.sql.Observation, key: String): Long =
-    obs.get.get(key) match {
-      case Some(l: java.lang.Long) => l.longValue()
-      case Some(null) => 0L // sum over empty input — genuine convergence
-      case Some(other) => throw new IllegalStateException(
-        s"observe() metric '$key' delivered as ${other.getClass.getName} " +
-          s"($other), expected Long — the convergence probe cannot be trusted")
-      case None => throw new IllegalStateException(
-        s"observe() metric '$key' missing from ${obs.get.keySet} — the " +
-          "CollectMetrics node was lost; refusing to fake convergence")
-    }
+  import Fixpoint.{Reached, Stable}
 
   /** k-core: peel nodes with degree < k until no node drops (edge
     * count unchanged — edges strictly decrease while peeling, so an
     * unchanged count IS the fixpoint). Input `adj` must be symmetric
     * `(node, nbr)`. Returns the surviving adjacency. */
   def kCoreFixpoint(adj0: DataFrame, k: Int,
-      maxRounds: Int = 100): (DataFrame, Int) = {
-    var adj = adj0.localCheckpoint(false)
-    var m = adj.count()
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxRounds) {
+      maxRounds: Int = 100): (DataFrame, Int) =
+    Fixpoint.run(adj0, count(lit(1)), 0L, Stable, maxRounds) { adj =>
       val alive = adj.groupBy("node").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select("node")
-      val next = adj.join(alive, "node")
+      adj.join(alive, "node")
         .join(alive.withColumnRenamed("node", "nbr"), "nbr")
         .select("node", "nbr")
-        .localCheckpoint(false)
-      val m2 = next.count()
-      done = m2 == m
-      adj = next; m = m2; rounds += 1
     }
-    (adj, rounds)
-  }
 
   /** Synchronous label propagation until labels stabilize (changed
     * count == 0). Tie-break: most-frequent neighbor label, smallest
@@ -110,56 +57,20 @@ object GraphIterate {
     * production run caps rounds and takes the last iterate. */
   def labelPropFixpoint(adj0: DataFrame,
       maxRounds: Int = 50): (DataFrame, Int) = {
-    // The adjacency is STATIC across rounds: materialize it ONCE at
-    // entry, pre-partitioned on the per-round join key (nbr), instead
-    // of re-deriving the caller's whole input lineage every round. The
-    // checkpointed blocks keep their partitioning, so the edge side of
-    // each round's join needs no exchange either — each round shuffles
-    // only the node-sized aggregate. (At fixture scale this halved the
-    // measured per-round cost; at real graph scale re-deriving the
-    // edge list per round would dominate everything.)
     val adj = adj0.repartition(col("nbr")).localCheckpoint(false)
-    // Round 15 REVERT of the round-14 probe fusion (prev label riding
-    // the vote table as a null-vote tagged row): same-window
-    // cross-binary probes showed the fused form ~2× SLOWER on the
-    // sibling fixpoints (pagerank 4.51→8.58 s, sssp 1.40→3.24 s,
-    // min-of-3, fresh JVMs, quiet box) — pushing the prev rows through
-    // the per-round aggregate costs more than the node-sized left-join
-    // it replaced, because the join side is a tiny checkpointed table
-    // while the union inflates the aggregate's input AND disables the
-    // single-pass partial aggregation shape. The separate prev
-    // left-join is restored; the probe still rides the round's one job
-    // via observe().
-    def step(labels: DataFrame): DataFrame =
+    Fixpoint.run(
+      adj.select("node").distinct().withColumn("community", col("node")),
+      sum(when(col("community") =!= col("prev"), 1L).otherwise(0L)), 0L,
+      Reached[Long](_ == 0L), maxRounds, adj) { labels =>
       adj.join(labels.select(col("node").as("lnode"), col("community")),
           col("nbr") === col("lnode"))
         .groupBy("node", "community").agg(count(lit(1)).as("c"))
         .groupBy("node")
         .agg(max(struct(col("c"), (-col("community")).as("nc"))).as("m"))
         .select(col("node"), (-col("m.nc")).as("community"))
-    var labels = adj.select("node").distinct()
-      .withColumn("community", col("node"))
-      .localCheckpoint(false)
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxRounds) {
-      val obs = Observation()
-      val next = step(labels)
         .join(labels.select(col("node"), col("community").as("prev")),
           Seq("node"), "left")
-        .observe(obs, sum(when(col("community") =!= col("prev"), 1L)
-          .otherwise(0L)).as("changed"))
-        .select("node", "community")
-        // EAGER: the checkpoint's own action is the round's one job and
-        // the observation completes with it (a lazy checkpoint + count
-        // LOSES the metric — the count's query no longer contains the
-        // CollectMetrics node, it reads the materialized RDD)
-        .localCheckpoint(true)
-      val changed = requireLongMetric(obs, "changed")
-      done = changed == 0
-      labels = next; rounds += 1
     }
-    (labels, rounds)
   }
 
   /** Single-source shortest paths (unit weights ⇒ BFS levels) iterated
@@ -180,38 +91,26 @@ object GraphIterate {
   def ssspFixpoint(adj0: DataFrame, source: Long,
       maxRounds: Int = 100): (DataFrame, Int) = {
     val adj = adj0.repartition(col("node")).localCheckpoint(false)
-    var dist = adj.sparkSession.range(1)
-      .select(lit(source).as("node"), lit(0L).as("dist"))
-      .localCheckpoint(false)
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxRounds) {
-      val obs = Observation()
-      // Round 15 REVERT of the round-14 probe fusion (prev distance
-      // tagged into the min-aggregate): measured 1.40→3.24 s slower
-      // (same-window cross-binary, min-of-3) — see labelPropFixpoint's
-      // revert comment for the mechanism. The prev left-join returns.
+    Fixpoint.run(
+      adj.sparkSession.range(1).select(lit(source).as("node"), lit(0L).as("dist")),
+      sum(when(col("prev").isNull || col("dist") < col("prev"), 1L)
+        .otherwise(0L)), 0L,
+      Reached[Long](_ == 0L), maxRounds, adj) { dist =>
       val relaxed = adj.join(dist, "node")
         .select(col("nbr").as("node"), (col("dist") + 1L).as("dist"))
-      val next = dist.unionAll(relaxed)
+      dist.unionAll(relaxed)
         .groupBy("node").agg(min("dist").as("dist"))
         .join(dist.select(col("node"), col("dist").as("prev")),
           Seq("node"), "left")
-        .observe(obs, sum(when(col("prev").isNull ||
-          col("dist") < col("prev"), 1L).otherwise(0L)).as("improved"))
-        .select("node", "dist")
-        .localCheckpoint(true) // eager: see labelPropFixpoint's comment
-      val improved = requireLongMetric(obs, "improved")
-      done = improved == 0
-      dist = next; rounds += 1
     }
-    (dist, rounds)
   }
 
   /** Damped PageRank in integer fixed-point micro-units, iterated
     * until the L1 delta between consecutive rank vectors is <= epsMicro
-    * (exact-zero never arrives — see object scaladoc). Input `edges`
-    * is the [[GraphQueries.tradeEdges]] shape `(src, dst, w, outw)`.
+    * (exact-zero never arrives — see object scaladoc). A node that
+    * enters the rank set (NULL `prev`) counts its whole rank as change,
+    * so set churn can never pass for convergence. Input `edges` is the
+    * [[GraphQueries.tradeEdges]] shape `(src, dst, w, outw)`.
     *
     * Arithmetic is the hub-overflow-HARDENED form of
     * [[GraphQueries]]'s fixed-round step: both products that can wrap
@@ -227,17 +126,12 @@ object GraphIterate {
     * oracle still hash-matches bit-for-bit. */
   def pageRankConverged(edges0: DataFrame, epsMicro: Long,
       maxRounds: Int = 60): (DataFrame, Int) = {
-    // Static across rounds — materialize once, partitioned on the
-    // per-round join key (see labelPropFixpoint's comment).
     val edges = edges0.repartition(col("src")).localCheckpoint(false)
-    // Round 15 REVERT of the round-14 probe fusion (prev rank riding
-    // the contribution union as a null-contribution tagged row):
-    // same-window cross-binary probes measured the fused form 4.51→
-    // 8.58 s (min-of-3, fresh JVMs, quiet box) — see
-    // labelPropFixpoint's revert comment for the mechanism. The
-    // separate prev left-join (node-sized, against a checkpointed
-    // table) returns; the probe still rides the round's one job.
-    def step(ranks: DataFrame): DataFrame =
+    Fixpoint.run(
+      edges.select(col("src").as("node")).distinct()
+        .withColumn("r_q", lit(1000000L)),
+      sum(coalesce(abs(col("r_q") - col("prev")), col("r_q"))), 0L,
+      Reached[Long](_ <= epsMicro), maxRounds, edges) { ranks =>
       edges.join(ranks, col("src") === col("node"))
         .select(col("dst"),
           expr("(cast(r_q as decimal(38,0)) * w) div outw").as("c_q"))
@@ -247,23 +141,8 @@ object GraphIterate {
           (lit(150000L) +
             expr("(cast(850000 as decimal(38,0)) * in_q) div 1000000"))
             .as("r_q"))
-    var ranks = edges.select(col("src").as("node")).distinct()
-      .withColumn("r_q", lit(1000000L))
-      .localCheckpoint(false)
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxRounds) {
-      val obs = Observation()
-      val next = step(ranks)
         .join(ranks.select(col("node"), col("r_q").as("prev")),
           Seq("node"), "left")
-        .observe(obs, sum(abs(col("r_q") - col("prev"))).as("delta"))
-        .select("node", "r_q")
-        .localCheckpoint(true) // eager: see labelPropFixpoint's comment
-      val delta = requireLongMetric(obs, "delta")
-      done = delta <= epsMicro
-      ranks = next; rounds += 1
     }
-    (ranks, rounds)
   }
 }

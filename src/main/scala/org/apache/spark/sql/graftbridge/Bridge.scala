@@ -31,7 +31,9 @@ object Bridge {
 
   /** Test-only visibility shims: the extension-builder accessors are
     * `private[sql]`, but a spec needs to assert what a configured
-    * `SparkSessionExtensions` would contribute to a session. */
+    * `SparkSessionExtensions` would contribute to a session; the
+    * listener bus is `private[spark]`, but a spec reading
+    * `getRDDStorageInfo` must first let the status store catch up. */
   def builtPlannerStrategies(ext: org.apache.spark.sql.SparkSessionExtensions,
       spark: org.apache.spark.sql.SparkSession): Seq[org.apache.spark.sql.execution.SparkStrategy] =
     ext.buildPlannerStrategies(spark)
@@ -39,6 +41,8 @@ object Bridge {
       spark: org.apache.spark.sql.SparkSession): Seq[org.apache.spark.sql.catalyst.rules.Rule[
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
     ext.buildOptimizerRules(spark)
+  def awaitListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** `registerFunctions` is `private[sql]` — the production path
     * `spark.sql.extensions` uses to install `injectFunction` entries
@@ -55,6 +59,14 @@ object Bridge {
     * `UnsafeExternalRowSorter`). */
   def pageSizeBytes: Long =
     org.apache.spark.SparkEnv.get.memoryManager.pageSizeBytes
+
+  /** Drop an RDD's stored blocks the way ContextCleaner does once the
+    * RDD is garbage collected (`SparkContext.unpersistRDD` is
+    * `private[spark]`). `RDD.unpersist` would also log a WARN per call
+    * for a local checkpoint, which a loop releasing every superseded
+    * round would repeat once per round. */
+  def unpersistRdd(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
   /** Collect matching nodes across the WHOLE executed tree, descending
     * through the AQE wrappers (`AdaptiveSparkPlanExec.executedPlan`,

@@ -110,12 +110,12 @@ class DedupSpec extends SparkTestBase {
     val (labels, rounds) = Dedup.connectedComponentsCounted(verts, edges)
     assert(labels.filter(col("cluster_id") =!= 0L).count() == 0)
     assert(labels.count() == 200)
-    // round-count pin (round 15): propagate+jump collapses a diameter-d
-    // path in O(log d) rounds — 10 on this 200-chain when it landed.
-    // The bound guards the loop's convergence SHAPE: pure edge
-    // propagation would blow straight past it (199 rounds), and a
-    // broken probe would stop at 1.
-    assert(rounds > 1 && rounds <= 12, s"expected O(log d) rounds, got $rounds")
+    // round-count pin: propagate+jump collapses a diameter-d path in
+    // O(log d) rounds — exactly 8 on this 200-chain (7 changing + 1
+    // confirming). Pure edge propagation would need 199 rounds and a
+    // broken probe would stop at 1; pinning the exact count also
+    // catches any refactor that shifts the label trajectory.
+    assert(rounds == 8, s"expected 8 rounds, got $rounds")
   }
 
   test("semanticClusters bucketCap: an oversized bucket skips pairing, " +

@@ -81,31 +81,55 @@ class GraphIterateSpec extends SparkTestBase {
     assert(reached == Set(0L, 1L, 2L, 3L, 4L), reached.toString)
   }
 
-  test("requireLongMetric: absent metric FAILS loudly (never fakes " +
-      "convergence); null sum-over-empty reads as 0; Long passes through") {
+  test("requireMetric: absent metric FAILS loudly (never fakes " +
+      "convergence); null sum-over-empty reads as 0; Long and BigDecimal pass through") {
     import org.apache.spark.sql.Observation
-    import org.apache.spark.sql.functions.{sum, when, lit}
+    import org.apache.spark.sql.types.DecimalType
     import spark.implicits._
     // delivered Long
     val obs1 = Observation()
     Seq(1L, 2L).toDF("x").observe(obs1, sum($"x").as("delta")).collect()
-    assert(GraphIterate.requireLongMetric(obs1, "delta") == 3L)
+    assert(Fixpoint.requireMetric(obs1.get, "delta", 0L) == 3L)
     // a metric that EXISTS but under a different name = the lost-
     // CollectMetrics regression: must throw, not read as converged
     val ex = intercept[IllegalStateException](
-      GraphIterate.requireLongMetric(obs1, "changed"))
+      Fixpoint.requireMetric(obs1.get, "changed", 0L))
     assert(ex.getMessage.contains("missing"))
     // sum over zero matching rows delivers SQL NULL = genuine "no change"
     val obs2 = Observation()
     Seq(1L).toDF("x")
       .observe(obs2, sum(when($"x" > 100L, 1L)).as("changed")).collect()
-    assert(GraphIterate.requireLongMetric(obs2, "changed") == 0L)
+    assert(Fixpoint.requireMetric(obs2.get, "changed", 0L) == 0L)
     // a non-Long delivery (metric-type drift) must also throw
     val obs3 = Observation()
     Seq(1L).toDF("x").observe(obs3, sum(lit(0.5d)).as("changed")).collect()
     val ex3 = intercept[IllegalStateException](
-      GraphIterate.requireLongMetric(obs3, "changed"))
+      Fixpoint.requireMetric(obs3.get, "changed", 0L))
     assert(ex3.getMessage.contains("expected Long"))
+    // the CC label sum: a DECIMAL(38,0) delivered as java.math.BigDecimal
+    val zero = java.math.BigDecimal.ZERO
+    val obs4 = Observation()
+    Seq(4L, 5L).toDF("x")
+      .observe(obs4, sum($"x".cast(DecimalType(38, 0))).as("s")).collect()
+    assert(Fixpoint.requireMetric(obs4.get, "s", zero) == new java.math.BigDecimal(9))
+    val ex4 = intercept[IllegalStateException](
+      Fixpoint.requireMetric(obs1.get, "delta", zero))
+    assert(ex4.getMessage.contains("expected BigDecimal"))
+  }
+
+  test("pageRankConverged counts a node entering the rank set as change") {
+    import spark.implicits._
+    // 0<->1 plus 0->2: node 2 is a sink, absent from the seed (src
+    // nodes only), so round 1 gives it a NULL prev. Round 1's delta is
+    // 425000 on nodes 0/1 plus node 2's whole 575000 entering rank;
+    // ignoring the newcomer would stop at round 1 under eps 500000.
+    // Round 2 moves only node 0 (1000000 -> 638750), delta 361250.
+    val edges = Seq((0L, 1L, 1L, 2L), (0L, 2L, 1L, 2L), (1L, 0L, 1L, 1L))
+      .toDF("src", "dst", "w", "outw")
+    val (ranks, rounds) = GraphIterate.pageRankConverged(edges, epsMicro = 500000L)
+    assert(rounds == 2, s"set churn read as convergence: stopped at $rounds")
+    assert(ranks.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(0L -> 638750L, 1L -> 575000L, 2L -> 575000L))
   }
 
   test("kCoreFixpoint on the co-purchase graph agrees with the fixed-round demo once both converge") {
