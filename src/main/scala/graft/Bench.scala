@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -62,10 +63,16 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .filter(_.nonEmpty)
+    // classes Janino compiled during each query's k passes; passes after
+    // the first should add none, so a count that grows with k means the
+    // codegen cache is evicting
+    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .flatMap { case (name, fn) =>
+      val compiled0 = Bridge.codegenCompiles
       val passes = (1 to k).map(_ => timeOnce(fn))
+      compiles(name) = Bridge.codegenCompiles - compiled0
       passes.collectFirst { case Left(err) => err } match {
         case Some(err) =>
           System.err.println(s"[bench] $name FAILED: $err")
@@ -104,7 +111,12 @@ object Bench {
       "scalar_bitwise", "scalar_case_when", "scalar_array", "scalar_map",
       "scalar_datetime", "scalar_conditional",
       "set_union", "set_intersect", "set_except", "set_union_all")
-    val loadIndex = mins.collect { case (n, t) if controlNames(n) => t }.sum
+    val controls = mins.collect { case (n, t) if controlNames(n) => t }
+    val loadIndex = controls.sum
+    // the stdout line keeps its historical sum; the artifact says how
+    // many controls it covers and has no value unless all of them ran
+    val loadIndexJson =
+      if (controls.size == controlNames.size) fmt(loadIndex) else "null"
     val headline = mins.sortBy(-_._2).take(20)
     val failedJson = failed
       .map { case (n, e) => s"${jesc(n)}:${jesc(e)}" }.mkString("{", ",", "}")
@@ -120,11 +132,14 @@ object Bench {
       java.nio.file.Files.writeString(dir.resolve("bench_full.json"),
         s"""{"total":${fmt(total)},"k":$k,"n_queries":${mins.size},""" +
           s""""pass1_total":${fmt(pass1Total)},""" +
-          s""""load_index":${fmt(loadIndex)},""" +
+          s""""load_index":$loadIndexJson,""" +
+          s""""load_index_controls":${controls.size},""" +
           s""""queries":${json(mins)},""" +
           s""""queries_median":${json(results.map { case (n, ts) => (n, median(ts)) })},""" +
           s""""queries_max":${json(results.map { case (n, ts) => (n, ts.max) })},""" +
           s""""queries_pass1":${json(results.map { case (n, ts) => (n, ts.head) })},""" +
+          s""""codegen_compiles":${compiles.map { case (n, c) => "\"" + n + "\":" + c }
+            .mkString("{", ",", "}")},""" +
           s""""noisy":${noisy.map(jesc).mkString("[", ",", "]")},""" +
           s""""failed":$failedJson,"sf":"$sfDir","_meta":$meta}""")
     } catch { case _: Throwable => () }

@@ -89,11 +89,14 @@ object GraftSession {
     * (the ANN shared stages, the dedup CC labels, the graph shared
     * stages) without stopping the session — call when a long-lived
     * session is done with this library, or before switching corpora.
-    * Blocking, so those cache blocks are gone on return. Out of scope:
-    * per-call transient localCheckpoint blocks (e.g. graph_kcore's
-    * intermediate peel rounds, StreamingCuration's per-batch frames) —
-    * those belong to individual invocations and are reclaimed by
-    * Spark's ContextCleaner once the frames are garbage collected. */
+    * Blocking, so those cache blocks are gone on return. Per-call loop
+    * state is not this method's job: [[graft.operators.Fixpoint.run]]
+    * already drops each superseded round's checkpoint and its static
+    * inputs as the loop runs, so a converged fixpoint leaves only the
+    * frame it returns. Out of scope are the frames a call hands back
+    * (a fixpoint's result, StreamingCuration's per-batch slices): they
+    * belong to the caller and are reclaimed by Spark's ContextCleaner
+    * once garbage collected. */
   def release(spark: SparkSession): Unit = {
     graft.operators.Similarity.releaseStages(spark)
     graft.operators.DedupQueries.releaseStages(spark)
@@ -149,5 +152,16 @@ object GraftSession {
     // gets its broadcast join, measured rather than guessed.
     .config("spark.sql.autoBroadcastJoinThreshold", (16L * 1024 * 1024).toString)
     .config("spark.sql.adaptive.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
+    // Janino's class cache is JVM-global and LRU, 100 entries by default.
+    // The 7-query benchmark pass alone needs 153 distinct generated
+    // classes, always in the same order, so at 100 each was evicted
+    // before its next use and every warm pass recompiled 146 of them. A
+    // graft.Bench session over all 256 queries at sf0.001 (k = 3)
+    // compiles 3,035 classes and evicts none at this cap. At the end of
+    // that session (4 vCPUs, -Xmx3g) the JVM had committed, against the
+    // default cap, 14 MB more metaspace (2 MB of it class space) and
+    // 8 MB more code cache. Static conf: read once, when the JVM
+    // compiles its first generated class.
+    .config("spark.sql.codegen.cache.maxEntries", "4096")
   }
 }

@@ -166,6 +166,40 @@ object SketchImpl {
     dot
   }
 
+  /** `size(array_intersect(a, b))` for two string arrays, without
+    * building the intersection: the number of distinct strings in both,
+    * plus one if both hold a NULL. Strings compare by bytes (binary
+    * collation), as `array_intersect` does. Hashes the smaller side
+    * once and probes with the other; a hit is removed from the set so a
+    * duplicate on the probe side counts once. Built-in
+    * `array_intersect` has no generated code for strings: it boxes
+    * every element through a hash set and copies the result array only
+    * for `size` to read its length. */
+  def intersectCount(a: ArrayData, b: ArrayData): Int = {
+    val (small, large) =
+      if (a.numElements() <= b.numElements()) (a, b) else (b, a)
+    val ns = small.numElements()
+    if (ns == 0) return 0
+    val set = new java.util.HashSet[UTF8String](
+      math.max(16, (ns / 0.75).toInt + 1))
+    var smallNull = false
+    var i = 0
+    while (i < ns) {
+      if (small.isNullAt(i)) smallNull = true else set.add(small.getUTF8String(i))
+      i += 1
+    }
+    val nl = large.numElements()
+    var count = 0
+    i = 0
+    while (i < nl) {
+      if (large.isNullAt(i)) {
+        if (smallNull) { count += 1; smallNull = false }
+      } else if (set.remove(large.getUTF8String(i))) count += 1
+      i += 1
+    }
+    count
+  }
+
   /** Distinct character n-gram shingles in first-occurrence order —
     * bit-identical to
     * `array_distinct(transform(sequence(1, length(s)-n+1), i -> substr(s, i, n)))`
@@ -308,6 +342,34 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** intersect_count(array<string>, array<string>) → int: exactly
+  * `size(array_intersect(a, b))` — NULL elements and duplicates
+  * included, NULL when either array is NULL — counted by a static
+  * [[SketchImpl.intersectCount]] call instead of the interpreted
+  * intersection the built-in takes for strings. Binary collation only:
+  * other collations compare strings differently and fail the type
+  * check. */
+case class IntersectCount(left: Expression, right: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "intersect_count"
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"intersect_count requires two ARRAY<STRING>, got $other")
+    }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SketchImpl.intersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.SketchImpl.intersectCount($a, $b)")
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): IntersectCount =
+    copy(left = newLeft, right = newRight)
+}
+
 /** char_shingles(string, n) → array<string>: distinct character n-grams
   * in first-occurrence order (empty for texts shorter than n) — the
   * single-pass form of
@@ -358,6 +420,8 @@ object SketchExpressions {
     Bridge.column(CosineSim(Bridge.expression(a), Bridge.expression(b)))
   def dot_product(a: Column, b: Column): Column =
     Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
+  def intersect_count(a: Column, b: Column): Column =
+    Bridge.column(IntersectCount(Bridge.expression(a), Bridge.expression(b)))
   def char_shingles(c: Column, n: Int): Column =
     Bridge.column(Shingles(Bridge.expression(c), n))
 }

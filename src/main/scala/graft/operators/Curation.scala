@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{functions, Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.SketchExpressions
 
 /** Training-data curation library: deterministic dataset splitting,
   * C4-style quality gating, and per-source quota sampling — the
@@ -211,7 +212,7 @@ object Curation {
       .join(broadcast(bSets.select(col("doc_id").as("bench_id"),
         col("shs").as("sb"))), Seq("bench_id"))
       .select(col("doc_id"), col("bench_id"),
-        size(array_intersect(col("st"), col("sb"))).cast("long").as("n_inter"),
+        SketchExpressions.intersect_count(col("st"), col("sb")).cast("long").as("n_inter"),
         size(col("st")).cast("long").as("n_train"),
         size(col("sb")).cast("long").as("n_bench"))
       .filter(lit(den) * col("n_inter") >= lit(num) * (col("n_train") + col("n_bench")))

@@ -97,7 +97,7 @@ object Dedup {
         .hint("merge"), Seq("a_id"))
       .join(shingles.select(col("doc_id").as("b_id"), col("shs").as("sb"))
         .hint("merge"), Seq("b_id"))
-      .filter(lit(den) * size(array_intersect(col("sa"), col("sb"))) >=
+      .filter(lit(den) * SketchExpressions.intersect_count(col("sa"), col("sb")) >=
         lit(num) * (size(col("sa")) + size(col("sb"))))
       .select("a_id", "b_id")
 
@@ -157,7 +157,7 @@ object Dedup {
         .hint("merge"), Seq("a_id"))
       .join(sets.select(col("doc_id").as("b_id"), col("shs").as("sb"))
         .hint("merge"), Seq("b_id"))
-      .filter(lit(den) * size(array_intersect(col("sa"), col("sb"))) >=
+      .filter(lit(den) * SketchExpressions.intersect_count(col("sa"), col("sb")) >=
         lit(num) * least(size(col("sa")), size(col("sb"))))
       .select(col("a_id"), col("b_id"),
         when(size(col("sa")) <= size(col("sb")), col("a_id"))

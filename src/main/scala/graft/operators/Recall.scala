@@ -62,7 +62,7 @@ object Recall {
       val a = sets.select(col("doc_id").as("a_id"), col("shs").as("sa"))
       val b = sets.select(col("doc_id").as("b_id"), col("shs").as("sb"))
       val truth = a.join(broadcast(b), col("a_id") < col("b_id"))
-        .filter(lit(den) * size(array_intersect(col("sa"), col("sb"))) >=
+        .filter(lit(den) * SketchExpressions.intersect_count(col("sa"), col("sb")) >=
           lit(num) * (size(col("sa")) + size(col("sb"))))
         .select("a_id", "b_id")
       val banded = Dedup.bandedMinhash(sets, numHashes, bands)

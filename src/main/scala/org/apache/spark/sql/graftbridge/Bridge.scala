@@ -68,6 +68,11 @@ object Bridge {
   def unpersistRdd(rdd: org.apache.spark.rdd.RDD[_]): Unit =
     rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
+  /** Generated classes Janino has compiled in this JVM so far (cache
+    * hits do not count). `CodegenMetrics` is `private[spark]`. */
+  def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Collect matching nodes across the WHOLE executed tree, descending
     * through the AQE wrappers (`AdaptiveSparkPlanExec.executedPlan`,
     * `QueryStageExec.plan`) that hide the real operators from a plain
