@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import graft.GraftSession
 import graft.catalog.Catalog
 import graft.config.Dialect
-import graft.copy.{CopyPlanner, DataCopier}
+import graft.copy.DataCopier
 
 /** The reverse conversion direction (the reference converts both ways —
   * README.md:7-8): JDBC source → parquet destination, with PK-range
@@ -13,13 +13,10 @@ import graft.copy.{CopyPlanner, DataCopier}
   *
   * Usage: ExportApp <jdbcUrl> <outDir>
   *
-  * For each user table: introspect (S3–S5) → derive partition bounds
-  * from the PK's min/max (the planner work the reference does with
-  * COUNT(*) + offset math, done here with one bounds query) → partitioned
-  * `spark.read.jdbc` → parquet write. Tables without a single numeric PK
-  * fall back to an unpartitioned read (correct, just serial — the
-  * composite-PK scale path is predicate partitioning via
-  * CopyPlanner.lexRangePredicate).
+  * For each user table: introspect (S3–S5) → `DataCopier.readJdbc` (the
+  * `graft-jdbc` source probes the PK's split points on the database and
+  * reads one PK range per partition, composite PKs included) → parquet
+  * write. Tables without a PK read as one partition.
   */
 object ExportApp {
   def main(args: Array[String]): Unit = {
@@ -35,25 +32,14 @@ object ExportApp {
     val conn = DriverManager.getConnection(url)
     val specs = try {
       Catalog.listTables(conn, Dialect.Derby).map { case (schema, t) =>
-        val spec = Catalog.introspectTable(conn, schema, t)
-        // partition bounds for single numeric PKs: one min/max query
-        val bounds = spec.primaryKey match {
-          case Seq(pk) =>
-            val rs = conn.createStatement()
-              .executeQuery(s"SELECT MIN($pk), MAX($pk) FROM ${schema.fold(t)(s => s"$s.$t")}")
-            if (rs.next() && rs.getObject(1) != null)
-              Some((rs.getLong(1), rs.getLong(2)))
-            else None
-          case _ => None
-        }
-        (spec, bounds)
+        Catalog.introspectTable(conn, schema, t)
       }
     } finally conn.close()
 
     val props = new java.util.Properties()
-    specs.foreach { case (spec, bounds) =>
+    specs.foreach { spec =>
       val df = DataCopier.readJdbc(spark, url, spec, props,
-        numPartitions = cpus.toInt, pkBounds = bounds)
+        numPartitions = cpus.toInt, pkBounds = None)
       val n = df.count()
       df.write.mode("overwrite").parquet(s"$outDir/${spec.name.toLowerCase}.parquet")
       println(s"[export] ${spec.name}: $n rows, " +

@@ -49,37 +49,4 @@ object CopyPlanner {
     sizes.scanLeft(0L)(_ + _).zip(sizes).map { case (begin, n) => OffsetRange(begin, n) }
       .filter(_.numRecords > 0)
   }
-
-  /** P4 (corrected): true lexicographic tuple-range predicate over a
-    * composite PK — `(lo, hi)` inclusive bounds, as SQL usable both in
-    * JDBC pushdown (`spark.read.jdbc(predicates)`) and DELETE WHERE.
-    * The reference boxes each column independently
-    * (Columns.java:40-52), which is only correct for single-column PKs
-    * (SURVEY §2.2 P4). */
-  def lexRangePredicate(pkCols: Seq[String], lo: Seq[Any], hi: Seq[Any]): String = {
-    def lit(v: Any): String = v match {
-      case s: String => "'" + s.replace("'", "''") + "'"
-      case other => other.toString
-    }
-    def bound(op: String, eq: String, vals: Seq[Any]): String = {
-      // (a > v1) OR (a = v1 AND b > v2) OR ... (last level uses `eq`)
-      val disjuncts = vals.indices.map { i =>
-        val eqs = (0 until i).map(j => s"${pkCols(j)} = ${lit(vals(j))}")
-        val cmp = if (i == vals.length - 1) eq else op
-        (eqs :+ s"${pkCols(i)} $cmp ${lit(vals(i))}").mkString("(", " AND ", ")")
-      }
-      disjuncts.mkString("(", " OR ", ")")
-    }
-    s"${bound(">", ">=", lo)} AND ${bound("<", "<=", hi)}"
-  }
-
-  /** Single-column numeric-PK partition options for `spark.read.jdbc` —
-    * replaces the reference's O(n²) LIMIT/OFFSET pagination with range
-    * predicates (SURVEY §2.1 S1). */
-  def jdbcPartitionOptions(pkCol: String, min: Long, max: Long,
-      numPartitions: Int): Map[String, String] = Map(
-    "partitionColumn" -> pkCol,
-    "lowerBound" -> min.toString,
-    "upperBound" -> (max + 1).toString,
-    "numPartitions" -> math.max(numPartitions, 1).toString)
 }

@@ -14,8 +14,9 @@ import graft.types.TypeMapper
 final case class CopyReport(records: Long, bytes: Long, elapsedMillis: Long)
 
 /** The Spark heart of the reference's hot path (SURVEY §3.2):
-  * partitioned JDBC/parquet read → identity projection → commit-aware
-  * batched JDBC sink.
+  * partitioned JDBC read (`graft-jdbc`) or parquet read → identity
+  * projection → commit-aware batched JDBC sink. These are the only JDBC
+  * read and write paths of the copy.
   *
   * Mapping: the reference's two-level worker hierarchy (table workers ×
   * upload workers, DataCopier.java:167-190) collapses into Spark's
@@ -32,46 +33,31 @@ final case class CopyReport(records: Long, bytes: Long, elapsedMillis: Long)
   */
 object DataCopier {
 
-  /** Partitioned JDBC source read (S1/S2). Single numeric PK → Spark's
-    * native range partitioning; composite PK → lexicographic-range
-    * predicate array (P4-corrected) derived from a PK-only probe, so
-    * EVERY table with a primary key gets intra-table parallelism — the
-    * reference's universal worker split (GenericJdbcTableWorker.java:42-58).
+  /** Partitioned JDBC source read (S1/S2): one `graft-jdbc` scan with
+    * the spec's PK as the split key. The source probes `numPartitions - 1`
+    * PK boundary tuples on the database (index-served OFFSET/FETCH, no
+    * Spark scan) and reads one lexicographic PK range per partition, so
+    * single-column and composite PKs alike get intra-table parallelism —
+    * the reference's universal worker split
+    * (GenericJdbcTableWorker.java:42-58). A table without a PK, or
+    * `numPartitions <= 1`, reads as one partition. Every entry of `props`
+    * is passed as a source option (connection user/password, the
+    * snapshot-pin keys).
     *
-    * Scale posture: the probe reads only the PK columns (projection is
-    * pushed to the source), and each resulting partition is one pushed
-    * WHERE range — on a 1000-executor cluster a composite-PK fact table
-    * reads with the same parallelism as a numeric-PK one. */
+    * `pkBounds` has no effect: the split points come from the probe, not
+    * from MIN/MAX bounds. It stays only to keep the six-parameter
+    * signature for positional callers. */
   def readJdbc(spark: SparkSession, url: String, spec: TableSpec,
       props: java.util.Properties, numPartitions: Int,
       pkBounds: Option[(Long, Long)]): DataFrame = {
+    import scala.jdk.CollectionConverters._
     val table = spec.schema.map(s => s"$s.${spec.name}").getOrElse(spec.name)
-    pkBounds match {
-      case Some((lo, hi)) if spec.primaryKey.size == 1 =>
-        val opts = CopyPlanner.jdbcPartitionOptions(spec.primaryKey.head, lo, hi, numPartitions)
-        val r = spark.read.format("jdbc")
-          .option("url", url).option("dbtable", table)
-        opts.foldLeft(r)((acc, kv) => acc.option(kv._1, kv._2))
-          .option("user", Option(props.getProperty("user")).getOrElse(""))
-          .load()
-      case _ if spec.primaryKey.nonEmpty && numPartitions > 1 =>
-        // Boundary tuples probed ON the source (O(workers) index-served
-        // OFFSET/FETCH queries — the reference's TableDeleter probe shape,
-        // no Spark scan, no global sort), then one lexicographic range
-        // predicate per partition, each pushed down as that partition's
-        // WHERE clause.
-        val propsMap = {
-          import scala.jdk.CollectionConverters._
-          props.stringPropertyNames.asScala.map(k => k -> props.getProperty(k)).toMap
-        }
-        val splits = graft.delete.DeletePlanner.splitPointsOffset(
-          url, table, spec.primaryKey, numPartitions, propsMap)
-        val predicates = graft.delete.DeletePlanner.rangePredicates(
-          spec.primaryKey, splits)
-        spark.read.jdbc(url, table, predicates.toArray, props)
-      case _ =>
-        spark.read.jdbc(url, table, props)
-    }
+    spark.read.format("graft-jdbc")
+      .options(props.stringPropertyNames.asScala.map(k => k -> props.getProperty(k)).toMap)
+      .option("url", url).option("dbtable", table)
+      .option("pk", spec.primaryKey.mkString(","))
+      .option("partitions", numPartitions.toString)
+      .load()
   }
 
   /** Commit-aware batched INSERT sink (S7 + X3). Runs on executors;

@@ -166,26 +166,33 @@ object DeletePlanner {
     } finally conn.close()
   }
 
+  /** The one SQL literal renderer, shared by the range predicates below
+    * and the graft-jdbc source's pushed filters: doubled quotes for
+    * strings, JDBC escape literals ({ts ...}/{d ...}/{t ...} — every JDBC
+    * driver rewrites these to its dialect) for temporals. None for any
+    * other type. */
+  def sqlLiteral(v: Any): Option[String] = v match {
+    case s: String => Some("'" + s.replace("'", "''") + "'")
+    case t: java.sql.Timestamp => Some(s"{ts '${t.toString}'}")
+    case d: java.sql.Date => Some(s"{d '${d.toString}'}")
+    case t: java.sql.Time => Some(s"{t '${t.toString}'}")
+    case t: java.time.LocalDateTime =>
+      Some(s"{ts '${java.sql.Timestamp.valueOf(t).toString}'}")
+    case d: java.time.LocalDate => Some(s"{d '${d.toString}'}")
+    case n: java.lang.Number => Some(n.toString)
+    case b: java.lang.Boolean => Some(b.toString)
+    case _ => None
+  }
+
   /** Build the per-worker WHERE clauses from split points (half-open
-    * lexicographic ranges; first/last unbounded). Temporal values render
-    * as JDBC escape literals ({ts ...}/{d ...}/{t ...} — every JDBC
-    * driver rewrites these to its dialect); unsupported PK types are
-    * rejected explicitly rather than emitting a broken bare literal. */
+    * lexicographic ranges; first/last unbounded), literals rendered by
+    * [[sqlLiteral]]. Unsupported PK types are rejected explicitly rather
+    * than emitting a broken bare literal. */
   def rangePredicates(pkCols: Seq[String], splits: Seq[Seq[Any]]): Seq[String] = {
-    def lit(v: Any): String = v match {
-      case s: String => "'" + s.replace("'", "''") + "'"
-      case t: java.sql.Timestamp => s"{ts '${t.toString}'}"
-      case d: java.sql.Date => s"{d '${d.toString}'}"
-      case t: java.sql.Time => s"{t '${t.toString}'}"
-      case t: java.time.LocalDateTime =>
-        s"{ts '${java.sql.Timestamp.valueOf(t).toString}'}"
-      case d: java.time.LocalDate => s"{d '${d.toString}'}"
-      case n: java.lang.Number => n.toString
-      case b: java.lang.Boolean => b.toString
-      case other => throw new IllegalArgumentException(
-        s"unsupported PK literal type ${other.getClass.getName} — " +
-          "extend DeletePlanner.rangePredicates or use a different split key")
-    }
+    def lit(v: Any): String = sqlLiteral(v).getOrElse(
+      throw new IllegalArgumentException(
+        s"unsupported PK literal type ${v.getClass.getName} — " +
+          "extend DeletePlanner.sqlLiteral or use a different split key"))
     def cmp(op: String, eq: String, vals: Seq[Any]): String = {
       val disjuncts = vals.indices.map { i =>
         val eqs = (0 until i).map(j => s"${pkCols(j)} = ${lit(vals(j))}")

@@ -1,21 +1,19 @@
 package graft.sources
 
-import java.sql.{DriverManager, ResultSet}
+import java.sql.DriverManager
 import java.util.Properties
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, NamedReference, NullOrdering, SortDirection, SortOrder => V2SortOrder, Transform}
-import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, AggregateFunc, Count, CountStar, Max, Min, Sum}
+import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.delete.DeletePlanner
@@ -40,8 +38,12 @@ import graft.types.TypeMapper
   *  - `SupportsPushDownFilters`: comparison/null filters compile into
   *    each partition's WHERE clause; unsupported ones stay in Spark.
   *
-  * The schema is inferred from a zero-row probe via the shared
-  * [[TypeMapper.sparkType]] JDBC mapping. */
+  * Column identifiers in the SELECT list, pushed filters, aggregates and
+  * top-n are quoted through the URL's `JdbcDialect`. The schema is
+  * inferred from a zero-row probe via the shared [[TypeMapper.sparkType]]
+  * JDBC mapping; rows are decoded by Spark's own JDBC value getters.
+  * This is the only JDBC reader: `DataCopier.readJdbc` is one call to it,
+  * and `DataCopier.writeJdbc` is the only JDBC writer. */
 class GraftJdbcSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-jdbc"
 
@@ -73,25 +75,13 @@ private[sources] object GraftJdbcSource {
     } finally conn.close()
   }
 
-  /** SQL literal rendering for pushed filter values (JDBC escapes for
-    * temporals, doubled quotes for strings). */
-  def lit(v: Any): Option[String] = v match {
-    case s: String => Some("'" + s.replace("'", "''") + "'")
-    case t: java.sql.Timestamp => Some(s"{ts '${t.toString}'}")
-    case d: java.sql.Date => Some(s"{d '${d.toString}'}")
-    case t: java.time.LocalDateTime =>
-      Some(s"{ts '${java.sql.Timestamp.valueOf(t).toString}'}")
-    case d: java.time.LocalDate => Some(s"{d '${d.toString}'}")
-    case n: java.lang.Number => Some(n.toString)
-    case b: java.lang.Boolean => Some(b.toString)
-    case _ => None
-  }
-
   /** Compile a Spark source filter to a WHERE fragment; None = keep it
-    * in Spark. Only plain column references are compiled (no nested). */
-  def compileFilter(f: Filter): Option[String] = {
+    * in Spark. Only plain column references are compiled (no nested);
+    * they are quoted through `dialect`. */
+  def compileFilter(f: Filter, dialect: JdbcDialect): Option[String] = {
     def col(name: String): Option[String] =
-      if (name.contains(".")) None else Some(name)
+      if (name.contains(".")) None else Some(dialect.quoteIdentifier(name))
+    import DeletePlanner.{sqlLiteral => lit}
     f match {
       case EqualTo(a, v) => for (c <- col(a); l <- lit(v)) yield s"$c = $l"
       case GreaterThan(a, v) => for (c <- col(a); l <- lit(v)) yield s"$c > $l"
@@ -107,7 +97,8 @@ private[sources] object GraftJdbcSource {
         if (lits.exists(_.isEmpty)) None
         else col(a).map(c => s"$c IN (${lits.flatten.mkString(", ")})")
       case And(l, r) =>
-        for (a <- compileFilter(l); b <- compileFilter(r)) yield s"($a AND $b)"
+        for (a <- compileFilter(l, dialect); b <- compileFilter(r, dialect))
+          yield s"($a AND $b)"
       case _ => None
     }
   }
@@ -124,6 +115,12 @@ private[sources] case class GraftJdbcOptions(raw: Map[String, String]) {
   val partitions: Int = m.get("partitions").map(_.toInt).getOrElse(1)
   val connProps: Map[String, String] =
     m.view.filterKeys(Set("user", "password")).toMap
+  /** The URL's dialect; registers [[SpannerDialect]] first, so driver
+    * and executors resolve a Spanner URL the same way. */
+  def dialect: JdbcDialect = {
+    SpannerDialect.register()
+    JdbcDialects.get(url)
+  }
   def connect(): java.sql.Connection = {
     val p = new Properties()
     connProps.foreach { case (k, v) => p.setProperty(k, v) }
@@ -132,100 +129,13 @@ private[sources] case class GraftJdbcOptions(raw: Map[String, String]) {
 }
 
 private[sources] case class GraftJdbcTable(tableSchema: StructType,
-    opts: GraftJdbcOptions) extends Table with SupportsRead with SupportsWrite {
+    opts: GraftJdbcOptions) extends Table with SupportsRead {
   override def name(): String = opts.table
   override def schema(): StructType = tableSchema
   override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE)
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new GraftJdbcScanBuilder(tableSchema, opts)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder {
-      override def build(): Write = GraftJdbcWrite(info.schema(), opts)
-    }
-}
-
-/** Batched-INSERT sink (S7) as a V2 BatchWrite: each task opens its own
-  * connection with autocommit off, batches `maxStatementsInOneJdbcBatch`
-  * INSERTs (10k — the reference's batch cadence), and commits ONCE at
-  * task end so a retried task rolls back cleanly via `abort()` instead
-  * of leaving a half-written slice. */
-private[sources] case class GraftJdbcWrite(writeSchema: StructType,
-    opts: GraftJdbcOptions) extends Write with BatchWrite {
-  override def toBatch: BatchWrite = this
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    GraftJdbcWriterFactory(writeSchema, opts)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-private[sources] case class GraftJdbcWriterFactory(writeSchema: StructType,
-    opts: GraftJdbcOptions) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftJdbcDataWriter(writeSchema, opts)
-}
-
-private[sources] case class GraftJdbcCommitMessage(rows: Long)
-  extends WriterCommitMessage
-
-private[sources] class GraftJdbcDataWriter(writeSchema: StructType,
-    opts: GraftJdbcOptions) extends DataWriter[InternalRow] {
-  private val conn = opts.connect()
-  conn.setAutoCommit(false)
-  private val ps = {
-    val cols = writeSchema.fieldNames.mkString(", ")
-    val qs = writeSchema.fieldNames.map(_ => "?").mkString(", ")
-    conn.prepareStatement(s"INSERT INTO ${opts.table} ($cols) VALUES ($qs)")
-  }
-  private val maxBatch = 10000
-  private var inBatch = 0
-  private var total = 0L
-
-  override def write(row: InternalRow): Unit = {
-    var i = 0
-    while (i < writeSchema.length) {
-      val f = writeSchema.fields(i)
-      if (row.isNullAt(i)) {
-        ps.setNull(i + 1, java.sql.Types.NULL)
-      } else f.dataType match {
-        case LongType => ps.setLong(i + 1, row.getLong(i))
-        case IntegerType => ps.setInt(i + 1, row.getInt(i))
-        case ShortType => ps.setShort(i + 1, row.getShort(i))
-        case DoubleType => ps.setDouble(i + 1, row.getDouble(i))
-        case FloatType => ps.setFloat(i + 1, row.getFloat(i))
-        case BooleanType => ps.setBoolean(i + 1, row.getBoolean(i))
-        case StringType => ps.setString(i + 1, row.getUTF8String(i).toString)
-        case d: DecimalType =>
-          ps.setBigDecimal(i + 1,
-            row.getDecimal(i, d.precision, d.scale).toJavaBigDecimal)
-        case TimestampType | TimestampNTZType =>
-          ps.setTimestamp(i + 1, DateTimeUtils.toJavaTimestamp(row.getLong(i)))
-        case DateType =>
-          ps.setDate(i + 1, DateTimeUtils.toJavaDate(row.getInt(i)))
-        case BinaryType => ps.setBytes(i + 1, row.getBinary(i))
-        case other => throw new IllegalArgumentException(
-          s"graft-jdbc cannot write column type $other")
-      }
-      i += 1
-    }
-    ps.addBatch()
-    inBatch += 1; total += 1
-    if (inBatch >= maxBatch) { ps.executeBatch(); inBatch = 0 }
-  }
-
-  override def commit(): WriterCommitMessage = {
-    if (inBatch > 0) ps.executeBatch()
-    conn.commit()
-    GraftJdbcCommitMessage(total)
-  }
-
-  override def abort(): Unit =
-    try conn.rollback() catch { case _: Exception => }
-
-  override def close(): Unit = {
-    try ps.close() catch { case _: Exception => }
-    conn.close()
-  }
 }
 
 private[sources] class GraftJdbcScanBuilder(fullSchema: StructType,
@@ -269,7 +179,7 @@ private[sources] class GraftJdbcScanBuilder(fullSchema: StructType,
            BooleanType => true
       case _ => false
     }
-    val dialect = org.apache.spark.sql.jdbc.JdbcDialects.get(opts.url)
+    val dialect = opts.dialect
     val compiled = orders.toSeq.map { so =>
       (fieldOf(so.expression()), so.direction, so.nullOrdering) match {
         case (Some(f), dir, nulls) if orderUnambiguous(f.dataType) =>
@@ -309,8 +219,9 @@ private[sources] class GraftJdbcScanBuilder(fullSchema: StructType,
   }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+    val dialect = opts.dialect
     val (ok, residual) =
-      filters.partition(f => GraftJdbcSource.compileFilter(f).isDefined)
+      filters.partition(f => GraftJdbcSource.compileFilter(f, dialect).isDefined)
     pushed = ok
     residual // Spark evaluates what the source can't
   }
@@ -329,29 +240,31 @@ private[sources] class GraftJdbcScanBuilder(fullSchema: StructType,
   override def pushAggregation(agg: Aggregation): Boolean = {
     val groups = agg.groupByExpressions.toSeq.map(fieldOf)
     if (groups.exists(_.isEmpty)) return false
+    val dialect = opts.dialect
+    def q(f: StructField): String = dialect.quoteIdentifier(f.name)
     val aggs: Seq[Option[(String, StructField)]] =
       agg.aggregateExpressions.toSeq.zipWithIndex.map {
         case (_: CountStar, i) =>
           Some(("COUNT(*)", StructField(s"agg$i", LongType)))
         case (c: Count, i) if !c.isDistinct =>
           fieldOf(c.column).map(f =>
-            (s"COUNT(${f.name})", StructField(s"agg$i", LongType)))
+            (s"COUNT(${q(f)})", StructField(s"agg$i", LongType)))
         case (m: Min, i) =>
-          fieldOf(m.column).map(f => (s"MIN(${f.name})", f.copy(name = s"agg$i")))
+          fieldOf(m.column).map(f => (s"MIN(${q(f)})", f.copy(name = s"agg$i")))
         case (m: Max, i) =>
-          fieldOf(m.column).map(f => (s"MAX(${f.name})", f.copy(name = s"agg$i")))
+          fieldOf(m.column).map(f => (s"MAX(${q(f)})", f.copy(name = s"agg$i")))
         case (s: Sum, i) if !s.isDistinct =>
           fieldOf(s.column).collect {
             // widen integral sums on the DB side (Derby SUM(INT) is INT)
             case f if f.dataType == LongType || f.dataType == IntegerType =>
-              (s"SUM(CAST(${f.name} AS BIGINT))", StructField(s"agg$i", LongType))
+              (s"SUM(CAST(${q(f)} AS BIGINT))", StructField(s"agg$i", LongType))
             case f if f.dataType == DoubleType =>
-              (s"SUM(${f.name})", StructField(s"agg$i", DoubleType))
+              (s"SUM(${q(f)})", StructField(s"agg$i", DoubleType))
           }
         case _ => None
       }
     if (aggs.exists(_.isEmpty)) return false
-    val gNames = groups.flatten.map(_.name)
+    val gNames = groups.flatten.map(q)
     val gFields = groups.flatten
     aggSql = Some((gNames, aggs.flatten.map(_._1),
       StructType(gFields ++ aggs.flatten.map(_._2))))
@@ -381,7 +294,10 @@ private[sources] case class GraftJdbcScan(required: StructType,
       limit.map(l => s" PushedLimit: $l").getOrElse("") +
       offset.map(o => s" PushedOffset: $o").getOrElse("")
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  /** Planned once per scan: Spark's physical planning copies the
+    * `BatchScanExec` node, and every copy asks for the partitions, so
+    * without the memo each read would run the split probe twice. */
+  private lazy val partitions: Array[InputPartition] = {
     val parts: Seq[String] =
       if (opts.pk.isEmpty || opts.partitions <= 1) Seq("1=1")
       else {
@@ -393,10 +309,14 @@ private[sources] case class GraftJdbcScan(required: StructType,
     parts.map(p => GraftJdbcInputPartition(p): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val dialect = opts.dialect
     GraftJdbcReaderFactory(required,
-      pushed.flatMap(GraftJdbcSource.compileFilter), opts, agg, limit,
-      offset, orderBy)
+      pushed.flatMap(GraftJdbcSource.compileFilter(_, dialect)), opts, agg,
+      limit, offset, orderBy)
+  }
 }
 
 private[sources] case class GraftJdbcInputPartition(predicate: String)
@@ -416,7 +336,8 @@ private[sources] case class GraftJdbcReaderFactory(required: StructType,
 }
 
 /** Executor-side reader: one connection per partition, streaming the
-  * partition's disjoint PK slice (plus pushed filters) as InternalRows.
+  * partition's disjoint PK slice (plus pushed filters) as InternalRows
+  * decoded by Spark's own JDBC getters (`Bridge.jdbcRows`).
   * Before the partition query runs, the URL's JdbcDialect `beforeFetch`
   * hook executes on THIS connection with the source options — the same
   * per-partition contract the stock JDBC source honors, so
@@ -433,11 +354,11 @@ private[sources] class GraftJdbcPartitionReader(required: StructType,
     orderBy: Seq[String] = Nil)
   extends PartitionReader[InternalRow] {
 
-  SpannerDialect.register() // idempotent; executors resolve the URL fresh
+  private val dialect = opts.dialect // executors resolve the URL fresh
   private val conn = opts.connect()
   JdbcHooks.beforeFetchAll(opts.url, conn, opts.raw)
   private val stmt = conn.createStatement()
-  private val rs: ResultSet = {
+  private val rows: Iterator[InternalRow] = {
     val where = (predicate +: filterSql.toSeq).mkString("(", ") AND (", ")")
     val oby = if (orderBy.nonEmpty) s" ORDER BY ${orderBy.mkString(", ")}" else ""
     val off = offset.map(o => s" OFFSET $o ROWS").getOrElse("")
@@ -454,47 +375,19 @@ private[sources] class GraftJdbcPartitionReader(required: StructType,
         val gby = if (groups.nonEmpty) s" GROUP BY ${groups.mkString(", ")}" else ""
         s"SELECT $sel FROM ${opts.table} WHERE $where$gby"
       case None =>
-        s"SELECT ${required.fieldNames.mkString(", ")} FROM ${opts.table}" +
+        val cols = required.fieldNames.map(dialect.quoteIdentifier)
+        s"SELECT ${cols.mkString(", ")} FROM ${opts.table}" +
           s" WHERE $where$oby$off$fetch"
     }
-    stmt.executeQuery(sql)
+    Bridge.jdbcRows(stmt.executeQuery(sql), dialect, required)
   }
+  private var current: InternalRow = _
 
-  override def next(): Boolean = rs.next()
+  override def next(): Boolean =
+    rows.hasNext && { current = rows.next(); true }
 
-  override def get(): InternalRow = {
-    val vals = new Array[Any](required.length)
-    var i = 0
-    while (i < required.length) {
-      val v: Any = required.fields(i).dataType match {
-        case LongType => rs.getLong(i + 1)
-        case IntegerType => rs.getInt(i + 1)
-        case ShortType => rs.getShort(i + 1)
-        case DoubleType => rs.getDouble(i + 1)
-        case FloatType => rs.getFloat(i + 1)
-        case BooleanType => rs.getBoolean(i + 1)
-        case StringType => UTF8String.fromString(rs.getString(i + 1))
-        case d: DecimalType =>
-          val bd = rs.getBigDecimal(i + 1)
-          if (bd == null) null
-          else org.apache.spark.sql.types.Decimal(bd, d.precision, d.scale)
-        case TimestampType | TimestampNTZType =>
-          val ts = rs.getTimestamp(i + 1)
-          if (ts == null) null else DateTimeUtils.fromJavaTimestamp(ts)
-        case DateType =>
-          val dt = rs.getDate(i + 1)
-          if (dt == null) null else DateTimeUtils.fromJavaDate(dt)
-        case BinaryType => rs.getBytes(i + 1)
-        case other => throw new IllegalArgumentException(
-          s"graft-jdbc cannot read column type $other")
-      }
-      vals(i) = if (rs.wasNull()) null else v
-      i += 1
-    }
-    new GenericInternalRow(vals)
-  }
+  override def get(): InternalRow = current
 
-  override def close(): Unit = {
-    rs.close(); stmt.close(); conn.close()
-  }
+  override def close(): Unit =
+    try stmt.close() finally conn.close() // closes the result set too
 }

@@ -54,9 +54,10 @@ object SpannerDialect extends JdbcDialect {
     * (RFC-3339), mirroring the reference's batchReadOnly snapshot switch
     * (DataCopier.java:87-106) — without it, the N parallel partition
     * reads of one table can observe N different database states under
-    * concurrent writes. Pass it as a read option/connection property:
-    * `spark.read.jdbc(url, table, predicates, props)` with
-    * `props.setProperty(SpannerDialect.ReadTimestampProperty, ts)`. */
+    * concurrent writes. Pass it as a read option:
+    * `spark.read.format("graft-jdbc").option(SpannerDialect
+    * .ReadTimestampProperty, ts)`, or as an entry of `DataCopier.readJdbc`'s
+    * `props`. */
   val ReadTimestampProperty = "graft.readTimestamp"
 
   /** Bounded-staleness alternative (seconds) when an exact timestamp

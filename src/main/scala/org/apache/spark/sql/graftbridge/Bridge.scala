@@ -68,6 +68,19 @@ object Bridge {
   def unpersistRdd(rdd: org.apache.spark.rdd.RDD[_]): Unit =
     rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
+  /** Decode a JDBC result set with Spark's own per-type value getters
+    * (`JdbcUtils.resultSetToSparkInternalRows` is `private[spark]`) —
+    * the decoding Spark's `jdbc` source uses. The rows are one reused
+    * mutable row, and the set is closed when exhausted. The
+    * `InputMetrics` is a throwaway: the DataSource V2 scan already counts
+    * the records it reads. */
+  def jdbcRows(rs: java.sql.ResultSet, dialect: org.apache.spark.sql.jdbc.JdbcDialect,
+      schema: org.apache.spark.sql.types.StructType)
+      : Iterator[org.apache.spark.sql.catalyst.InternalRow] =
+    org.apache.spark.sql.execution.datasources.jdbc.JdbcUtils
+      .resultSetToSparkInternalRows(rs, dialect, schema,
+        new org.apache.spark.executor.InputMetrics())
+
   /** Generated classes Janino has compiled in this JVM so far (cache
     * hits do not count). `CodegenMetrics` is `private[spark]`. */
   def codegenCompiles: Long =

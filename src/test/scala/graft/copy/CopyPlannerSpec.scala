@@ -43,35 +43,4 @@ class CopyPlannerSpec extends AnyFunSuite {
       assert(ranges.size <= workers)
     }
   }
-
-  test("lexicographic range predicate matches tuple order (exhaustive 2-col domain)") {
-    val domain = for (a <- 0 to 4; b <- 0 to 4) yield (a, b)
-    val ord = Ordering[(Int, Int)]
-    for (lo <- domain; hi <- domain if ord.lteq(lo, hi)) {
-      // evaluate our predicate's algebra in memory against tuple order
-      domain.foreach { t =>
-        val predSays =
-          (t._1 > lo._1 || (t._1 == lo._1 && t._2 >= lo._2)) &&
-            (t._1 < hi._1 || (t._1 == hi._1 && t._2 <= hi._2))
-        val tupleOrder = ord.gteq(t, lo) && ord.lteq(t, hi)
-        assert(predSays == tupleOrder, s"tuple $t lo=$lo hi=$hi")
-      }
-    }
-    // and the generated SQL references both bounds
-    val sql = CopyPlanner.lexRangePredicate(Seq("a", "b"), Seq(1, 2), Seq(3, 4))
-    assert(sql ==
-      "((a > 1) OR (a = 1 AND b >= 2)) AND ((a < 3) OR (a = 3 AND b <= 4))")
-  }
-
-  test("string PK values are SQL-quoted with escaping") {
-    val sql = CopyPlanner.lexRangePredicate(Seq("k"), Seq("o'brien"), Seq("z"))
-    assert(sql.contains("'o''brien'"))
-  }
-
-  test("jdbc partition options cover inclusive max") {
-    val opts = CopyPlanner.jdbcPartitionOptions("id", 1, 100, 8)
-    assert(opts("lowerBound") == "1")
-    assert(opts("upperBound") == "101") // exclusive upper in Spark JDBC
-    assert(opts("numPartitions") == "8")
-  }
 }

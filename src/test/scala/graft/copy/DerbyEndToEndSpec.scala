@@ -61,12 +61,9 @@ class DerbyEndToEndSpec extends SparkTestBase {
     assert(report.bytes > 0)
 
     // --- stage 3: partitioned JDBC read-back + fidelity (S1) ---------
-    val back = spark.read.format("jdbc")
-      .option("url", url).option("dbtable", "customer")
-      .option("partitionColumn", "c_custkey")
-      .option("lowerBound", "1").option("upperBound", (n + 1).toString)
-      .option("numPartitions", "4")
-      .load()
+    val back = DataCopier.readJdbc(spark, url,
+      spec.copy(schema = None, name = "customer"),
+      new java.util.Properties(), numPartitions = 4, pkBounds = None)
     assert(back.rdd.getNumPartitions == 4)
     assert(back.count() == n)
     // per-column checksum fidelity (A2-style accounting, exact ints)

@@ -68,6 +68,42 @@ class DeletePlannerSpec extends SparkTestBase {
       s"sample plan global-sorts the table:\n$samplePlan")
   }
 
+  test("lexicographic range predicate matches tuple order (exhaustive 2-col domain)") {
+    import spark.implicits._
+    val domain = for (a <- 0 to 4; b <- 0 to 4) yield (a, b)
+    val ord = Ordering[(Int, Int)]
+    val df = domain.toDF("a", "b")
+    // every (lo, hi) pair with lo <= hi: the rendered below / [lo, hi) /
+    // at-or-above predicates, evaluated by Spark, must select exactly the
+    // tuples lexicographic order puts there
+    for (lo <- domain) {
+      val his = domain.filter(ord.gteq(_, lo))
+      val preds = his.flatMap(hi => DeletePlanner.rangePredicates(Seq("a", "b"),
+        Seq(Seq(lo._1, lo._2), Seq(hi._1, hi._2))))
+      df.select(col("a") +: col("b") +: preds.map(expr): _*).collect().foreach { r =>
+        val t = (r.getInt(0), r.getInt(1))
+        his.zipWithIndex.foreach { case (hi, k) =>
+          val want = Seq(ord.lt(t, lo), ord.gteq(t, lo) && ord.lt(t, hi), ord.gteq(t, hi))
+          val got = (0 until 3).map(j => r.getBoolean(2 + 3 * k + j))
+          assert(got == want, s"tuple $t lo=$lo hi=$hi")
+        }
+      }
+    }
+    // and the rendered SQL references both bounds
+    assert(DeletePlanner.rangePredicates(Seq("a", "b"),
+      Seq(Seq(1, 2), Seq(3, 4)))(1) ==
+      "((a > 1) OR (a = 1 AND b >= 2)) AND ((a < 3) OR (a = 3 AND b < 4))")
+  }
+
+  test("string PK values are SQL-quoted with escaping") {
+    import spark.implicits._
+    val preds = DeletePlanner.rangePredicates(Seq("k"), Seq(Seq("o'brien")))
+    assert(preds.forall(_.contains("'o''brien'")))
+    val keys = Seq("a", "o'brien", "o'brien2", "z").toDF("k")
+    assert(preds.map(p => keys.filter(expr(p)).as[String].collect().toSeq) ==
+      Seq(Seq("a"), Seq("o'brien", "o'brien2", "z")))
+  }
+
   test("range predicates render temporal PK literals as JDBC escapes " +
       "and reject unsupported types") {
     val ts = java.sql.Timestamp.valueOf("2024-03-01 12:30:45.5")
