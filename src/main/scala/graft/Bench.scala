@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -27,34 +27,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(GraftSession.masterFor(cpus))
-      .config("spark.sql.shuffle.partitions",
-        GraftSession.shufflePartitionsFor(cpus))
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: session/codegen/parquet-reader init lands here
-    // instead of inflating the alphabetically-first query's slot
-    try SparkEntry.queries("q14_promo_share")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    // malformed K falls back to the default instead of aborting the
-    // whole bench before any query has run
-    val k = math.max(1, sys.env.get("SPARK_GRAFT_BENCH_K")
-      .flatMap(_.toIntOption).getOrElse(3))
+    val spark = GraftSession.start()
+    warmup(spark, sfDir)
+    val k = passes
     // one pass → seconds, or the failure message
-    def timeOnce(fn: (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Either[String, Double] = {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Right((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
+    def timeOnce(fn: (SparkSession, String) => DataFrame): Either[String, Double] =
+      try Right(timePass(fn, spark, sfDir))
+      catch { case e: Throwable =>
         Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(300))
       }
-    }
     // the k passes per query run back-to-back so each query's min sees
     // the same ambient load window
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -88,10 +69,6 @@ object Bench {
     def jesc(s: String): String = JsonUtil.quote(s)
     def json(entries: Seq[(String, Double)]): String = entries
       .map { case (n, v) => "\"" + n + "\":" + fmt(v) }.mkString("{", ",", "}")
-    def median(ts: Seq[Double]): Double = {
-      val s = ts.sorted; val n = s.size
-      if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-    }
     val mins = results.map { case (n, ts) => (n, ts.min) }
     val total = mins.map(_._2).sum
     val pass1Total = results.map(_._2.head).sum
@@ -145,5 +122,33 @@ object Bench {
     } catch { case _: Throwable => () }
     println(line)
     spark.stop()
+  }
+
+  /** Untimed warmup: session/codegen/parquet-reader init lands here
+    * instead of inflating the first timed query's slot. */
+  def warmup(spark: SparkSession, sfDir: String): Unit =
+    try SparkEntry.queries("q14_promo_share")(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    catch { case _: Throwable => () }
+
+  /** Passes per query, SPARK_GRAFT_BENCH_K (default 3); a malformed
+    * value falls back to the default instead of aborting the whole
+    * bench before any query has run. */
+  def passes: Int = math.max(1, sys.env.get("SPARK_GRAFT_BENCH_K")
+    .flatMap(_.toIntOption).getOrElse(3))
+
+  /** One timed pass of a query, plan build included, fully materialized
+    * by a noop-format write → seconds. Throws what the query throws. */
+  def timePass(fn: (SparkSession, String) => DataFrame,
+      spark: SparkSession, sfDir: String): Double = {
+    val t0 = System.nanoTime()
+    fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** True median: the mean of the middle pair when the count is even. */
+  def median(ts: Seq[Double]): Double = {
+    val s = ts.sorted; val n = s.size
+    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-experiment data generator: blow the fact tables of a fixture
@@ -44,13 +44,7 @@ object ScaleUp {
     val Array(src, dest, factorS) = args.take(3)
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit =

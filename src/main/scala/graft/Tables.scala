@@ -131,6 +131,23 @@ object GraftSession {
       case _ => cpus
     }
 
+  /** Local cores for an entry point's session: SPARK_GRAFT_CPUS, 4 when
+    * unset. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The session every main runs on: [[configure]]d, on [[masterFor]]
+    * with [[shufflePartitionsFor]] partitions for [[cpus]], UI off, log
+    * level WARN. */
+  def start(): SparkSession = {
+    val spark = configure(SparkSession.builder()
+      .master(masterFor(cpus))
+      .config("spark.sql.shuffle.partitions", shufflePartitionsFor(cpus))
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def configure(b: SparkSession.Builder): SparkSession.Builder = {
     val withCp = sys.env.get("SPARK_GRAFT_EXECUTOR_CLASSPATH")
       .fold(b)(cp => b.config("spark.executor.extraClassPath", cp))

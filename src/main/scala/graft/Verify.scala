@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,14 +12,7 @@ object Verify {
     if (unknown.nonEmpty)
       System.err.println(s"[verify] WARNING: unknown query name(s) " +
         s"ignored: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(GraftSession.masterFor(cpus))
-      .config("spark.sql.shuffle.partitions",
-        GraftSession.shufflePartitionsFor(cpus))
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     new java.io.File(outDir).mkdirs()
     // Failure manifest: a query whose build/write throws must surface as
     // an explicit error artifact, never as a silently-missing dump (in

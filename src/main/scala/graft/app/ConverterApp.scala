@@ -75,11 +75,7 @@ object ConverterApp {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     // every failure path honors the abort contract (stderr ABORT line,
     // session stopped, exit 2) — not just argument errors: DDL-script
     // conflicts throw IllegalStateException, the JDBC layer SQLException

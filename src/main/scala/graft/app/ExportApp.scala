@@ -1,7 +1,6 @@
 package graft.app
 
 import java.sql.DriverManager
-import org.apache.spark.sql.SparkSession
 import graft.GraftSession
 import graft.catalog.Catalog
 import graft.config.Dialect
@@ -22,12 +21,7 @@ object ExportApp {
   def main(args: Array[String]): Unit = {
     val url = args(0)
     val outDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
 
     val conn = DriverManager.getConnection(url)
     val specs = try {
@@ -39,7 +33,7 @@ object ExportApp {
     val props = new java.util.Properties()
     specs.foreach { spec =>
       val df = DataCopier.readJdbc(spark, url, spec, props,
-        numPartitions = cpus.toInt, pkBounds = None)
+        numPartitions = GraftSession.cpus.toInt, pkBounds = None)
       val n = df.count()
       df.write.mode("overwrite").parquet(s"$outDir/${spec.name.toLowerCase}.parquet")
       println(s"[export] ${spec.name}: $n rows, " +

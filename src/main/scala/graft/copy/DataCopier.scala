@@ -1,12 +1,12 @@
 package graft.copy
 
-import java.sql.{Connection, DriverManager, PreparedStatement}
+import java.sql.{DriverManager, PreparedStatement}
+import scala.annotation.unused
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.LongAccumulator
 import graft.catalog.TableSpec
 import graft.config.ConverterConfig
-import graft.types.TypeMapper
 
 /** Totals for one copy — the reference's `ConversionResult`
   * (ConversionResult.java:8-36), except failures are NOT swallowed
@@ -49,7 +49,7 @@ object DataCopier {
     * signature for positional callers. */
   def readJdbc(spark: SparkSession, url: String, spec: TableSpec,
       props: java.util.Properties, numPartitions: Int,
-      pkBounds: Option[(Long, Long)]): DataFrame = {
+      @unused pkBounds: Option[(Long, Long)]): DataFrame = {
     import scala.jdk.CollectionConverters._
     val table = spec.schema.map(s => s"$s.${spec.name}").getOrElse(spec.name)
     spark.read.format("graft-jdbc")

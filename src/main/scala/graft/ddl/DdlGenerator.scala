@@ -71,9 +71,6 @@ object DdlGenerator {
   def dropTable(spec: TableSpec, dialect: Dialect): String =
     s"DROP TABLE ${spec.qualifiedName(dialect)}"
 
-  def dropIndex(ix: IndexSpec, dialect: Dialect): String =
-    s"DROP INDEX ${ix.name}"
-
   /** Full DDL script for one table under a mode, in execution order.
     * Dry-run = don't execute, return the strings (reference
     * `convert(false)` — TableConverter.java:147,172-179). */

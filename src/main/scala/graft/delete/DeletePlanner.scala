@@ -1,11 +1,7 @@
 package graft.delete
 
-import java.sql.{Connection, DriverManager}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.catalog.TableSpec
+import java.sql.DriverManager
 import graft.config.ConverterConfig
-import graft.copy.CopyPlanner
 
 /** Strategy decision for clearing a destination table —
   * TableDeleter.java:24-41. */
@@ -18,11 +14,12 @@ object DeleteStrategy {
   final case class Partitioned(ranges: Seq[String]) extends DeleteStrategy
 }
 
-/** S9/X4: size-thresholded delete planning. The reference probes split
-  * keys with ORDER BY pk LIMIT 1 OFFSET n (O3, TableDeleter.java:54,
-  * 63-99); our scale path derives the same split points from the source
-  * DataFrame distribution (exact row_number probes at test scale,
-  * `approxQuantile` when exactness isn't required).
+/** S9/X4: size-thresholded delete planning. Split keys come from the
+  * reference's own probe, ORDER BY pk OFFSET n FETCH 1 against the
+  * database ([[DeletePlanner.splitPointsOffset]], O3,
+  * TableDeleter.java:54,63-99); the registered `o3_keyset_probe` query
+  * computes the same ordinals Spark-side with
+  * [[graft.operators.Ids.cumulativeSum]].
   *
   * Divergences from the reference (deliberate, SURVEY §2.11): the
   * parameter-index double-increment bug and the min/max confusion in
@@ -36,96 +33,13 @@ object DeletePlanner {
     if (rowCount < cfg.maxRecordsInSingleDeleteStatement) DeleteStrategy.SingleStatement
     else DeleteStrategy.Partitioned(Seq.empty)
 
-  /** O3: exact keyset split points — the PK tuple at every
-    * ceil(n/workers)-th ordinal of PK order. Returns `workers - 1`
-    * boundary tuples (may be fewer when the table is small). The
-    * ordinal is the distributed running count ([[graft.operators.Ids
-    * .cumulativeSum]]: range-repartition + per-partition ranks +
-    * broadcast offsets) — same numbering as an unpartitioned
-    * row_number window with no single-task global sort, so the exact
-    * probe itself survives a 100× scale-up (the reference computes the
-    * same ordinals one OFFSET query at a time —
-    * TableDeleter.java:54,63-99). */
-  def splitPoints(df: DataFrame, pkCols: Seq[String], workers: Int): Seq[Seq[Any]] = {
-    val n = df.count()
-    if (n == 0 || workers <= 1) return Seq.empty
-    val step = (n + workers - 1) / workers
-    graft.operators.Ids
-      .cumulativeSum(df.select(pkCols.map(col): _*), pkCols.map(col),
-        lit(1L), "__rn")
-      .filter(col("__rn") % step === 0 && col("__rn") < n)
-      .orderBy(col("__rn"))
-      .drop("__rn")
-      .collect()
-      .map(r => pkCols.indices.map(r.get))
-      .toSeq
-  }
-
-  /** O3 at scale: approximate split points via `approxQuantile` — one
-    * pass with bounded memory instead of a global row_number sort. Only
-    * for single-column numeric PKs (the common case the reference's
-    * offset probes serve); composite PKs use
-    * [[splitPointsApproxTuples]] (sampled tuple boundaries) or the
-    * JDBC-pushed [[splitPointsOffset]].
-    * relativeError 0.01 keeps worker ranges within ~1% of even. */
-  def splitPointsApprox(df: org.apache.spark.sql.DataFrame, pkCol: String,
-      workers: Int, relativeError: Double = 0.01): Seq[Seq[Any]] = {
-    if (workers <= 1) return Seq.empty
-    val probs = (1 until workers).map(_.toDouble / workers).toArray
-    df.stat.approxQuantile(pkCol, probs, relativeError)
-      .distinct.sorted.map(q => Seq[Any](q.toLong)).toSeq
-  }
-
-  /** O3 at scale for COMPOSITE PKs: approximate split tuples from a
-    * bounded random sample — the `RangePartitioner` recipe that backs
-    * every distributed ORDER BY. `approxQuantile` only handles one
-    * numeric column; this samples `sampleSize` whole PK TUPLES
-    * (TakeOrdered by a seeded rand — a per-partition heap + driver
-    * merge, NO global sort and no full-table shuffle), sorts the
-    * sample driver-side (bounded by `sampleSize`), and takes every
-    * s/workers-th tuple as a boundary. With a uniform sample of size
-    * s the per-boundary rank error is O(1/√s) — sampleSize 10k keeps
-    * worker ranges within a few percent of even, which is all a
-    * delete/copy fan-out needs (ranges stay EXACT-coverage half-open
-    * regardless; only their sizes are approximate). Duplicate
-    * boundaries (heavy single-value keys) collapse, so fewer than
-    * `workers - 1` tuples may return. */
-  def splitPointsApproxTuples(df: DataFrame, pkCols: Seq[String],
-      workers: Int, sampleSize: Int = 10000,
-      seed: Long = 42L): Seq[Seq[Any]] = {
-    require(sampleSize >= workers, s"sampleSize $sampleSize < workers $workers")
-    if (workers <= 1) return Seq.empty
-    // Boundary ORDER comes from the ENGINE, not the driver: the sample
-    // (already bounded by the limit) is re-sorted by Spark on the PK
-    // columns before collecting, so string boundaries follow Spark's
-    // binary (code-point) ordering — Java String.compareTo orders
-    // UTF-16 code units, which disagrees beyond the BMP, and a
-    // misordered boundary list breaks rangePredicates' exact-cover
-    // property (a row could match two ranges). The target database
-    // must compare the same way (binary collation) for the rendered
-    // range SQL to preserve the cover — same contract as the exact
-    // probe, now stated.
-    val sampled = df.select(pkCols.map(col): _*)
-      .orderBy(rand(seed))
-      .limit(sampleSize)
-      .orderBy(pkCols.map(col): _*)
-      .collect()
-      .map(r => pkCols.indices.map(r.get): Seq[Any])
-    if (sampled.isEmpty) Seq.empty
-    else {
-      val s = sampled.length
-      (1 until workers)
-        .map(i => sampled(math.min((i.toLong * s / workers).toInt, s - 1)))
-        .distinct
-    }
-  }
-
   /** O3 pushed to the source, the reference's own probe shape
     * (TableDeleter.java:63-99): `SELECT pk ORDER BY pk OFFSET k FETCH 1`
     * per boundary, all through one JDBC connection — O(workers) tiny
-    * index-served queries, zero Spark scans, no global sort. This is the
-    * scale path for composite PKs, where approxQuantile doesn't apply. */
-  /** `hookProps`: options handed to the dialect's beforeFetch hook when
+    * index-served queries, zero Spark scans, no global sort, for
+    * single-column and composite PKs alike.
+    *
+    * `hookProps`: options handed to the dialect's beforeFetch hook when
     * they differ from the connection properties — the graft-jdbc V2
     * source filters `connProps` down to user/password (strict drivers
     * reject unknown keys) but the snapshot-pin options

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.SketchExpressions._
@@ -610,7 +610,7 @@ object Similarity {
       .withColumn("vnorm2", expr("aggregate(v, 0D, (a, x) -> a + x * x)"))
       .persist()
     try {
-      var cand = scala.collection.mutable.ArrayBuffer[(Long, Array[Double])]()
+      val cand = scala.collection.mutable.ArrayBuffer[(Long, Array[Double])]()
       cand ++= v2.orderBy("vec_id").limit(1).select("vec_id", "v").collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       for (round <- 1 to rounds) {
@@ -691,7 +691,7 @@ object Similarity {
           }
         }
       }
-      var centers: Array[Array[Double]] = chosen.toArray
+      val centers: Array[Array[Double]] = chosen.toArray
       val kk = centers.length // < k only if the corpus has < k distinct candidates
       var it = 0
       var moved = true

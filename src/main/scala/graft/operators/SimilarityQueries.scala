@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Tables
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -264,7 +263,7 @@ object SimilarityQueries {
     },
     // Multi-probe SemDeDup: pair candidates share ANY of each vector's 2
     // nearest centroids instead of exactly the nearest — the deployable
-    // form of the measured recall dial (RecallProbe: 0.23 → 0.62 of
+    // form of the measured recall dial (`Dev recall`: 0.23 → 0.62 of
     // true cosine≥0.3 pairs on the 10× corpus for ~2× candidate cost;
     // PERF.md round-9). Reuses the shared persisted nprobe-2 assignment
     // stage (sharedAssign2 — round 15; previously a fresh broadcast-

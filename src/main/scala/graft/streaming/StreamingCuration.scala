@@ -1,5 +1,6 @@
 package graft.streaming
 
+import scala.annotation.unused
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Curation, CurationPipeline}
@@ -57,8 +58,9 @@ final class StreamingCuration(
   /** The `foreachBatch` body: curate one micro-batch against the carried
     * state, append its packed train sequences to `outDir`, advance the
     * state. Usable directly:
-    * {{{ stream.writeStream.foreachBatch(curator.processBatch _).start() }}} */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
+    * {{{ stream.writeStream.foreachBatch(curator.processBatch _).start() }}}
+    * `batchId` is unused; `foreachBatch` fixes the signature. */
+  def processBatch(batch: DataFrame, @unused batchId: Long): Unit = {
     val spark = batch.sparkSession
 
     // 1. exact dedup — in-batch min-id representative per content hash,

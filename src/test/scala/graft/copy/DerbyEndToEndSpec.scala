@@ -88,7 +88,7 @@ class DerbyEndToEndSpec extends SparkTestBase {
     assert(DeletePlanner.decide(n, cfg) == DeleteStrategy.SingleStatement)
     assert(DeletePlanner.decide(20000, cfg).isInstanceOf[DeleteStrategy.Partitioned])
 
-    val splits = DeletePlanner.splitPoints(src, Seq("c_custkey"), 4)
+    val splits = DeletePlanner.splitPointsOffset(url, "customer", Seq("c_custkey"), 4)
     assert(splits.size == 3)
     val ranges = DeletePlanner.rangePredicates(Seq("c_custkey"), splits)
     assert(ranges.size == 4)

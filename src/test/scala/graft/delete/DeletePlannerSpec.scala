@@ -1,13 +1,33 @@
 package graft.delete
 
+import java.sql.DriverManager
 import org.apache.spark.sql.functions._
 import graft.{SparkTestBase, Tables}
+import graft.app.ConverterApp
+import graft.copy.DataCopier
 
 class DeletePlannerSpec extends SparkTestBase {
 
+  /** `t`'s PK columns copied into an in-memory Derby table without a PK
+    * constraint ((l_orderkey, l_linenumber) repeats in the fixture), so
+    * split points come from the database probe. Returns the URL. */
+  private def derbyKeys(t: String, pk: Seq[(String, String)]): String = {
+    val url = s"jdbc:derby:memory:deletePlanner_$t;create=true"
+    val c = DriverManager.getConnection(url)
+    try c.createStatement().executeUpdate(s"CREATE TABLE $t (" +
+      pk.map { case (n, ty) => s"$n $ty NOT NULL" }.mkString(", ") + ")")
+    finally c.close()
+    val keys = Tables(spark, sfDir, t).select(pk.map(k => col(k._1)): _*)
+    DataCopier.copyTable(keys,
+      ConverterApp.specFromStruct(t, keys.schema, pk.map(_._1)), url)
+    url
+  }
+
   test("exact split points + range predicates form a disjoint cover") {
     val orders = Tables(spark, sfDir, "orders")
-    val splits = DeletePlanner.splitPoints(orders, Seq("o_orderkey"), 4)
+    val splits = DeletePlanner.splitPointsOffset(
+      derbyKeys("orders", Seq("o_orderkey" -> "BIGINT")), "orders",
+      Seq("o_orderkey"), 4)
     assert(splits.size == 3)
     val preds = DeletePlanner.rangePredicates(Seq("o_orderkey"), splits)
     assert(preds.size == 4)
@@ -17,55 +37,15 @@ class DeletePlannerSpec extends SparkTestBase {
     assert(counts.forall(_ > 0))
   }
 
-  test("approxQuantile split points cover all rows within ~1% balance") {
-    val orders = Tables(spark, sfDir, "orders")
-    val splits = DeletePlanner.splitPointsApprox(orders, "o_orderkey", 8)
-    assert(splits.nonEmpty && splits.size <= 7)
-    val preds = DeletePlanner.rangePredicates(Seq("o_orderkey"), splits)
-    val counts = preds.map(p => orders.filter(expr(p)).count())
-    assert(counts.sum == orders.count()) // cover, no overlap
-    // balanced-ish: no worker owns more than 3x the even share
-    val even = orders.count().toDouble / preds.size
-    assert(counts.max <= even * 3, s"unbalanced: $counts")
-  }
-
   test("composite-PK range predicates are parseable and cover lineitem") {
     val li = Tables(spark, sfDir, "lineitem")
-    val splits = DeletePlanner.splitPoints(li, Seq("l_orderkey", "l_linenumber"), 4)
-    val preds = DeletePlanner.rangePredicates(Seq("l_orderkey", "l_linenumber"), splits)
-    val counts = preds.map(p => li.filter(expr(p)).count())
-    assert(counts.sum == li.count())
-  }
-
-  test("sampled composite-PK split tuples: exact disjoint cover, <=5% " +
-      "range-size skew, no global sort or full-table shuffle in the plan") {
-    val li = Tables(spark, sfDir, "lineitem")
     val pk = Seq("l_orderkey", "l_linenumber")
-    val n = li.count()
-    val workers = 8
-    val splits = DeletePlanner.splitPointsApproxTuples(li, pk, workers)
-    assert(splits.nonEmpty && splits.size <= workers - 1)
-    // coverage is EXACT regardless of boundary placement (half-open
-    // lexicographic ranges)
+    val splits = DeletePlanner.splitPointsOffset(
+      derbyKeys("lineitem", Seq("l_orderkey" -> "BIGINT", "l_linenumber" -> "INTEGER")),
+      "lineitem", pk, 4)
     val preds = DeletePlanner.rangePredicates(pk, splits)
     val counts = preds.map(p => li.filter(expr(p)).count())
-    assert(counts.sum == n, s"cover broken: $counts vs $n")
-    // balance: every worker within 5% of the even share (10k-sample
-    // rank error is O(1/sqrt(10000)) ~ 1% per boundary; seeded rand
-    // keeps this deterministic)
-    val even = n.toDouble / preds.size
-    assert(counts.max <= even * 1.05 && counts.min >= even * 0.95,
-      s"skew > 5%: $counts (even share $even)")
-    // scale shape: the sample is a TakeOrdered (per-partition heap +
-    // driver merge of sampleSize rows) — never a global range sort of
-    // the table
-    val samplePlan = li.select(pk.map(col): _*)
-      .orderBy(rand(42L)).limit(10000)
-      .queryExecution.executedPlan.toString
-    assert(samplePlan.contains("TakeOrderedAndProject"),
-      s"sample not a bounded top-k:\n$samplePlan")
-    assert(!samplePlan.contains("Exchange rangepartitioning"),
-      s"sample plan global-sorts the table:\n$samplePlan")
+    assert(counts.sum == li.count())
   }
 
   test("lexicographic range predicate matches tuple order (exhaustive 2-col domain)") {

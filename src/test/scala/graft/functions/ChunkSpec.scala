@@ -7,7 +7,6 @@ import graft.functions.ContentChunks.content_chunks
 class ChunkSpec extends SparkTestBase {
 
   test("chunks concatenate back to the original text") {
-    import spark.implicits._
     val out = Tables(spark, sfDir, "documents")
       .select(col("text"), concat_ws("", content_chunks(col("text"))).as("rejoined"))
     assert(out.filter(col("text") =!= col("rejoined")).count() == 0)

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.{SparkTestBase, Tables}
 import graft.functions.SketchExpressions.{minhash_sig, simhash64}

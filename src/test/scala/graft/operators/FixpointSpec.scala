@@ -10,7 +10,7 @@ import org.apache.spark.sql.graftbridge.Bridge
 class FixpointSpec extends SparkTestBase {
 
   /** Stored blocks of the RDDs persisted while `run` executed, read the
-    * way PerfProbe reads its cache footprint (no GC is forced). The
+    * way `graft.Dev profile` reads its cache footprint (no GC is forced). The
     * result frame stays reachable until the count is taken. */
   private def blocksLeftBy(run: => DataFrame): Int = {
     val sc = spark.sparkContext

@@ -153,7 +153,6 @@ class LibraryApiSpec extends SparkTestBase {
   }
 
   test("Ids.contiguous ≡ global row_number, without the global sort") {
-    import spark.implicits._
     val df = spark.range(1000).select((col("id") * 7919 % 1000).as("k"))
       .distinct() // unique keys, scrambled order
     val got = Ids.contiguous(df, Seq("k"), numPartitions = 8)
@@ -423,7 +422,6 @@ class LibraryApiSpec extends SparkTestBase {
   }
 
   test("CurationPipeline.curate: stages compose, counts monotone, train leak-free") {
-    import spark.implicits._
     val docs = graft.Tables(spark, sfDir, "documents")
     val bench = docs.filter(col("doc_id") < 50)
     val train = docs.filter(col("doc_id") >= 50)
@@ -457,7 +455,6 @@ class LibraryApiSpec extends SparkTestBase {
 
   test("CurationPipeline.curate decontamMode: drop-rule strictness nests " +
       "(overlap drops ⊇ fuzzy drops ⊇ exact drops); bad mode rejected") {
-    import spark.implicits._
     val docs = graft.Tables(spark, sfDir, "documents")
     val bench = docs.filter(col("doc_id") < 50)
     // train side seeded with one verbatim and one truncated bench copy

@@ -525,7 +525,7 @@ class PlanSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
     import org.apache.spark.sql.execution.{GlobalLimitExec, TakeOrderedAndProjectExec, CollectLimitExec}
-    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
     val corpusFiles = Set("lineitem", "orders", "events", "documents",
       "embeddings", "customer", "supplier", "part", "partsupp")
     // Bounded-cardinality grouping keys -- each justified:
@@ -585,12 +585,6 @@ class PlanSpec extends SparkTestBase {
         case sc: FileSourceScanExec if !batchBounded(sc) &&
           sc.relation.location.rootPaths.exists(rp =>
             corpusFiles.exists(t => rp.toString.contains(s"/$t.parquet"))) => ()
-      }.nonEmpty
-    def limited(p: SparkPlan): Boolean =
-      collectNC(p) {
-        case g: GlobalLimitExec if g.limit <= 1000 => ()
-        case t: TakeOrderedAndProjectExec if t.limit <= 1000 => ()
-        case c: CollectLimitExec if c.limit <= 1000 => ()
       }.nonEmpty
     def contains(root: SparkPlan, node: SparkPlan): Boolean =
       collectNC(root) { case x if x eq node => () }.nonEmpty

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Convert a PerfProbe stdout into the BENCH_floor_r{N}.json artifact.
+"""Convert `graft.Dev profile` stdout into the BENCH_floor_r{N}.json artifact.
 
 Usage: python3 tools/floor_report.py <probe.stdout> <out.json>
          [<ref_full_bench.json> <window_bench.json>]
@@ -43,7 +43,7 @@ def main():
             entry["window_vs_floor"] = round(window[name] / entry["min"], 2) \
                 if entry["min"] > 0 else None
         queries[name] = entry
-    out = {"kind": "fresh-jvm floor (PerfProbe min-of-k)",
+    out = {"kind": "fresh-jvm floor (graft.Dev profile min-of-k)",
            "n_queries": len(queries), "queries": queries}
     if meta is not None:
         out["_meta"] = meta
