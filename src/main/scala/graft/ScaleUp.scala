@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *    counts scale like a real corpus instead of like N identical
   *    crawls. Beyond factor 100 copies i and i+100 repeat content
   *    verbatim — widen the rotation alphabets before using larger
-  *    factors. (The recorded SCALING_r08 artifacts predate the
-  *    consonant axis: their factor-10 corpus had each text exactly
+  *    factors. (The SCALING_r08 artifacts, kept in git history at
+  *    commit 3e2f6268d7ba, predate the consonant axis: their factor-10 corpus had each text exactly
   *    twice, as PERF.md's caveats note.)
   *  - `embeddings.embedding` gets a small deterministic per-(copy, dim)
   *    perturbation — breaks exact-duplicate geometry, keeps the

@@ -33,13 +33,6 @@ import graft.ddl.DdlGenerator
   */
 object ConverterApp {
 
-  /** Source/destination dialect from the URL scheme (the reference keys
-    * the same decision off its configuration's DatabaseType). */
-  private[app] def dialectFor(url: String): Dialect =
-    if (url.toLowerCase.startsWith("jdbc:cloudspanner:")) Dialect.Spanner
-    else if (url.toLowerCase.startsWith("jdbc:postgresql:")) Dialect.PostgreSql
-    else Dialect.Derby
-
   /** Destructive-mode gate — the reference interactively confirms before
     * dropping objects (Converter.java:43-56,85-110); headless Spark jobs
     * can't prompt, so DropAndRecreate requires an explicit `--yes` ack and
@@ -116,7 +109,7 @@ object ConverterApp {
           // the reference's real flow: introspect the live source catalog
           // (tables/columns/PKs/indexes) and read each table as a
           // PK-range-partitioned scan pushed down to the source
-          Catalog.introspectAll(c, dialectFor(source)).map { spec =>
+          Catalog.introspectAll(c, Dialect.forUrl(source)).map { spec =>
             (spec, () => DataCopier.readJdbc(spark, source, spec,
               new java.util.Properties(), cfg.maxNumberOfWorkers, None))
           }
@@ -156,7 +149,7 @@ object ConverterApp {
     // attribute doesn't survive sbt's command parsing).
     val connProps = new java.util.Properties()
     if (url.startsWith("jdbc:derby:")) connProps.setProperty("create", "true")
-    val destDialect = dialectFor(url)
+    val destDialect = Dialect.forUrl(url)
     val conn = DriverManager.getConnection(url, connProps)
     try {
       conn.setAutoCommit(true)
@@ -189,15 +182,14 @@ object ConverterApp {
             case Right(s) => s
           }
           val st = conn.createStatement()
-          script.foreach(st.executeUpdate)
-          st.close()
-          val skippedExisting = script.isEmpty && existing.contains(t.toUpperCase)
-          val destCount =
-            if (!skippedExisting) 0L
+          val destCount = try {
+            script.foreach(st.executeUpdate)
+            if (script.nonEmpty || !existing.contains(t.toUpperCase)) 0L
             else {
-              val rs = conn.createStatement().executeQuery(s"SELECT COUNT(*) FROM $t")
-              rs.next(); rs.getLong(1)
+              val rs = st.executeQuery(s"SELECT COUNT(*) FROM $t")
+              try { rs.next(); rs.getLong(1) } finally rs.close()
             }
+          } finally st.close()
           if (mode == ConvertMode.SkipAll ||
               (mode == ConvertMode.SkipExisting && destCount > 0))
             Plan(spec, read, copyData = false, s"mode=$mode, destRows=$destCount")

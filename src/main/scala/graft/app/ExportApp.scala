@@ -1,6 +1,7 @@
 package graft.app
 
 import java.sql.DriverManager
+import org.apache.spark.sql.SparkSession
 import graft.GraftSession
 import graft.catalog.Catalog
 import graft.config.Dialect
@@ -19,26 +20,32 @@ import graft.copy.DataCopier
   */
 object ExportApp {
   def main(args: Array[String]): Unit = {
+    val spark = GraftSession.start()
+    try run(args, spark) finally spark.stop()
+  }
+
+  /** The export against a caller-provided session. Each table is read
+    * from the source exactly once, by the parquet write: one split probe
+    * plus one query per partition. The reported row and file counts
+    * come from the written parquet, not from another source scan. */
+  def run(args: Array[String], spark: SparkSession): Unit = {
+    if (args.length < 2) throw new IllegalArgumentException(
+      "usage: ExportApp <jdbcUrl> <outDir>")
     val url = args(0)
     val outDir = args(1)
-    val spark = GraftSession.start()
-
     val conn = DriverManager.getConnection(url)
-    val specs = try {
-      Catalog.listTables(conn, Dialect.Derby).map { case (schema, t) =>
-        Catalog.introspectTable(conn, schema, t)
-      }
-    } finally conn.close()
+    val specs = try Catalog.introspectAll(conn, Dialect.forUrl(url))
+      finally conn.close()
 
-    val props = new java.util.Properties()
     specs.foreach { spec =>
-      val df = DataCopier.readJdbc(spark, url, spec, props,
+      val path = s"$outDir/${spec.name.toLowerCase}.parquet"
+      DataCopier.readJdbc(spark, url, spec, new java.util.Properties(),
         numPartitions = GraftSession.cpus.toInt, pkBounds = None)
-      val n = df.count()
-      df.write.mode("overwrite").parquet(s"$outDir/${spec.name.toLowerCase}.parquet")
-      println(s"[export] ${spec.name}: $n rows, " +
-        s"${df.rdd.getNumPartitions} read partitions, pk=${spec.primaryKey.mkString(",")}")
+        .write.mode("overwrite").parquet(path)
+      val written = spark.read.parquet(path)
+      println(s"[export] ${spec.name}: ${written.count()} rows, " +
+        s"${written.inputFiles.length} parquet files, " +
+        s"pk=${spec.primaryKey.mkString(",")}")
     }
-    spark.stop()
   }
 }

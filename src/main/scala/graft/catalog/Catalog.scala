@@ -2,9 +2,7 @@ package graft.catalog
 
 import java.sql.{Connection, DatabaseMetaData}
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types._
-import graft.config.{ConverterConfig, Dialect}
+import graft.config.Dialect
 import graft.types.TypeMapper
 
 /** One introspected column: name + JDBC metadata (the reference's
@@ -35,18 +33,6 @@ final case class TableSpec(
     (catalog.filter(_.nonEmpty).toSeq ++ s.toSeq :+ name).mkString(".")
   }
 
-  /** Spark schema with JDBC metadata carried in field metadata. */
-  def toStructType(cfg: ConverterConfig = ConverterConfig()): StructType =
-    StructType(columns.map { c =>
-      StructField(c.name, TypeMapper.sparkType(c.jdbcType, c.size, c.scale, cfg),
-        nullable = c.nullable,
-        metadata = new MetadataBuilder()
-          .putLong("jdbcType", c.jdbcType)
-          .putLong("columnSize", c.size)
-          .putBoolean("isPrimaryKey", primaryKey.contains(c.name))
-          .build())
-    })
-
   /** Reference row-size estimate: 8 + Σ per-column sizes —
     * ConverterUtils.java:61-116. */
   def estimatedRowSizeBytes: Long =
@@ -55,8 +41,7 @@ final case class TableSpec(
 
 /** Driver-side JDBC catalog introspection (S3–S6). Schema/PK/index
   * discovery has no Spark primitive; it stays plain JDBC on the driver
-  * and produces `TableSpec`s (+ small catalog DataFrames for the J1–J3
-  * semi/anti joins). Reference: DataCopier.java:108-126,
+  * and produces `TableSpec`s. Reference: DataCopier.java:108-126,
   * TableConverter.java:131-152,205-243, IndexConverter.java:95-138,
   * ConverterUtils.java:166-191. */
 object Catalog {
@@ -127,30 +112,4 @@ object Catalog {
     listTables(conn, dialect).map { case (schema, t) =>
       introspectTable(conn, schema, t)
     }
-
-  /** Catalog as a DataFrame for set-op/join planning (J1/J2 —
-    * upper-cased name as the equivalence relation, reference
-    * TableConverter.java:141,159). */
-  def tablesDf(spark: SparkSession, tables: Seq[(Option[String], String)]): DataFrame = {
-    import org.apache.spark.sql.Row
-    val schema = StructType(Seq(
-      StructField("table_schema", StringType), StructField("table_name", StringType)))
-    spark.createDataFrame(
-      java.util.Arrays.asList(tables.map(t => Row(t._1.orNull, t._2.toUpperCase)): _*),
-      schema)
-  }
-
-  /** J1: tables present in both catalogs (inner/semi on upper-cased name). */
-  def tablesInBoth(src: Seq[(Option[String], String)],
-      dst: Seq[(Option[String], String)]): Seq[String] = {
-    val dstNames = dst.map(_._2.toUpperCase).toSet
-    src.map(_._2).filter(t => dstNames.contains(t.toUpperCase))
-  }
-
-  /** J2: source tables absent from destination (anti on upper-cased name). */
-  def tablesMissing(src: Seq[(Option[String], String)],
-      dst: Seq[(Option[String], String)]): Seq[String] = {
-    val dstNames = dst.map(_._2.toUpperCase).toSet
-    src.map(_._2).filterNot(t => dstNames.contains(t.toUpperCase))
-  }
 }

@@ -31,12 +31,18 @@ sealed trait Dialect {
     * ConverterConfiguration.java:38-41,63-68. */
   def isSystemSchema(schema: String): Boolean
   def defaultSchema: String
-  def quote(ident: String): String = ident
-  /** how a table scan is partitioned: offset ranges (generic JDBC) vs
-    * server-side partitions (Spanner) — DataCopier.java:160-165. */
-  def partitioningStrategy: String
 }
 object Dialect {
+  /** Dialect from the JDBC URL scheme (the reference keys the same
+    * decision off its configuration's DatabaseType); any other URL is
+    * treated as Derby. */
+  def forUrl(url: String): Dialect = {
+    val u = url.toLowerCase
+    if (u.startsWith("jdbc:cloudspanner:")) Spanner
+    else if (u.startsWith("jdbc:postgresql:")) PostgreSql
+    else Derby
+  }
+
   case object Spanner extends Dialect {
     val name = "cloudspanner"
     val pkInsideColumnList = false
@@ -44,8 +50,6 @@ object Dialect {
       s != null && (s.equalsIgnoreCase("INFORMATION_SCHEMA") ||
         s.toUpperCase.startsWith("PG_"))
     val defaultSchema = ""
-    override def quote(ident: String): String = s"`$ident`"
-    val partitioningStrategy = "server-partitions"
   }
   case object PostgreSql extends Dialect {
     val name = "postgresql"
@@ -54,8 +58,6 @@ object Dialect {
       s != null && (s.equalsIgnoreCase("INFORMATION_SCHEMA") ||
         s.toUpperCase.startsWith("PG_"))
     val defaultSchema = "public"
-    override def quote(ident: String): String = "\"" + ident + "\""
-    val partitioningStrategy = "offset-ranges"
   }
   /** Embedded Derby — test dialect (not in the reference). */
   case object Derby extends Dialect {
@@ -64,7 +66,6 @@ object Dialect {
     def isSystemSchema(s: String): Boolean =
       s != null && s.toUpperCase.startsWith("SYS")
     val defaultSchema = "APP"
-    val partitioningStrategy = "offset-ranges"
   }
 }
 

@@ -139,20 +139,6 @@ object DataCopier {
     CopyReport(records.value, bytes.value, System.currentTimeMillis() - t0)
   }
 
-  /** A2 via the declarative metrics API: attach an `Observation` to a
-    * DataFrame so any downstream action reports (records, utf8 bytes of
-    * `byteCols`) without a second scan — the `df.observe` mapping SURVEY
-    * §2.5 A2 calls for. Returns the observation to read after an action. */
-  def observed(df: DataFrame, name: String,
-      byteCols: Seq[String]): (DataFrame, org.apache.spark.sql.Observation) = {
-    import org.apache.spark.sql.functions._
-    val obs = org.apache.spark.sql.Observation(name)
-    val byteExpr = byteCols.map(c => expr(s"octet_length($c)"))
-      .reduceOption(_ + _).getOrElse(lit(0))
-    (df.observe(obs, count(lit(1)).as("records"),
-      coalesce(sum(byteExpr), lit(0L)).as("bytes")), obs)
-  }
-
   /** Positional setObject pump — AbstractTablePartWorker.java:72-103
     * (values pass through opaquely; JDBC driver coerces). */
   private def bindRow(ps: PreparedStatement, row: Row, schema: StructType): Unit = {

@@ -23,13 +23,6 @@ object DdlAction {
   * reference scans uniqueness but drops it, a bug per SURVEY §2.11). */
 object DdlGenerator {
 
-  /** P2: if a column name equals its table name, prefix `table.` in
-    * SELECT lists (Spanner parser quirk) — ConverterUtils.java:174-179. */
-  def selectList(spec: TableSpec): String =
-    spec.columns.map { c =>
-      if (c.name.equalsIgnoreCase(spec.name)) s"${spec.name}.${c.name}" else c.name
-    }.mkString(", ")
-
   /** Mode gate for one object given destination existence. */
   def decide(mode: ConvertMode, existsInDestination: Boolean, name: String): DdlAction =
     if (!existsInDestination) DdlAction.Create

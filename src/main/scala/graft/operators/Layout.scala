@@ -1,16 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Physical-layout helpers: multidimensional clustering for scan
-  * locality. Z-ordering (Morton interleave) maps a 2-D key onto a 1-D
-  * curve so range-partitioning plus a within-partition sort on the
-  * z-value co-locates rows that are close in EITHER dimension — each
-  * output file's min/max footer then covers a tight bounding box in
-  * both columns, and a selective filter on either one prunes most
-  * files. At 100 TB that pruning is the difference between scanning
-  * the corpus and scanning ~1/√P of it per dimension. */
+/** Physical-layout helpers: scan spreading for one-split inputs, and
+  * the Morton z-value that maps a 2-D key onto a 1-D curve, so rows
+  * close in EITHER dimension get close keys. */
 object Layout {
 
   /** Scale-adaptive scan spreading (optimization guide §2.5, input
@@ -41,14 +36,4 @@ object Layout {
         shiftleft(shiftrightunsigned(b, i).bitwiseAND(lit(1L)), 2 * i + 1)
     }.reduce(_ + _)
   }
-
-  /** Cluster a frame for 2-D locality: range-repartition on the z-value
-    * (sampled boundaries — no global sort anywhere) and sort within each
-    * partition so row-group min/max stay tight on BOTH source columns.
-    * The returned frame is what you hand to a parquet writer. */
-  def clusterByZ(df: DataFrame, a: String, b: String, partitions: Int,
-      bits: Int = 16): DataFrame =
-    df.withColumn("zval", zValue(col(a), col(b), bits))
-      .repartitionByRange(partitions, col("zval"))
-      .sortWithinPartitions("zval")
 }

@@ -19,14 +19,6 @@ import graft.Tables
   */
 object MultimodalQueries {
 
-  /** The metadata schema a real decoder would emit. */
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("media_type", StringType),
-    StructField("byte_len", LongType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("channels", IntegerType)))
-
   /** documents → opaque binary payload + typed metadata struct.
     * STUB: width/height are derived from the byte length, not a real
     * header parse — a production decoder replaces exactly this struct. */

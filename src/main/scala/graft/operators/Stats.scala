@@ -89,8 +89,8 @@ object Stats {
   // leading-zero count of the low 24 bits + 1, all exact integers.
   // The register table is 256 rows at ANY corpus size, and register
   // tables from DISJOINT shards merge by MAX — how a 100 TB
-  // count-distinct actually runs (mergeRegisters below; LibraryApiSpec
-  // proves shard-merge ≡ whole-corpus).
+  // count-distinct actually runs (LibraryApiSpec proves shard-merge ≡
+  // whole-corpus).
   // -------------------------------------------------------------------
 
   /** The (reg, rho) register table for one corpus (≤ 256 rows). */
@@ -101,13 +101,6 @@ object Stats {
       .selectExpr("reg",
         "case when w = 0 then 25L else 25L - length(bin(w)) end as rho")
       .groupBy("reg").agg(max("rho").as("rho"))
-
-  /** Register merge for disjoint (or overlapping — HLL is idempotent)
-    * shards: element-wise MAX. */
-  def hllMergeRegisters(shards: DataFrame*): DataFrame = {
-    require(shards.nonEmpty, "need at least one register table")
-    shards.reduce(_ unionAll _).groupBy("reg").agg(max("rho").as("rho"))
-  }
 
   /** Estimate from a register table: harmonic mean kept EXACT in
     * 2²⁵-scaled integer units (empty registers contribute 2²⁵), raw

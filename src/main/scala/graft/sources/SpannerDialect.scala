@@ -1,17 +1,15 @@
 package graft.sources
 
-import java.sql.{Connection, Types}
-import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects, JdbcType}
-import org.apache.spark.sql.types._
+import java.sql.Connection
+import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects}
 
-/** Cloud Spanner `JdbcDialect` for Spark's JDBC source/sink (SURVEY §2.1
+/** Cloud Spanner `JdbcDialect` for the `graft-jdbc` source (SURVEY §2.1
   * S2 mapping: "a custom JdbcDialect for Spanner covers dialect quirks").
   *
-  * Mirrors the reference's JDBC→Spanner type map
-  * (TableConverter.java:59-83) in both directions:
-  *  - getCatalystType: Spanner column types → Catalyst types on read
-  *  - getJDBCType: Catalyst types → Spanner DDL types for the writer
-  * Identifiers are backtick-quoted (Spanner/GoogleSQL lexical rules).
+  * It overrides two things: identifier quoting (backticks,
+  * Spanner/GoogleSQL lexical rules) and the per-connection `beforeFetch`
+  * snapshot pin. Column types come from `TypeMapper.sparkType` on read
+  * and `TypeMapper.ddlType` in DDL.
   *
   * Register once per JVM via `SpannerDialect.register()` — Spark then
   * routes any `jdbc:cloudspanner:` URL through it.
@@ -22,33 +20,6 @@ object SpannerDialect extends JdbcDialect {
     url.toLowerCase.startsWith("jdbc:cloudspanner:")
 
   override def quoteIdentifier(colName: String): String = s"`$colName`"
-
-  override def getCatalystType(sqlType: Int, typeName: String, size: Int,
-      md: MetadataBuilder): Option[DataType] = (sqlType, typeName.toUpperCase) match {
-    case (_, "INT64") => Some(LongType)
-    case (_, "FLOAT64") => Some(DoubleType)
-    case (_, "BOOL") => Some(BooleanType)
-    case (_, n) if n.startsWith("STRING") => Some(StringType)
-    case (_, n) if n.startsWith("BYTES") => Some(BinaryType)
-    case (_, "TIMESTAMP") => Some(TimestampType)
-    case (_, "DATE") => Some(DateType)
-    case (_, "NUMERIC") => Some(DecimalType(38, 9)) // Spanner NUMERIC is (38,9)
-    case _ => None
-  }
-
-  override def getJDBCType(dt: DataType): Option[JdbcType] = dt match {
-    case BooleanType => Some(JdbcType("BOOL", Types.BOOLEAN))
-    case ByteType | ShortType | IntegerType | LongType =>
-      Some(JdbcType("INT64", Types.BIGINT))
-    case FloatType | DoubleType => Some(JdbcType("FLOAT64", Types.DOUBLE))
-    case StringType => Some(JdbcType("STRING(MAX)", Types.VARCHAR))
-    case BinaryType => Some(JdbcType("BYTES(MAX)", Types.VARBINARY))
-    case TimestampType | TimestampNTZType =>
-      Some(JdbcType("TIMESTAMP", Types.TIMESTAMP))
-    case DateType => Some(JdbcType("DATE", Types.DATE))
-    case _: DecimalType => Some(JdbcType("NUMERIC", Types.NUMERIC))
-    case _ => None
-  }
 
   /** JDBC option key: pin every partition's read to one commit timestamp
     * (RFC-3339), mirroring the reference's batchReadOnly snapshot switch
@@ -84,12 +55,6 @@ object SpannerDialect extends JdbcDialect {
       } finally st.close()
     }
   }
-
-  /** Spanner has no `TRUNCATE`; the fast full-wipe is delete-all. */
-  override def getTruncateQuery(table: String,
-      cascade: Option[Boolean] = None): String = s"DELETE FROM $table WHERE TRUE"
-
-  override def isCascadingTruncateTable(): Option[Boolean] = Some(false)
 
   @volatile private var registered = false
   def register(): Unit = synchronized {

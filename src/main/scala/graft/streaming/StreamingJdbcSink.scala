@@ -220,19 +220,6 @@ object StreamingJdbcSink {
     }
   }
 
-  /** `foreachBatch` upsert form: latest-row-per-key streams MERGE into
-    * the table. */
-  def upsertSink(url: String, table: String, keyCols: Seq[String],
-      cfg: ConverterConfig = ConverterConfig(),
-      rowsPerCommit: Long = Long.MaxValue,
-      connProps: Map[String, String] = Map.empty,
-      sinkId: Option[String] = None): (DataFrame, Long) => Unit = {
-    ensureLedger(url, table, connProps)
-    (df, batchId) =>
-      { upsertBatch(df, batchId, url, table, keyCols, cfg, rowsPerCommit,
-          connProps, sinkId); () }
-  }
-
   /** The `foreachBatch` function:
     * {{{
     * stream.writeStream.foreachBatch(StreamingJdbcSink.sink(url, "t")).start()

@@ -58,4 +58,14 @@ class ConverterConfigSpec extends AnyFunSuite {
     assert(Dialect.Derby.isSystemSchema("SYSIBM"))
     assert(!Dialect.PostgreSql.isSystemSchema("public"))
   }
+
+  test("Dialect.forUrl keys the dialect off the URL scheme") {
+    assert(Dialect.forUrl(
+      "jdbc:cloudspanner:/projects/p/instances/i/databases/db") == Dialect.Spanner)
+    assert(Dialect.forUrl("JDBC:PostgreSQL://localhost:5432/db") == Dialect.PostgreSql)
+    assert(Dialect.forUrl("jdbc:derby:memory:db;create=true") == Dialect.Derby)
+    // a PostgreSQL source keeps a user schema that only Derby's SYS*
+    // rule would hide
+    assert(!Dialect.forUrl("jdbc:postgresql://h/db").isSystemSchema("SYSTEM_DATA"))
+  }
 }

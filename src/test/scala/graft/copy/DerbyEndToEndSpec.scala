@@ -105,19 +105,6 @@ class DerbyEndToEndSpec extends SparkTestBase {
     st.close(); c.close()
   }
 
-  test("observed copy reports records and bytes without a second scan (A2)") {
-    val src = graft.Tables(spark, sfDir, "customer")
-    val (df, obs) = DataCopier.observed(src, "copy_metrics",
-      Seq("c_name", "c_mktsegment"))
-    df.write.format("noop").mode("overwrite").save()
-    val row = obs.get
-    assert(row("records") == 150L)
-    val expectBytes = src.agg(
-      sum(expr("octet_length(c_name) + octet_length(c_mktsegment)")))
-      .collect()(0).getLong(0)
-    assert(row("bytes") == expectBytes)
-  }
-
   test("composite-PK table gets a partitioned JDBC read (S2 scale path)") {
     val c = conn()
     val st = c.createStatement()
@@ -252,6 +239,20 @@ class DerbyEndToEndSpec extends SparkTestBase {
       // the PK-less table was skipped, as the reference does
       assert(!Catalog.listTables(dc, Dialect.Derby)
         .map(_._2.toUpperCase).contains("NOTES"))
+
+      // J1/J2 on a second run: every source table already in the
+      // destination (matched on upper-cased name) keeps its rows under
+      // SkipExisting — no DDL, no copy
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
+        graft.app.ConverterApp.run(Array(srcUrl, dstUrl, "SkipExisting"), spark)
+      }
+      val log = buf.toString("UTF-8")
+      for (t <- Seq("ACCOUNTS", "LEDGER"))
+        assert(log.contains(s"[convert] $t: data skipped (mode=SkipExisting"), log)
+      assert(log.contains("[convert] TOTAL: 0 records, 0 bytes"), log)
+      assert(one("SELECT COUNT(*), SUM(balance) FROM accounts") == ((na, sa)))
+      assert(one("SELECT COUNT(*), SUM(amount) FROM ledger") == ((nl, sl)))
     } finally dc.close()
   }
 
@@ -305,13 +306,5 @@ class DerbyEndToEndSpec extends SparkTestBase {
       .map(t => Option(t.getMessage).getOrElse("")).toSeq
     assert(messages.exists(_.contains("upload worker exceeded")),
       s"no deadline failure in: $messages")
-  }
-
-  test("catalog set-algebra (J1/J2) with case-insensitive names") {
-    val src = Seq((Option("APP"), "Customer"), (Option("APP"), "ORDERS"),
-      (Option("APP"), "newtab"))
-    val dst = Seq((Option("APP"), "CUSTOMER"), (Option("APP"), "orders"))
-    assert(Catalog.tablesInBoth(src, dst).toSet == Set("Customer", "ORDERS"))
-    assert(Catalog.tablesMissing(src, dst) == Seq("newtab"))
   }
 }

@@ -99,8 +99,11 @@ class ReadJdbcSpec extends SparkTestBase {
     create("rj_composite", "g VARCHAR(8) NOT NULL, id INTEGER NOT NULL, " +
       "PRIMARY KEY (g, id)", i => Seq(Seq("a", "b", "c")(i % 3), i))
     create("rj_nopk", "id BIGINT", i => Seq(i.toLong))
+    // P2: a PK column named like its table (the reference table-qualifies
+    // it in Spanner SELECT lists; the scan quotes every column instead)
+    create("rj_self", "rj_self BIGINT NOT NULL PRIMARY KEY", i => Seq(i.toLong))
     for ((table, partitions) <- Seq("rj_single" -> 4, "rj_composite" -> 4,
-        "rj_nopk" -> 1)) {
+        "rj_nopk" -> 1, "rj_self" -> 4)) {
       val df = readJdbc(table, partitions = 4)
       val scans = Bridge.deepCollect(df.queryExecution.executedPlan) {
         case b: BatchScanExec => b.scan.description()

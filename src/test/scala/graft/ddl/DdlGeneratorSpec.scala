@@ -49,15 +49,6 @@ class DdlGeneratorSpec extends AnyFunSuite {
       == "CREATE UNIQUE INDEX ix_mixed ON users (a, b DESC)")
   }
 
-  test("column named like its table gets table-prefixed in SELECT lists (P2)") {
-    val self = TableSpec(None, None, "selfname",
-      Seq(ColumnSpec("selfname", Types.BIGINT, 19, 0, nullable = false),
-        ColumnSpec("x", Types.VARCHAR, 10, 0, nullable = true)),
-      Seq("selfname"), Nil)
-    assert(DdlGenerator.selectList(self) == "selfname.selfname, x")
-    assert(DdlGenerator.selectList(users) == "id, name, created")
-  }
-
   test("mode gates: all four ConvertModes × existence") {
     import ConvertMode._
     assert(DdlGenerator.decide(SkipExisting, existsInDestination = false, "t") == DdlAction.Create)

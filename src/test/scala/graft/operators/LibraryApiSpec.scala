@@ -399,28 +399,6 @@ class LibraryApiSpec extends SparkTestBase {
     assert(got == List(7L, 0L, 25L, 0x55555555L))
   }
 
-  test("Layout.clusterByZ: partitions carry tight bounding boxes in both dims") {
-    import spark.implicits._
-    // 64×64 uniform grid; 16 partitions → ideal Morton boxes are 16×16
-    val grid = (for (x <- 0 until 64; y <- 0 until 64) yield (x.toLong, y.toLong))
-      .toDF("x", "y")
-    val parts = Layout.clusterByZ(grid, "x", "y", partitions = 16, bits = 6)
-      .select("x", "y").rdd.mapPartitions { it =>
-        val rows = it.toSeq
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val xs = rows.map(_.getLong(0)); val ys = rows.map(_.getLong(1))
-          Iterator((xs.max - xs.min, ys.max - ys.min, rows.size))
-        }
-      }.collect()
-    assert(parts.map(_._3).sum == 64 * 64)
-    // every partition's bounding box must be far tighter than the full
-    // 0..63 range on both dimensions (Morton ideal: 15; allow slack for
-    // range-boundary sampling straddle)
-    assert(parts.forall { case (sx, sy, _) => sx <= 32 && sy <= 32 },
-      s"loose boxes: ${parts.mkString(", ")}")
-  }
-
   test("CurationPipeline.curate: stages compose, counts monotone, train leak-free") {
     val docs = graft.Tables(spark, sfDir, "documents")
     val bench = docs.filter(col("doc_id") < 50)
@@ -804,8 +782,9 @@ class LibraryApiSpec extends SparkTestBase {
     // estimate EQUALS the whole-corpus estimate bit-for-bit
     val h1 = keys.take(2500).toDF("uid")
     val h2 = keys.drop(2500).toDF("uid")
-    val merged = Stats.hllEstimateFromRegisters(Stats.hllMergeRegisters(
-      Stats.hllRegisters(h1, col("uid")), Stats.hllRegisters(h2, col("uid"))))
+    val merged = Stats.hllEstimateFromRegisters(
+      Stats.hllRegisters(h1, col("uid")).unionAll(Stats.hllRegisters(h2, col("uid")))
+        .groupBy("reg").agg(max("rho").as("rho")))
       .collect()(0)
     val whole = Stats.hllEstimate(keys.toDF("uid"), col("uid")).collect()(0)
     assert(merged.toSeq == whole.toSeq, "shard-merge ≠ whole-corpus")

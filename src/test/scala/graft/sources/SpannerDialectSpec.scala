@@ -1,8 +1,6 @@
 package graft.sources
 
-import java.sql.Types
 import org.apache.spark.sql.jdbc.JdbcDialects
-import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 class SpannerDialectSpec extends AnyFunSuite {
@@ -11,29 +9,7 @@ class SpannerDialectSpec extends AnyFunSuite {
     SpannerDialect.register()
     val d = JdbcDialects.get("jdbc:cloudspanner://localhost/projects/p/instances/i/databases/db")
     assert(d == SpannerDialect)
-  }
-
-  test("catalyst types from Spanner type names (read path)") {
-    val md = new MetadataBuilder()
-    assert(SpannerDialect.getCatalystType(Types.BIGINT, "INT64", 0, md).contains(LongType))
-    assert(SpannerDialect.getCatalystType(Types.DOUBLE, "FLOAT64", 0, md).contains(DoubleType))
-    assert(SpannerDialect.getCatalystType(Types.VARCHAR, "STRING(100)", 100, md).contains(StringType))
-    assert(SpannerDialect.getCatalystType(Types.VARBINARY, "BYTES(MAX)", 0, md).contains(BinaryType))
-    assert(SpannerDialect.getCatalystType(Types.NUMERIC, "NUMERIC", 38, md).contains(DecimalType(38, 9)))
-  }
-
-  test("JDBC DDL types from catalyst types (write path, reference map)") {
-    assert(SpannerDialect.getJDBCType(LongType).get.databaseTypeDefinition == "INT64")
-    assert(SpannerDialect.getJDBCType(IntegerType).get.databaseTypeDefinition == "INT64")
-    assert(SpannerDialect.getJDBCType(DoubleType).get.databaseTypeDefinition == "FLOAT64")
-    assert(SpannerDialect.getJDBCType(StringType).get.databaseTypeDefinition == "STRING(MAX)")
-    assert(SpannerDialect.getJDBCType(BooleanType).get.databaseTypeDefinition == "BOOL")
-    assert(SpannerDialect.getJDBCType(TimestampNTZType).get.databaseTypeDefinition == "TIMESTAMP")
-  }
-
-  test("identifier quoting and truncate semantics") {
-    assert(SpannerDialect.quoteIdentifier("order") == "`order`")
-    assert(SpannerDialect.getTruncateQuery("t") == "DELETE FROM t WHERE TRUE")
+    assert(d.quoteIdentifier("order") == "`order`")
   }
 
   /** java.sql.Connection proxy recording every statement-executed SQL —
