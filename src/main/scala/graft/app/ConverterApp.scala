@@ -132,18 +132,9 @@ object ConverterApp {
           }
       }
 
-    // Destination tables are unqualified (the source schema has no
-    // meaning in the destination catalog), so same-named tables from
-    // different source schemas would collide on one destination table —
-    // fail fast instead of interleaving their DDL/rows.
-    locally {
-      val dups = sourceTables.map(_._1.name.toUpperCase)
-        .groupBy(identity).collect { case (n, g) if g.size > 1 => n }
-      if (dups.nonEmpty) throw new IllegalArgumentException(
-        "source tables collide on unqualified destination name(s): " +
-          dups.mkString(", ") + " (same-named tables in different source " +
-          "schemas need distinct destination names)")
-    }
+    // destination tables are unqualified (the source schema has no
+    // meaning in the destination catalog)
+    Catalog.requireDistinctNames(sourceTables.map(_._1))
 
     // Derby: ask for DB creation via properties (a ";create=true" URL
     // attribute doesn't survive sbt's command parsing).

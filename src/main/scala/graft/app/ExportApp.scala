@@ -36,6 +36,8 @@ object ExportApp {
     val conn = DriverManager.getConnection(url)
     val specs = try Catalog.introspectAll(conn, Dialect.forUrl(url))
       finally conn.close()
+    // each table's file is named by its unqualified name
+    Catalog.requireDistinctNames(specs)
 
     specs.foreach { spec =>
       val path = s"$outDir/${spec.name.toLowerCase}.parquet"

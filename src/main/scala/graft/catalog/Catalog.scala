@@ -46,6 +46,20 @@ final case class TableSpec(
   * ConverterUtils.java:166-191. */
 object Catalog {
 
+  /** Fails fast when two tables share a name case-insensitively. The
+    * converter creates each destination table, and the export writes
+    * each parquet directory, under the unqualified name, so same-named
+    * tables from different source schemas would otherwise interleave
+    * their rows or silently overwrite each other. */
+  def requireDistinctNames(specs: Seq[TableSpec]): Unit = {
+    val dups = specs.map(_.name.toUpperCase).groupBy(identity)
+      .collect { case (n, g) if g.size > 1 => n }.toSeq.sorted
+    if (dups.nonEmpty) throw new IllegalArgumentException(
+      "source tables collide on unqualified destination name(s): " +
+        dups.mkString(", ") + " (same-named tables in different source " +
+        "schemas need distinct destination names)")
+  }
+
   /** S3: enumerate user tables, excluding system schemas (P6). */
   def listTables(conn: Connection, dialect: Dialect,
       catalog: Option[String] = None): Seq[(Option[String], String)] = {

@@ -2,7 +2,10 @@ package graft.copy
 
 import java.sql.{DriverManager, PreparedStatement}
 import scala.annotation.unused
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types._
 import org.apache.spark.util.LongAccumulator
 import graft.catalog.TableSpec
@@ -62,7 +65,12 @@ object DataCopier {
 
   /** Commit-aware batched INSERT sink (S7 + X3). Runs on executors;
     * `url` must be reachable from every task. Returns (records, bytes)
-    * accumulated across tasks. */
+    * accumulated across tasks.
+    *
+    * The pump reads the plan's internal rows (`queryExecution.toRdd`)
+    * inside one SQL execution, so listeners still see the write, and
+    * binds each value through a per-column setter built once per
+    * partition — no external-`Row` conversion, no per-value type match. */
   def writeJdbc(df: DataFrame, url: String, table: String,
       cfg: ConverterConfig = ConverterConfig(),
       rowsPerCommit: Long = 10000L,
@@ -85,13 +93,15 @@ object DataCopier {
     val uploadDeadlineMillis = cfg.uploadWorkerMaxWaitMinutes * 60000L
     val propsSeq = connProps.toSeq
     val t0 = System.currentTimeMillis()
-    df.foreachPartition { rows: Iterator[Row] =>
+    val pump: Iterator[InternalRow] => Unit = { rows =>
       if (rows.hasNext) {
         val taskStart = System.currentTimeMillis()
         def checkDeadline(): Unit =
           if (System.currentTimeMillis() - taskStart >= uploadDeadlineMillis)
             throw new java.util.concurrent.TimeoutException(
               s"upload worker exceeded ${cfg.uploadWorkerMaxWaitMinutes} minutes for $table")
+        val setters = schema.fields.map(f => setter(f.dataType))
+        val width = setters.length
         val p = new java.util.Properties()
         propsSeq.foreach { case (k, v) => p.setProperty(k, v) }
         val conn = DriverManager.getConnection(url, p)
@@ -104,11 +114,16 @@ object DataCopier {
           var taskRecords = 0L
           var taskBytes = 0L
           rows.foreach { row =>
-            bindRow(ps, row, schema)
+            // positional pump — AbstractTablePartWorker.java:72-103
+            var i = 0
+            while (i < width) {
+              if (row.isNullAt(i)) ps.setObject(i + 1, null)
+              else taskBytes += setters(i)(ps, row, i)
+              i += 1
+            }
             if (useBatching) { ps.addBatch(); inBatch += 1 }
             else ps.executeUpdate()
             sinceCommit += 1; taskRecords += 1
-            taskBytes += rowWireSize(row, schema)
             if (inBatch >= maxBatch) { ps.executeBatch(); inBatch = 0; checkDeadline() }
             if (sinceCommit >= rowsPerCommit) {
               if (inBatch > 0) { ps.executeBatch(); inBatch = 0 }
@@ -136,44 +151,52 @@ object DataCopier {
         }
       }
     }
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(s"writeJdbc $table"))(
+      qe.toRdd.foreachPartition(pump))
     CopyReport(records.value, bytes.value, System.currentTimeMillis() - t0)
   }
 
-  /** Positional setObject pump — AbstractTablePartWorker.java:72-103
-    * (values pass through opaquely; JDBC driver coerces). */
-  private def bindRow(ps: PreparedStatement, row: Row, schema: StructType): Unit = {
-    var i = 0
-    while (i < schema.length) {
-      val v = row.get(i)
-      if (v == null) ps.setObject(i + 1, null)
-      else schema(i).dataType match {
-        case TimestampNTZType =>
-          ps.setTimestamp(i + 1,
-            java.sql.Timestamp.valueOf(v.asInstanceOf[java.time.LocalDateTime]))
-        case _ => ps.setObject(i + 1, v)
-      }
-      i += 1
-    }
-  }
+  /** Binds the non-null value at one ordinal of a row to marker
+    * `ordinal + 1` and returns its A3 wire size. */
+  private type Setter = (PreparedStatement, InternalRow, Int) => Long
 
-  /** A3 per-value byte accounting — ConverterUtils.java:118-152. */
-  private def rowWireSize(row: Row, schema: StructType): Long = {
-    var total = 0L
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(i)) total += (schema(i).dataType match {
-        case BooleanType => 1L
-        case DateType => 4L
-        case LongType | IntegerType | ShortType | ByteType |
-             DoubleType | FloatType | _: DecimalType => 8L
-        case TimestampType | TimestampNTZType => 12L
-        case StringType => row.getString(i).getBytes("UTF-8").length.toLong
-        case BinaryType => row.getAs[Array[Byte]](i).length.toLong
-        case _ => 0L // ARRAY etc. carried as zero — ConverterUtils.java:89-90
-      })
-      i += 1
+  /** The setter for one column type: the JDBC value the external `Row`
+    * would carry, and the byte rules of ConverterUtils.java:118-152
+    * (a string counts its UTF-8 bytes; ARRAY and other types count
+    * zero — ConverterUtils.java:89-90). */
+  private def setter(dt: DataType): Setter = dt match {
+    case BooleanType => (ps, r, i) => { ps.setBoolean(i + 1, r.getBoolean(i)); 1L }
+    case ByteType => (ps, r, i) => { ps.setByte(i + 1, r.getByte(i)); 8L }
+    case ShortType => (ps, r, i) => { ps.setShort(i + 1, r.getShort(i)); 8L }
+    case IntegerType => (ps, r, i) => { ps.setInt(i + 1, r.getInt(i)); 8L }
+    case LongType => (ps, r, i) => { ps.setLong(i + 1, r.getLong(i)); 8L }
+    case FloatType => (ps, r, i) => { ps.setFloat(i + 1, r.getFloat(i)); 8L }
+    case DoubleType => (ps, r, i) => { ps.setDouble(i + 1, r.getDouble(i)); 8L }
+    case d: DecimalType => (ps, r, i) => {
+      ps.setBigDecimal(i + 1, r.getDecimal(i, d.precision, d.scale).toJavaBigDecimal); 8L
     }
-    total
+    case _: StringType => (ps, r, i) => {
+      val s = r.getUTF8String(i)
+      ps.setString(i + 1, s.toString); s.numBytes.toLong
+    }
+    case BinaryType => (ps, r, i) => {
+      val b = r.getBinary(i)
+      ps.setBytes(i + 1, b); b.length.toLong
+    }
+    case DateType => (ps, r, i) => {
+      ps.setDate(i + 1, DateTimeUtils.toJavaDate(r.getInt(i))); 4L
+    }
+    case TimestampType => (ps, r, i) => {
+      ps.setTimestamp(i + 1, DateTimeUtils.toJavaTimestamp(r.getLong(i))); 12L
+    }
+    case TimestampNTZType => (ps, r, i) => {
+      ps.setTimestamp(i + 1, java.sql.Timestamp.valueOf(
+        DateTimeUtils.microsToLocalDateTime(r.getLong(i)))); 12L
+    }
+    case other =>
+      val toScala = CatalystTypeConverters.createToScalaConverter(other)
+      (ps, r, i) => { ps.setObject(i + 1, toScala(r.get(i, other))); 0L }
   }
 
   /** End-to-end one-table copy (the §7.2 minimum slice): source

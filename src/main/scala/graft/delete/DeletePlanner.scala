@@ -1,7 +1,18 @@
 package graft.delete
 
-import java.sql.DriverManager
+import java.sql.{Connection, DriverManager, PreparedStatement}
 import graft.config.ConverterConfig
+
+/** One PK range as a WHERE fragment with `?` markers and the split-key
+  * values they stand for, in marker order — the reference binds its
+  * range bounds the same way (Columns.java:40-52, DeleteWorker.java:
+  * 66,70-80). Every range of one shape has one statement text, so the
+  * database compiles it once and reuses the plan. */
+final case class KeyRange(sql: String, params: Seq[Any]) {
+  /** Bind [[params]] to the first markers of `ps`. */
+  def bind(ps: PreparedStatement): Unit =
+    params.iterator.zipWithIndex.foreach { case (v, i) => ps.setObject(i + 1, v) }
+}
 
 /** Strategy decision for clearing a destination table —
   * TableDeleter.java:24-41. */
@@ -11,7 +22,7 @@ object DeleteStrategy {
     * SingleDeleteWorker.java:19-27 */
   case object SingleStatement extends DeleteStrategy
   /** PK-range partitioned batched deletes — DeleteWorker.java:42-115 */
-  final case class Partitioned(ranges: Seq[String]) extends DeleteStrategy
+  final case class Partitioned(ranges: Seq[KeyRange]) extends DeleteStrategy
 }
 
 /** S9/X4: size-thresholded delete planning. Split keys come from the
@@ -34,10 +45,10 @@ object DeletePlanner {
     else DeleteStrategy.Partitioned(Seq.empty)
 
   /** O3 pushed to the source, the reference's own probe shape
-    * (TableDeleter.java:63-99): `SELECT pk ORDER BY pk OFFSET k FETCH 1`
-    * per boundary, all through one JDBC connection — O(workers) tiny
-    * index-served queries, zero Spark scans, no global sort, for
-    * single-column and composite PKs alike.
+    * (TableDeleter.java:63-99): `SELECT pk ORDER BY pk OFFSET ? FETCH 1`
+    * per boundary, prepared once and bound per offset, all through one
+    * JDBC connection — O(workers) tiny index-served queries, zero Spark
+    * scans, no global sort, for single-column and composite PKs alike.
     *
     * `hookProps`: options handed to the dialect's beforeFetch hook when
     * they differ from the connection properties — the graft-jdbc V2
@@ -50,9 +61,7 @@ object DeletePlanner {
       workers: Int, connProps: Map[String, String] = Map.empty,
       hookProps: Option[Map[String, String]] = None): Seq[Seq[Any]] = {
     if (workers <= 1) return Seq.empty
-    val p = new java.util.Properties()
-    connProps.foreach { case (k, v) => p.setProperty(k, v) }
-    val conn = DriverManager.getConnection(url, p)
+    val conn = connect(url, connProps)
     try {
       // the reference pins EVERY partitioned read path; the probe
       // connection honors the same snapshot options as the readers
@@ -60,66 +69,50 @@ object DeletePlanner {
       // pinned probe sees the same state the pinned scan will)
       graft.sources.JdbcHooks.beforeFetchAll(conn = conn, url = url,
         props = hookProps.getOrElse(connProps))
-      val st = conn.createStatement()
-      try {
-        val rs0 = st.executeQuery(s"SELECT COUNT(*) FROM $table")
-        rs0.next(); val n = rs0.getLong(1); rs0.close()
-        if (n == 0) return Seq.empty
-        val step = (n + workers - 1) / workers
-        val pks = pkCols.mkString(", ")
-        (1 until workers).map(_ * step).filter(_ < n).map { off =>
-          val rs = st.executeQuery(
-            s"SELECT $pks FROM $table ORDER BY $pks " +
-              s"OFFSET $off ROWS FETCH NEXT 1 ROWS ONLY")
+      val n = {
+        val st = conn.createStatement()
+        try {
+          val rs = st.executeQuery(s"SELECT COUNT(*) FROM $table")
+          rs.next(); rs.getLong(1)
+        } finally st.close()
+      }
+      if (n == 0) return Seq.empty
+      val step = (n + workers - 1) / workers
+      val pks = pkCols.mkString(", ")
+      val ps = conn.prepareStatement(s"SELECT $pks FROM $table ORDER BY $pks " +
+        "OFFSET ? ROWS FETCH NEXT 1 ROWS ONLY")
+      try (1 until workers).map(_ * step).filter(_ < n).map { off =>
+        ps.setLong(1, off)
+        val rs = ps.executeQuery()
+        try {
           rs.next()
-          val tuple = pkCols.indices.map(i => rs.getObject(i + 1): Any)
-          rs.close()
-          tuple
-        }
-      } finally st.close()
+          pkCols.indices.map(i => rs.getObject(i + 1): Any)
+        } finally rs.close()
+      } finally ps.close()
     } finally conn.close()
   }
 
-  /** The one SQL literal renderer, shared by the range predicates below
-    * and the graft-jdbc source's pushed filters: doubled quotes for
-    * strings, JDBC escape literals ({ts ...}/{d ...}/{t ...} — every JDBC
-    * driver rewrites these to its dialect) for temporals. None for any
-    * other type. */
-  def sqlLiteral(v: Any): Option[String] = v match {
-    case s: String => Some("'" + s.replace("'", "''") + "'")
-    case t: java.sql.Timestamp => Some(s"{ts '${t.toString}'}")
-    case d: java.sql.Date => Some(s"{d '${d.toString}'}")
-    case t: java.sql.Time => Some(s"{t '${t.toString}'}")
-    case t: java.time.LocalDateTime =>
-      Some(s"{ts '${java.sql.Timestamp.valueOf(t).toString}'}")
-    case d: java.time.LocalDate => Some(s"{d '${d.toString}'}")
-    case n: java.lang.Number => Some(n.toString)
-    case b: java.lang.Boolean => Some(b.toString)
-    case _ => None
-  }
-
-  /** Build the per-worker WHERE clauses from split points (half-open
-    * lexicographic ranges; first/last unbounded), literals rendered by
-    * [[sqlLiteral]]. Unsupported PK types are rejected explicitly rather
-    * than emitting a broken bare literal. */
-  def rangePredicates(pkCols: Seq[String], splits: Seq[Seq[Any]]): Seq[String] = {
-    def lit(v: Any): String = sqlLiteral(v).getOrElse(
-      throw new IllegalArgumentException(
-        s"unsupported PK literal type ${v.getClass.getName} — " +
-          "extend DeletePlanner.sqlLiteral or use a different split key"))
-    def cmp(op: String, eq: String, vals: Seq[Any]): String = {
+  /** Build the per-worker ranges from split points (half-open
+    * lexicographic ranges; first/last unbounded). Each split-key value
+    * is a bound parameter, so the values' types are the driver's
+    * business and a range has one of three statement texts: below the
+    * first split, between two, at or above the last. */
+  def rangePredicates(pkCols: Seq[String], splits: Seq[Seq[Any]]): Seq[KeyRange] = {
+    def cmp(op: String, eq: String, vals: Seq[Any]): KeyRange = {
       val disjuncts = vals.indices.map { i =>
-        val eqs = (0 until i).map(j => s"${pkCols(j)} = ${lit(vals(j))}")
+        val eqs = (0 until i).map(j => s"${pkCols(j)} = ?")
         val last = if (i == vals.length - 1) eq else op
-        (eqs :+ s"${pkCols(i)} $last ${lit(vals(i))}").mkString("(", " AND ", ")")
+        (eqs :+ s"${pkCols(i)} $last ?").mkString("(", " AND ", ")")
       }
-      disjuncts.mkString("(", " OR ", ")")
+      KeyRange(disjuncts.mkString("(", " OR ", ")"),
+        vals.indices.flatMap(i => vals.take(i + 1)))
     }
-    if (splits.isEmpty) Seq("1=1")
+    if (splits.isEmpty) Seq(KeyRange("1=1", Nil))
     else {
       val first = cmp("<", "<", splits.head)
       val middles = splits.sliding(2).collect { case Seq(lo, hi) =>
-        s"${cmp(">", ">=", lo)} AND ${cmp("<", "<", hi)}"
+        val (l, h) = (cmp(">", ">=", lo), cmp("<", "<", hi))
+        KeyRange(s"${l.sql} AND ${h.sql}", l.params ++ h.params)
       }.toSeq
       val last = cmp(">", ">=", splits.last)
       (first +: middles) :+ last
@@ -130,29 +123,45 @@ object DeletePlanner {
     * ranges are deleted with per-range statements batched by
     * `maxRecordsInSingleDeleteStatement` semantics (the range predicate
     * is pushed down, so the drain loop collapses to one statement per
-    * range — SURVEY §2.3 O4). */
+    * range — SURVEY §2.3 O4), with the range's split keys bound. A
+    * failing statement rolls the open transaction back before the
+    * connection closes, so its own error is the one thrown. */
   def execute(url: String, table: String, strategy: DeleteStrategy,
       connProps: Map[String, String] = Map.empty): Long = {
-    val p = new java.util.Properties()
-    connProps.foreach { case (k, v) => p.setProperty(k, v) }
-    val conn = DriverManager.getConnection(url, p)
+    val conn = connect(url, connProps)
+    var failed: Throwable = null
     try {
       conn.setAutoCommit(false)
-      val st = conn.createStatement()
-      val deleted = strategy match {
+      strategy match {
         case DeleteStrategy.SingleStatement =>
-          val n = st.executeUpdate(s"DELETE FROM $table") // SingleDeleteWorker.java:23
+          val st = conn.createStatement()
+          val n = try st.executeUpdate(s"DELETE FROM $table") // SingleDeleteWorker.java:23
+            finally st.close()
           conn.commit(); n.toLong
         case DeleteStrategy.Partitioned(ranges) =>
-          var total = 0L
-          ranges.foreach { where =>
-            total += st.executeUpdate(s"DELETE FROM $table WHERE $where")
-            conn.commit() // per-batch commit — DeleteWorker.java:34
-          }
-          total
+          ranges.map { r =>
+            val ps = conn.prepareStatement(s"DELETE FROM $table WHERE ${r.sql}")
+            try {
+              r.bind(ps)
+              val n = ps.executeUpdate()
+              conn.commit() // per-batch commit — DeleteWorker.java:34
+              n.toLong
+            } finally ps.close()
+          }.sum
       }
-      st.close()
-      deleted
-    } finally conn.close()
+    } catch {
+      case t: Throwable =>
+        failed = t
+        try conn.rollback() catch { case _: Throwable => () }
+        throw t
+    } finally {
+      try conn.close() catch { case c: Throwable => if (failed == null) throw c }
+    }
+  }
+
+  private def connect(url: String, connProps: Map[String, String]): Connection = {
+    val p = new java.util.Properties()
+    connProps.foreach { case (k, v) => p.setProperty(k, v) }
+    DriverManager.getConnection(url, p)
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.sql.DriverManager
+import java.sql.{DriverManager, PreparedStatement}
 import java.util.Properties
 
 import scala.jdk.CollectionConverters._
@@ -16,7 +16,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.delete.DeletePlanner
+import graft.delete.{DeletePlanner, KeyRange}
 import graft.types.TypeMapper
 
 /** DataSource V2 batch read with PK-range partition planning — the
@@ -75,13 +75,29 @@ private[sources] object GraftJdbcSource {
     } finally conn.close()
   }
 
+  /** A pushed filter's value as an SQL literal: doubled quotes for
+    * strings, JDBC escape literals ({ts ...}/{d ...}/{t ...} — every JDBC
+    * driver rewrites these to its dialect) for temporals. None for any
+    * other type, which keeps the filter in Spark. */
+  private def lit(v: Any): Option[String] = v match {
+    case s: String => Some("'" + s.replace("'", "''") + "'")
+    case t: java.sql.Timestamp => Some(s"{ts '${t.toString}'}")
+    case d: java.sql.Date => Some(s"{d '${d.toString}'}")
+    case t: java.sql.Time => Some(s"{t '${t.toString}'}")
+    case t: java.time.LocalDateTime =>
+      Some(s"{ts '${java.sql.Timestamp.valueOf(t).toString}'}")
+    case d: java.time.LocalDate => Some(s"{d '${d.toString}'}")
+    case n: java.lang.Number => Some(n.toString)
+    case b: java.lang.Boolean => Some(b.toString)
+    case _ => None
+  }
+
   /** Compile a Spark source filter to a WHERE fragment; None = keep it
     * in Spark. Only plain column references are compiled (no nested);
     * they are quoted through `dialect`. */
   def compileFilter(f: Filter, dialect: JdbcDialect): Option[String] = {
     def col(name: String): Option[String] =
       if (name.contains(".")) None else Some(dialect.quoteIdentifier(name))
-    import DeletePlanner.{sqlLiteral => lit}
     f match {
       case EqualTo(a, v) => for (c <- col(a); l <- lit(v)) yield s"$c = $l"
       case GreaterThan(a, v) => for (c <- col(a); l <- lit(v)) yield s"$c > $l"
@@ -298,15 +314,13 @@ private[sources] case class GraftJdbcScan(required: StructType,
     * `BatchScanExec` node, and every copy asks for the partitions, so
     * without the memo each read would run the split probe twice. */
   private lazy val partitions: Array[InputPartition] = {
-    val parts: Seq[String] =
-      if (opts.pk.isEmpty || opts.partitions <= 1) Seq("1=1")
-      else {
-        val splits = DeletePlanner.splitPointsOffset(
-          opts.url, opts.table, opts.pk, opts.partitions, opts.connProps,
-          hookProps = Some(opts.raw))
-        DeletePlanner.rangePredicates(opts.pk, splits)
-      }
-    parts.map(p => GraftJdbcInputPartition(p): InputPartition).toArray
+    // no split points (no PK, or one partition): one unbounded range
+    val splits =
+      if (opts.pk.isEmpty) Seq.empty
+      else DeletePlanner.splitPointsOffset(opts.url, opts.table, opts.pk,
+        opts.partitions, opts.connProps, hookProps = Some(opts.raw))
+    DeletePlanner.rangePredicates(opts.pk, splits)
+      .map(r => GraftJdbcInputPartition(r): InputPartition).toArray
   }
 
   override def planInputPartitions(): Array[InputPartition] = partitions
@@ -319,7 +333,9 @@ private[sources] case class GraftJdbcScan(required: StructType,
   }
 }
 
-private[sources] case class GraftJdbcInputPartition(predicate: String)
+/** One partition's PK range; its split keys bind to the partition
+  * query's first markers. */
+private[sources] case class GraftJdbcInputPartition(range: KeyRange)
   extends InputPartition
 
 private[sources] case class GraftJdbcReaderFactory(required: StructType,
@@ -331,7 +347,7 @@ private[sources] case class GraftJdbcReaderFactory(required: StructType,
   extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new GraftJdbcPartitionReader(required, filterSql,
-      p.asInstanceOf[GraftJdbcInputPartition].predicate, opts, agg, limit,
+      p.asInstanceOf[GraftJdbcInputPartition].range, opts, agg, limit,
       offset, orderBy)
 }
 
@@ -347,7 +363,7 @@ private[sources] case class GraftJdbcReaderFactory(required: StructType,
   * SRC/data/DataCopier.java:87-106). Without it, N tasks under
   * concurrent writes can observe N different database states. */
 private[sources] class GraftJdbcPartitionReader(required: StructType,
-    filterSql: Array[String], predicate: String, opts: GraftJdbcOptions,
+    filterSql: Array[String], range: KeyRange, opts: GraftJdbcOptions,
     agg: Option[(Seq[String], Seq[String])],
     limit: Option[Int] = None,
     offset: Option[Int] = None,
@@ -355,11 +371,8 @@ private[sources] class GraftJdbcPartitionReader(required: StructType,
   extends PartitionReader[InternalRow] {
 
   private val dialect = opts.dialect // executors resolve the URL fresh
-  private val conn = opts.connect()
-  JdbcHooks.beforeFetchAll(opts.url, conn, opts.raw)
-  private val stmt = conn.createStatement()
-  private val rows: Iterator[InternalRow] = {
-    val where = (predicate +: filterSql.toSeq).mkString("(", ") AND (", ")")
+  private val sql: String = {
+    val where = (range.sql +: filterSql.toSeq).mkString("(", ") AND (", ")")
     val oby = if (orderBy.nonEmpty) s" ORDER BY ${orderBy.mkString(", ")}" else ""
     val off = offset.map(o => s" OFFSET $o ROWS").getOrElse("")
     // standard SQL:2008 fetch clause. When Spark pushes BOTH, the pushed
@@ -369,7 +382,7 @@ private[sources] class GraftJdbcPartitionReader(required: StructType,
     val fetch = limit.map(l =>
       offset.fold(s" FETCH FIRST $l ROWS ONLY")(o =>
         s" FETCH NEXT ${l - o} ROWS ONLY")).getOrElse("")
-    val sql = agg match {
+    agg match {
       case Some((groups, aggExprs)) =>
         val sel = (groups ++ aggExprs).mkString(", ")
         val gby = if (groups.nonEmpty) s" GROUP BY ${groups.mkString(", ")}" else ""
@@ -379,8 +392,22 @@ private[sources] class GraftJdbcPartitionReader(required: StructType,
         s"SELECT ${cols.mkString(", ")} FROM ${opts.table}" +
           s" WHERE $where$oby$off$fetch"
     }
-    Bridge.jdbcRows(stmt.executeQuery(sql), dialect, required)
   }
+  private val conn = opts.connect()
+  private var stmt: PreparedStatement = _
+  // the hook and the query run before Spark holds this reader, so a
+  // failure here closes what is open instead of leaking it
+  private val rows: Iterator[InternalRow] =
+    try {
+      JdbcHooks.beforeFetchAll(opts.url, conn, opts.raw)
+      stmt = conn.prepareStatement(sql)
+      range.bind(stmt)
+      Bridge.jdbcRows(stmt.executeQuery(), dialect, required)
+    } catch {
+      case t: Throwable =>
+        try close() catch { case c: Throwable => t.addSuppressed(c) }
+        throw t
+    }
   private var current: InternalRow = _
 
   override def next(): Boolean =
@@ -388,6 +415,6 @@ private[sources] class GraftJdbcPartitionReader(required: StructType,
 
   override def get(): InternalRow = current
 
-  override def close(): Unit =
-    try stmt.close() finally conn.close() // closes the result set too
+  override def close(): Unit = // closing the statement closes the result set
+    try { if (stmt != null) stmt.close() } finally conn.close()
 }

@@ -81,4 +81,24 @@ class ExportAppSpec extends SparkTestBase {
       assert(parquet == rows(s"SELECT * FROM $table"), table)
     }
   }
+
+  test("ExportApp fails fast when two source schemas share a table name, " +
+      "before any parquet is written") {
+    val src = "jdbc:derby:memory:graftExportColl;create=true"
+    val c = DriverManager.getConnection(src)
+    try {
+      val st = c.createStatement()
+      for ((schema, n) <- Seq("S1" -> 3, "S2" -> 1)) {
+        st.executeUpdate(s"CREATE SCHEMA $schema")
+        st.executeUpdate(s"CREATE TABLE $schema.users (id BIGINT NOT NULL PRIMARY KEY)")
+        for (i <- 0 until n) st.executeUpdate(s"INSERT INTO $schema.users VALUES ($i)")
+      }
+      st.close()
+    } finally c.close()
+    val out = java.nio.file.Files.createTempDirectory("graft-export-coll").toFile
+    val e = intercept[IllegalArgumentException](
+      ExportApp.run(Array(src, out.getPath), spark))
+    assert(e.getMessage.contains("USERS"), e.getMessage)
+    assert(out.list().isEmpty, s"written before the check: ${out.list().toSeq}")
+  }
 }

@@ -256,6 +256,81 @@ class DerbyEndToEndSpec extends SparkTestBase {
     } finally dc.close()
   }
 
+  /** Runs ConverterApp and returns each copied table's
+    * `[convert] <table>: <records> records, <bytes> bytes` pair. */
+  private def convertTotals(args: Array[String]): Map[String, (Long, Long)] = {
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
+      graft.app.ConverterApp.run(args, spark)
+    }
+    val line = """\[convert\] (\w+): (\d+) records, (\d+) bytes,.*""".r
+    buf.toString("UTF-8").linesIterator.collect {
+      case line(t, r, b) => t.toUpperCase -> ((r.toLong, b.toLong))
+    }.toMap
+  }
+
+  test("CopyReport records and bytes follow the reference byte rules (A3) " +
+      "for every fixture table and every bound column type") {
+    // the sf0.001 fixtures in fixture mode (lineitem has no enforceable
+    // PK and is skipped). The pairs are those the external-Row pump
+    // reported before the InternalRow pump replaced it.
+    assert(convertTotals(Array(sfDir, "jdbc:derby:memory:graftBytesFx",
+      "DropAndRecreate", "--yes")) == Map(
+      "REGION" -> ((5L, 74L)), "NATION" -> ((25L, 615L)),
+      "CUSTOMER" -> ((150L, 7639L)), "SUPPLIER" -> ((10L, 420L)),
+      "PART" -> ((200L, 9357L)), "ORDERS" -> ((1500L, 68065L)),
+      "EVENTS" -> ((1000L, 46519L)), "DOCUMENTS" -> ((500L, 164406L)),
+      "TOTAL" -> ((3390L, 297095L))))
+
+    // every type the pump binds, NULLs included, through a JDBC source
+    val srcUrl = "jdbc:derby:memory:graftBytesSrc;create=true"
+    val dstUrl = "jdbc:derby:memory:graftBytesDst"
+    val cols = "id, flag, small, num, dbl, amt, txt, day, ts, bin"
+    val sc = DriverManager.getConnection(srcUrl)
+    try {
+      val st = sc.createStatement()
+      st.executeUpdate("""CREATE TABLE all_types (
+        | id BIGINT NOT NULL PRIMARY KEY, flag BOOLEAN, small SMALLINT,
+        | num INTEGER, dbl DOUBLE, amt DECIMAL(12, 0), txt VARCHAR(40),
+        | day DATE, ts TIMESTAMP, bin VARCHAR(16) FOR BIT DATA)""".stripMargin)
+      st.close()
+      val ps = sc.prepareStatement(s"INSERT INTO all_types ($cols) " +
+        "VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?, ?)")
+      for (i <- 0 until 60) {
+        ps.setLong(1, i)
+        if (i % 7 == 3) (2 to 10).foreach(ps.setObject(_, null))
+        else {
+          ps.setBoolean(2, i % 2 == 0); ps.setShort(3, (i - 30).toShort)
+          ps.setInt(4, i * 1000); ps.setDouble(5, i * 0.25)
+          ps.setBigDecimal(6, java.math.BigDecimal.valueOf(i * 123456789L))
+          ps.setString(7, Seq("plain", "héllo", "日本語", "o'brien")(i % 4) + i)
+          ps.setDate(8, java.sql.Date.valueOf(s"2024-0${1 + i % 9}-1${i % 10}"))
+          ps.setTimestamp(9, java.sql.Timestamp.valueOf(
+            s"2024-03-01 12:${10 + i % 50}:45.${100000 + i}"))
+          ps.setBytes(10, Array.tabulate(i % 5)(k => (i * 31 + k).toByte))
+        }
+        ps.addBatch()
+      }
+      ps.executeBatch(); ps.close()
+    } finally sc.close()
+    assert(convertTotals(Array(srcUrl, dstUrl, "DropAndRecreate", "--yes")) ==
+      Map("ALL_TYPES" -> ((60L, 3517L)), "TOTAL" -> ((60L, 3517L))))
+    def dump(u: String): Seq[String] = {
+      val c = DriverManager.getConnection(u)
+      try {
+        val rs = c.createStatement().executeQuery(s"SELECT $cols FROM all_types ORDER BY id")
+        val out = Iterator.continually(rs.next()).takeWhile(identity).map { _ =>
+          (1 to 10).map(k => rs.getObject(k) match {
+            case b: Array[Byte] => b.mkString("[", ",", "]")
+            case v => String.valueOf(v)
+          }).mkString("|")
+        }.toVector
+        rs.close(); out
+      } finally c.close()
+    }
+    assert(dump(dstUrl) == dump(srcUrl))
+  }
+
   test("ConverterApp fails fast when two source schemas share a table name " +
       "(unqualified destination would collide)") {
     val srcUrl = "jdbc:derby:memory:graftColl;create=true"

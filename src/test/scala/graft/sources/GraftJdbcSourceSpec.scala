@@ -28,6 +28,22 @@ object PinRecordingDialect extends JdbcDialect {
   }
 }
 
+/** A dialect whose `beforeFetch` refuses every connection it is handed,
+  * recording each one, so a test can check the failed reader closed it. */
+object RefusingFetchDialect extends JdbcDialect {
+  val conns = new java.util.concurrent.ConcurrentLinkedQueue[java.sql.Connection]()
+  override def canHandle(url: String): Boolean = url.contains("graftReaderLeak")
+  override def beforeFetch(connection: java.sql.Connection,
+      properties: Map[String, String]): Unit = {
+    conns.add(connection)
+    throw new IllegalStateException("beforeFetch refused")
+  }
+  @volatile private var registered = false
+  def register(): Unit = synchronized {
+    if (!registered) { JdbcDialects.registerDialect(this); registered = true }
+  }
+}
+
 /** The DataSource V2 JDBC read against embedded Derby: partition
   * planning over a composite PK, checksum fidelity, column pruning,
   * and filter pushdown. */
@@ -271,5 +287,27 @@ class GraftJdbcSourceSpec extends SparkTestBase {
     val df = read()
     assert(df.schema.map(f => (f.name.toLowerCase, f.dataType.typeName)) ==
       Seq(("a", "long"), ("b", "integer"), ("s", "string"), ("v", "double")))
+  }
+
+  test("a partition reader whose setup fails closes its connection") {
+    val leakUrl = "jdbc:derby:memory:graftReaderLeak;create=true"
+    val c = DriverManager.getConnection(leakUrl)
+    try {
+      val st = c.createStatement()
+      st.executeUpdate("CREATE TABLE lk (k BIGINT NOT NULL PRIMARY KEY)")
+      st.executeUpdate("INSERT INTO lk VALUES (1), (2), (3)")
+      st.close()
+    } finally c.close()
+    import scala.jdk.CollectionConverters._
+    RefusingFetchDialect.register()
+    RefusingFetchDialect.conns.clear()
+    val e = intercept[Exception](spark.read.format("graft-jdbc")
+      .option("url", leakUrl).option("dbtable", "lk").load().collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("beforeFetch refused")), messages)
+    val conns = RefusingFetchDialect.conns.asScala.toSeq
+    assert(conns.nonEmpty && conns.forall(_.isClosed),
+      s"${conns.count(!_.isClosed)} of ${conns.size} reader connections left open")
   }
 }
