@@ -1,12 +1,17 @@
 package graft.operators
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{BinaryType, DecimalType}
+import org.apache.spark.sql.types.{BinaryType, ByteType, DataType, DecimalType,
+  IntegerType, LongType, ShortType}
 import graft.functions.SketchExpressions
+import scala.collection.mutable
 
 /** User-facing deduplication library: DataFrame in → DataFrame out, no
   * fixture coupling. The registered `DedupQueries` entries are thin
@@ -256,31 +261,110 @@ object Dedup {
     * near-dup cluster" is `filter(id === cluster_id)`.
     *
     * Algorithm: iterative min-label propagation with POINTER JUMPING.
-    * Each round (a) joins the symmetrized edge list with current labels
-    * and takes the per-vertex min over neighbors, then (b) jumps every
-    * label to its label's label (path halving: l(v) ← l(l(v))). Edge
-    * propagation alone needs O(diameter) rounds — a long chain costs a
-    * full shuffle per hop; the jump step collapses label paths
-    * geometrically, so convergence is O(log diameter) rounds. Each
-    * round is two shuffles keyed by vertex/label id, and stops when no
-    * label changed. The rounds run on [[Fixpoint.run]], whose scaladoc
+    * Each round (a) takes every vertex's min over its own label and its
+    * neighbors' labels, then (b) jumps every label to its label's label
+    * (path halving: l(v) ← min(l(v), l(l(v)))). Edge propagation alone
+    * needs O(diameter) rounds — a long chain costs a full shuffle per
+    * hop; the jump step collapses label paths geometrically, so
+    * convergence is O(log diameter) rounds. It stops when the label sum
+    * stops moving. The rounds run on [[Fixpoint.loop]], whose scaladoc
     * has the checkpoint lifecycle and the fault-tolerance trade.
     *
+    * The rounds are an RDD kernel, not SQL. Per round, two AQE-planned
+    * queries ran 5–6 jobs, and on graphs of a few thousand pairs their
+    * fixed cost per query, stage and task was nearly all of it. The
+    * kernel runs ONE job per round (three shuffles: the propagate
+    * messages, the jump's request, and its answer) plus two set-up
+    * jobs: one counts the edges, one symmetrizes them and probes the
+    * seed. Upstream of that, a planned `edges` frame runs its own AQE
+    * stage jobs once. Per-row work is a hash-map lookup on primitive
+    * arrays, messages combine per partition before they shuffle, and
+    * shuffles move one block per partition pair; the partition count
+    * follows the edge count, capped at `spark.sql.shuffle.partitions`.
+    * So the kernel also beats the SQL rounds on large graphs (measured
+    * up to 6.5M pairs and 2M vertices).
+    *
     * Input: `vertices` with column `id`; `edges` with columns
-    * (`a_id`, `b_id`). Output: (`id`, `cluster_id`). */
+    * (`a_id`, `b_id`), all integral, or whole-number decimals of at
+    * most 18 digits — the label-sum probe is only monotone under
+    * numeric order, so any other type is rejected at call time.
+    * Output: (`id`, `cluster_id`), both of the vertices' id type. The
+    * output reads the kernel's final label checkpoint, which Spark's
+    * ContextCleaner drops once the output is garbage collected. */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
       maxIter: Int = 25): DataFrame =
-    connectedComponentsCounted(vertices, edges, maxIter)._1
+    connectedComponentsCounted(vertices, edges, maxIter).labels
 
-  /** [[connectedComponents]] plus the executed round count (including
-    * the final confirming round) — the observable DedupSpec pins so
-    * convergence stays probe-driven and round-count optimizations are
-    * assertable rather than assumed. */
+  /** A [[connectedComponentsCounted]] result: the labels, the executed
+    * round count (including the final confirming round), and the
+    * kernel's final label checkpoint, which `labels` reads. The
+    * checkpoint belongs to the caller: [[release]] drops it once nothing
+    * reads `labels` again (persisted copies included, until they are
+    * materialized); left alone, Spark's ContextCleaner drops it once
+    * `labels` is garbage collected, as it does a [[Fixpoint.run]]
+    * result. */
+  private[graft] final case class Components(labels: DataFrame, rounds: Int,
+      checkpoint: RDD[_]) {
+    def release(): Unit = Bridge.unpersistRdd(checkpoint)
+  }
+
+  /** Ids the kernel runs on: integral types, and whole-number decimals
+    * that fit a Long (JDBC sources carry NUMERIC/NUMBER keys). */
+  private def integralId(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case d: DecimalType => d.scale == 0 && d.precision <= 18
+    case _ => false
+  }
+
+  /** [[connectedComponents]] with its round count and checkpoint — the
+    * round count is the observable DedupSpec pins so convergence stays
+    * probe-driven and round-count optimizations are assertable rather
+    * than assumed. */
   private[graft] def connectedComponentsCounted(vertices: DataFrame,
-      edges: DataFrame, maxIter: Int = 25): (DataFrame, Int) = {
-    val sym = edges.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .union(edges.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .persist()
+      edges: DataFrame, maxIter: Int = 25): Components = {
+    for ((df, c) <- Seq(vertices -> "id", edges -> "a_id", edges -> "b_id")) {
+      val t = df.schema(c).dataType
+      require(integralId(t),
+        s"connectedComponents needs integral ids, but column '$c' is " +
+          s"${t.sql}: the label-sum convergence probe is only monotone " +
+          "under numeric order")
+    }
+    val spark = vertices.sparkSession
+    // The edges, read once, as one interleaved (a, b) array per input
+    // partition. A pair with a NULL end never joins a label, so it is
+    // dropped here.
+    val pairs = edges.select(col("a_id").cast(LongType), col("b_id").cast(LongType))
+      .na.drop().queryExecution.toRdd
+      .mapPartitions { it =>
+        val ab = Array.newBuilder[Long]
+        it.foreach { r => ab += r.getLong(0); ab += r.getLong(1) }
+        Iterator.single(ab.result())
+      }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // The partition count follows the graph: a round runs one task per
+    // partition in each of its stages, so a few thousand pairs get one
+    // partition (as AQE would coalesce their shuffles) and a large
+    // graph up to spark.sql.shuffle.partitions. Counting the edges is
+    // the set-up's first job.
+    val symRows = pairs.map(_.length.toLong).fold(0L)(_ + _)
+    val part = new HashPartitioner(math.min(
+      spark.conf.get("spark.sql.shuffle.partitions", "200").toLong,
+      math.max(1L, (symRows + CcRowsPerPartition - 1) / CcRowsPerPartition)).toInt)
+    // Symmetrized edges, laid out like the labels: partition i holds
+    // every edge (dst, src) whose dst is a label key of partition i, as
+    // two parallel arrays, so a round reads its neighbors' labels
+    // without a shuffle.
+    val sym = exchange(pairs.flatMap { ab =>
+        Iterator.range(0, ab.length, 2).flatMap { i =>
+          Iterator((ab(i + 1), ab(i)), (ab(i), ab(i + 1)))
+        }
+      }, part)
+      .mapPartitions { it =>
+        val (dst, src) = (Array.newBuilder[Long], Array.newBuilder[Long])
+        it.foreach { case (d, s) => dst += d; src += s }
+        Iterator.single((dst.result(), src.result()))
+      }
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // Iterate only over vertices that appear in an edge: a pair-free
     // vertex can never change its label, and near-dup graphs are sparse
     // (most of a corpus is in no pair), so the per-round shuffle domain
@@ -295,54 +379,109 @@ object Dedup {
     // — the pre-run half-round doesn't reduce the measured round count
     // on the near-dup fixtures (components are mostly pairs; the jump
     // round already collapses them), so the extra aggregate work per
-    // seed buys nothing. Plain distinct() seeding restored.
-    val seed = sym.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("cluster_id"))
-    // Convergence probe: labels only ever decrease (least), so the label
-    // sum is strictly monotone while anything changes — converged once
-    // it stops moving.
-    val (clusters, rounds) = Fixpoint.run(seed,
-        sum(col("cluster_id").cast(DecimalType(38, 0))),
-        java.math.BigDecimal.ZERO, Fixpoint.Stable, maxIter) { labels =>
-      // UNION-propagate (round 15): the per-vertex neighbor-min rides
-      // ONE min-aggregate fed by the edge-join contributions unioned
-      // with the current labels — replacing the previous round shape's
-      // separate nbr-min aggregate THEN node-keyed left join (one whole
-      // node-sized shuffle+join stage gone per round; both forms
-      // partial-aggregate map-side, so the shuffled volume is the
-      // same). Measured on the dedup_semantic sf0.1 graph (3241 pairs,
-      // 7 rounds): interleaved same-session old/new A/B — old
-      // 7.0/4.4/4.0/3.2/4.0, this form + the observe probe
-      // 4.2/4.0/2.6/3.1/4.3 (wins or ties every pairing, ~10–20% on
-      // the CC portion); labels exceptAll-identical both directions.
+    // seed buys nothing. Plain l(v) = v seeding.
+    val seed = sym.mapPartitions { blocks =>
+      val l = mutable.LongMap.empty[Long]
+      blocks.foreach { case (dst, _) => dst.foreach(v => l(v) = v) }
+      l.iterator
+    }
+    seed.localCheckpoint()
+    // the set-up's second job: it also materializes `sym`
+    val seedSum = labelSum(seed)
+    pairs.unpersist(blocking = false)
+    // Every label RDD keeps partition i's keys in partition i of `part`,
+    // so zipPartitions lines a partition up with its edges and labels.
+    val (clusters, rounds) = Fixpoint.loop(seed, Some(seedSum),
+        Fixpoint.Stable, maxIter) { labels =>
+      // UNION-propagate (round 15): each vertex takes the min over its
+      // own label and its neighbors' labels in ONE min-reduce, not a
+      // neighbor-min aggregate THEN a vertex-keyed join (one
+      // vertex-sized stage gone per round). Measured on the
+      // dedup_semantic sf0.1 graph (3241 pairs, 7 rounds), the SQL form
+      // of this shape won or tied every interleaved pairing (~10–20% on
+      // the CC portion). Each edge partition combines its messages to
+      // one per source vertex before the shuffle, so graph-sized work
+      // stays in the partition and the shuffle is vertex-sized.
       // Round count is propagation-bound, not jump-bound —
       // 2 and 3 jumps per round measured the SAME 7 rounds at strictly
       // higher cost, so multi-hop jumping is deliberately NOT used.
-      val propagated = labels.unionAll(
-          sym.join(labels.select(col("id").as("dst"),
-            col("cluster_id").as("nl")), "dst")
-            .select(col("src").as("id"), col("nl").as("cluster_id")))
-        .groupBy("id").agg(min("cluster_id").as("cluster_id"))
-        // lazy-checkpoint so the jump's self-join reads ONE
-        // materialization instead of recomputing the edge join in
-        // both branches
-        .localCheckpoint(false)
+      val messages = sym.zipPartitions(labels) { (blocks, labs) =>
+        val l = table(labs)
+        val best = mutable.LongMap.empty[Long]
+        blocks.foreach { case (dst, src) =>
+          var i = 0
+          while (i < dst.length) {
+            val m = l(dst(i))
+            if (m < best.getOrElse(src(i), Long.MaxValue)) best(src(i)) = m
+            i += 1
+          }
+        }
+        best.iterator
+      }
+      val propagated = exchange(messages, part).zipPartitions(labels) { (ms, labs) =>
+        val l = table(labs)
+        ms.foreach { case (v, m) => if (m < l(v)) l(v) = m }
+        l.iterator
+      }
       // pointer jump: follow the label one more hop (its own current
       // label), halving every label path — labels only decrease, so
-      // the convergence probe stays monotone
-      propagated.alias("p")
-        .join(propagated.select(col("id").as("cluster_id"),
-          col("cluster_id").as("jump")).alias("j"), Seq("cluster_id"), "left")
-        .select(col("id"),
-          least(col("cluster_id"), coalesce(col("jump"), col("cluster_id")))
-            .as("cluster_id"))
-    }
-    sym.unpersist()
-    (vertices.select(col("id"))
-      .join(clusters, Seq("id"), "left")
+      // the convergence probe stays monotone. Each (label, vertex)
+      // pair moves to the label's partition, reads the label's own
+      // label there, and moves back.
+      val next = exchange(exchange(propagated.map(_.swap), part)
+        .zipPartitions(propagated) { (req, props) =>
+          val p = table(props)
+          req.map { case (l, v) => (v, math.min(l, p.getOrElse(l, l))) }
+        }, part)
+      next.localCheckpoint()
+      (next, labelSum(next))
+    }(Bridge.unpersistRdd)
+    sym.unpersist(blocking = false)
+    import spark.implicits._
+    val idType = vertices.schema("id").dataType
+    Components(vertices.select(col("id"))
+      .join(clusters.toDF("id", "cluster_id"), Seq("id"), "left")
       .select(col("id"),
-        coalesce(col("cluster_id"), col("id")).as("cluster_id")), rounds)
+        coalesce(col("cluster_id").cast(idType), col("id")).as("cluster_id")),
+      rounds, clusters)
   }
+
+  /** Symmetrized edges per CC partition: enough that a partition's
+    * per-row work (a few map lookups per row and stage) outweighs the
+    * fixed cost of its task. */
+  private val CcRowsPerPartition = 1L << 16
+
+  /** Moves every row (k, v) to partition `part.getPartition(k)`. Each
+    * task ships one array of interleaved keys and values per target
+    * partition, so the shuffle serializes a few blocks, not one record
+    * per row. The result claims no partitioner: the kernel lines
+    * partitions up by index. */
+  private def exchange(rows: RDD[(Long, Long)],
+      part: HashPartitioner): RDD[(Long, Long)] =
+    rows.mapPartitions { it =>
+      val blocks = Array.fill(part.numPartitions)(Array.newBuilder[Long])
+      it.foreach { case (k, v) => val b = blocks(part.getPartition(k)); b += k; b += v }
+      blocks.iterator.map(_.result()).zipWithIndex.filter(_._1.nonEmpty).map(_.swap)
+    }
+      // an Int key p in [0, numPartitions) goes to partition p
+      .partitionBy(part)
+      .mapPartitions(_.flatMap { case (_, kv) =>
+        Iterator.range(0, kv.length, 2).map(i => (kv(i), kv(i + 1)))
+      })
+
+  /** One partition of a label RDD as a map from vertex to label. */
+  private def table(labels: Iterator[(Long, Long)]): mutable.LongMap[Long] = {
+    val m = mutable.LongMap.empty[Long]
+    labels.foreach { case (v, l) => m(v) = l }
+    m
+  }
+
+  /** The CC convergence probe, and the one action of each round: the
+    * exact sum of the labels, so it materializes the round's local
+    * checkpoint. Labels only ever decrease, so the sum is strictly
+    * monotone while anything changes — converged once it stops moving. */
+  private def labelSum(labels: RDD[(Long, Long)]): BigInt =
+    labels.values.aggregate(BigInt(0))(_ + _, _ + _)
 
   /** SemDeDup-style semantic dedup (public recipe: k-means-cluster the
     * embeddings, call a pair a near-duplicate only when its cosine

@@ -40,24 +40,31 @@ object DedupQueries {
     * per query tripled the family's cost. Same memoization shape as the
     * ANN family's shared IVF-assign stage. */
   private val ccCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    .empty[(SparkSession, String), Dedup.Components]
 
   /** Drop this session's persisted CC labels — the
     * [[Similarity.releaseStages]] counterpart, wired into
     * [[graft.GraftSession.release]]. Lifecycle rules live in
     * [[StageCaches]]. */
   private[graft] def releaseStages(s: SparkSession): Unit =
-    StageCaches.release(ccCache, s)(_.unpersist(blocking = true))
+    StageCaches.release(ccCache, s)(dropLabels)
+
+  /** Unpersist the labels, then release the CC kernel's final label
+    * checkpoint, which only they read. */
+  private def dropLabels(cc: Dedup.Components): Unit = {
+    cc.labels.unpersist(blocking = true)
+    cc.release()
+  }
 
   private[graft] def ccLabels(s: SparkSession, dir: String): DataFrame =
     StageCaches.memo(ccCache, s, dir) {
       val d = docs(s, dir, 100)
-      Dedup.connectedComponents(
+      val cc = Dedup.connectedComponentsCounted(
         d.select(col("doc_id").as("id")),
         Dedup.jaccardPairs(d, "doc_id", "text", dfCap = ShingleDfCap))
-        .select(col("id").as("doc_id"), col("cluster_id"))
-        .persist()
-    }(_.unpersist(blocking = true))
+      cc.copy(labels = cc.labels
+        .select(col("id").as("doc_id"), col("cluster_id")).persist())
+    }(dropLabels).labels
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Exact dedup: hash-groupBy on content, keep lowest PK per group —

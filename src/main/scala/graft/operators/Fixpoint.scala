@@ -6,17 +6,25 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.Bridge
 
-/** The one convergence loop behind every run-to-fixpoint operator
-  * ([[GraphIterate]]'s four loops and [[Dedup.connectedComponents]]).
-  * A loop supplies its seed, its per-round step, its probe aggregate
-  * and its stopping rule; this owns the rest:
+/** The one convergence loop behind every run-to-fixpoint operator.
+  * [[loop]] owns the round scaffold over any state type: the stopping
+  * rule, round counting, the `maxRounds` cap, and releasing superseded
+  * state once the next state is materialized. It has two instances:
+  * [[run]] for DataFrame state ([[GraphIterate]]'s four loops) and the
+  * RDD label kernel of [[Dedup.connectedComponents]].
   *
-  *  - ONE Spark job per round: the step's plan is probed with
-  *    `observe()` and materialized by an EAGER `localCheckpoint`, whose
-  *    own action completes the observation. A lazy checkpoint plus a
-  *    separate action would LOSE the metric (the action's query reads
-  *    the materialized RDD, not the CollectMetrics node) and pay an
-  *    extra traversal per round.
+  * What [[run]] executes per round: the step's plan is probed with
+  * `observe()` and materialized by an EAGER `localCheckpoint`, whose
+  * own action completes the observation. Under AQE that one action runs
+  * one job per shuffle stage of the round plan (a stage materializes
+  * before the next is planned) plus the result job. On the nation
+  * fixture graph a [[GraphIterate]] round runs 4–5 jobs (kCore), 5
+  * (SSSP, PageRank) or 6 (LPA). A lazy checkpoint plus a separate
+  * action would LOSE the metric (the action's query reads the
+  * materialized RDD, not the CollectMetrics node) and pay an extra
+  * traversal per round. The CC kernel runs ONE job per round (see
+  * [[Dedup.connectedComponents]]).
+  *
   *  - The step computes the probe's inputs with a separate node-sized
   *    LEFT join of the previous state (`prev`), not by fusing `prev`
   *    into its aggregate. Round 15 reverted such a fusion (prev riding
@@ -33,13 +41,11 @@ import org.apache.spark.sql.graftbridge.Bridge
   *
   * Checkpoint lifecycle: state is released explicitly, never left for
   * Spark's GC-driven ContextCleaner. Once round n+1 is materialized,
-  * round n's checkpoint blocks are dropped, along with every other
-  * checkpoint the round read that this call created (one the step
-  * takes itself, e.g. CC's propagated frame). Older checkpoints belong
-  * to the caller or to the static `inputs`; the inputs are released
-  * on exit, since the returned state is an eager checkpoint of its own.
-  * The returned state is never released: it lives until the caller
-  * drops it. Nothing here registers in the shared [[StageCaches]].
+  * round n's checkpoint blocks are dropped. The static `inputs` are
+  * released on exit, since the returned state is an eager checkpoint
+  * of its own. The returned state is never released: it lives until
+  * the caller drops it. Nothing here registers in the shared
+  * [[StageCaches]].
   *
   * Fault-tolerance trade: localCheckpoint truncates lineage onto
   * executor-local storage, so on a CLUSTER an executor loss mid-loop
@@ -58,8 +64,7 @@ object Fixpoint {
   sealed trait Until[-P]
 
   /** The probe stopped moving: round n's value equals round n-1's. The
-    * seed is probed too, by one aggregate over its lazy checkpoint, so
-    * round 1 has a value to compare against. */
+    * seed is probed too, so round 1 has a value to compare against. */
   case object Stable extends Until[Any]
 
   /** The round's own probe value passes `test`. */
@@ -90,42 +95,57 @@ object Fixpoint {
     }
   }
 
-  /** Iterate `step` from `seed` until `until` holds or `maxRounds` steps
-    * ran; returns (final state, rounds). The state keeps the seed's
-    * columns: `step` may add columns the probe reads (the `prev`
-    * join), and they are projected away before the checkpoint.
-    * `probe` is an aggregate over the step's output; a NULL result
-    * reads as `zero`. `inputs` are the loop's static checkpointed
-    * frames, released on exit. */
-  def run[P](seed: DataFrame, probe: Column, zero: P, until: Until[P],
-      maxRounds: Int, inputs: DataFrame*)(
-      step: DataFrame => DataFrame): (DataFrame, Int) = {
-    var state = seed.localCheckpoint(false)
-    val cols = state.columns.toSeq.map(col)
-    // Every checkpoint from here on is this call's to release.
-    val firstOwned = checkpoints(state).head.id
-    var prev: Option[P] = until match {
-      case Stable =>
-        Some(requireMetric(state.agg(probe.as(Key)).first()
-          .getValuesMap[Any](Seq(Key)), Key, zero))
-      case _ => None
-    }
+  /** The round loop over state `S`. `seed` is the materialized seed and
+    * `seedProbe` its probe value, which a [[Stable]] loop needs. `step`
+    * returns the next state, already materialized, with its probe
+    * value; `release` then drops the superseded state. Returns (final
+    * state, rounds), rounds including the confirming round. */
+  private[operators] def loop[S, P](seed: S, seedProbe: Option[P],
+      until: Until[P], maxRounds: Int)(step: S => (S, P))(
+      release: S => Unit): (S, Int) = {
+    require(until != Stable || seedProbe.isDefined,
+      "a Stable loop needs the seed's probe value")
+    var state = seed
+    var prev = seedProbe
     var rounds = 0
     var done = false
     while (!done && rounds < maxRounds) {
-      val obs = Observation()
-      val round = step(state)
-      val next = round.observe(obs, probe.as(Key)).select(cols: _*)
-        .localCheckpoint(true)
-      val p = requireMetric(obs.get, Key, zero)
-      (checkpoints(state) ++ checkpoints(round))
-        .filter(_.id >= firstOwned).distinct.foreach(Bridge.unpersistRdd)
+      val (next, p) = step(state)
+      release(state)
       done = until match {
         case Stable => prev.contains(p)
         case Reached(test) => test(p)
       }
       state = next; prev = Some(p); rounds += 1
     }
+    (state, rounds)
+  }
+
+  /** Iterate `step` from `seed` until `until` holds or `maxRounds` steps
+    * ran; returns (final state, rounds). The state keeps the seed's
+    * columns: `step` may add columns the probe reads (the `prev`
+    * join), and they are projected away before the checkpoint.
+    * `probe` is an aggregate over the step's output; a NULL result
+    * reads as `zero`. A [[Stable]] seed is probed on its own eager
+    * checkpoint; any other seed is checkpointed lazily, so round 1's
+    * action materializes it. `inputs` are the loop's static
+    * checkpointed frames, released on exit. */
+  def run[P](seed: DataFrame, probe: Column, zero: P, until: Until[P],
+      maxRounds: Int, inputs: DataFrame*)(
+      step: DataFrame => DataFrame): (DataFrame, Int) = {
+    val cols = seed.columns.toSeq.map(col)
+    def observed(df: DataFrame): (DataFrame, P) = {
+      val obs = Observation()
+      val next = df.observe(obs, probe.as(Key)).select(cols: _*)
+        .localCheckpoint(true)
+      (next, requireMetric(obs.get, Key, zero))
+    }
+    val (state0, seedProbe) = until match {
+      case Stable => val (s, p) = observed(seed); (s, Some(p))
+      case _ => (seed.localCheckpoint(false), None)
+    }
+    val (state, rounds) = loop(state0, seedProbe, until, maxRounds)(
+      s => observed(step(s)))(checkpoints(_).foreach(Bridge.unpersistRdd))
     if (rounds > 0) inputs.flatMap(checkpoints).foreach(Bridge.unpersistRdd)
     (state, rounds)
   }

@@ -85,7 +85,8 @@ object Ids {
     import org.apache.spark.sql.catalyst.plans.{logical => lg}
     var aggs = 0
     var heavy = false
-    df.queryExecution.optimizedPlan.foreach {
+    // a join inside a scalar or IN subquery runs again too
+    df.queryExecution.optimizedPlan.foreachWithSubqueries {
       case _: lg.Join | _: lg.Window | _: lg.Generate | _: lg.Sort |
            _: lg.RepartitionOperation => heavy = true
       case _: lg.Aggregate => aggs += 1

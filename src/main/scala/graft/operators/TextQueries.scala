@@ -151,8 +151,11 @@ object TextQueries {
         .filter(length(col("w")) > 0)
       val top = toks.groupBy("w").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("w")).limit(256)
+      // constant partition key (pmod, so EliminateWindowPartitions
+      // keeps it): a deliberately single-task window over 256 rows
       val vocab = top.withColumn("tok_id",
-        row_number().over(Window.orderBy(col("cnt").desc, col("w")))
+        row_number().over(Window.partitionBy(pmod(col("cnt"), lit(1)))
+          .orderBy(col("cnt").desc, col("w")))
           .cast("long"))
       toks.join(broadcast(vocab.select("w", "tok_id")), Seq("w"), "left")
         .select(col("doc_id"), col("pos").cast("long").as("pos"),
@@ -266,7 +269,10 @@ object TextQueries {
       val vocab = toks.groupBy("w").agg(count(lit(1)).as("c"))
       val top = vocab.orderBy(col("c").desc, col("w")).limit(1000)
         .withColumn("rank",
-          row_number().over(Window.orderBy(col("c").desc, col("w"))))
+          // constant key: a single-task window over the 1000-row top
+          // (see text_vocab_encode)
+          row_number().over(Window.partitionBy(pmod(col("c"), lit(1)))
+            .orderBy(col("c").desc, col("w"))))
         .select(
           expr("cast(floor(ln(cast(rank as double)) * 1e6 + 0.5d) as bigint)")
             .as("xq"),

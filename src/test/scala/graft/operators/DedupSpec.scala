@@ -1,6 +1,10 @@
 package graft.operators
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType}
 import graft.{SparkTestBase, Tables}
 import graft.functions.SketchExpressions.{minhash_sig, simhash64}
 
@@ -106,7 +110,8 @@ class DedupSpec extends SparkTestBase {
     import spark.implicits._
     val verts = (0L until 200L).toDF("id")
     val edges = (0L until 199L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val (labels, rounds) = Dedup.connectedComponentsCounted(verts, edges)
+    val Dedup.Components(labels, rounds, _) =
+      Dedup.connectedComponentsCounted(verts, edges)
     assert(labels.filter(col("cluster_id") =!= 0L).count() == 0)
     assert(labels.count() == 200)
     // round-count pin: propagate+jump collapses a diameter-d path in
@@ -115,6 +120,136 @@ class DedupSpec extends SparkTestBase {
     // broken probe would stop at 1; pinning the exact count also
     // catches any refactor that shifts the label trajectory.
     assert(rounds == 8, s"expected 8 rounds, got $rounds")
+  }
+
+  /** `body`'s result and the Spark jobs it started. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    Bridge.awaitListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      Bridge.awaitListenerBus(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("connectedComponents runs ONE Spark job per label round, plus two " +
+      "set-up jobs") {
+    import spark.implicits._
+    val verts = (0L until 200L).toDF("id")
+    val edges = (0L until 199L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    // set-up: one job counts the edges, one symmetrizes them and probes
+    // the seed; each round's only action is its label-sum probe. Two
+    // AQE-planned queries per round ran 5-6 jobs.
+    val (c2, j2) = jobsOf(Dedup.connectedComponentsCounted(verts, edges, 2))
+    val (c8, j8) = jobsOf(Dedup.connectedComponentsCounted(verts, edges))
+    val (r2, r8) = (c2.rounds, c8.rounds)
+    assert(r2 == 2 && r8 == 8, s"rounds $r2 (cap 2) and $r8")
+    assert(j2 == r2 + 2, s"$j2 jobs for $r2 rounds")
+    assert(j8 == r8 + 2, s"$j8 jobs for $r8 rounds")
+    // a 398-row edge list gets one partition, not the session's 4
+    assert(c8.checkpoint.getNumPartitions == 1)
+  }
+
+  /** Min id per component, by union-find on the driver. */
+  private def unionFindLabels(verts: Seq[Long],
+      edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val next = parent(y); parent(y) = r; y = next }
+      r
+    }
+    // the larger root joins the smaller, so every root is its
+    // component's min id
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    verts.map(v => v -> find(v)).toMap
+  }
+
+  test("connectedComponents ≡ driver-side union-find (min id per component) " +
+      "on generated graphs; output types follow the vertex ids") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    def randomGraph(n: Int, m: Int, span: Long): (Seq[Long], Seq[(Long, Long)]) = {
+      val vs = Seq.fill(n)(rnd.nextLong() % span).distinct
+      (vs, Seq.fill(m)((vs(rnd.nextInt(vs.size)), vs(rnd.nextInt(vs.size)))))
+    }
+    val chain = (0L until 40L).map(i => (i + 1, i))
+    val graphs: Seq[(String, Seq[Long], Seq[(Long, Long)])] = Seq(
+      ("chain", 0L until 40L, chain),
+      ("star around the max id", 100L to 130L, (100L until 130L).map(i => (130L, i))),
+      ("components and isolated vertices", 0L until 60L,
+        Seq((3L, 9L), (9L, 27L), (50L, 41L), (41L, 12L), (12L, 50L), (58L, 59L))),
+      ("duplicate and reversed edges", 0L until 40L,
+        chain ++ chain ++ chain.map(_.swap) ++ Seq((7L, 7L))),
+      ("no edges", 0L until 5L, Nil)) ++
+      (1 to 4).map { i =>
+        val (vs, es) = randomGraph(80, 20 * i, 1000L)
+        (s"random ${es.size} edges", vs, es)
+      } :+ {
+        // ids far from zero, both signs: the label sum needs both halves
+        val (vs, es) = randomGraph(60, 50, 1L << 50)
+        ("random wide ids", vs, es)
+      } :+ {
+        // over 2^16 symmetrized edges: labels span several partitions
+        val (vs, es) = randomGraph(30000, 40000, 1L << 40)
+        ("random multi-partition", vs, es)
+      }
+    def check(name: String, verts: DataFrame, edges: DataFrame,
+        expect: Map[Long, Long]): Unit = {
+      val cc = Dedup.connectedComponentsCounted(verts, edges)
+      assert(cc.checkpoint.getNumPartitions == (if (name.contains("multi")) 2 else 1),
+        s"$name: ${cc.checkpoint.getNumPartitions} partitions")
+      val got = cc.labels
+      assert(got.schema == verts.select(col("id"), col("id").as("cluster_id")).schema,
+        s"$name: schema ${got.schema.simpleString}")
+      val labels = got.collect().map(r =>
+        r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue)
+      assert(labels.length == expect.size && labels.toMap == expect, name)
+    }
+    for ((name, vs, es) <- graphs) {
+      val expect = unionFindLabels(vs, es)
+      check(name, vs.toDF("id"), es.toDF("a_id", "b_id"), expect)
+      if (vs.forall(_.isValidInt)) check(s"$name (int ids)",
+        vs.map(_.toInt).toDF("id"),
+        es.map { case (a, b) => (a.toInt, b.toInt) }.toDF("a_id", "b_id"), expect)
+      // whole-number decimals, as JDBC NUMERIC/NUMBER keys arrive
+      val dec = col("id").cast(DecimalType(18, 0))
+      check(s"$name (decimal ids)", vs.toDF("id").select(dec.as("id")),
+        es.toDF("a_id", "b_id").select(col("a_id").cast(DecimalType(18, 0)),
+          col("b_id").cast(DecimalType(18, 0))), expect)
+    }
+  }
+
+  test("connectedComponents rejects non-integral ids before running a job") {
+    import spark.implicits._
+    val strings = Seq("a", "b").toDF("id")
+    val ids = Seq(1L, 2L).toDF("id")
+    val pairs = Seq((1L, 2L)).toDF("a_id", "b_id")
+    def typed(df: DataFrame, t: DataType) =
+      df.select(df.columns.map(c => col(c).cast(t).as(c)).toSeq: _*)
+    for ((verts, edges) <- Seq(
+        strings -> Seq(("a", "b")).toDF("a_id", "b_id"),
+        typed(ids, DoubleType) -> typed(pairs, DoubleType),
+        typed(ids, DecimalType(10, 2)) -> typed(pairs, DecimalType(10, 2)),
+        typed(ids, DecimalType(19, 0)) -> typed(pairs, DecimalType(19, 0)),
+        ids -> typed(pairs, DecimalType(20, 0)))) {
+      val (ex, jobs) = jobsOf(intercept[IllegalArgumentException](
+        Dedup.connectedComponents(verts, edges)))
+      assert(ex.getMessage.contains("integral"), ex.getMessage)
+      assert(jobs == 0)
+    }
   }
 
   test("semanticClusters bucketCap: an oversized bucket skips pairing, " +

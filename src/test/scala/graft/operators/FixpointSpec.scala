@@ -33,8 +33,8 @@ class FixpointSpec extends SparkTestBase {
 
     val verts = (0L until 200L).toDF("id")
     val edges = (0L until 199L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val cc2 = blocksLeftBy(Dedup.connectedComponentsCounted(verts, edges, 2)._1)
-    val cc = blocksLeftBy(Dedup.connectedComponentsCounted(verts, edges)._1)
+    val cc2 = blocksLeftBy(Dedup.connectedComponentsCounted(verts, edges, 2).labels)
+    val cc = blocksLeftBy(Dedup.connectedComponentsCounted(verts, edges).labels)
     assert(cc2 == cc, s"cc: $cc2 blocks after 2 rounds, $cc after convergence")
   }
 }

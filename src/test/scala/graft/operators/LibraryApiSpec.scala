@@ -165,6 +165,19 @@ class LibraryApiSpec extends SparkTestBase {
     assert(plan.toLowerCase.contains("rangepartitioning"))
   }
 
+  test("Ids.worthMaterializing counts a join that sits only in a scalar " +
+      "subquery") {
+    spark.range(50).createOrReplaceTempView("wm_a")
+    spark.range(50).createOrReplaceTempView("wm_b")
+    try {
+      val df = spark.sql("SELECT id, (SELECT max(a.id) FROM wm_a a " +
+        "JOIN wm_b b ON a.id = b.id) AS m FROM range(10)")
+      assert(!Ids.worthMaterializing(spark.range(10).toDF()))
+      assert(Ids.worthMaterializing(df),
+        df.queryExecution.optimizedPlan.toString)
+    } finally Seq("wm_a", "wm_b").foreach(spark.catalog.dropTempView)
+  }
+
   test("Curation.tokenBudgetSelect ranks fractional quality scores at full " +
       "precision (classifier-score shape) and NULL token counts add zero") {
     import spark.implicits._

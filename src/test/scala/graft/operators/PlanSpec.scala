@@ -458,18 +458,30 @@ class PlanSpec extends SparkTestBase {
     //  - a window whose input subtree is capped by a LIMIT ≤ 1000
     //    (e.g. dedup_embedding_topk ranks its top-20 result).
     import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Window => LWindow}
-    import org.apache.spark.sql.catalyst.expressions.{Expression, IntegerLiteral, Literal, Pmod}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, IntegerLiteral, Literal, Pmod}
     def constKey(e: Expression): Boolean = e.foldable || (e match {
       case Pmod(_, Literal(1, _), _) => true
       case Pmod(_, Literal(1L, _), _) => true
       case _ => false
     })
+    // analysis moves a non-attribute partition key (the pmod idiom)
+    // into an alias `_wN` of the window's child: judge the aliased
+    // expression, not the attribute
+    def partitionKeys(w: LWindow): Seq[Expression] = {
+      val aliased = w.child.expressions.collect {
+        case a: Alias => a.exprId -> a.child
+      }.toMap
+      w.partitionSpec.map {
+        case a: Attribute => aliased.getOrElse(a.exprId, a)
+        case e => e
+      }
+    }
     val offenders = scala.collection.mutable.ArrayBuffer[String]()
     var whitelisted = 0
     for ((name, q) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
       val plan = q(spark, sfDir).queryExecution.optimizedPlan
       val bad = plan.collectWithSubqueries {
-        case w: LWindow if w.partitionSpec.forall(constKey) => w
+        case w: LWindow if partitionKeys(w).forall(constKey) => w
       }.filterNot { w =>
         val pidOnly = w.orderSpec.nonEmpty &&
           w.orderSpec.forall(_.child.references.forall(_.name == "_pid"))
