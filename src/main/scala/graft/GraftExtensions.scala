@@ -50,11 +50,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.PruneAsOfColumns)
     // engine default: the row_number-filter top-k idiom plans on the
     // bounded-heap operator (no per-partition full sort) whenever the
-    // rewrite's equivalence guards hold — see RewriteWindowTopK.
-    // Disable session-wide with spark.graft.topk.autoRewrite=false
-    // (TopK.rewrite stays available as the explicit per-plan opt-in);
-    // above the key cap the exec degrades to the window form's spilling
-    // sort by default (spark.graft.topk.onOverflow=sort).
+    // rewrite's equivalence guards hold — see RewriteWindowTopK
+    // (TopK.rewrite applies the same rule to one plan); above its key
+    // cap the exec degrades to the window form's spilling sort.
     ext.injectOptimizerRule(_ => graft.plans.RewriteWindowTopK)
     ext.injectFunction((
       FunctionIdentifier("rolling_hash"),

@@ -1,6 +1,6 @@
 package graft.app
 
-import java.sql.{DriverManager, Types}
+import java.sql.Types
 import java.util.concurrent.Executors
 import scala.concurrent.duration._
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -11,6 +11,7 @@ import graft.catalog.{Catalog, ColumnSpec, TableSpec}
 import graft.config.{ConvertMode, ConverterConfig, Dialect}
 import graft.copy.{CopyPlanner, DataCopier}
 import graft.ddl.DdlGenerator
+import graft.sources.JdbcHooks
 
 /** The reference's `Converter.main` re-expressed (SURVEY §3.1): given a
   * source and a destination JDBC URL, run the 3-stage pipeline
@@ -99,7 +100,7 @@ object ConverterApp {
     // --- source discovery: one (TableSpec, partitioned read) per table.
     val srcIsJdbc = source.toLowerCase.startsWith("jdbc:")
     val srcConn =
-      if (srcIsJdbc) Some(DriverManager.getConnection(source)) else None
+      if (srcIsJdbc) Some(JdbcHooks.connect(source, Map.empty)) else None
     // everything below runs inside the try so the source connection
     // cannot leak when introspection or the destination connect throws
     try {
@@ -138,10 +139,9 @@ object ConverterApp {
 
     // Derby: ask for DB creation via properties (a ";create=true" URL
     // attribute doesn't survive sbt's command parsing).
-    val connProps = new java.util.Properties()
-    if (url.startsWith("jdbc:derby:")) connProps.setProperty("create", "true")
     val destDialect = Dialect.forUrl(url)
-    val conn = DriverManager.getConnection(url, connProps)
+    val conn = JdbcHooks.connect(url,
+      if (url.startsWith("jdbc:derby:")) Map("create" -> "true") else Map.empty)
     try {
       conn.setAutoCommit(true)
       val existing = Catalog.listTables(conn, destDialect)

@@ -1,11 +1,11 @@
 package graft.app
 
-import java.sql.DriverManager
 import org.apache.spark.sql.SparkSession
 import graft.GraftSession
 import graft.catalog.Catalog
 import graft.config.Dialect
 import graft.copy.DataCopier
+import graft.sources.JdbcHooks
 
 /** The reverse conversion direction (the reference converts both ways —
   * README.md:7-8): JDBC source → parquet destination, with PK-range
@@ -33,7 +33,7 @@ object ExportApp {
       "usage: ExportApp <jdbcUrl> <outDir>")
     val url = args(0)
     val outDir = args(1)
-    val conn = DriverManager.getConnection(url)
+    val conn = JdbcHooks.connect(url, Map.empty)
     val specs = try Catalog.introspectAll(conn, Dialect.forUrl(url))
       finally conn.close()
     // each table's file is named by its unqualified name

@@ -1,6 +1,6 @@
 package graft.copy
 
-import java.sql.{DriverManager, PreparedStatement}
+import java.sql.PreparedStatement
 import scala.annotation.unused
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -10,6 +10,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.util.LongAccumulator
 import graft.catalog.TableSpec
 import graft.config.ConverterConfig
+import graft.sources.JdbcHooks
 
 /** Totals for one copy — the reference's `ConversionResult`
   * (ConversionResult.java:8-36), except failures are NOT swallowed
@@ -91,7 +92,6 @@ object DataCopier {
     // a Spark task is the upload worker, so it checks the same budget at
     // every batch flush and fails the job (X6: no swallowed hangs).
     val uploadDeadlineMillis = cfg.uploadWorkerMaxWaitMinutes * 60000L
-    val propsSeq = connProps.toSeq
     val t0 = System.currentTimeMillis()
     val pump: Iterator[InternalRow] => Unit = { rows =>
       if (rows.hasNext) {
@@ -102,9 +102,7 @@ object DataCopier {
               s"upload worker exceeded ${cfg.uploadWorkerMaxWaitMinutes} minutes for $table")
         val setters = schema.fields.map(f => setter(f.dataType))
         val width = setters.length
-        val p = new java.util.Properties()
-        propsSeq.foreach { case (k, v) => p.setProperty(k, v) }
-        val conn = DriverManager.getConnection(url, p)
+        val conn = JdbcHooks.connect(url, connProps)
         var failed: Throwable = null
         try {
           conn.setAutoCommit(false)

@@ -1,7 +1,8 @@
 package graft.delete
 
-import java.sql.{Connection, DriverManager, PreparedStatement}
+import java.sql.PreparedStatement
 import graft.config.ConverterConfig
+import graft.sources.JdbcHooks
 
 /** One PK range as a WHERE fragment with `?` markers and the split-key
   * values they stand for, in marker order — the reference binds its
@@ -61,13 +62,13 @@ object DeletePlanner {
       workers: Int, connProps: Map[String, String] = Map.empty,
       hookProps: Option[Map[String, String]] = None): Seq[Seq[Any]] = {
     if (workers <= 1) return Seq.empty
-    val conn = connect(url, connProps)
+    val conn = JdbcHooks.connect(url, connProps)
     try {
       // the reference pins EVERY partitioned read path; the probe
       // connection honors the same snapshot options as the readers
       // (boundaries only affect balance — ranges are half-open — but a
       // pinned probe sees the same state the pinned scan will)
-      graft.sources.JdbcHooks.beforeFetchAll(conn = conn, url = url,
+      JdbcHooks.beforeFetchAll(conn = conn, url = url,
         props = hookProps.getOrElse(connProps))
       val n = {
         val st = conn.createStatement()
@@ -128,7 +129,7 @@ object DeletePlanner {
     * connection closes, so its own error is the one thrown. */
   def execute(url: String, table: String, strategy: DeleteStrategy,
       connProps: Map[String, String] = Map.empty): Long = {
-    val conn = connect(url, connProps)
+    val conn = JdbcHooks.connect(url, connProps)
     var failed: Throwable = null
     try {
       conn.setAutoCommit(false)
@@ -157,11 +158,5 @@ object DeletePlanner {
     } finally {
       try conn.close() catch { case c: Throwable => if (failed == null) throw c }
     }
-  }
-
-  private def connect(url: String, connProps: Map[String, String]): Connection = {
-    val p = new java.util.Properties()
-    connProps.foreach { case (k, v) => p.setProperty(k, v) }
-    DriverManager.getConnection(url, p)
   }
 }

@@ -5,14 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 import graft.Tables
+import graft.operators.CoreQueries.money
 
 /** Second-wave operator coverage: the SQL entry point (`spark.sql` over
   * registered temp views), pivot, explode/lateral, as-of join, exact
   * median, UNION ALL, grouping sets, and approximate aggregates.
   */
 object AdvancedQueries {
-
-  private def money(c: org.apache.spark.sql.Column) = c.cast(DecimalType(12, 2))
 
   /** typed-Dataset row shape for typed_dataset_balance (object scope —
     * local case classes have no TypeTag for encoder derivation) */

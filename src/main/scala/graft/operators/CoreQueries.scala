@@ -29,7 +29,9 @@ import graft.Tables
 object CoreQueries {
 
   private def dec(c: Column, p: Int, s: Int): Column = c.cast(DecimalType(p, s))
-  private def money(c: Column): Column = dec(c, 12, 2)
+  /** exact money/quantity: the one DECIMAL(12,2) cast every query module
+    * sums through (see the oracle-exactness rules above) */
+  private[operators] def money(c: Column): Column = dec(c, 12, 2)
   private def rate(c: Column): Column = dec(c, 8, 4)
   private val one = lit(1).cast(DecimalType(1, 0))
   /** exact revenue term: extendedprice * (1 - discount) in decimal */

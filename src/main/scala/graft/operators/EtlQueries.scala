@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 import graft.Tables
+import graft.operators.CoreQueries.money
 
 /** Queries re-expressing the reference's ETL operator surface (SURVEY.md §2)
   * over the parquet fixtures, each with a DuckDB oracle.
@@ -16,8 +17,6 @@ import graft.Tables
   * is PK-range partition predicates (no global sort), see copy.CopyPlanner.
   */
 object EtlQueries {
-
-  private def money(c: org.apache.spark.sql.Column) = c.cast(DecimalType(12, 2))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S1/P1: full-fidelity scan with explicit column-list projection

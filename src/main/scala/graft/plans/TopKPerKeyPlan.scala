@@ -5,10 +5,12 @@ import scala.collection.mutable
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode, UnsafeExternalRowSorter}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, row_number}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
@@ -59,21 +61,16 @@ object TopKPerKeyStrategy extends SparkStrategy {
   * plain JVM heap — deliberately outside Spark's task memory manager
   * (the win over the window form is exactly "no sort, no spill
   * machinery"). That bound is enforced, not hoped for:
-  * `maxKeysPerPartition` (default [[TopK.DefaultMaxKeysPerPartition]],
-  * configurable via `spark.graft.topk.maxKeysPerPartition`) caps the
+  * `maxKeysPerPartition` ([[TopK.DefaultMaxKeysPerPartition]]) caps the
   * heap map instead of letting a high-cardinality key column OOM the
-  * executor. What happens AT the cap is `spark.graft.topk.onOverflow`:
-  *  - `sort` (default): the task degrades to a spill-capable external
-  *    sort of the surviving heap rows plus the unread remainder,
-  *    ordered (keys, order), then streams rank ≤ k per group — exactly
-  *    the strategy (and memory profile) of the window row_number form
-  *    this operator replaces, so a plan that would have succeeded as a
-  *    window still succeeds here. Heap evictions before the overflow
-  *    are safe to drop: an evicted row was already beaten by k rows of
-  *    its own key, so no later input can put it back in the top-k.
-  *  - `fail`: the task fails with a sizing-and-remediation message —
-  *    for pipelines that would rather size explicitly than silently
-  *    pay for a sort at scale.
+  * executor. At the cap the task degrades to a spill-capable external
+  * sort of the surviving heap rows plus the unread remainder, ordered
+  * (keys, order), then streams rank ≤ k per group — exactly the
+  * strategy (and memory profile) of the window row_number form this
+  * operator replaces, so a plan that would have succeeded as a window
+  * still succeeds here. Heap evictions before the overflow are safe to
+  * drop: an evicted row was already beaten by k rows of its own key, so
+  * no later input can put it back in the top-k.
   * Sizing rule (PERF.md "Known deliberate bounds"): keys/partition ≈
   * distinct keys ÷ shuffle partitions; keep keys × k × avg row bytes
   * well under the executor's per-task heap share. */
@@ -99,8 +96,8 @@ case class TopKPerKeyExec(
 
   override def outputPartitioning: Partitioning = child.outputPartitioning
 
-  // ops visibility at scale: heap-key totals size the
-  // maxKeysPerPartition knob from a real run, and a non-zero fallback
+  // ops visibility at scale: heap-key totals show how close a real run
+  // comes to the maxKeysPerPartition cap, and a non-zero fallback
   // count says the sort degrade (not the heap) served the query
   override lazy val metrics: Map[String, org.apache.spark.sql.execution.metric.SQLMetric] = {
     import org.apache.spark.sql.execution.metric.SQLMetrics
@@ -120,17 +117,6 @@ case class TopKPerKeyExec(
     val keyExprs = keys
     val outAttrs = output
     val rank = rankAttr
-    // the Column entry point mints a LongType rank; the window-rewrite
-    // path reuses row_number()'s IntegerType attribute — write whichever
-    // the output schema declares
-    val rankIsInt = rankAttr.dataType == org.apache.spark.sql.types.IntegerType
-    val failOnOverflow = conf.getConfString(
-      "spark.graft.topk.onOverflow", "sort") match {
-      case "fail" => true
-      case "sort" => false
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.topk.onOverflow must be 'sort' or 'fail', got '$other'")
-    }
     val numOutputRows = longMetric("numOutputRows")
     val numHeapKeys = longMetric("numHeapKeys")
     val sortFallbackTasks = longMetric("sortFallbackTasks")
@@ -155,13 +141,6 @@ case class TopKPerKeyExec(
             }
           case None =>
             if (heaps.size >= maxKeys) {
-              if (failOnOverflow) throw new IllegalStateException(
-                s"TopKPerKeyExec exceeded $maxKeys distinct keys in one " +
-                  "partition (task memory is O(keys × k) on plain JVM heap). " +
-                  "Raise spark.sql.shuffle.partitions so fewer keys land per " +
-                  "task, raise spark.graft.topk.maxKeysPerPartition if the " +
-                  "heap fits, or set spark.graft.topk.onOverflow=sort to " +
-                  "degrade to a spilling sort (the window form's strategy).")
               overflowRow = row.copy()
             } else {
               val heap = mutable.PriorityQueue.empty[InternalRow](rowOrd)
@@ -179,7 +158,7 @@ case class TopKPerKeyExec(
           // dequeueAll yields rank-worst first; reverse for rank 1..k
           val ranked: Seq[InternalRow] = heap.dequeueAll.reverse
           ranked.iterator.zipWithIndex.map { case (r, i) =>
-            rankRow.update(0, if (rankIsInt) i + 1 else (i + 1).toLong)
+            rankRow.update(0, i + 1)
             numOutputRows += 1
             outProj(joined(r, rankRow))
           }
@@ -218,13 +197,13 @@ case class TopKPerKeyExec(
         val sorted = sorter.sort()
         // streaming rank over key-adjacent sorted rows
         var curKey: UnsafeRow = null
-        var rankNo = 0L
+        var rankNo = 0
         sorted.flatMap { r =>
           val key = keyProj(r)
-          if (curKey == null || key != curKey) { curKey = key.copy(); rankNo = 0L }
+          if (curKey == null || key != curKey) { curKey = key.copy(); rankNo = 0 }
           rankNo += 1
           if (rankNo <= kk) {
-            rankRow.update(0, if (rankIsInt) rankNo.toInt else rankNo)
+            rankRow.update(0, rankNo)
             numOutputRows += 1
             Iterator.single(outProj(joined(r, rankRow)))
           } else Iterator.empty
@@ -260,10 +239,9 @@ case class TopKPerKeyExec(
   *    that never fires on custom nodes;
   *  - the order is deterministic and resolvable against the child;
   *  - the limit conjunct is `rn <= k` / `rn < k` / `rn = 1` (or
-  *    mirrored) with k no larger than
-  *    `spark.graft.topk.rewriteLimitThreshold` (default 1000 — above
-  *    that the k-row heaps stop being obviously cheaper than a spilling
-  *    sort, same trade as Spark's window-group-limit threshold).
+  *    mirrored) with k no larger than [[LimitThreshold]] (above that the
+  *    k-row heaps stop being obviously cheaper than a spilling sort,
+  *    same trade as Spark's window-group-limit threshold).
   *
   * Remaining filter conjuncts stay in a Filter above the new node (the
   * rank attribute keeps its exprId, so downstream references resolve
@@ -275,14 +253,12 @@ case class TopKPerKeyExec(
   * semantics, not any accidental tie choice; make the order total for
   * deterministic output (same contract as [[TopK.perKey]]).
   *
-  * Installed by [[graft.GraftExtensions]] (session-wide, the engine
-  * default — disable with `spark.graft.topk.autoRewrite=false`, which
-  * turns the injected rule into a no-op while [[TopK.rewrite]] keeps
-  * working as the explicit per-plan opt-in). With the default
-  * `spark.graft.topk.onOverflow=sort` the rewrite is also
-  * failure-compatible with the window form: a partition that exceeds
-  * the key cap degrades to the same spilling sort the window would
-  * have run, instead of hard-failing a previously-succeeding query. */
+  * Installed session-wide by [[graft.GraftExtensions]]; [[TopK.rewrite]]
+  * applies it to one plan, and [[TopK.perKey]] builds the idiom and
+  * hands it here, so this rule is the only builder of the node. The
+  * rewrite is also failure-compatible with the window form: a partition
+  * that exceeds the key cap degrades to the same spilling sort the
+  * window would have run. */
 object RewriteWindowTopK
   extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]
   with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
@@ -290,6 +266,9 @@ object RewriteWindowTopK
   import org.apache.spark.sql.catalyst.expressions.{Alias, CurrentRow, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, RowFrame, RowNumber, SpecifiedWindowFrame, UnboundedPreceding, WindowExpression}
   import org.apache.spark.sql.catalyst.plans.logical.{Filter, Window, WindowGroupLimit}
   import org.apache.spark.sql.types.IntegerType
+
+  /** the largest k the rewrite plans on the heap */
+  private val LimitThreshold = 1000
 
   /** The upper bound k when `e` bounds `rn` from above (a heap of k
     * rows then satisfies the conjunct by construction, so it can be
@@ -320,12 +299,7 @@ object RewriteWindowTopK
 
   /** The rewritten plan for `Filter(cond, w)`, or None when any
     * equivalence guard fails. */
-  private def tryRewrite(cond: Expression, w: Window): Option[LogicalPlan] = {
-    val threshold = conf.getConfString(
-      "spark.graft.topk.rewriteLimitThreshold", "1000").toInt
-    val maxKeys = conf.getConfString(
-      "spark.graft.topk.maxKeysPerPartition",
-      TopK.DefaultMaxKeysPerPartition.toString).toLong
+  private def tryRewrite(cond: Expression, w: Window): Option[LogicalPlan] =
     w match {
       case Window(Seq(a @ Alias(we: WindowExpression, _)), partSpec, orderSpec, wChild, _)
         if rowNumberFrame(we) &&
@@ -350,10 +324,10 @@ object RewriteWindowTopK
         if (limits.isEmpty || !orderResolvable) None
         else {
           val k = limits.min
-          if (k < 1 || k > threshold) None
+          if (k < 1 || k > LimitThreshold) None
           else {
             val keys = partSpec.map(_.asInstanceOf[Attribute])
-            val topk = TopKPerKeyNode(child, keys, orderSpec, k, rn, maxKeys)
+            val topk = TopKPerKeyNode(child, keys, orderSpec, k, rn)
             // drop ONLY the conjuncts the heap bound subsumes; everything
             // else (including other rn predicates like rn >= 2) filters
             // above, against the same rank attribute
@@ -366,7 +340,6 @@ object RewriteWindowTopK
         }
       case _ => None
     }
-  }
 
   /** Peel a chain of attributes-only (no alias, no computation)
     * Projects down to a Window node: such projections only reorder or
@@ -384,9 +357,7 @@ object RewriteWindowTopK
       case _ => None
     }
 
-  /** the actual rewrite — [[apply]] gates it on the session conf,
-    * [[force]] (the [[TopK.rewrite]] path) applies it unconditionally */
-  private[plans] def force(plan: LogicalPlan): LogicalPlan = plan.transform {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     // optimized-plan shape: the filter sits directly on the window
     case f @ Filter(cond, w: Window) =>
       tryRewrite(cond, w).getOrElse(f)
@@ -400,34 +371,26 @@ object RewriteWindowTopK
           org.apache.spark.sql.catalyst.plans.logical.Project(projList, inner))
       }.getOrElse(f)
   }
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString("spark.graft.topk.autoRewrite", "true").toBoolean) plan
-    else force(plan)
 }
 
 /** Column-level entry point: `TopK.perKey(df, keys, orderBy, k)` →
-  * every input column plus a 1-based `rn` rank column, at most k rows
-  * per key group. Plain (non-SortOrder) columns order ascending. */
+  * every input column plus a 1-based LONG `rn` rank column, at most k
+  * rows per key group. Plain (non-SortOrder) columns order ascending. */
 object TopK {
-  /** Per-partition distinct-key ceiling before the exec fails with a
-    * sizing message instead of OOMing (see [[TopKPerKeyExec]] Scaladoc).
+  /** Per-partition distinct-key ceiling before the exec degrades to the
+    * spilling sort instead of OOMing (see [[TopKPerKeyExec]] Scaladoc).
     * 2M keys × k=10 × ~100 B rows ≈ 2 GB/task worst case — inside a
-    * typical executor's task share; override per session with
-    * `spark.graft.topk.maxKeysPerPartition`. */
+    * typical executor's task share. */
   val DefaultMaxKeysPerPartition: Long = 2000000L
 
   /** Apply [[RewriteWindowTopK]] to THIS plan only: the window-form df
     * comes back planned on the bounded-heap operator when the rewrite's
     * equivalence guards hold, unchanged otherwise. The per-plan twin of
-    * installing the rule session-wide via `GraftExtensions` — useful
-    * when only specific pipelines should opt in. */
+    * installing the rule session-wide via `GraftExtensions`. */
   def rewrite(df: DataFrame): DataFrame = {
     Bridge.ensureStrategy(df.sparkSession, TopKPerKeyStrategy)
     Bridge.ensureOptimizerRule(df.sparkSession, PruneAsOfColumns)
-    // force(), not apply(): the explicit per-plan opt-in works even when
-    // spark.graft.topk.autoRewrite=false disables the session-wide rule
-    Bridge.ofRows(df.sparkSession, RewriteWindowTopK.force(df.queryExecution.analyzed))
+    Bridge.ofRows(df.sparkSession, RewriteWindowTopK(df.queryExecution.analyzed))
   }
 
   /** True when `dt` contains a float/double anywhere — top level or
@@ -445,6 +408,9 @@ object TopK {
     }
   }
 
+  /** The window idiom `row_number() <= k`, handed to [[rewrite]]: the
+    * heap plan whenever its guards hold (k ≤ 1000), the window form with
+    * the same rows otherwise. */
   def perKey(df: DataFrame, keys: Seq[String], orderBy: Seq[Column],
       k: Int, rankCol: String = "rn"): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
@@ -457,51 +423,16 @@ object TopK {
     require(!df.columns.exists(_.equalsIgnoreCase(rankCol)),
       s"rank column '$rankCol' collides with an existing input column " +
         "(case-insensitive); pass a different rankCol")
-    Bridge.ensureStrategy(df.sparkSession, TopKPerKeyStrategy)
-    Bridge.ensureOptimizerRule(df.sparkSession, PruneAsOfColumns)
-    // Resolve the caller's sort columns by analyzing a throwaway
-    // sortWithinPartitions plan — its Sort node carries fully-resolved
-    // catalyst SortOrders against the child this node will wrap.
-    val (order, plan) =
-      df.sortWithinPartitions(orderBy: _*).queryExecution.analyzed match {
-        case s: org.apache.spark.sql.catalyst.plans.logical.Sort =>
-          (s.order, s.child)
-        case other => throw new IllegalStateException(
-          s"unexpected plan for sort resolution: ${other.nodeName}")
-      }
-    // session-resolver semantics (case-insensitive by default) with an
-    // ambiguity check — binding the first of two same-named columns
-    // would group on the wrong one with no error
-    val resolver = df.sparkSession.sessionState.conf.resolver
-    def attr(name: String): Attribute = {
-      val matches = plan.output.filter(a => resolver(a.name, name))
-      if (matches.isEmpty) throw new IllegalArgumentException(
-        s"column '$name' not found among ${plan.output.map(_.name).mkString(", ")}")
-      require(matches.length == 1,
-        s"column '$name' is ambiguous: ${matches.length} columns match")
-      matches.head
+    // float keys (top-level OR nested in struct/array/map): -0.0/NaN
+    // split groups (NormalizeFloatingNumbers never fires on custom
+    // nodes) — reject, don't silently diverge from the window form
+    keys.zip(df.select(keys.map(col): _*).schema.fields).foreach { case (kc, f) =>
+      require(!containsFloat(f.dataType),
+        s"top-k key '$kc' is ${f.dataType}: keys containing float/double are " +
+          "not supported (-0.0/NaN grouping diverges) — cast or bucket first")
     }
-    keys.foreach { kc =>
-      val dt = attr(kc).dataType
-      // float keys (top-level OR nested in struct/array/map): -0.0/NaN
-      // split groups (NormalizeFloatingNumbers never fires on custom
-      // nodes) — reject, don't silently diverge from the window form
-      require(!containsFloat(dt),
-        s"top-k key '$kc' is $dt: keys containing float/double are not " +
-          "supported (-0.0/NaN grouping diverges) — cast or bucket first")
-    }
-    val maxKeys = df.sparkSession.conf
-      .getOption("spark.graft.topk.maxKeysPerPartition")
-      .map { v =>
-        try v.toLong catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"spark.graft.topk.maxKeysPerPartition must be a long, got '$v'")
-        }
-      }.getOrElse(DefaultMaxKeysPerPartition)
-    require(maxKeys > 0,
-      s"spark.graft.topk.maxKeysPerPartition must be positive, got $maxKeys")
-    val node = TopKPerKeyNode(plan, keys.map(attr), order, k,
-      AttributeReference(rankCol, LongType, nullable = false)(), maxKeys)
-    Bridge.ofRows(df.sparkSession, node)
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(orderBy: _*)
+    rewrite(df.withColumn(rankCol, row_number().over(w)).filter(col(rankCol) <= k))
+      .withColumn(rankCol, col(rankCol).cast(LongType))
   }
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.sql.{DriverManager, PreparedStatement}
-import java.util.Properties
+import java.sql.PreparedStatement
 
 import scala.jdk.CollectionConverters._
 
@@ -137,11 +136,7 @@ private[sources] case class GraftJdbcOptions(raw: Map[String, String]) {
     SpannerDialect.register()
     JdbcDialects.get(url)
   }
-  def connect(): java.sql.Connection = {
-    val p = new Properties()
-    connProps.foreach { case (k, v) => p.setProperty(k, v) }
-    DriverManager.getConnection(url, p)
-  }
+  def connect(): java.sql.Connection = JdbcHooks.connect(url, connProps)
 }
 
 private[sources] case class GraftJdbcTable(tableSchema: StructType,

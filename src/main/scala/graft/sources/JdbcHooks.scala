@@ -1,12 +1,20 @@
 package graft.sources
 
-import java.sql.Connection
+import java.sql.{Connection, DriverManager}
 
 import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects}
 
-/** Per-connection dialect hooks shared by every JDBC-opening path
-  * (the V2 partition reader, the delete/copy split-point probes). */
+/** The one JDBC connection opener, plus the per-connection dialect
+  * hooks shared by every JDBC-opening path (the V2 partition reader,
+  * the delete/copy split-point probes). */
 object JdbcHooks {
+
+  /** Open `url` with `props` as the driver's connection properties. */
+  def connect(url: String, props: Map[String, String]): Connection = {
+    val p = new java.util.Properties()
+    props.foreach { case (k, v) => p.setProperty(k, v) }
+    DriverManager.getConnection(url, p)
+  }
 
   /** Run every matching dialect's `beforeFetch` hook (the snapshot-pin
     * contract — [[SpannerDialect.beforeFetch]] pins

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import java.sql.DriverManager
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.config.ConverterConfig
 import graft.copy.DataCopier
+import graft.sources.JdbcHooks
 
 /** Streaming half of the JDBC sink: `writeStream.foreachBatch` over the
   * same commit-aware batched INSERT path the batch copier uses
@@ -83,7 +83,7 @@ object StreamingJdbcSink {
     * try + tolerate "already exists"). */
   def ensureLedger(url: String, table: String,
       connProps: Map[String, String] = Map.empty): Unit = {
-    val conn = connect(url, connProps)
+    val conn = JdbcHooks.connect(url, connProps)
     try {
       Seq(ledgerTable(table), mutexTable(table)).foreach { t =>
         val st = conn.createStatement()
@@ -106,7 +106,7 @@ object StreamingJdbcSink {
       connProps: Map[String, String] = Map.empty,
       sinkId: Option[String] = None): Boolean = {
     val sid = sinkId.getOrElse(table)
-    val mconn = connect(url, connProps)
+    val mconn = JdbcHooks.connect(url, connProps)
     try {
       mconn.setAutoCommit(false)
       // 1. mutex: uncommitted PK insert = exclusive per-batch lock; a
@@ -119,7 +119,7 @@ object StreamingJdbcSink {
       // committed connection (the executors' inserts in step 4 must see
       // a clean table); safe because the mutex serializes attempts.
       val tag = batchTag(sid, table, batchId)
-      val dconn = connect(url, connProps)
+      val dconn = JdbcHooks.connect(url, connProps)
       try {
         val del = dconn.prepareStatement(s"DELETE FROM $table WHERE batch_id = ?")
         del.setLong(1, tag)
@@ -161,7 +161,7 @@ object StreamingJdbcSink {
       sinkId: Option[String] = None): Boolean = {
     require(keyCols.nonEmpty, "upsertBatch needs at least one key column")
     val sid = sinkId.getOrElse(table)
-    val mconn = connect(url, connProps)
+    val mconn = JdbcHooks.connect(url, connProps)
     // persisted: the batch is scanned three times (contract check, keyed
     // delete, insert) — without this the upstream lineage would recompute
     // each time
@@ -185,13 +185,12 @@ object StreamingJdbcSink {
       // distributed keyed delete (replaces writeBatch's batch_id delete)
       val deleteSql = s"DELETE FROM $table WHERE " +
         keyCols.map(k => s"$k = ?").mkString(" AND ")
-      val propsSeq = connProps.toSeq
       val maxBatch = cfg.maxStatementsInOneJdbcBatch
       batch.select(keyCols.map(col): _*)
         .distinct()
         .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
           if (rows.hasNext) {
-            val c = connect(url, propsSeq.toMap)
+            val c = JdbcHooks.connect(url, connProps)
             try {
               c.setAutoCommit(false)
               val ps = c.prepareStatement(deleteSql)
@@ -264,12 +263,6 @@ object StreamingJdbcSink {
     lins.setString(1, sid); lins.setLong(2, batchId)
     lins.executeUpdate(); lins.close()
     mconn.commit()
-  }
-
-  private def connect(url: String, connProps: Map[String, String]) = {
-    val p = new java.util.Properties()
-    connProps.foreach { case (k, v) => p.setProperty(k, v) }
-    DriverManager.getConnection(url, p)
   }
 
   /** Derby X0Y32, PostgreSQL 42P07, generic SQLSTATE 42xxx "object exists". */

@@ -140,4 +140,19 @@ class SqlSurfaceAuditSpec extends SparkTestBase {
       assert(key == java.lang.Long.parseLong(md5hex.take(15), 16))
     }
   }
+
+  test("src/main reads one spark.graft.* session key: spark.graft.ann.indexDir") {
+    val root = java.nio.file.Paths.get("src", "main")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"run from the repo root: no ${root.toAbsolutePath}")
+    val keyLiteral = "\"(spark\\.graft\\.[A-Za-z0-9_.]*[A-Za-z0-9_])".r
+    val keys = scala.util.Using.resource(java.nio.file.Files.walk(root)) { paths =>
+      import scala.jdk.CollectionConverters._
+      paths.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_)).flatMap { f =>
+        keyLiteral.findAllMatchIn(java.nio.file.Files.readString(f)).map(_.group(1))
+      }.toSet
+    }
+    assert(keys == Set("spark.graft.ann.indexDir"),
+      s"session keys in src/main: ${keys.toSeq.sorted.mkString(", ")}")
+  }
 }

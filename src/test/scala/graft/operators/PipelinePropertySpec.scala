@@ -133,19 +133,17 @@ class PipelinePropertySpec extends SparkTestBase {
       val k = 1 + rnd.nextInt(4)
       // cap somewhere between "every partition overflows" and "none do"
       val cap = 1 + rnd.nextInt(nKeys)
-      spark.conf.set("spark.graft.topk.maxKeysPerPartition", cap.toString)
-      try {
-        val got = graft.plans.TopK.perKey(df, Seq("k"),
-            Seq(col("v").desc, col("uid")), k)
-          .collect().map(_.toSeq).sortBy(_.toString()).toSeq
-        val w = Window.partitionBy("k").orderBy(col("v").desc, col("uid"))
-        val want = df.withColumn("rn", row_number().over(w).cast("long"))
-          .filter(col("rn") <= k)
-          .collect().map(_.toSeq).sortBy(_.toString()).toSeq
-        assert(got == want,
-          s"seed $seed (keys=$nKeys cap=$cap parts=$parts k=$k): " +
-            s"${got.length} vs ${want.length} rows")
-      } finally spark.conf.unset("spark.graft.topk.maxKeysPerPartition")
+      val got = graft.plans.TopKPerKeySpec.withKeyCap(
+          graft.plans.TopK.perKey(df, Seq("k"), Seq(col("v").desc, col("uid")), k),
+          cap)
+        .collect().map(_.toSeq).sortBy(_.toString()).toSeq
+      val w = Window.partitionBy("k").orderBy(col("v").desc, col("uid"))
+      val want = df.withColumn("rn", row_number().over(w).cast("long"))
+        .filter(col("rn") <= k)
+        .collect().map(_.toSeq).sortBy(_.toString()).toSeq
+      assert(got == want,
+        s"seed $seed (keys=$nKeys cap=$cap parts=$parts k=$k): " +
+          s"${got.length} vs ${want.length} rows")
     }
   }
 

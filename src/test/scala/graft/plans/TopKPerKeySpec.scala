@@ -1,11 +1,23 @@
 package graft.plans
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.{SparkTestBase, Tables}
+import org.apache.spark.sql.graftbridge.Bridge
+import graft.{GraftExtensions, SparkTestBase, Tables}
+
+object TopKPerKeySpec {
+  /** `df` with every top-k node's key cap set to `cap`, so a test can
+    * force the sort degrade without a public knob. */
+  def withKeyCap(df: DataFrame, cap: Long): DataFrame =
+    Bridge.ofRows(df.sparkSession, df.queryExecution.analyzed.transform {
+      case n: TopKPerKeyNode => n.copy(maxKeysPerPartition = cap)
+    })
+}
 
 /** The bounded-heap top-k operator: equivalence with the window form,
   * plan shape (no sort, no window), and edge semantics. */
 class TopKPerKeySpec extends SparkTestBase {
+  import TopKPerKeySpec.withKeyCap
 
   test("heap top-k ≡ window row_number filter on the orders fixture") {
     val orders = Tables(spark, sfDir, "orders")
@@ -88,46 +100,25 @@ class TopKPerKeySpec extends SparkTestBase {
     assert(got == expect)
   }
 
-  test("high key cardinality works under the default bound; onOverflow=fail " +
-      "fails the capped partition with a sizing message") {
+  test("high key cardinality works under the default key bound") {
     import spark.implicits._
     // every row its own key: 50k heaps across tasks — fine by default
     val wide = (0L until 50000L).map(i => (i, i)).toDF("k", "v")
     assert(TopK.perKey(wide, Seq("k"), Seq(col("v")), k = 1).count() == 50000L)
-    // cap far below the per-partition key count + strict mode → clear
-    // failure, no OOM
-    spark.conf.set("spark.graft.topk.maxKeysPerPartition", "10")
-    spark.conf.set("spark.graft.topk.onOverflow", "fail")
-    try {
-      val e = intercept[org.apache.spark.SparkException] {
-        TopK.perKey(wide.coalesce(1), Seq("k"), Seq(col("v")), k = 1).count()
-      }
-      assert(e.getMessage.contains("distinct keys in one partition") ||
-        Option(e.getCause).exists(_.getMessage
-          .contains("distinct keys in one partition")),
-        s"wrong failure: ${e.getMessage}")
-    } finally {
-      spark.conf.unset("spark.graft.topk.maxKeysPerPartition")
-      spark.conf.unset("spark.graft.topk.onOverflow")
-    }
   }
 
-  test("default onOverflow=sort: above the key cap the task degrades to " +
-      "the spilling-sort strategy with results identical to the window form") {
+  test("above the key cap the task degrades to the spilling sort, same rows") {
     import spark.implicits._
     // 5000 keys × 4 rows in ONE partition, cap of 100 → the heap phase
     // overflows early and the sort phase must produce the full answer
     val df = (0L until 20000L).map(i => (i % 5000, i)).toDF("k", "v").coalesce(1)
-    spark.conf.set("spark.graft.topk.maxKeysPerPartition", "100")
-    try {
-      val got = TopK.perKey(df, Seq("k"), Seq(col("v").desc), k = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val expect = (0L until 20000L).groupBy(_ % 5000).flatMap { case (k, vs) =>
-        vs.sorted(Ordering[Long].reverse).take(2).zipWithIndex
-          .map { case (v, i) => (k, v, (i + 1).toLong) }
-      }.toSet
-      assert(got == expect, s"degrade path diverged: ${got.size} vs ${expect.size}")
-    } finally spark.conf.unset("spark.graft.topk.maxKeysPerPartition")
+    val got = withKeyCap(TopK.perKey(df, Seq("k"), Seq(col("v").desc), k = 2), 100)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val expect = (0L until 20000L).groupBy(_ % 5000).flatMap { case (k, vs) =>
+      vs.sorted(Ordering[Long].reverse).take(2).zipWithIndex
+        .map { case (v, i) => (k, v, (i + 1).toLong) }
+    }.toSet
+    assert(got == expect, s"degrade path diverged: ${got.size} vs ${expect.size}")
   }
 
   test("keys containing nested floats are rejected (struct key) and the " +
@@ -147,22 +138,39 @@ class TopKPerKeySpec extends SparkTestBase {
       .toString.contains("TopKPerKey"))
   }
 
-  test("spark.graft.topk.autoRewrite=false disables the session-wide rule; " +
-      "TopK.rewrite still forces the heap plan") {
+  test("session-wide rule: the optimized Filter → Window → WindowGroupLimit " +
+      "becomes TopKPerKey with the window form's rows") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Window, WindowGroupLimit}
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val rule = Bridge.builtOptimizerRules(ext, spark)
+      .find(_ == RewriteWindowTopK)
+      .getOrElse(fail("GraftExtensions installs no RewriteWindowTopK"))
     val form = windowForm(2)
-    spark.conf.set("spark.graft.topk.autoRewrite", "false")
-    try {
-      assert(!form.queryExecution.executedPlan.toString.contains("TopKPerKey"),
-        "gated rule still fired session-wide")
-      assert(TopK.rewrite(form).queryExecution.executedPlan
-        .toString.contains("TopKPerKey"), "explicit opt-in stopped working")
-    } finally spark.conf.unset("spark.graft.topk.autoRewrite")
+    val optimized = form.queryExecution.optimizedPlan
+    assert(optimized.exists {
+      case Filter(_, w: Window) => w.child.isInstanceOf[WindowGroupLimit]
+      case _ => false
+    }, s"no Filter → Window → WindowGroupLimit to rewrite:\n$optimized")
+    val rewritten = rule(optimized)
+    assert(rewritten.collect { case n: TopKPerKeyNode => n }.length == 1,
+      s"rule did not fire:\n$rewritten")
+    assert(!rewritten.exists {
+      case _: Window | _: WindowGroupLimit => true
+      case _ => false
+    }, s"window machinery survived the rule:\n$rewritten")
+    Bridge.ensureStrategy(spark, TopKPerKeyStrategy)
+    val viaRule = Bridge.ofRows(spark, rewritten)
+    assert(viaRule.queryExecution.executedPlan.toString.contains("TopKPerKey"))
+    val a = viaRule.collect().map(_.toSeq).sortBy(_.toString())
+    val b = form.collect().map(_.toSeq).sortBy(_.toString())
+    assert(a.length == b.length && a.length > 0 && a.sameElements(b),
+      s"rule changed results: ${a.length} vs ${b.length} rows")
   }
 
   test("SQL metrics: output rows and heap keys reported; the sort degrade " +
       "increments its fallback counter") {
     import spark.implicits._
-    import org.apache.spark.sql.graftbridge.Bridge
     val df = (0L until 1000L).map(i => (i % 13, i)).toDF("k", "v")
     val q = TopK.perKey(df, Seq("k"), Seq(col("v").desc), k = 2)
     val n = q.collect().length // collect() so THIS plan's metrics populate
@@ -173,19 +181,16 @@ class TopKPerKeySpec extends SparkTestBase {
     assert(exec.metrics("numHeapKeys").value == 13L)
     assert(exec.metrics("sortFallbackTasks").value == 0L)
     // force the degrade: 500 keys through a cap of 50 in one partition
-    spark.conf.set("spark.graft.topk.maxKeysPerPartition", "50")
-    try {
-      val d = TopK.perKey(
-        (0L until 2000L).map(i => (i % 500, i)).toDF("k", "v").coalesce(1),
-        Seq("k"), Seq(col("v").desc), k = 2)
-      val dn = d.collect().length
-      assert(dn == 1000)
-      val dexec = Bridge.deepCollect(d.queryExecution.executedPlan) {
-        case t: TopKPerKeyExec => t
-      }.head
-      assert(dexec.metrics("sortFallbackTasks").value == 1L)
-      assert(dexec.metrics("numOutputRows").value == dn)
-    } finally spark.conf.unset("spark.graft.topk.maxKeysPerPartition")
+    val d = withKeyCap(TopK.perKey(
+      (0L until 2000L).map(i => (i % 500, i)).toDF("k", "v").coalesce(1),
+      Seq("k"), Seq(col("v").desc), k = 2), 50)
+    val dn = d.collect().length
+    assert(dn == 1000)
+    val dexec = Bridge.deepCollect(d.queryExecution.executedPlan) {
+      case t: TopKPerKeyExec => t
+    }.head
+    assert(dexec.metrics("sortFallbackTasks").value == 1L)
+    assert(dexec.metrics("numOutputRows").value == dn)
   }
 
   test("API validation: empty order and rank-column collision are rejected") {
@@ -268,5 +273,20 @@ class TopKPerKeySpec extends SparkTestBase {
     val big = windowForm(100000)
     assert(!TopK.rewrite(big).queryExecution.executedPlan
       .toString.contains("TopKPerKey"))
+  }
+
+  test("perKey with k over the rewrite limit plans the window form, same rows") {
+    import spark.implicits._
+    val df = (0L until 3000L).map(i => (i % 2, i)).toDF("k", "v")
+    val big = TopK.perKey(df, Seq("k"), Seq(col("v").desc), k = 1001)
+    val plan = big.queryExecution.executedPlan.toString
+    assert(!plan.contains("TopKPerKey") && plan.contains("Window"), plan)
+    assert(big.schema("rn").dataType == org.apache.spark.sql.types.LongType)
+    val got = big.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val expect = (0L until 3000L).groupBy(_ % 2).flatMap { case (k, vs) =>
+      vs.sorted(Ordering[Long].reverse).take(1001).zipWithIndex
+        .map { case (v, i) => (k, v, (i + 1).toLong) }
+    }.toSet
+    assert(got == expect)
   }
 }
