@@ -90,9 +90,7 @@ final case class ConverterConfig(
     lossyNumericAsDouble: Boolean = false,
     /** per-column type overrides: `table.column` or bare `column` →
       * dialect type string — TableConverter.java:254-277 */
-    columnTypeOverrides: Map[String, String] = Map.empty,
-    /** default-map overrides keyed by java.sql.Types code */
-    sqlTypeOverrides: Map[Int, String] = Map.empty)
+    columnTypeOverrides: Map[String, String] = Map.empty)
 
 object ConverterConfig {
   /** Parse reference-style properties, e.g.

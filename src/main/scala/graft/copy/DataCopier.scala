@@ -44,8 +44,11 @@ object DataCopier {
     * single-column and composite PKs alike get intra-table parallelism —
     * the reference's universal worker split
     * (GenericJdbcTableWorker.java:42-58). A table without a PK, or
-    * `numPartitions <= 1`, reads as one partition. Every entry of `props`
-    * is passed as a source option (connection user/password, the
+    * `numPartitions <= 1`, reads as one partition. The scan pushes the
+    * pruned column list and the PK range, nothing else: a filter,
+    * aggregate, limit or sort on the returned frame runs in Spark, since
+    * the database's string order can differ from Spark's. Every entry of
+    * `props` is passed as a source option (connection user/password, the
     * snapshot-pin keys).
     *
     * `pkBounds` has no effect: the split points come from the probe, not

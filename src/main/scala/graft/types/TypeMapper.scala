@@ -99,10 +99,9 @@ object TypeMapper {
     cfg.columnTypeOverrides.get(s"$table.$column")
       .orElse(cfg.columnTypeOverrides.get(column))
       .getOrElse {
-        val template = cfg.sqlTypeOverrides.getOrElse(jdbcType,
-          dialectMap(dialect).getOrElse(jdbcType,
-            throw new IllegalArgumentException(
-              s"No mapping found for SQL type $jdbcType ($table.$column)")))
+        val template = dialectMap(dialect).getOrElse(jdbcType,
+          throw new IllegalArgumentException(
+            s"No mapping found for SQL type $jdbcType ($table.$column)"))
         if (template.contains("$1"))
           template.replace("$1", effectiveSize(template, size).toString)
         else template

@@ -2,7 +2,13 @@ package graft.sources
 
 import java.sql.DriverManager
 
+import org.apache.commons.lang3.ClassUtils
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects}
 import graft.SparkTestBase
 
@@ -45,8 +51,10 @@ object RefusingFetchDialect extends JdbcDialect {
 }
 
 /** The DataSource V2 JDBC read against embedded Derby: partition
-  * planning over a composite PK, checksum fidelity, column pruning,
-  * and filter pushdown. */
+  * planning over a composite PK, checksum fidelity and column pruning.
+  * Every filter, aggregate, limit, sort and offset runs in Spark above
+  * the scan, and its answer follows Spark's ordering, not the
+  * database's. */
 class GraftJdbcSourceSpec extends SparkTestBase {
 
   private val url = "jdbc:derby:memory:graftDsv2;create=true"
@@ -98,13 +106,22 @@ class GraftJdbcSourceSpec extends SparkTestBase {
     assert(df.queryExecution.executedPlan.output.map(_.name) == Seq("s"))
   }
 
-  test("filters compile into the source WHERE clause; residuals stay in Spark") {
+  /** Spark, not the database, computed `df`: its `graft-jdbc` scan
+    * description carries no `Pushed` entry, and every name in `ops` ends
+    * a Spark operator's node name in the executed plan. */
+  private def assertSparkComputes(df: DataFrame, ops: String*): Unit = {
+    val plan = df.queryExecution.executedPlan
+    val scans = Bridge.deepCollect(plan) { case b: BatchScanExec => b.scan.description() }
+    assert(scans.nonEmpty && scans.forall(d =>
+      d.startsWith("graft-jdbc") && !d.contains("Pushed")), s"work pushed to the scan:\n$plan")
+    val names = Bridge.deepCollect(plan) { case p => p.nodeName }
+    ops.foreach(op => assert(names.exists(_.endsWith(op)), s"no Spark $op above the scan:\n$plan"))
+  }
+
+  test("filters run in Spark above the scan; none reach the source WHERE clause") {
     setup()
     val df = read().filter(col("a") < 10L && col("s").contains("row1"))
-    val desc = df.queryExecution.executedPlan.toString
-    // the comparison filter is pushed (scan description carries it);
-    // StringContains is not compiled and must remain a Spark Filter
-    assert(desc.contains("PushedFilters") || desc.contains("graft-jdbc"))
+    assertSparkComputes(df, "Filter")
     val rows = df.collect()
     // a < 10 keeps rows 0..39 (a = i/4); of their names row0..row39,
     // "row1" is contained in row1 and row10..row19 → 11 rows
@@ -113,17 +130,16 @@ class GraftJdbcSourceSpec extends SparkTestBase {
     assert(rows.forall(_.getString(2).contains("row1")))
   }
 
-  test("aggregate pushdown: COUNT/MIN/MAX/SUM group on the database, merge in Spark") {
+  test("grouped COUNT/MIN/MAX/SUM run in Spark over the partitioned scan") {
     setup()
     val df = read().groupBy("b").agg(
       count(lit(1)).as("n"), min("v").as("mn"),
       max("v").as("mx"), sum("a").as("sa"))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedAggregates"), s"aggregates not pushed:\n$plan")
+    assertSparkComputes(df, "HashAggregate")
     val got = df.collect()
       .map(r => r.getInt(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3),
         r.getLong(4))).toMap
-    // cross-check against the naive full-scan aggregation
+    // cross-check against the unpartitioned read
     val expect = spark.read.format("graft-jdbc")
       .option("url", url).option("dbtable", "t").load()
       .groupBy("b").agg(count(lit(1)), min("v"), max("v"), sum("a"))
@@ -134,55 +150,48 @@ class GraftJdbcSourceSpec extends SparkTestBase {
     assert(got.keySet == Set(0, 1, 2, 3) && got(0)._1 == 250L)
   }
 
-  test("global count(*) pushes down without a GROUP BY") {
+  test("global count(*) runs in Spark over a one-column scan") {
     setup()
     val df = read().agg(count(lit(1)).as("n"))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedAggregates"), s"count not pushed:\n$plan")
+    assertSparkComputes(df, "HashAggregate")
+    // the empty projection still SELECTs one column
+    assert(Bridge.deepCollect(df.queryExecution.executedPlan) {
+      case b: BatchScanExec => b.output.size } == Seq(1))
     assert(df.collect()(0).getLong(0) == 1000L)
   }
 
-  test("limit pushdown: FETCH FIRST reaches each partition query, " +
-      "global limit still exact") {
+  test("limit runs in Spark over the partitioned scan, alone and after a filter") {
     setup()
     val df = read().limit(7)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedLimit: 7"), s"limit not pushed:\n$plan")
-    assert(df.collect().length == 7) // partial push: Spark applies the final 7
-    // limit composes with a pushed filter
+    assertSparkComputes(df, "Limit")
+    assert(df.collect().length == 7)
     val filtered = read().filter(col("a") >= 100L).limit(3)
-    assert(filtered.queryExecution.executedPlan.toString.contains("PushedLimit: 3"))
+    assertSparkComputes(filtered, "Filter", "Limit")
     val rows = filtered.collect()
     assert(rows.length == 3 && rows.forall(_.getLong(0) >= 100L))
   }
 
-  test("top-n pushdown: ORDER BY + LIMIT compile to the source; " +
-      "per-partition top-n merges to the exact global answer") {
+  test("ORDER BY + LIMIT runs in Spark: the exact global top-n over 4 partitions") {
     setup()
     val df = read().orderBy(col("a").desc, col("b").asc).limit(5)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.toUpperCase.contains("PUSHEDTOPN: [\"A\" DESC") &&
-      plan.contains("PushedLimit: 5"), s"top-n not pushed:\n$plan")
+    assertSparkComputes(df, "TakeOrderedAndProject")
     val got = df.collect().map(r => (r.getLong(0), r.getInt(1).toLong))
     // rows are (a = i/4, b = i%4): global top-5 by (a desc, b asc)
     assert(got.toSeq == Seq((249L, 0L), (249L, 1L), (249L, 2L), (249L, 3L),
       (248L, 0L)))
   }
 
-  test("offset pushdown: single-partition reads push OFFSET, " +
-      "partitioned reads refuse it") {
+  test("offset runs in Spark for single-partition and partitioned reads alike") {
     setup()
     val one = spark.read.format("graft-jdbc")
       .option("url", url).option("dbtable", "t")
       .option("pk", "a,b").option("partitions", "1").load()
       .orderBy("a", "b").offset(10).limit(4)
-    val plan = one.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedOffset: 10"), s"offset not pushed:\n$plan")
+    assertSparkComputes(one, "TakeOrderedAndProject")
     assert(one.collect().map(r => (r.getLong(0), r.getInt(1).toLong)).toSeq ==
       (10 until 14).map(i => (i.toLong / 4, i.toLong % 4)))
-    // with 4 partitions a per-partition OFFSET would drop rows — refused
     val many = read().orderBy("a", "b").offset(10).limit(4)
-    assert(!many.queryExecution.executedPlan.toString.contains("PushedOffset"))
+    assertSparkComputes(many, "TakeOrderedAndProject")
     assert(many.collect().map(r => (r.getLong(0), r.getInt(1).toLong)).toSeq ==
       (10 until 14).map(i => (i.toLong / 4, i.toLong % 4)))
   }
@@ -194,29 +203,70 @@ class GraftJdbcSourceSpec extends SparkTestBase {
       .option("url", url).option("dbtable", "t")
       .option("pk", "a,b").option("partitions", "1").load()
       .orderBy(col("s").desc).limit(5)
-    val plan = one.queryExecution.executedPlan.toString
-    assert(!plan.contains("PushedTopN"), s"string top-n wrongly pushed:\n$plan")
+    assertSparkComputes(one, "TakeOrderedAndProject")
     // Spark orders: row999 > row998 > ... in binary UTF-8
     assert(one.collect().map(_.getString(2)).toSeq ==
       Seq("row999", "row998", "row997", "row996", "row995"))
   }
 
-  test("limit(m).offset(n) with n >= m refuses the offset push " +
-      "(would be a malformed FETCH NEXT <= 0) and returns empty") {
+  test("limit(m).offset(n) runs in Spark: empty when n >= m, rows n " +
+      "until m otherwise") {
     setup()
     val one = spark.read.format("graft-jdbc")
       .option("url", url).option("dbtable", "t")
       .option("pk", "a,b").option("partitions", "1").load()
     val degenerate = one.orderBy("a", "b").limit(4).offset(10)
-    val plan = degenerate.queryExecution.executedPlan.toString
-    assert(!plan.contains("PushedOffset"), s"offset wrongly pushed:\n$plan")
+    // Spark's optimizer proves it empty, so no scan reaches the source
+    val dplan = degenerate.queryExecution.executedPlan
+    assert(Bridge.deepCollect(dplan) { case b: BatchScanExec => b }.isEmpty &&
+      Bridge.deepCollect(dplan) { case l: LocalTableScanExec => l }.nonEmpty,
+      s"degenerate offset not answered by Spark:\n$dplan")
     assert(degenerate.collect().isEmpty) // first 4 rows, then skip 10
-    // the healthy direction still pushes both and stays exact
     val healthy = one.orderBy("a", "b").limit(10).offset(4)
-    val hplan = healthy.queryExecution.executedPlan.toString
-    assert(hplan.contains("PushedOffset: 4"), s"offset not pushed:\n$hplan")
+    assertSparkComputes(healthy, "TakeOrderedAndProject")
     assert(healthy.collect().map(r => (r.getLong(0), r.getInt(1).toLong)).toSeq ==
       (4 until 10).map(i => (i.toLong / 4, i.toLong % 4)))
+  }
+
+  test("MIN/MAX and a string comparison follow Spark's binary order, not " +
+      "the database's (Derby ranks U+FF5E above U+1F600)") {
+    val ordUrl = "jdbc:derby:memory:graftDsv2Order;create=true"
+    val names = Seq("\uD83D\uDE00", "\uFF5E", "abc") // U+1F600, U+FF5E, ASCII
+    val c = DriverManager.getConnection(ordUrl)
+    try {
+      val st = c.createStatement()
+      try st.executeUpdate("DROP TABLE o") catch { case _: Exception => }
+      st.executeUpdate(
+        "CREATE TABLE o (id INTEGER NOT NULL PRIMARY KEY, name VARCHAR(8))")
+      st.close()
+      val ps = c.prepareStatement("INSERT INTO o VALUES (?, ?)")
+      for (i <- 0 until 12) { ps.setInt(1, i); ps.setString(2, names(i % 3)); ps.addBatch() }
+      ps.executeBatch(); ps.close()
+    } finally c.close()
+    import spark.implicits._
+    val local = (0 until 12).map(i => (i, names(i % 3))).toDF("ID", "NAME")
+    def answers(df: DataFrame) = (
+      df.agg(max("NAME"), min("NAME")).collect().toSeq,
+      df.filter(col("NAME") > "\uFF5E").count())
+    val want = answers(local)
+    assert(want == (Seq(Row(names(0), "abc")), 4L)) // Spark's own order
+    for (partitions <- Seq(1, 4)) {
+      val df = spark.read.format("graft-jdbc")
+        .option("url", ordUrl).option("dbtable", "o")
+        .option("pk", "id").option("partitions", partitions.toString).load()
+      assert(df.rdd.getNumPartitions == partitions)
+      assert(answers(df) == want, s"$partitions partition(s)")
+    }
+  }
+
+  test("the scan builder pushes down columns only: no filter, aggregate, " +
+      "limit, top-n or offset pushdown") {
+    import scala.jdk.CollectionConverters._
+    val pushDowns = ClassUtils.getAllInterfaces(classOf[GraftJdbcScanBuilder]).asScala
+      .map(_.getName).filter(_.startsWith("org.apache.spark.sql.connector.read.SupportsPushDown"))
+      .toSet
+    assert(pushDowns == Set(classOf[SupportsPushDownRequiredColumns].getName),
+      s"pushdown interfaces: $pushDowns")
   }
 
   private val pinUrl = "jdbc:derby:memory:graftDsv2Pin;create=true"
