@@ -95,7 +95,7 @@ object ConverterApp {
       case Left(err) => throw new IllegalArgumentException(err)
       case Right(()) => ()
     }
-    val cfg = ConverterConfig(tableConvertMode = mode, dataConvertMode = mode)
+    val cfg = ConverterConfig()
 
     // --- source discovery: one (TableSpec, partitioned read) per table.
     val srcIsJdbc = source.toLowerCase.startsWith("jdbc:")
@@ -189,28 +189,30 @@ object ConverterApp {
       }
 
       // --- phase 2: table-level fan-out (X1) — `numberOfTableWorkers`
-      // concurrent per-table Spark jobs on a FAIR scheduler, the Spark
-      // shape of the reference's fixed table-worker pool
-      // (DataCopier.java:167-190). Failures propagate (X6 fix).
-      spark.sparkContext.setLocalProperty("spark.scheduler.mode", "FAIR")
+      // concurrent per-table Spark jobs, the Spark shape of the
+      // reference's fixed table-worker pool (DataCopier.java:167-190).
+      // The jobs share the context's scheduler, FIFO unless the session
+      // was started with another `spark.scheduler.mode`. Failures
+      // propagate (X6 fix); the pool is shut down on every exit so a
+      // failed copy leaves no idle worker threads behind.
       val pool = Executors.newFixedThreadPool(cfg.numberOfTableWorkers)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      val futures = plans.map { p =>
-        if (!p.copyData) Future {
-          println(s"[convert] ${p.spec.name}: data skipped (${p.reason})")
-          (0L, 0L)
-        } else Future {
-          val rpc = CopyPlanner.rowsPerCommit(p.spec, cfg)
-          val df = p.read()
-          val report = DataCopier.writeJdbc(df, url, p.spec.name, cfg, rpc)
-          println(s"[convert] ${p.spec.name}: ${report.records} records, " +
-            s"${report.bytes} bytes, rowsPerCommit=$rpc, ${report.elapsedMillis} ms")
-          (report.records, report.bytes)
+      val results = try {
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+        val futures = plans.map { p =>
+          if (!p.copyData) Future {
+            println(s"[convert] ${p.spec.name}: data skipped (${p.reason})")
+            (0L, 0L)
+          } else Future {
+            val rpc = CopyPlanner.rowsPerCommit(p.spec, cfg)
+            val df = p.read()
+            val report = DataCopier.writeJdbc(df, url, p.spec.name, cfg, rpc)
+            println(s"[convert] ${p.spec.name}: ${report.records} records, " +
+              s"${report.bytes} bytes, rowsPerCommit=$rpc, ${report.elapsedMillis} ms")
+            (report.records, report.bytes)
+          }
         }
-      }
-      val results = Await.result(Future.sequence(futures),
-        cfg.tableWorkerMaxWaitMinutes.minutes)
-      pool.shutdown()
+        Await.result(Future.sequence(futures), cfg.tableWorkerMaxWaitMinutes.minutes)
+      } finally pool.shutdown()
       println(s"[convert] TOTAL: ${results.map(_._1).sum} records, " +
         s"${results.map(_._2).sum} bytes, ${System.currentTimeMillis() - t0} ms")
     } finally {

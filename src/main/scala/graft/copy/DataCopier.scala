@@ -89,7 +89,6 @@ object DataCopier {
       s"INSERT INTO $table ($cols) VALUES ($qs)" // AbstractTablePartWorker.java:65-70
     }
     val maxBatch = cfg.maxStatementsInOneJdbcBatch
-    val useBatching = cfg.useJdbcBatching
     // per-task deadline — the reference bounds each upload worker with
     // uploadWorkerMaxWaitInMinutes (ConverterConfiguration.java:217-225);
     // a Spark task is the upload worker, so it checks the same budget at
@@ -122,8 +121,7 @@ object DataCopier {
               else taskBytes += setters(i)(ps, row, i)
               i += 1
             }
-            if (useBatching) { ps.addBatch(); inBatch += 1 }
-            else ps.executeUpdate()
+            ps.addBatch(); inBatch += 1
             sinceCommit += 1; taskRecords += 1
             if (inBatch >= maxBatch) { ps.executeBatch(); inBatch = 0; checkDeadline() }
             if (sinceCommit >= rowsPerCommit) {

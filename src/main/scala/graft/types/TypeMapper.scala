@@ -12,9 +12,8 @@ import graft.config.{ConverterConfig, Dialect}
   * 269-277,287-295`; override lookup order (`table.column`, then bare
   * `column`, then default map) `:254-277`.
   *
-  * Divergence (SURVEY §7.4.3): DECIMAL/NUMERIC map to DecimalType by
-  * default instead of the reference's lossy FLOAT64; the reference
-  * behavior is available behind `lossyNumericAsDouble`.
+  * Divergence (SURVEY §7.4.3): DECIMAL/NUMERIC map to DecimalType
+  * instead of the reference's lossy FLOAT64.
   */
 object TypeMapper {
 
@@ -109,8 +108,7 @@ object TypeMapper {
   }
 
   /** JDBC type → Spark Catalyst type (§1.2 table, right column). */
-  def sparkType(jdbcType: Int, precision: Int, scale: Int,
-      cfg: ConverterConfig = ConverterConfig()): DataType = jdbcType match {
+  def sparkType(jdbcType: Int, precision: Int, scale: Int): DataType = jdbcType match {
     case Types.BOOLEAN | Types.BIT => BooleanType
     case Types.BIGINT => LongType
     case Types.INTEGER => IntegerType
@@ -120,8 +118,7 @@ object TypeMapper {
     case Types.FLOAT | Types.REAL => FloatType
     case Types.DOUBLE => DoubleType
     case Types.DECIMAL | Types.NUMERIC =>
-      if (cfg.lossyNumericAsDouble) DoubleType
-      else DecimalType(math.min(math.max(precision, 1), 38), math.min(scale, 37))
+      DecimalType(math.min(math.max(precision, 1), 38), math.min(scale, 37))
     case Types.DATE => DateType
     case Types.TIME | Types.TIMESTAMP => TimestampType
     case Types.BINARY | Types.VARBINARY | Types.LONGVARBINARY |

@@ -168,10 +168,10 @@ class DerbyEndToEndSpec extends SparkTestBase {
         i.columns.map(_._1.toUpperCase) == Seq("S_NAME")))
     assert(!seen.indexes.exists(_.columns.map(_._1.toUpperCase) == Seq("S_SUPPKEY")))
     // the carried index raises mutations-per-row: fewer rows per commit
-    val without = CopyPlanner.rowsPerCommit(spec.copy(indexes = Nil),
-      graft.config.ConverterConfig(batchSizeBytes = 100000000L))
-    val withIx = CopyPlanner.rowsPerCommit(spec,
-      graft.config.ConverterConfig(batchSizeBytes = 100000000L))
+    def rpc(numIndexes: Int) = CopyPlanner.rowsPerCommit(
+      spec.estimatedRowSizeBytes, spec.columns.size, numIndexes, 100000000L)
+    val without = rpc(0)
+    val withIx = rpc(spec.indexes.size)
     assert(withIx < without,
       s"index must lower rowsPerCommit (with=$withIx, without=$without)")
     st.close(); c.close()
@@ -357,6 +357,40 @@ class DerbyEndToEndSpec extends SparkTestBase {
           "DropAndRecreate", "--yes"), spark)
     }
     assert(e.getMessage.contains("USERS"), e.getMessage)
+  }
+
+  test("a failed table copy leaves no table-worker thread alive") {
+    import scala.jdk.CollectionConverters._
+    // CUSTOMER exists and is empty, so SkipExisting copies into it, and
+    // every c_name is longer than 5 characters: that INSERT fails
+    val dstUrl = "jdbc:derby:memory:graftPoolLeak"
+    val c = DriverManager.getConnection(dstUrl + ";create=true")
+    try c.createStatement().executeUpdate(
+      """CREATE TABLE customer (
+        | c_custkey BIGINT NOT NULL, c_name VARCHAR(5),
+        | c_nationkey INTEGER, c_acctbal DOUBLE, c_mktsegment VARCHAR(16),
+        | PRIMARY KEY (c_custkey))""".stripMargin)
+    finally c.close()
+    val poolThread = """pool-\d+-thread-\d+""".r
+    def poolThreads(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && poolThread.matches(t.getName)).toSet
+    val before = poolThreads()
+    val ex = intercept[Exception] {
+      graft.app.ConverterApp.run(Array(sfDir, dstUrl, "SkipExisting"), spark)
+    }
+    val messages = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).toSeq
+    assert(messages.exists(_.contains("truncation")), messages)
+    // the other tables' copies may still be running when run throws; a
+    // shut-down pool's threads exit once they finish, an open pool's
+    // threads wait for work forever
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    var leaked = poolThreads() -- before
+    while (leaked.nonEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(100)
+      leaked = poolThreads() -- before
+    }
+    assert(leaked.isEmpty, leaked.map(_.getName))
   }
 
   test("DropAndRecreate without an explicit ack aborts before any DDL") {

@@ -118,7 +118,7 @@ class ReadJdbcSpec extends SparkTestBase {
   }
 
   test("a delimited mixed-case column reads through readJdbc, in the " +
-      "SELECT list, a pushed filter and a pushed aggregate") {
+      "SELECT list, a Spark filter and a Spark max") {
     val c = DriverManager.getConnection(url)
     try {
       val st = c.createStatement()

@@ -57,11 +57,9 @@ class TypeMapperSpec extends AnyFunSuite {
     }
   }
 
-  test("Spark types: DECIMAL is lossless by default, lossy behind flag") {
-    assert(TypeMapper.sparkType(Types.DECIMAL, 12, 2, cfg) == DecimalType(12, 2))
-    assert(TypeMapper.sparkType(Types.NUMERIC, 20, 4, cfg) == DecimalType(20, 4))
-    val lossy = cfg.copy(lossyNumericAsDouble = true)
-    assert(TypeMapper.sparkType(Types.DECIMAL, 12, 2, lossy) == DoubleType)
+  test("Spark types: DECIMAL and NUMERIC are lossless") {
+    assert(TypeMapper.sparkType(Types.DECIMAL, 12, 2) == DecimalType(12, 2))
+    assert(TypeMapper.sparkType(Types.NUMERIC, 20, 4) == DecimalType(20, 4))
   }
 
   test("Spark types: core scalar mappings") {
