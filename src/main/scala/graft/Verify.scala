@@ -5,9 +5,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // Optional extra args: restrict the dump to these query names (dev
-    // iteration aid — the driver always passes exactly two args).
+    // Optional extra args: restrict the dump, and oracle_sql.json with
+    // it, to these query names, so tools/check_oracle.py can check one
+    // family (with exactly two args every query and oracle is written).
     val only = args.drop(2).toSet
+    def selected(name: String): Boolean = only.isEmpty || only(name)
     val unknown = only -- SparkEntry.queries.keySet
     if (unknown.nonEmpty)
       System.err.println(s"[verify] WARNING: unknown query name(s) " +
@@ -20,7 +22,7 @@ object Verify {
     // only trace was stderr).
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -35,7 +37,7 @@ object Verify {
     // (check_oracle.py embeds this as the report's _meta)
     Files.writeString(Paths.get(s"$outDir/_meta.json"),
       RunMeta.json(spark, sfDir))
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (name, _) => selected(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Always write the manifest (empty object when all green) so its

@@ -2,8 +2,10 @@ package graft.app
 
 import java.sql.Types
 import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicReference
 import scala.concurrent.duration._
 import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.util.Success
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import graft.{GraftSession, Tables}
@@ -193,8 +195,14 @@ object ConverterApp {
       // reference's fixed table-worker pool (DataCopier.java:167-190).
       // The jobs share the context's scheduler, FIFO unless the session
       // was started with another `spark.scheduler.mode`. Failures
-      // propagate (X6 fix); the pool is shut down on every exit so a
-      // failed copy leaves no idle worker threads behind.
+      // propagate (X6 fix) and are final: the first failed copy cancels
+      // the run's job group, and `run` rethrows it (the others'
+      // failures suppressed) only once every table's copy has ended, so
+      // nothing writes to the destination after `run` throws. The pool
+      // is shut down on every exit so no idle worker threads remain.
+      val sc = spark.sparkContext
+      val jobGroup = s"graft-convert-${java.util.UUID.randomUUID()}"
+      val firstFailure = new AtomicReference[Throwable]()
       val pool = Executors.newFixedThreadPool(cfg.numberOfTableWorkers)
       val results = try {
         implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
@@ -203,15 +211,30 @@ object ConverterApp {
             println(s"[convert] ${p.spec.name}: data skipped (${p.reason})")
             (0L, 0L)
           } else Future {
-            val rpc = CopyPlanner.rowsPerCommit(p.spec, cfg)
-            val df = p.read()
-            val report = DataCopier.writeJdbc(df, url, p.spec.name, cfg, rpc)
-            println(s"[convert] ${p.spec.name}: ${report.records} records, " +
-              s"${report.bytes} bytes, rowsPerCommit=$rpc, ${report.elapsedMillis} ms")
-            (report.records, report.bytes)
+            sc.setJobGroup(jobGroup, s"convert ${p.spec.name}", interruptOnCancel = false)
+            try {
+              val rpc = CopyPlanner.rowsPerCommit(p.spec, cfg)
+              val df = p.read()
+              val report = DataCopier.writeJdbc(df, url, p.spec.name, cfg, rpc)
+              println(s"[convert] ${p.spec.name}: ${report.records} records, " +
+                s"${report.bytes} bytes, rowsPerCommit=$rpc, ${report.elapsedMillis} ms")
+              (report.records, report.bytes)
+            } catch { case e: Throwable =>
+              if (firstFailure.compareAndSet(null, e))
+                sc.cancelJobGroupAndFutureJobs(jobGroup,
+                  s"table ${p.spec.name} failed to copy")
+              throw e
+            }
           }
         }
-        Await.result(Future.sequence(futures), cfg.tableWorkerMaxWaitMinutes.minutes)
+        Await.ready(Future.sequence(futures.map(_.transform(Success(_)))),
+          cfg.tableWorkerMaxWaitMinutes.minutes)
+        Option(firstFailure.get).foreach { first =>
+          futures.flatMap(_.value.flatMap(_.failed.toOption))
+            .filterNot(_ eq first).foreach(first.addSuppressed)
+          throw first
+        }
+        futures.map(_.value.get.get)
       } finally pool.shutdown()
       println(s"[convert] TOTAL: ${results.map(_._1).sum} records, " +
         s"${results.map(_._2).sum} bytes, ${System.currentTimeMillis() - t0} ms")

@@ -12,14 +12,15 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * pseudo-features derived from payload bytes, clearly marked — because
   * the container ships no compressed-codec libraries; everything
   * Spark-side (encoders, partition iteration, batch assembly, output
-  * schema) is real and tested in MediaBatchSpec. The two UNCOMPRESSED
-  * formats below it — PPM images and RIFF PCM WAV audio — are REAL
-  * decode kernels, not stubs: header/chunk parsing and sample math
-  * straight from the bytes.
+  * schema) is real and tested in MediaBatchSpec.
   *
-  * Scale posture: a narrow mapPartitions — no shuffle, no driver
-  * involvement; batch size bounds peak memory per task regardless of
-  * partition size.
+  * The format kernels below it — PPM, WAV, PNG, JPEG (via
+  * [[JpegKernel]]) and MJPEG — are REAL decoders, not stubs: header,
+  * chunk and entropy parsing and pixel/sample math straight from the
+  * bytes. Each is a per-payload function (`decodeX`, then
+  * [[imageFeatures]] for any decoded raster); a query runs it with
+  * `Dataset.map`/`flatMap` — a narrow stage, no shuffle, one payload
+  * in memory at a time.
   */
 object MediaBatchProcessor {
 
@@ -64,10 +65,6 @@ object MediaBatchProcessor {
   /** A decoded P6 image: `pixels` is row-major RGB, 3 bytes/pixel. */
   final case class PpmImage(width: Int, height: Int, maxVal: Int,
       pixels: Array[Byte])
-
-  final case class PpmFeatures(doc_id: Long, width: Int, height: Int,
-      mean_r: Long, mean_g: Long, mean_b: Long, lum_mean: Long,
-      ahash_hi: Long, ahash_lo: Long)
 
   /** REAL P6 parser: magic, whitespace-separated width/height/maxval
     * (with `#` comment support, per the netpbm spec), one whitespace,
@@ -164,11 +161,10 @@ object MediaBatchProcessor {
     (hi, lo)
   }
 
-  /** Decode + featurize one PPM payload: per-channel integer means,
-    * mean luminance, and the average-hash. All integer division, so
-    * the result is engine-exact. */
-  def ppmFeatures(docId: Long, payload: Array[Byte]): PpmFeatures = {
-    val img = decodePpm(payload)
+  /** Per-channel integer means of a decoded raster — (R, G, B,
+    * luminance), each Σ div pixel count — the one pixel loop every
+    * image, frame and resize feature row shares. */
+  private def channelMeans(img: PpmImage): (Long, Long, Long, Long) = {
     val n = img.width.toLong * img.height
     var sr = 0L; var sg = 0L; var sb = 0L; var sl = 0L
     var p = 0
@@ -179,22 +175,22 @@ object MediaBatchProcessor {
       sr += r; sg += g; sb += b; sl += lum(r, g, b)
       p += 3
     }
-    val (hi, lo) = averageHash(img)
-    PpmFeatures(docId, img.width, img.height,
-      sr / n, sg / n, sb / n, sl / n, hi, lo)
+    (sr / n, sg / n, sb / n, sl / n)
   }
 
-  /** The batch-shaped REAL decode stage: same partition/batch plumbing
-    * as [[decodeBatched]], but the per-batch body does actual header
-    * parsing and pixel arithmetic — no stub label applies to this
-    * path. */
-  def decodePpmBatched(media: Dataset[MediaRow],
-      batchSize: Int = DefaultBatchSize): Dataset[PpmFeatures] = {
-    val spark: SparkSession = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap(_.map(m => ppmFeatures(m.doc_id, m.payload)))
-    }
+  /** The features of one decoded image, whatever its container (PPM,
+    * PNG, JPEG): dimensions, per-channel integer means, mean luminance
+    * and the average-hash. All integer division, so the result is
+    * engine-exact and identical rasters agree bit-for-bit across
+    * formats — one SQL oracle model covers every image format. */
+  final case class ImageFeatures(doc_id: Long, width: Int, height: Int,
+      mean_r: Long, mean_g: Long, mean_b: Long, lum_mean: Long,
+      ahash_hi: Long, ahash_lo: Long)
+
+  def imageFeatures(docId: Long, img: PpmImage): ImageFeatures = {
+    val (r, g, b, l) = channelMeans(img)
+    val (hi, lo) = averageHash(img)
+    ImageFeatures(docId, img.width, img.height, r, g, b, l, hi, lo)
   }
 
   // ---------------------------------------------------------------------
@@ -387,30 +383,6 @@ object MediaBatchProcessor {
     }
   }
 
-  /** Batch-shaped windowed audio features — narrow mapPartitions; the
-    * per-payload window fan-out stays inside the task. */
-  def wavWindowsBatched(media: Dataset[MediaRow],
-      winFrames: Int = 16,
-      batchSize: Int = DefaultBatchSize): Dataset[WavWindowFeatures] = {
-    val spark: SparkSession = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize)
-        .flatMap(_.flatMap(m => wavWindowFeatures(m.doc_id, m.payload, winFrames)))
-    }
-  }
-
-  /** Batch-shaped WAV decode — the audio twin of [[decodePpmBatched]];
-    * a narrow mapPartitions, real parse, no stub label. */
-  def decodeWavBatched(media: Dataset[MediaRow],
-      batchSize: Int = DefaultBatchSize): Dataset[WavFeatures] = {
-    val spark: SparkSession = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap(_.map(m => wavFeatures(m.doc_id, m.payload)))
-    }
-  }
-
   // ---------------------------------------------------------------------
   // REAL decode path #3: PNG (round 12). The first COMPRESSED format —
   // the codec is zlib/DEFLATE, which the JDK ships (`java.util.zip
@@ -442,7 +414,7 @@ object MediaBatchProcessor {
     * floor((left+up)/2) — and Paeth(4). Ancillary chunks (tEXt, gAMA,
     * …) are skipped by size, which is what makes this a container
     * parse. Returns the same [[PpmImage]] raster the PPM path yields,
-    * so all downstream pixel math is shared. */
+    * so [[imageFeatures]] featurizes it unchanged. */
   def decodePng(bytes: Array[Byte]): PpmImage = {
     def fail(msg: String) =
       throw new IllegalArgumentException(s"not a supported PNG: $msg")
@@ -660,80 +632,6 @@ object MediaBatchProcessor {
     PpmImage(ow, oh, img.maxVal, out)
   }
 
-  final case class PngFeatures(doc_id: Long, width: Int, height: Int,
-      mean_r: Long, mean_g: Long, mean_b: Long, lum_mean: Long,
-      ahash_hi: Long, ahash_lo: Long)
-
-  /** Decode + featurize one PNG payload: signature/chunk/CRC walk,
-    * IHDR parse, inflate, unfilter — then the SAME integer pixel math
-    * as the PPM path (per-channel means, mean luminance, block-mean
-    * average-hash), so PNG and PPM of identical rasters agree
-    * bit-for-bit and one SQL oracle covers both. */
-  def pngFeatures(docId: Long, payload: Array[Byte]): PngFeatures = {
-    val img = decodePng(payload)
-    val n = img.width.toLong * img.height
-    var sr = 0L; var sg = 0L; var sb = 0L; var sl = 0L
-    var p = 0
-    while (p < img.pixels.length) {
-      val r = img.pixels(p) & 0xff
-      val g = img.pixels(p + 1) & 0xff
-      val b = img.pixels(p + 2) & 0xff
-      sr += r; sg += g; sb += b; sl += lum(r, g, b)
-      p += 3
-    }
-    val (hi, lo) = averageHash(img)
-    PngFeatures(docId, img.width, img.height,
-      sr / n, sg / n, sb / n, sl / n, hi, lo)
-  }
-
-  /** Batch-shaped PNG decode — same narrow mapPartitions shape as the
-    * PPM/WAV paths; real inflate + unfilter per payload, no stub. */
-  def decodePngBatched(media: Dataset[MediaRow],
-      batchSize: Int = DefaultBatchSize): Dataset[PngFeatures] = {
-    val spark: SparkSession = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap(_.map(m => pngFeatures(m.doc_id, m.payload)))
-    }
-  }
-
-  final case class JpegFeatures(doc_id: Long, width: Int, height: Int,
-      mean_r: Long, mean_g: Long, mean_b: Long, lum_mean: Long,
-      ahash_hi: Long, ahash_lo: Long)
-
-  /** Decode + featurize one baseline JPEG payload via [[JpegKernel]]:
-    * marker walk, DQT/DHT parse, Huffman decode, dequant, IDCT,
-    * YCbCr→RGB — then the SAME integer pixel math as the PPM/PNG paths
-    * (channel means, luminance, block-mean aHash), so one oracle model
-    * covers every image format. */
-  def jpegFeatures(docId: Long, payload: Array[Byte]): JpegFeatures = {
-    val img = JpegKernel.decodeJpeg(payload)
-    val n = img.width.toLong * img.height
-    var sr = 0L; var sg = 0L; var sb = 0L; var sl = 0L
-    var p = 0
-    while (p < img.pixels.length) {
-      val r = img.pixels(p) & 0xff
-      val g = img.pixels(p + 1) & 0xff
-      val b = img.pixels(p + 2) & 0xff
-      sr += r; sg += g; sb += b; sl += lum(r, g, b)
-      p += 3
-    }
-    val (hi, lo) = averageHash(img)
-    JpegFeatures(docId, img.width, img.height,
-      sr / n, sg / n, sb / n, sl / n, hi, lo)
-  }
-
-  /** Batch-shaped JPEG decode — the same narrow mapPartitions shape as
-    * the PPM/WAV/PNG paths; real entropy decode + IDCT per payload. */
-  def decodeJpegBatched(media: Dataset[MediaRow],
-      batchSize: Int = DefaultBatchSize): Dataset[JpegFeatures] = {
-    val spark: SparkSession = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap(_.map(m => jpegFeatures(m.doc_id, m.payload)))
-    }
-  }
-
   final case class VideoFrameFeatures(doc_id: Long, frame_no: Int,
       width: Int, height: Int, mean_r: Long, mean_g: Long, mean_b: Long,
       lum_mean: Long)
@@ -748,32 +646,9 @@ object MediaBatchProcessor {
       payload: Array[Byte]): Seq[VideoFrameFeatures] =
     JpegKernel.splitMjpeg(payload).zipWithIndex.map { case (fb, fno) =>
       val img = JpegKernel.decodeJpeg(fb)
-      val n = img.width.toLong * img.height
-      var sr = 0L; var sg = 0L; var sb = 0L; var sl = 0L
-      var p = 0
-      while (p < img.pixels.length) {
-        val r = img.pixels(p) & 0xff
-        val g = img.pixels(p + 1) & 0xff
-        val b = img.pixels(p + 2) & 0xff
-        sr += r; sg += g; sb += b; sl += lum(r, g, b)
-        p += 3
-      }
-      VideoFrameFeatures(docId, fno, img.width, img.height,
-        sr / n, sg / n, sb / n, sl / n)
+      val (r, g, b, l) = channelMeans(img)
+      VideoFrameFeatures(docId, fno, img.width, img.height, r, g, b, l)
     }
-
-  /** Batch-shaped MJPEG decode — narrow mapPartitions; the per-payload
-    * fan-out (frames per doc) happens inside the task, so memory is
-    * bounded by one payload's frames, never a partition's. */
-  def decodeVideoFramesBatched(media: Dataset[MediaRow],
-      batchSize: Int = DefaultBatchSize): Dataset[VideoFrameFeatures] = {
-    val spark: SparkSession = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize)
-        .flatMap(_.flatMap(m => videoFrameFeatures(m.doc_id, m.payload)))
-    }
-  }
 
   final case class ResizeFeatures(doc_id: Long, src_width: Int,
       src_height: Int, new_width: Int, new_height: Int,
@@ -789,31 +664,9 @@ object MediaBatchProcessor {
       factor: Int): ResizeFeatures = {
     val src = decodePng(payload)
     val img = resizeBox(src, factor)
-    val n = img.width.toLong * img.height
-    var sr = 0L; var sg = 0L; var sb = 0L; var sl = 0L
-    var p = 0
-    while (p < img.pixels.length) {
-      val r = img.pixels(p) & 0xff
-      val g = img.pixels(p + 1) & 0xff
-      val b = img.pixels(p + 2) & 0xff
-      sr += r; sg += g; sb += b; sl += lum(r, g, b)
-      p += 3
-    }
+    val (r, g, b, l) = channelMeans(img)
     val (hi, lo) = averageHash(img)
     ResizeFeatures(docId, src.width, src.height, img.width, img.height,
-      sr / n, sg / n, sb / n, sl / n, hi, lo)
-  }
-
-  /** Batch-shaped decode→resize→featurize stage — the real resize path
-    * a training pipeline runs (narrow mapPartitions, batch-bounded
-    * memory, no shuffle). */
-  def resizePngBatched(media: Dataset[MediaRow], factor: Int,
-      batchSize: Int = DefaultBatchSize): Dataset[ResizeFeatures] = {
-    val spark: SparkSession = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.grouped(batchSize)
-        .flatMap(_.map(m => resizePngFeatures(m.doc_id, m.payload, factor)))
-    }
+      r, g, b, l, hi, lo)
   }
 }

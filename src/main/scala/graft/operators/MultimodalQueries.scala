@@ -1,21 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
+import graft.operators.MediaBatchProcessor.{ImageFeatures, MediaRow, PpmImage,
+  WavAudio, decodePng, decodePpm, encodePng, encodeWav, imageFeatures, resizePngFeatures,
+  videoFrameFeatures, wavFeatures, wavWindowFeatures}
 
 /** Multimodal-column plumbing (north-star surface): treat image/audio/video
   * payloads as opaque `binary` columns with typed metadata, and run
   * decode / feature-extract / frame-sample stages over them.
   *
-  * The container has no image/audio codecs, so the *decode* step is a
-  * clearly-marked deterministic stub (`stubDecode`) — but everything Spark
-  * cares about is real: the binary column, the metadata struct schema, the
-  * per-row feature extraction as codegen'd expressions, and the partition
-  * shape (narrow map stages, no shuffle until an aggregate). Payload bytes
-  * are manufactured from `documents.text` (UTF-8) so every stage is
-  * reproducible across engines.
+  * The PPM, WAV, PNG, JPEG and MJPEG queries run REAL decode kernels
+  * ([[MediaBatchProcessor]], [[JpegKernel]]) one payload at a time in a
+  * narrow `map`/`flatMap`; the metadata and byte-slice queries are
+  * codegen'd expressions over the binary column. No stage shuffles until
+  * an aggregate. Payload bytes are manufactured from `documents.text`
+  * (UTF-8) so every stage is reproducible across engines.
   */
 object MultimodalQueries {
 
@@ -33,21 +35,15 @@ object MultimodalQueries {
       (expr("octet_length(payload)") % 48 + 1).cast(IntegerType).as("height"),
       lit(3).as("channels")))
 
-  /** `mm_wav_decode`'s payload builder: the document text
-    * deterministically modulates a 2-channel 16-bit PCM signal (per
-    * frame k, channel c: u = (byte[(2k+c) mod n] · 517) mod 2¹⁶,
-    * sign-decoded as two's complement), written through the canonical
-    * RIFF encoder. Empty-text guard: a 0-length doc modulates SILENCE
-    * (code 0) instead of throwing ArithmeticException on `% 0` inside
-    * the executor map; the oracle's `CASE WHEN n = 0` arm mirrors it. */
-  /** The mm_wav/png oracles model the payload as CHARACTER code points
-    * (`unicode(substr(text, …))`) while these builders cycle UTF-8
+  /** The text bytes every payload builder cycles. The mm_wav/png/jpeg
+    * oracles model the payload as CHARACTER code points
+    * (`unicode(substr(text, …))`) while the builders cycle UTF-8
     * BYTES — identical only when the text is pure ASCII (one byte per
     * char, byte value ≡ code point). Enforce that contract HERE, at the
     * builder, so a non-ASCII document fails loudly at payload time
     * instead of silently diverging from the oracle downstream. The
     * fixture is verified ASCII at every SF. */
-  private def requireAscii(id: Long, t: String): Unit = {
+  private def asciiBytes(id: Long, t: String): Array[Byte] = {
     var i = 0
     while (i < t.length) {
       if (t.charAt(i) >= 0x80)
@@ -57,11 +53,18 @@ object MultimodalQueries {
             "code-point oracles only agree on ASCII text")
       i += 1
     }
+    t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  def textToWavRow(id: Long, t: String): MediaBatchProcessor.MediaRow = {
-    requireAscii(id, t)
-    val bytes = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  /** `mm_wav_decode`'s payload builder: the document text
+    * deterministically modulates a 2-channel 16-bit PCM signal (per
+    * frame k, channel c: u = (byte[(2k+c) mod n] · 517) mod 2¹⁶,
+    * sign-decoded as two's complement), written through the canonical
+    * RIFF encoder. Empty-text guard: a 0-length doc modulates SILENCE
+    * (code 0) instead of throwing ArithmeticException on `% 0` inside
+    * the executor map; the oracle's `CASE WHEN n = 0` arm mirrors it. */
+  def textToWavRow(id: Long, t: String): MediaRow = {
+    val bytes = asciiBytes(id, t)
     val n = bytes.length
     val samples = new Array[Int](64 * 2)
     var k = 0
@@ -75,10 +78,8 @@ object MultimodalQueries {
       }
       k += 1
     }
-    MediaBatchProcessor.MediaRow(id,
-      MediaBatchProcessor.encodeWav(MediaBatchProcessor.WavAudio(
-        numChannels = 2, sampleRate = 8000, bitsPerSample = 16,
-        samples)), "audio/wav")
+    MediaRow(id, encodeWav(WavAudio(numChannels = 2, sampleRate = 8000,
+      bitsPerSample = 16, samples)), "audio/wav")
   }
 
   /** `mm_png_decode`'s payload builder: the document's UTF-8 bytes fill
@@ -88,38 +89,23 @@ object MultimodalQueries {
     * cycling None/Sub/Up/Average/Paeth, zlib DEFLATE, CRC32-stamped
     * chunks. The decode side must therefore walk chunks, verify CRCs,
     * INFLATE, and reverse all five filters to get the pixels back. */
-  def textToPngRow(id: Long, t: String): MediaBatchProcessor.MediaRow =
+  def textToPngRow(id: Long, t: String): MediaRow =
     textToPngRowSized(id, t, 8, 8)
 
   /** Size-parameterized PNG payload builder (same byte-cycled raster
     * model at any w×h — `mm_resize_real` feeds 16×16 so a 2× box
     * downsample lands on an aHash-able 8×8). */
-  def textToPngRowSized(id: Long, t: String, w: Int,
-      h: Int): MediaBatchProcessor.MediaRow = {
-    requireAscii(id, t)
-    val bytes = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  def textToPngRowSized(id: Long, t: String, w: Int, h: Int): MediaRow = {
+    val bytes = asciiBytes(id, t)
     val n = bytes.length
     val raster = new Array[Byte](w * h * 3)
     var i = 0
     while (i < raster.length) {
       raster(i) = if (n == 0) 0 else bytes(i % n); i += 1
     }
-    MediaBatchProcessor.MediaRow(id,
-      MediaBatchProcessor.encodePng(
-        MediaBatchProcessor.PpmImage(w, h, 255, raster)), "image/png")
+    MediaRow(id, encodePng(PpmImage(w, h, 255, raster)), "image/png")
   }
 
-  /** `mm_jpeg_decode`'s payload builder: a 16×16 raster of four FLAT
-    * 8×8 blocks — block bi (row-major: by·2+bx) takes RGB from text
-    * bytes (3bi, 3bi+1, 3bi+2) mod n (SILENCE for empty text) — pushed
-    * through the conforming baseline encoder (4:4:4 MCUs, Annex K
-    * Huffman tables, byte stuffing). Flat blocks make the
-    * DCT→quantize→dequantize→IDCT chain LOSSLESS (DC-only, quantizer
-    * divides exactly), so the decoded pixels are the exact integer
-    * rgb→ycc→rgb fixed-point model the SQL oracle re-derives — while
-    * the decoder still runs the real general machinery: marker walk,
-    * DQT/DHT parse, canonical Huffman decode, DC prediction across the
-    * four MCUs, dequant, full IDCT, color reconstruction. */
   /** The shared 16×16 flat-block raster model every JPEG fixture uses:
     * block bi (row-major, offset by `blockBase`) takes RGB from text
     * bytes (3bi, 3bi+1, 3bi+2) mod n — SILENCE for empty text. */
@@ -144,13 +130,20 @@ object MultimodalQueries {
     raster
   }
 
-  def textToJpegRow(id: Long, t: String): MediaBatchProcessor.MediaRow = {
-    requireAscii(id, t)
-    val bytes = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    MediaBatchProcessor.MediaRow(id,
-      JpegKernel.encodeJpeg(MediaBatchProcessor.PpmImage(16, 16, 255,
-        flatBlockRaster(bytes, 0))), "image/jpeg")
-  }
+  /** `mm_jpeg_decode`'s payload builder: a 16×16 raster of four FLAT
+    * 8×8 blocks — block bi (row-major: by·2+bx) takes RGB from text
+    * bytes (3bi, 3bi+1, 3bi+2) mod n (SILENCE for empty text) — pushed
+    * through the conforming baseline encoder (4:4:4 MCUs, Annex K
+    * Huffman tables, byte stuffing). Flat blocks make the
+    * DCT→quantize→dequantize→IDCT chain LOSSLESS (DC-only, quantizer
+    * divides exactly), so the decoded pixels are the exact integer
+    * rgb→ycc→rgb fixed-point model the SQL oracle re-derives — while
+    * the decoder still runs the real general machinery: marker walk,
+    * DQT/DHT parse, canonical Huffman decode, DC prediction across the
+    * four MCUs, dequant, full IDCT, color reconstruction. */
+  def textToJpegRow(id: Long, t: String): MediaRow = MediaRow(id,
+    JpegKernel.encodeJpeg(PpmImage(16, 16, 255,
+      flatBlockRaster(asciiBytes(id, t), 0))), "image/jpeg")
 
   /** `mm_jpeg_progressive`'s payload builder (round 14): the SAME
     * 16×16 flat-block raster as [[textToJpegRow]] through the
@@ -160,33 +153,32 @@ object MultimodalQueries {
     * reorders the same quantized coefficients, so the decoded pixels —
     * and therefore the oracle — are IDENTICAL to the baseline fixture's
     * (MediaBatchSpec pins the equality on non-flat rasters too). */
-  def textToJpegProgressiveRow(id: Long,
-      t: String): MediaBatchProcessor.MediaRow = {
-    requireAscii(id, t)
-    val bytes = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    MediaBatchProcessor.MediaRow(id,
-      JpegKernel.encodeJpegProgressive(MediaBatchProcessor.PpmImage(16, 16,
-        255, flatBlockRaster(bytes, 0))), "image/jpeg")
-  }
+  def textToJpegProgressiveRow(id: Long, t: String): MediaRow = MediaRow(id,
+    JpegKernel.encodeJpegProgressive(PpmImage(16, 16, 255,
+      flatBlockRaster(asciiBytes(id, t), 0))), "image/jpeg")
 
-  /** `mm_video_frames`' payload builder: a 4-frame MJPEG stream, each
-    * frame a 16×16 flat-block baseline JPEG — frame f's block bi takes
-    * RGB from text bytes (3·(4f+bi) .. 3·(4f+bi)+2) mod n, so every
-    * frame differs and the oracle re-derives all of them. Same
-    * flat-block losslessness contract as [[textToJpegRow]]. */
-  def textToMjpegRow(id: Long, t: String): MediaBatchProcessor.MediaRow = {
-    requireAscii(id, t)
-    val bytes = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  /** A 4-frame MJPEG stream, each frame a 16×16 flat-block JPEG from
+    * `encode` — frame f's block bi takes RGB from text bytes
+    * (3·(4f+bi) .. 3·(4f+bi)+2) mod n, so every frame differs and the
+    * oracle re-derives all of them. */
+  private def mjpegRow(id: Long, t: String,
+      encode: PpmImage => Array[Byte]): MediaRow = {
+    val bytes = asciiBytes(id, t)
     val out = new java.io.ByteArrayOutputStream()
     var f = 0
     while (f < 4) {
-      val frame = JpegKernel.encodeJpeg(MediaBatchProcessor.PpmImage(16, 16,
-        255, flatBlockRaster(bytes, 4 * f)))
+      val frame = encode(PpmImage(16, 16, 255, flatBlockRaster(bytes, 4 * f)))
       out.write(frame, 0, frame.length)
       f += 1
     }
-    MediaBatchProcessor.MediaRow(id, out.toByteArray, "video/x-motion-jpeg")
+    MediaRow(id, out.toByteArray, "video/x-motion-jpeg")
   }
+
+  /** `mm_video_frames`' payload builder: [[mjpegRow]] through the
+    * baseline encoder. Same flat-block losslessness contract as
+    * [[textToJpegRow]]. */
+  def textToMjpegRow(id: Long, t: String): MediaRow =
+    mjpegRow(id, t, JpegKernel.encodeJpeg)
 
   /** `mm_video_frames_dri`'s payload builder (round 14): the SAME
     * 4-frame MJPEG content as [[textToMjpegRow]], but every frame
@@ -196,19 +188,8 @@ object MultimodalQueries {
     * Same decoded pixels, so the oracle is mm_video_frames' verbatim;
     * the frame SPLITTER must additionally pass RSTn markers inside
     * entropy data without mistaking them for boundaries. */
-  def textToMjpegDriRow(id: Long, t: String): MediaBatchProcessor.MediaRow = {
-    requireAscii(id, t)
-    val bytes = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val out = new java.io.ByteArrayOutputStream()
-    var f = 0
-    while (f < 4) {
-      val frame = JpegKernel.encodeJpegDri(MediaBatchProcessor.PpmImage(16,
-        16, 255, flatBlockRaster(bytes, 4 * f)), restartInterval = 2)
-      out.write(frame, 0, frame.length)
-      f += 1
-    }
-    MediaBatchProcessor.MediaRow(id, out.toByteArray, "video/x-motion-jpeg")
-  }
+  def textToMjpegDriRow(id: Long, t: String): MediaRow =
+    mjpegRow(id, t, JpegKernel.encodeJpegDri(_, restartInterval = 2))
 
   /** `mm_jpeg420_decode`'s payload builder: a GRAYSCALE 16×16 raster
     * (four flat blocks, block bi = text byte bi mod n) through the
@@ -218,9 +199,8 @@ object MultimodalQueries {
     * decoder's subsampled MCU structure (four Y blocks + one block per
     * chroma per MCU) and replication upsample are verified bit-for-bit
     * by the oracle. */
-  def textToJpeg420Row(id: Long, t: String): MediaBatchProcessor.MediaRow = {
-    requireAscii(id, t)
-    val bytes = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  def textToJpeg420Row(id: Long, t: String): MediaRow = {
+    val bytes = asciiBytes(id, t)
     val n = bytes.length
     def tb(i: Int): Int = if (n == 0) 0 else bytes(i % n) & 0xff
     val raster = new Array[Byte](16 * 16 * 3)
@@ -235,9 +215,8 @@ object MultimodalQueries {
       }
       y += 1
     }
-    MediaBatchProcessor.MediaRow(id,
-      JpegKernel.encodeJpeg420(
-        MediaBatchProcessor.PpmImage(16, 16, 255, raster)), "image/jpeg")
+    MediaRow(id, JpegKernel.encodeJpeg420(PpmImage(16, 16, 255, raster)),
+      "image/jpeg")
   }
 
   /** The documents source for the CODEC-heavy mm queries, scan-spread
@@ -254,6 +233,45 @@ object MultimodalQueries {
     * plain scan. */
   private def docsSpread(s: SparkSession, dir: String): DataFrame =
     Layout.spread(Tables(s, dir, "documents"))
+
+  /** The perceptual near-dup audit over decoded-image features: the
+    * 64-bit aHash splits into four 16-bit LSH bands, candidates share
+    * ≥1 band (equi-join, never all-pairs), band buckets over 1000
+    * members are dropped (the dedup_minhash_lsh cap — a perceptual
+    * bucket is SEMANTIC, e.g. near-uniform images all land together,
+    * so the cap is what keeps bucket² bounded at 100 TB), merge-pinned
+    * self-join, then the integer Hamming verify: every candidate with
+    * its distance and the ≤ 8 near-dup verdict. */
+  private def aHashNearDupAudit(feats: Dataset[ImageFeatures]): DataFrame = {
+    val sig = feats.select(col("doc_id"),
+      (col("ahash_lo") % 65536).as("b0"),
+      expr("ahash_lo div 65536").as("b1"),
+      (col("ahash_hi") % 65536).as("b2"),
+      expr("ahash_hi div 65536").as("b3"),
+      col("ahash_hi"), col("ahash_lo"))
+    val bands = sig.select(col("doc_id"),
+      posexplode(array(col("b0"), col("b1"), col("b2"), col("b3")))
+        .as(Seq("bi", "bv")))
+    val underCap = bands.groupBy("bi", "bv")
+      .agg(count(lit(1)).as("n")).filter(col("n") <= 1000)
+      .select("bi", "bv")
+    val capped = bands.join(underCap.hint("merge"), Seq("bi", "bv"))
+    val cand = capped.as("x").join(capped.hint("merge").as("y"),
+        col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
+      .distinct()
+    val ha = sig.select(col("doc_id").as("a"),
+      col("ahash_hi").as("hi_a"), col("ahash_lo").as("lo_a"))
+    val hb = sig.select(col("doc_id").as("b"),
+      col("ahash_hi").as("hi_b"), col("ahash_lo").as("lo_b"))
+    cand.join(ha, "a").join(hb, "b")
+      .select(col("a"), col("b"),
+        (bit_count(col("hi_a").bitwiseXOR(col("hi_b"))) +
+          bit_count(col("lo_a").bitwiseXOR(col("lo_b")))).cast("long")
+          .as("hamming"))
+      .withColumn("near_dup", col("hamming") <= 8)
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Binary ingest + metadata extraction — the oracle-checkable slice
@@ -350,10 +368,9 @@ object MultimodalQueries {
     // block-mean average-hash (8×8 grid, threshold vs global mean).
     // Everything is integer division, and the ASCII fixture makes
     // byte j ≡ unicode(char j) in DuckDB, so the WHOLE decode output —
-    // hash bits included — is oracle-exact. The mapPartitions stage is
-    // the documented batch shape: narrow, no shuffle, batch-bounded
-    // memory. (The codec-format stub in decodeBatched remains labeled;
-    // this path has no stub left.)
+    // hash bits included — is oracle-exact. One narrow map per payload,
+    // no shuffle. (The codec-format stub in decodeBatched remains
+    // labeled; this path has no stub left.)
     "mm_ppm_decode" -> { (s, dir) =>
       import s.implicits._
       val media = Tables(s, dir, "documents")
@@ -362,8 +379,8 @@ object MultimodalQueries {
             | substr(repeat(text, cast(192 div octet_length(text) as int) + 1),
             |        1, 192)), 'UTF-8')""".stripMargin).as("payload"),
           lit("image/ppm").as("media_type"))
-        .as[MediaBatchProcessor.MediaRow]
-      MediaBatchProcessor.decodePpmBatched(media).toDF()
+        .as[MediaRow]
+      media.map(m => imageFeatures(m.doc_id, decodePpm(m.payload))).toDF()
     },
     // REAL WAV decode (round 10): each document's text deterministically
     // modulates a 2-channel 16-bit PCM signal (per frame k, channel c:
@@ -375,13 +392,13 @@ object MultimodalQueries {
     // literal-able the way PPM's ASCII header was), and the kernel
     // re-derives EVERY output — channel count, rate, bit depth, frame
     // count, per-channel sum/peak/energy — from the container bytes via
-    // the chunk-walking parser. Narrow mapPartitions, no shuffle.
+    // the chunk-walking parser. Narrow map, no shuffle.
     "mm_wav_decode" -> { (s, dir) =>
       import s.implicits._
       val media = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, t) => textToWavRow(id, t) }
-      MediaBatchProcessor.decodeWavBatched(media).toDF()
+      media.map(m => wavFeatures(m.doc_id, m.payload)).toDF()
     },
     // REAL windowed audio analysis (round 13): the text-modulated PCM
     // payload is decoded by the RIFF kernel and channel 0 is scored in
@@ -389,14 +406,14 @@ object MultimodalQueries {
     // zero-crossing count (strict sign change, boundary crossings
     // excluded so windows are independent), Σ|s|, and peak. Exact
     // integers end to end; the oracle rebuilds the same PCM from text
-    // and reproduces every cell. Narrow mapPartitions, window fan-out
-    // inside the task.
+    // and reproduces every cell. Narrow flatMap, window fan-out inside
+    // the task.
     "mm_wav_features" -> { (s, dir) =>
       import s.implicits._
       val media = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, t) => textToWavRow(id, t) }
-      MediaBatchProcessor.wavWindowsBatched(media).toDF()
+      media.flatMap(m => wavWindowFeatures(m.doc_id, m.payload)).toDF()
     },
     // REAL PNG decode (round 12) — the first COMPRESSED format: the
     // payload is a conforming PNG (zlib-deflated scanlines, all five
@@ -408,59 +425,27 @@ object MultimodalQueries {
     // (channel means, luminance, block-mean aHash). The raster equals
     // mm_ppm_decode's byte-cycled 8×8, so the oracle is the same exact
     // pixel arithmetic — if inflate or any filter reversal were wrong,
-    // every mean and hash bit would diverge. Narrow mapPartitions.
+    // every mean and hash bit would diverge. Narrow map.
     "mm_png_decode" -> { (s, dir) =>
       import s.implicits._
       val media = docsSpread(s, dir)
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, t) => textToPngRow(id, t) }
-      MediaBatchProcessor.decodePngBatched(media).toDF()
+      media.map(m => imageFeatures(m.doc_id, decodePng(m.payload))).toDF()
     },
     // REAL-pixel perceptual near-dup (round 12) — the tier the
     // mm_phash_near_dup stub documented as "needs the decode kernel":
     // the signature is now the TRUE block-mean average-hash of decoded
     // PNG pixels (inflate + unfilter + integer luminance via the
-    // mm_png_decode kernel), not an md5 relabel. LSH discipline
-    // unchanged: the 64-bit hash splits into four 16-bit bands,
-    // candidates share ≥1 band (equi-join, never all-pairs), buckets
-    // over 1000 members are dropped (the dedup_minhash_lsh cap — a
-    // perceptual band bucket is SEMANTIC, e.g. near-uniform images all
-    // land together, so the cap is what keeps bucket² bounded at
-    // 100 TB), merge-pinned self-join, integer Hamming verify ≤ 8.
+    // mm_png_decode kernel), not an md5 relabel, then the banded LSH
+    // audit of [[aHashNearDupAudit]].
     "mm_phash_png" -> { (s, dir) =>
       import s.implicits._
       val media = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, t) => textToPngRow(id, t) }
-      val sig = MediaBatchProcessor.decodePngBatched(media).toDF()
-        .select(col("doc_id"),
-          (col("ahash_lo") % 65536).as("b0"),
-          expr("ahash_lo div 65536").as("b1"),
-          (col("ahash_hi") % 65536).as("b2"),
-          expr("ahash_hi div 65536").as("b3"),
-          col("ahash_hi"), col("ahash_lo"))
-      val bands = sig.select(col("doc_id"),
-        posexplode(array(col("b0"), col("b1"), col("b2"), col("b3")))
-          .as(Seq("bi", "bv")))
-      val underCap = bands.groupBy("bi", "bv")
-        .agg(count(lit(1)).as("n")).filter(col("n") <= 1000)
-        .select("bi", "bv")
-      val capped = bands.join(underCap.hint("merge"), Seq("bi", "bv"))
-      val cand = capped.as("x").join(capped.hint("merge").as("y"),
-          col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-        .distinct()
-      val ha = sig.select(col("doc_id").as("a"),
-        col("ahash_hi").as("hi_a"), col("ahash_lo").as("lo_a"))
-      val hb = sig.select(col("doc_id").as("b"),
-        col("ahash_hi").as("hi_b"), col("ahash_lo").as("lo_b"))
-      cand.join(ha, "a").join(hb, "b")
-        .select(col("a"), col("b"),
-          (bit_count(col("hi_a").bitwiseXOR(col("hi_b"))) +
-            bit_count(col("lo_a").bitwiseXOR(col("lo_b")))).cast("long")
-            .as("hamming"))
-        .withColumn("near_dup", col("hamming") <= 8)
+      aHashNearDupAudit(
+        media.map(m => imageFeatures(m.doc_id, decodePng(m.payload))))
     },
     // REAL baseline JPEG decode (round 13 — the LAST contract-only image
     // codec retired): the payload is a conforming SOF0 JPEG from the
@@ -470,13 +455,14 @@ object MultimodalQueries {
     // full 8×8 IDCT, fixed-point YCbCr→RGB — then the shared integer
     // pixel math. The fixture's flat blocks make the transform chain
     // lossless (see textToJpegRow), so every output — hash bits
-    // included — is oracle-exact. Narrow mapPartitions, no shuffle.
+    // included — is oracle-exact. Narrow map, no shuffle.
     "mm_jpeg_decode" -> { (s, dir) =>
       import s.implicits._
       val media = docsSpread(s, dir)
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, t) => textToJpegRow(id, t) }
-      MediaBatchProcessor.decodeJpegBatched(media).toDF()
+      media.map(m => imageFeatures(m.doc_id, JpegKernel.decodeJpeg(m.payload)))
+        .toDF()
     },
     // REAL PROGRESSIVE JPEG decode (round 14 — the dominant web-scraped
     // encoding, previously a documented loud failure): the payload is a
@@ -494,7 +480,8 @@ object MultimodalQueries {
       val media = docsSpread(s, dir)
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, t) => textToJpegProgressiveRow(id, t) }
-      MediaBatchProcessor.decodeJpegBatched(media).toDF()
+      media.map(m => imageFeatures(m.doc_id, JpegKernel.decodeJpeg(m.payload)))
+        .toDF()
     },
     // REAL 4:2:0 JPEG decode (round 13) — the DOMINANT real-world JPEG
     // layout: the payload's Y component samples at 2×2 (four Y blocks
@@ -509,7 +496,8 @@ object MultimodalQueries {
       val media = docsSpread(s, dir)
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, t) => textToJpeg420Row(id, t) }
-      MediaBatchProcessor.decodeJpegBatched(media).toDF()
+      media.map(m => imageFeatures(m.doc_id, JpegKernel.decodeJpeg(m.payload)))
+        .toDF()
     },
     // REAL video-frame decode (round 13 — the last contract-only media
     // stub retired; mm_frame_sample's offset arithmetic remains as the
@@ -524,7 +512,7 @@ object MultimodalQueries {
       val media = docsSpread(s, dir)
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, t) => textToMjpegRow(id, t) }
-      MediaBatchProcessor.decodeVideoFramesBatched(media).toDF()
+      media.flatMap(m => videoFrameFeatures(m.doc_id, m.payload)).toDF()
     },
     // MJPEG with RESTART INTERVALS (round 14): same 4-frame content as
     // mm_video_frames, but every frame carries DRI=2 and an RSTn marker
@@ -539,48 +527,20 @@ object MultimodalQueries {
       val media = docsSpread(s, dir)
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, t) => textToMjpegDriRow(id, t) }
-      MediaBatchProcessor.decodeVideoFramesBatched(media).toDF()
+      media.flatMap(m => videoFrameFeatures(m.doc_id, m.payload)).toDF()
     },
     // Perceptual near-dup over REAL decoded JPEG pixels (round 13) —
     // the mm_phash_png discipline applied to the dominant real-corpus
     // image format: full baseline decode (Huffman/dequant/IDCT/YCbCr)
-    // → block-mean aHash → four 16-bit LSH bands → >1000-member bucket
-    // cap → merge-pinned candidate join → integer Hamming verify ≤ 8.
-    // Never all-pairs; the sketch join carries 8-byte band values.
+    // → block-mean aHash → the same [[aHashNearDupAudit]]. Never
+    // all-pairs; the sketch join carries 8-byte band values.
     "mm_phash_jpeg" -> { (s, dir) =>
       import s.implicits._
       val media = docsSpread(s, dir)
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, t) => textToJpegRow(id, t) }
-      val sig = MediaBatchProcessor.decodeJpegBatched(media).toDF()
-        .select(col("doc_id"),
-          (col("ahash_lo") % 65536).as("b0"),
-          expr("ahash_lo div 65536").as("b1"),
-          (col("ahash_hi") % 65536).as("b2"),
-          expr("ahash_hi div 65536").as("b3"),
-          col("ahash_hi"), col("ahash_lo"))
-      val bands = sig.select(col("doc_id"),
-        posexplode(array(col("b0"), col("b1"), col("b2"), col("b3")))
-          .as(Seq("bi", "bv")))
-      val underCap = bands.groupBy("bi", "bv")
-        .agg(count(lit(1)).as("n")).filter(col("n") <= 1000)
-        .select("bi", "bv")
-      val capped = bands.join(underCap.hint("merge"), Seq("bi", "bv"))
-      val cand = capped.as("x").join(capped.hint("merge").as("y"),
-          col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-        .distinct()
-      val ha = sig.select(col("doc_id").as("a"),
-        col("ahash_hi").as("hi_a"), col("ahash_lo").as("lo_a"))
-      val hb = sig.select(col("doc_id").as("b"),
-        col("ahash_hi").as("hi_b"), col("ahash_lo").as("lo_b"))
-      cand.join(ha, "a").join(hb, "b")
-        .select(col("a"), col("b"),
-          (bit_count(col("hi_a").bitwiseXOR(col("hi_b"))) +
-            bit_count(col("lo_a").bitwiseXOR(col("lo_b")))).cast("long")
-            .as("hamming"))
-        .withColumn("near_dup", col("hamming") <= 8)
+      aHashNearDupAudit(media.map(m =>
+        imageFeatures(m.doc_id, JpegKernel.decodeJpeg(m.payload))))
     },
     // REAL image resize (round 13 — the retired mm_resize_stub computed
     // new dims from METADATA; this touches every pixel): each document
@@ -591,13 +551,13 @@ object MultimodalQueries {
     // featurizes the RESIZED 8×8 (channel means, luminance, block-mean
     // aHash). The oracle re-runs the identical tap sums on the
     // byte-cycled source model, so every output — hash bits included —
-    // is decode+resize-exact. Narrow mapPartitions, no shuffle.
+    // is decode+resize-exact. Narrow map, no shuffle.
     "mm_resize_real" -> { (s, dir) =>
       import s.implicits._
       val media = docsSpread(s, dir)
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, t) => textToPngRowSized(id, t, 16, 16) }
-      MediaBatchProcessor.resizePngBatched(media, factor = 2).toDF()
+      media.map(m => resizePngFeatures(m.doc_id, m.payload, factor = 2)).toDF()
     },
     // Frame sampling for "video" payloads: every k-th 32-byte frame —
     // the mapping (frame index → byte offsets) is the real plumbing a

@@ -359,11 +359,11 @@ class DerbyEndToEndSpec extends SparkTestBase {
     assert(e.getMessage.contains("USERS"), e.getMessage)
   }
 
-  test("a failed table copy leaves no table-worker thread alive") {
-    import scala.jdk.CollectionConverters._
-    // CUSTOMER exists and is empty, so SkipExisting copies into it, and
-    // every c_name is longer than 5 characters: that INSERT fails
-    val dstUrl = "jdbc:derby:memory:graftPoolLeak"
+  /** A destination whose pre-created, empty CUSTOMER has
+    * `c_name VARCHAR(5)`: SkipExisting copies into it, and every c_name
+    * is longer than 5 characters, so that INSERT fails on truncation. */
+  private def truncatingDestination(db: String): String = {
+    val dstUrl = s"jdbc:derby:memory:$db"
     val c = DriverManager.getConnection(dstUrl + ";create=true")
     try c.createStatement().executeUpdate(
       """CREATE TABLE customer (
@@ -371,26 +371,70 @@ class DerbyEndToEndSpec extends SparkTestBase {
         | c_nationkey INTEGER, c_acctbal DOUBLE, c_mktsegment VARCHAR(16),
         | PRIMARY KEY (c_custkey))""".stripMargin)
     finally c.close()
-    val poolThread = """pool-\d+-thread-\d+""".r
-    def poolThreads(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
-      .filter(t => t.isAlive && poolThread.matches(t.getName)).toSet
-    val before = poolThreads()
-    val ex = intercept[Exception] {
-      graft.app.ConverterApp.run(Array(sfDir, dstUrl, "SkipExisting"), spark)
-    }
+    dstUrl
+  }
+
+  private def assertTruncation(ex: Throwable): Unit = {
     val messages = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
       .map(t => Option(t.getMessage).getOrElse("")).toSeq
     assert(messages.exists(_.contains("truncation")), messages)
-    // the other tables' copies may still be running when run throws; a
-    // shut-down pool's threads exit once they finish, an open pool's
-    // threads wait for work forever
+  }
+
+  private def poolThreads(): Set[Thread] = {
+    import scala.jdk.CollectionConverters._
+    val poolThread = """pool-\d+-thread-\d+""".r
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && poolThread.matches(t.getName)).toSet
+  }
+
+  /** Waits up to 60 s for the table-worker threads started since
+    * `before` to exit, and returns those still alive. */
+  private def awaitPoolExit(before: Set[Thread]): Set[Thread] = {
     val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    var leaked = poolThreads() -- before
-    while (leaked.nonEmpty && System.nanoTime() < deadline) {
+    var alive = poolThreads() -- before
+    while (alive.nonEmpty && System.nanoTime() < deadline) {
       Thread.sleep(100)
-      leaked = poolThreads() -- before
+      alive = poolThreads() -- before
     }
+    alive
+  }
+
+  test("a failed table copy leaves no table-worker thread alive") {
+    val dstUrl = truncatingDestination("graftPoolLeak")
+    val before = poolThreads()
+    assertTruncation(intercept[Exception] {
+      graft.app.ConverterApp.run(Array(sfDir, dstUrl, "SkipExisting"), spark)
+    })
+    // a shut-down pool's threads exit once their copies finish, an open
+    // pool's threads wait for work forever
+    val leaked = awaitPoolExit(before)
     assert(leaked.isEmpty, leaked.map(_.getName))
+  }
+
+  test("a failed table copy is final: no Spark job runs and no table " +
+      "reports a copy once run throws") {
+    // every other table's copy is still in flight when CUSTOMER's
+    // INSERT fails
+    val dstUrl = truncatingDestination("graftCopyFailFinal")
+    val before = poolThreads()
+    // the table workers inherit this Console.out: they are started
+    // inside the block
+    val out = new java.io.ByteArrayOutputStream()
+    val ex = Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+      intercept[Exception] {
+        graft.app.ConverterApp.run(Array(sfDir, dstUrl, "SkipExisting"), spark)
+      }
+    }
+    val activeAtThrow = spark.sparkContext.statusTracker.getActiveJobIds.toSeq
+    val printedAtThrow = out.toString("UTF-8")
+    assertTruncation(ex)
+    assert(activeAtThrow.isEmpty, s"Spark jobs still running: $activeAtThrow")
+    // a copy that outlived run reports once it finishes, before its
+    // worker thread exits
+    awaitPoolExit(before)
+    val late = out.toString("UTF-8").drop(printedAtThrow.length)
+      .linesIterator.filter(_.startsWith("[convert]")).toSeq
+    assert(late.isEmpty, late)
   }
 
   test("DropAndRecreate without an explicit ack aborts before any DDL") {

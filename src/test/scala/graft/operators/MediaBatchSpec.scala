@@ -49,7 +49,7 @@ class MediaBatchSpec extends SparkTestBase {
       val (r, g, b) = if (x < 4) (200, 100, 50) else (10, 20, 30)
       px(p) = r.toByte; px(p + 1) = g.toByte; px(p + 2) = b.toByte
     }
-    val f = ppmFeatures(7L, encodePpm(PpmImage(8, 8, 255, px)))
+    val f = imageFeatures(7L, decodePpm(encodePpm(PpmImage(8, 8, 255, px))))
     assert((f.width, f.height) == (8, 8))
     assert(f.mean_r == (200 + 10) / 2 && f.mean_g == 60 && f.mean_b == 40)
     // lum: left (400+500+50)/8 = 118, right (20+100+30)/8 = 18; mean 68
@@ -96,7 +96,7 @@ class MediaBatchSpec extends SparkTestBase {
     assert(bigHash == ((hi, lo)))
   }
 
-  test("decodePpmBatched on the fixture: near-dup payloads (same text bytes) " +
+  test("PPM decode on the fixture: near-dup payloads (same text bytes) " +
       "collide on the full hash; decode equals the single-row path") {
     import spark.implicits._
     val m = graft.Tables(spark, sfDir, "documents")
@@ -106,10 +106,10 @@ class MediaBatchSpec extends SparkTestBase {
           |        1, 192)), 'UTF-8')""".stripMargin).as("payload"),
         lit("image/ppm").as("media_type"))
       .as[MediaRow]
-    val feats = decodePpmBatched(m, batchSize = 32).collect()
+    val feats = m.map(r => imageFeatures(r.doc_id, decodePpm(r.payload))).collect()
     assert(feats.length == 500)
     // distributed result equals the driver-side single-payload decode
-    val local = m.collect().map(r => ppmFeatures(r.doc_id, r.payload))
+    val local = m.collect().map(r => imageFeatures(r.doc_id, decodePpm(r.payload)))
       .map(f => f.doc_id -> f).toMap
     feats.foreach(f => assert(f == local(f.doc_id)))
     // identical text → identical image → identical hash (the mm dedup tier)
@@ -188,8 +188,8 @@ class MediaBatchSpec extends SparkTestBase {
     assert(back.width == 8 && back.height == 8)
     assert(back.pixels.sameElements(px), "unfilter did not invert the writer")
     // PNG and PPM of the SAME raster featurize identically (shared math)
-    val pf = ppmFeatures(5L, encodePpm(img))
-    val gf = pngFeatures(5L, png)
+    val pf = imageFeatures(5L, decodePpm(encodePpm(img)))
+    val gf = imageFeatures(5L, decodePng(png))
     assert((gf.mean_r, gf.mean_g, gf.mean_b, gf.lum_mean, gf.ahash_hi, gf.ahash_lo) ==
       (pf.mean_r, pf.mean_g, pf.mean_b, pf.lum_mean, pf.ahash_hi, pf.ahash_lo))
   }
@@ -442,7 +442,7 @@ class MediaBatchSpec extends SparkTestBase {
         Array.tabulate(768)(i => bytes(i % bytes.length)))
     }
     val resized = resizeBox(raw, 2)
-    val direct = ppmFeatures(7L, encodePpm(resized))
+    val direct = imageFeatures(7L, decodePpm(encodePpm(resized)))
     assert(viaKernel.src_width == 16 && viaKernel.new_width == 8)
     assert(viaKernel.mean_r == direct.mean_r &&
       viaKernel.mean_g == direct.mean_g &&
@@ -455,17 +455,17 @@ class MediaBatchSpec extends SparkTestBase {
   test("textToPngRow: empty text encodes silence; fixture decode matches " +
       "the byte-cycled model the oracle computes") {
     val empty = MultimodalQueries.textToPngRow(3L, "")
-    val f0 = pngFeatures(empty.doc_id, empty.payload)
+    val f0 = imageFeatures(empty.doc_id, decodePng(empty.payload))
     assert(f0.mean_r == 0 && f0.lum_mean == 0 && f0.ahash_hi == 0 && f0.ahash_lo == 0)
     val row = MultimodalQueries.textToPngRow(9L, "AB")
-    val f = pngFeatures(row.doc_id, row.payload)
+    val f = imageFeatures(row.doc_id, decodePng(row.payload))
     // bytes cycle A,B,A,B… → r always 'A'(65) at even raster offsets:
     // raster i = text[i mod 2]; channel r sits at i=3k → alternates 65/66
     assert(f.width == 8 && f.height == 8)
     assert(f.mean_r == (32 * 65 + 32 * 66) / 64)
   }
 
-  test("decodePngBatched on the fixture: every document decodes, and the " +
+  test("mm_png_decode on the fixture: every document decodes, and the " +
       "PNG features equal the PPM features of the same byte-cycled raster") {
     val df = MultimodalQueries.queries("mm_png_decode")(spark, sfDir)
     val rows = df.collect()
@@ -473,7 +473,7 @@ class MediaBatchSpec extends SparkTestBase {
     assert(rows.forall(r => r.getInt(1) == 8 && r.getInt(2) == 8))
   }
 
-  test("decodeWavBatched on the fixture equals the driver-side single-" +
+  test("mm_wav_decode on the fixture equals the driver-side single-" +
       "payload decode, and every signal hits negative samples") {
     val df = MultimodalQueries.queries("mm_wav_decode")(spark, sfDir)
     val rows = df.collect()
@@ -484,6 +484,35 @@ class MediaBatchSpec extends SparkTestBase {
     assert(rows.forall(_.getLong(df.columns.indexOf("n_frames")) == 64L))
     assert(rows.exists(_.getLong(df.columns.indexOf("sum_ch0")) < 0L),
       "no negative-sum channel anywhere — sign decode not exercised")
+  }
+
+  test("the 12 decode queries keep their output columns, order and types") {
+    val image = "struct<doc_id:bigint,width:int,height:int,mean_r:bigint," +
+      "mean_g:bigint,mean_b:bigint,lum_mean:bigint,ahash_hi:bigint,ahash_lo:bigint>"
+    val frames = "struct<doc_id:bigint,frame_no:int,width:int,height:int," +
+      "mean_r:bigint,mean_g:bigint,mean_b:bigint,lum_mean:bigint>"
+    val nearDup = "struct<a:bigint,b:bigint,hamming:bigint,near_dup:boolean>"
+    val expected = Map(
+      "mm_ppm_decode" -> image,
+      "mm_wav_decode" -> ("struct<doc_id:bigint,n_channels:int,sample_rate:int," +
+        "bits_per_sample:int,n_frames:bigint,sum_ch0:bigint,sum_ch1:bigint," +
+        "peak_ch0:bigint,peak_ch1:bigint,energy_ch0:bigint,energy_ch1:bigint>"),
+      "mm_wav_features" -> ("struct<doc_id:bigint,win_no:int,n_samples:bigint," +
+        "zcr:bigint,sum_abs:bigint,peak:bigint>"),
+      "mm_png_decode" -> image,
+      "mm_phash_png" -> nearDup,
+      "mm_jpeg_decode" -> image,
+      "mm_jpeg_progressive" -> image,
+      "mm_jpeg420_decode" -> image,
+      "mm_video_frames" -> frames,
+      "mm_video_frames_dri" -> frames,
+      "mm_phash_jpeg" -> nearDup,
+      "mm_resize_real" -> ("struct<doc_id:bigint,src_width:int,src_height:int," +
+        "new_width:int,new_height:int,mean_r:bigint,mean_g:bigint,mean_b:bigint," +
+        "lum_mean:bigint,ahash_hi:bigint,ahash_lo:bigint>"))
+    expected.foreach { case (q, schema) =>
+      assert(MultimodalQueries.queries(q)(spark, sfDir).schema.simpleString == schema, q)
+    }
   }
 
   // ------------------------------------------------------------------
