@@ -42,9 +42,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "", "", "", "misc_funcs", "1.0.0", "", "built-in")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // whole-operator extension: the backward as-of join planned as a
-    // co-partitioned streaming merge (plans/AsOfJoinPlan.scala), plus
-    // the optimizer rule restoring column pruning through that node
+    // whole-operator extension: the as-of join (every `AsOf` entry
+    // point builds AsOfJoinNode) planned as a co-partitioned streaming
+    // merge (plans/AsOfJoinPlan.scala), plus the optimizer rule
+    // restoring column pruning through that node. `AsOf.join` injects
+    // both itself when this hook is not installed.
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
     ext.injectOptimizerRule(_ => graft.plans.PruneAsOfColumns)

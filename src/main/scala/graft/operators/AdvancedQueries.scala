@@ -67,9 +67,9 @@ object AdvancedQueries {
         .select(col("event_id"), col("user_id"), col("sec"), col("signup_sec"))
     },
     // The generic two-table form of the same semantics via AsOf.join
-    // (union + per-key carry-forward window — no range-join pair
-    // blow-up). Oracle is DuckDB's NATIVE ASOF LEFT JOIN, so the
-    // composition is checked against an independent implementation.
+    // (the co-partitioned merge operator — no range-join pair blow-up).
+    // Oracle is DuckDB's NATIVE ASOF LEFT JOIN, an independent
+    // implementation. asof_merge_join is its twin and runs the same plan.
     "asof_join_generic" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
         .withColumn("sec", expr("ts div 1000000000"))
@@ -80,14 +80,13 @@ object AdvancedQueries {
       AsOf.join(purchases, signups, Seq("user_id"), "ts", "ts", Seq("signup_sec"))
         .select("event_id", "user_id", "sec", "signup_sec")
     },
-    // The SAME as-of semantics through the custom physical operator
+    // The as-of join's custom physical operator as AsOf.join plans it
     // (plans/AsOfJoinPlan.scala: AsOfJoinNode → AsOfJoinStrategy →
     // AsOfJoinExec). Each side is hash-partitioned on user_id and
     // sorted (user_id, ts) by EnsureRequirements, then one streaming
     // merge pass per co-located partition pair attaches the latest
     // signup — no union row widening, no window state, O(1) task
-    // memory. Oracle: DuckDB's native ASOF LEFT JOIN (independent
-    // third implementation alongside AsOf.join's union-window form).
+    // memory. Oracle: DuckDB's native ASOF LEFT JOIN.
     "asof_merge_join" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
         .withColumn("sec", expr("ts div 1000000000"))
@@ -95,8 +94,8 @@ object AdvancedQueries {
         .select(col("event_id"), col("user_id"), col("sec"), col("ts"))
       val signups = ev.filter(col("event_type") === "signup")
         .select(col("user_id"), col("sec").as("signup_sec"), col("ts"))
-      graft.plans.AsOfMerge.join(purchases, signups, Seq("user_id"),
-          "ts", "ts", Seq("signup_sec"))
+      AsOf.join(purchases, signups, Seq("user_id"), "ts", "ts",
+          Seq("signup_sec"))
         .select("event_id", "user_id", "sec", "signup_sec")
     },
     // As-of join with a TOLERANCE (pandas merge_asof(tolerance=...)):
@@ -116,9 +115,8 @@ object AdvancedQueries {
           Seq("signup_sec"), maxLookback = Some(lit(86400000000L)))
         .select("event_id", "user_id", "signup_sec")
     },
-    // The tolerance surface through the custom merge operator —
-    // same semantics and oracle as asof_tolerance (24 h lookback at
-    // µs precision), nulling stale matches above the exec.
+    // Twin of asof_tolerance: same call, plan and oracle (24 h
+    // lookback at µs precision, stale matches nulled above the exec).
     "asof_merge_tolerance" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
         .withColumn("us", expr("ts div 1000"))
@@ -127,16 +125,15 @@ object AdvancedQueries {
       val signups = ev.filter(col("event_type") === "signup")
         .select(col("user_id"), expr("us div 1000000").as("signup_sec"),
           col("us"))
-      graft.plans.AsOfMerge.joinWithTolerance(purchases, signups,
-          Seq("user_id"), "us", "us", Seq("signup_sec"),
-          maxLookback = lit(86400000000L))
+      AsOf.join(purchases, signups, Seq("user_id"), "us", "us",
+          Seq("signup_sec"), maxLookback = Some(lit(86400000000L)))
         .select("event_id", "user_id", "signup_sec")
     },
     // NEAREST as-of (pandas merge_asof(direction='nearest')): the
     // closest signup in either direction, ties to the earlier row.
-    // Two windowed carries (forward = backward on the negated time
-    // axis); oracle is an independent DuckDB LATERAL argmin by
-    // absolute nanosecond distance.
+    // Two merge joins (forward = backward on the negated time axis);
+    // oracle is an independent DuckDB LATERAL argmin by absolute
+    // nanosecond distance.
     "asof_nearest" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
       val purchases = ev.filter(col("event_type") === "purchase")
@@ -150,8 +147,8 @@ object AdvancedQueries {
     },
     // Forward as-of (pandas direction='forward'): the EARLIEST signup
     // at-or-after each purchase — "next event after" semantics, the
-    // mirror of the carry-backward join, composed as backward on the
-    // negated time axis (one windowed pass, no pair blow-up).
+    // mirror of the backward join, run as the backward merge on the
+    // negated time axis (no pair blow-up).
     "asof_forward" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
       val purchases = ev.filter(col("event_type") === "purchase")
@@ -163,10 +160,7 @@ object AdvancedQueries {
           Seq("signup_sec"))
         .select("event_id", "user_id", "signup_sec")
     },
-    // The same forward semantics through the custom merge exec
-    // (backward streaming merge on the negated time axis — O(1) task
-    // memory); shares asof_forward's LATERAL oracle, so the gate proves
-    // the window and merge compositions agree.
+    // Twin of asof_forward: same call, plan and LATERAL oracle.
     "asof_merge_forward" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
       val purchases = ev.filter(col("event_type") === "purchase")
@@ -174,8 +168,8 @@ object AdvancedQueries {
       val signups = ev.filter(col("event_type") === "signup")
         .select(col("user_id"), expr("ts div 1000000000").as("signup_sec"),
           col("ts"))
-      graft.plans.AsOfMerge.joinForward(purchases, signups, Seq("user_id"),
-          "ts", "ts", Seq("signup_sec"))
+      AsOf.joinForward(purchases, signups, Seq("user_id"), "ts", "ts",
+          Seq("signup_sec"))
         .select("event_id", "user_id", "signup_sec")
     },
     // Exact interpolated median over integer keys (deterministic in

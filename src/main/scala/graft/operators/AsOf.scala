@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{DoubleType, FloatType}
+import graft.plans.{AsOfJoinNode, AsOfJoinStrategy, PruneAsOfColumns}
 
 /** Generic as-of (point-in-time) join — for every left row, attach the
   * most recent right-side values at or before the left row's time,
@@ -10,28 +14,31 @@ import org.apache.spark.sql.functions._
   *
   * Spark has no native as-of join; the naive range join
   * (`l.key = r.key AND r.t <= l.t` + max-per-row) explodes to
-  * O(|matches|) pairs before reducing. This composition is the
-  * scale-correct form: union both sides tagged with a marker, one
-  * shuffle keyed on the join keys, and a per-key ordered window carrying
-  * the right values forward (`last(..., ignoreNulls)`), then keep the
-  * left rows. Cost is one shuffle + one sort per key group — the same
-  * shape as any windowed aggregation, with no pair blow-up.
+  * O(|matches|) pairs before reducing. Every entry point here builds
+  * [[graft.plans.AsOfJoinNode]], planned as a co-partitioned streaming
+  * merge (`AsOfJoinExec`: one key exchange and sort per side, one
+  * buffered right row per task), and injects its strategy and pruning
+  * rule into the session when the `GraftExtensions` hook is not
+  * installed.
   *
-  * Ordering contract: right rows sort before left rows at equal
-  * timestamps (a right value AT the left time is visible — "at or
+  * Ordering contract: a right row AT the left time is visible ("at or
   * before"). Ties among multiple right rows at the same (key, time) are
   * resolved by whichever sorts last; pass a strictly-ordering time
-  * column if that matters.
+  * column if that matters. A NULL right time never matches; a NULL left
+  * time matches nothing. NULL keys form one group, as in a window's
+  * `partitionBy`.
   *
-  * Null contract: all `rightVals` come from the SAME matched right row
-  * (they are carried through the window as one struct), so a right row
-  * whose value column is legitimately NULL yields NULL — it is not
-  * skipped in favor of an older row's value.
+  * Null contract: all `rightVals` come from the SAME matched right row,
+  * so a right row whose value column is legitimately NULL yields NULL —
+  * it is not skipped in favor of an older row's value.
   *
-  * Column contract: `left` and `right` share only the key columns;
-  * `rightVals` names the right-side columns to carry (they must not
-  * collide with left column names). Output = every left column +
-  * `rightVals`. */
+  * Column contract: keys and times resolve with the session's resolver
+  * and must name exactly one column per side; key and time types must
+  * match across sides exactly, and float/double keys are rejected
+  * (-0.0/NaN would split key groups). `rightVals` names the right-side
+  * columns to carry (they must not collide with left column names).
+  * Output = every left column, in the left side's order, + `rightVals`
+  * (NULL-filled when no right row qualifies). */
 object AsOf {
 
   /** A column-name prefix no input column starts with, so helper
@@ -49,143 +56,125 @@ object AsOf {
     *   older than `leftTime - maxLookback`, the match is dropped and
     *   the rightVals come back NULL. Pass a literal in the time
     *   column's domain (a number for numeric times, an INTERVAL for
-    *   timestamps). */
+    *   timestamps). The matched right time rides through the merge
+    *   under a fresh name and stale rows null out above the exec, so
+    *   the physical operator stays tolerance-free. */
   def join(left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTime: String, rightTime: String,
       rightVals: Seq[String],
-      maxLookback: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val dup = rightVals.filter(left.columns.contains)
-    require(dup.isEmpty, "rightVals collide with left columns: " +
-      dup.mkString(", ") + " — rename before the as-of join")
-    val leftOnly = left.columns.filterNot(keys.contains).toSeq
-    // helper columns get a prefix no input column starts with
-    val p = freshPrefix(left.columns ++ right.columns)
-    val (tc, mc, rvc) = (p + "t", p + "m", p + "rv")
-    // One struct per right row, carried whole through the window: the
-    // window's ignoreNulls applies to the struct (null only on left
-    // rows), never to the individual value columns, so every output row
-    // takes all rightVals from one right row, nulls included. The
-    // matched right row's own time rides along as `_rt` (a struct FIELD,
-    // private to the helper struct — no column namespace contact) so a
-    // tolerance can be applied after the carry.
-    val rvStructType = org.apache.spark.sql.types.StructType(
-      rightVals.map(c => right.schema(c).copy(name = c)) :+
-        right.schema(rightTime).copy(name = "_rt"))
-    val l = left
-      .withColumn(tc, col(leftTime)).withColumn(mc, lit(1))
-      .select(keys.map(col) ++ Seq(col(tc), col(mc)) ++
-        leftOnly.map(col) :+
-        lit(null).cast(rvStructType).as(rvc): _*)
-    val r = right
-      .withColumn(tc, col(rightTime)).withColumn(mc, lit(0))
-      .select(keys.map(col) ++ Seq(col(tc), col(mc)) ++
-        leftOnly.map(c => lit(null).cast(left.schema(c).dataType).as(c)) :+
-        // NULL right time NEVER matches (same contract as AsOfJoinExec):
-        // a null struct is invisible to the ignoreNulls carry, whereas a
-        // non-null struct holding a NULL _rt would be carried — and NULL
-        // times sort FIRST in the window, so it would wrongly become the
-        // carried match for every leftward row
-        when(col(rightTime).isNotNull,
-          struct(rightVals.map(col) :+ col(rightTime).as("_rt"): _*))
-          .as(rvc): _*)
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(tc), col(mc))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried0 = l.unionByName(r)
-      .withColumn(rvc, last(col(rvc), ignoreNulls = true).over(w))
-      .filter(col(mc) === 1)
-    val carried = maxLookback match {
-      case Some(tol) => carried0.withColumn(rvc,
-        when(col(rvc).isNotNull &&
-          col(tc) - col(rvc)("_rt") <= tol, col(rvc)))
-      case None => carried0
-    }
-    rightVals
-      .foldLeft(carried) { (df, c) => df.withColumn(c, col(rvc)(c)) }
-      .drop(mc, tc, rvc)
+      maxLookback: Option[Column] = None): DataFrame = maxLookback match {
+    case Some(tol) =>
+      val mt = freshPrefix(left.columns ++ right.columns) + "mt"
+      val carried = join(left, right.withColumn(mt, col(rightTime)),
+        keys, leftTime, rightTime, rightVals :+ mt)
+      val fresh = col(mt).isNotNull && col(leftTime) - col(mt) <= tol
+      rightVals.foldLeft(carried) { (df, v) =>
+        df.withColumn(v, when(fresh, col(v)))
+      }.drop(mt)
+    case None =>
+      require(keys.nonEmpty, "as-of join requires at least one key column")
+      // output would otherwise carry duplicate column names (any later
+      // select throws AMBIGUOUS_REFERENCE)
+      val dup = rightVals.filter(left.columns.contains)
+      require(dup.isEmpty, "rightVals collide with left columns: " +
+        dup.mkString(", ") + " — rename before the as-of join")
+      Bridge.ensureStrategy(left.sparkSession, AsOfJoinStrategy)
+      Bridge.ensureOptimizerRule(left.sparkSession, PruneAsOfColumns)
+      val lPlan = left.queryExecution.analyzed
+      val rPlan = right.queryExecution.analyzed
+      // resolve with the session's resolver (case-insensitive by default,
+      // like every other column-name API) and REJECT ambiguity — silently
+      // binding the first of two same-named columns joins on the wrong one
+      val resolver = left.sparkSession.sessionState.conf.resolver
+      def attr(plan: LogicalPlan, name: String, side: String): Attribute = {
+        val matches = plan.output.filter(a => resolver(a.name, name))
+        if (matches.isEmpty) throw new IllegalArgumentException(
+          s"$side column '$name' not found among ${plan.output.map(_.name).mkString(", ")}")
+        require(matches.length == 1,
+          s"$side column '$name' is ambiguous: ${matches.length} columns match")
+        matches.head
+      }
+      // the merge compares key/time rows with a shared natural ordering —
+      // both sides must agree on types exactly (no implicit coercion here)
+      keys.foreach { k =>
+        val (l, r) = (attr(lPlan, k, "left"), attr(rPlan, k, "right"))
+        require(l.dataType == r.dataType,
+          s"as-of key '$k' type mismatch: left ${l.dataType} vs right ${r.dataType}")
+        // float keys: -0.0 vs 0.0 and non-canonical NaNs split key groups
+        // (NormalizeFloatingNumbers never fires on custom nodes)
+        require(l.dataType != DoubleType && l.dataType != FloatType,
+          s"as-of key '$k' is ${l.dataType}: float/double equality keys are " +
+            "not supported (-0.0/NaN grouping diverges) — cast or bucket first")
+      }
+      val (lt, rt) = (attr(lPlan, leftTime, "left"), attr(rPlan, rightTime, "right"))
+      require(lt.dataType == rt.dataType,
+        s"as-of time type mismatch: left '$leftTime' is ${lt.dataType}, " +
+          s"right '$rightTime' is ${rt.dataType}")
+      // Self-join safety: when left and right derive from the same plan
+      // they share exprIds; the analyzer's DeduplicateRelations
+      // re-instances the right subtree but cannot remap this node's
+      // attribute fields. Referencing the right side only through FRESH
+      // aliases (alias ids survive deduplication; the alias children get
+      // remapped inside the subtree like any self-join) keeps the node's
+      // references unambiguous — and doubles as right-side column pruning.
+      val rAliases = ((keys :+ rightTime) ++ rightVals)
+        .map(attr(rPlan, _, "right")).distinct.map(a => Alias(a, a.name)())
+      val fresh: Map[String, Attribute] =
+        rAliases.map(al => al.name -> al.toAttribute).toMap
+      val node = AsOfJoinNode(lPlan, Project(rAliases, rPlan),
+        keys.map(attr(lPlan, _, "left")), keys.map(fresh),
+        lt, fresh(rightTime), rightVals.map(fresh))
+      Bridge.ofRows(left.sparkSession, node)
   }
 
   /** Nearest as-of join (pandas `merge_asof(direction='nearest')`):
     * for every left row, the right row minimizing |leftTime − rightTime|
     * within the key group; equal distances prefer the earlier (backward)
-    * right row. Composed as two backward carries — the forward direction
-    * is the backward as-of on the NEGATED time axis — so the cost is two
-    * windowed passes, no pair blow-up. Requires a numeric time column
-    * (timestamps: convert to epoch first, precision of your choice). */
+    * right row. Two merge joins over the same `right` — [[join]] and
+    * [[joinForward]], each carrying its matched time — then a pick of
+    * the closer side, so no pair blow-up. Requires a numeric time
+    * column (timestamps: convert to epoch first, precision of your
+    * choice). */
   def joinNearest(left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTime: String, rightTime: String,
       rightVals: Seq[String]): DataFrame = {
-    // same fail-fast as join: the inner joins run on prefixed value
-    // columns, so without this check the final rename would silently
-    // overwrite a left column named like a rightVal
-    val dup = rightVals.filter(left.columns.contains)
-    require(dup.isEmpty, "rightVals collide with left columns: " +
-      dup.mkString(", ") + " — rename before the as-of join")
     // helper columns get a prefix no input column starts with
     val p = freshPrefix(left.columns ++ right.columns)
-    val bVals = rightVals.map(p + "b_" + _)
     val fVals = rightVals.map(p + "f_" + _)
-    val (bt, ft, negT, negRt) = (p + "bt", p + "ft", p + "negt", p + "negrt")
-    // backward pass: latest right at-or-before, carrying the matched time
-    val rB = rightVals.zip(bVals)
-      .foldLeft(right) { case (df, (o, n)) => df.withColumn(n, col(o)) }
-      .withColumn(bt, col(rightTime))
-      .select((keys :+ rightTime).map(col) ++ (bVals :+ bt).map(col): _*)
-    val back = join(left, rB, keys, leftTime, rightTime, bVals :+ bt)
-    // forward pass: earliest right at-or-after == backward on negated times
+    val (bt, ft) = (p + "bt", p + "ft")
+    // backward pass: rightVals under their own names (so [[join]]'s
+    // collision check covers them) plus the matched time
+    val back = join(left, right.withColumn(bt, col(rightTime)), keys,
+      leftTime, rightTime, rightVals :+ bt)
+    // forward pass over the same right, values under prefixed names
     val rF = rightVals.zip(fVals)
-      .foldLeft(right) { case (df, (o, n)) => df.withColumn(n, col(o)) }
-      .withColumn(ft, col(rightTime))
-      .withColumn(negRt, -col(rightTime))
-      .select(keys.map(col) ++ (fVals ++ Seq(ft, negRt)).map(col): _*)
-    val both = join(back.withColumn(negT, -col(leftTime)), rF, keys,
-      negT, negRt, fVals :+ ft)
+      .foldLeft(right.withColumn(ft, col(rightTime))) {
+        case (df, (o, f)) => df.withColumn(f, col(o)) }
+    val both = joinForward(back, rF, keys, leftTime, rightTime, fVals :+ ft)
     // pick the closer side; ties (and forward-missing) take backward
     val pickB = col(bt).isNotNull && (col(ft).isNull ||
       (col(leftTime) - col(bt) <= col(ft) - col(leftTime)))
-    rightVals.zip(bVals.zip(fVals))
-      .foldLeft(both) { case (df, (o, (b, f))) =>
-        df.withColumn(o, when(pickB, col(b)).otherwise(col(f))) }
-      .drop((bVals ++ fVals ++ Seq(bt, ft, negT)): _*)
-  }
-
-  /** The forward-direction composition shared by [[joinForward]] and
-    * [[graft.plans.AsOfMerge.joinForward]]: a backward as-of join
-    * (supplied by the caller — window form or merge exec) run on the
-    * NEGATED time axis. One place owns the collision check, the
-    * collision-free helper names, and the negation, so the two entry
-    * points cannot drift. Numeric time columns only — negation is the
-    * direction flip. */
-  private[graft] def forwardVia(
-      backward: (DataFrame, DataFrame, Seq[String], String, String,
-        Seq[String]) => DataFrame)(
-      left: DataFrame, right: DataFrame, keys: Seq[String],
-      leftTime: String, rightTime: String,
-      rightVals: Seq[String]): DataFrame = {
-    val dup = rightVals.filter(left.columns.contains)
-    require(dup.isEmpty, "rightVals collide with left columns: " +
-      dup.mkString(", ") + " — rename before the as-of join")
-    val p = freshPrefix(left.columns ++ right.columns)
-    val (negT, negRt) = (p + "negt", p + "negrt")
-    val r = right.withColumn(negRt, -col(rightTime))
-      .select(keys.map(col) ++ (rightVals :+ negRt).map(col): _*)
-    backward(left.withColumn(negT, -col(leftTime)), r, keys,
-      negT, negRt, rightVals)
-      .drop(negT)
+    rightVals.zip(fVals)
+      .foldLeft(both) { case (df, (o, f)) =>
+        df.withColumn(o, when(pickB, col(o)).otherwise(col(f))) }
+      .drop((fVals ++ Seq(bt, ft)): _*)
   }
 
   /** Forward as-of join (pandas `merge_asof(direction='forward')`):
     * for every left row, the EARLIEST right row at-or-after leftTime in
     * the key group — "the next quote after the order", the mirror of
-    * [[join]]'s carry-backward. Composed as the backward as-of on the
-    * negated time axis (one windowed pass, no pair blow-up), so it
-    * inherits [[join]]'s contracts: NULL right times never match,
-    * unmatched left rows come back NULL-filled, all rightVals from one
-    * matched row. Requires a numeric time column (timestamps: convert
-    * to epoch first, precision of your choice). */
+    * [[join]]. It is [[join]] on the NEGATED time axis, so it keeps the
+    * merge's shape and inherits its contracts: NULL right times never
+    * match, unmatched left rows come back NULL-filled, all rightVals
+    * from one matched row. Requires a numeric time column (timestamps:
+    * convert to epoch first, precision of your choice). */
   def joinForward(left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTime: String, rightTime: String,
-      rightVals: Seq[String]): DataFrame =
-    forwardVia(join(_, _, _, _, _, _))(
-      left, right, keys, leftTime, rightTime, rightVals)
+      rightVals: Seq[String]): DataFrame = {
+    val p = freshPrefix(left.columns ++ right.columns)
+    val (negT, negRt) = (p + "negt", p + "negrt")
+    join(left.withColumn(negT, -col(leftTime)),
+      right.withColumn(negRt, -col(rightTime)), keys, negT, negRt, rightVals)
+      .drop(negT)
+  }
 }

@@ -1,37 +1,32 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.graftbridge.Bridge
 
 /** Backward as-of join as a first-class operator: logical plan node +
-  * planner strategy + physical sort-merge execution.
+  * planner strategy + physical sort-merge execution. The column-name
+  * entry points (`graft.operators.AsOf.join`, `joinForward`,
+  * `joinNearest`) build [[AsOfJoinNode]].
   *
-  * `graft.operators.AsOf.join` expresses the same semantics by
-  * composition (union both sides + per-key window carry) — one shuffle
-  * and one sort over |L|+|R| combined rows, plus the struct
-  * pack/unpack. This operator is the shape a native engine would run
-  * at 100 TB: each side is hash-partitioned on the join keys
-  * independently (Catalyst's EnsureRequirements inserts the exchanges
-  * and co-partitions them, exactly as for a sort-merge join), each
-  * side is sorted by (keys, time), and a single streaming merge pass
-  * zips the co-located partitions — no union row widening, no window
-  * state, no pair blow-up. Memory per task is O(1): one candidate
-  * right row.
+  * Each side is hash-partitioned on the join keys independently
+  * (Catalyst's EnsureRequirements inserts the exchanges and
+  * co-partitions them, exactly as for a sort-merge join), each side is
+  * sorted by (keys, time), and a single streaming merge pass zips the
+  * co-located partitions — no union row widening, no window state, no
+  * pair blow-up. Memory per task is O(1): one candidate right row.
   *
-  * Semantics (matches `AsOf.join` and DuckDB `ASOF JOIN`):
-  * for every left row, the right row with the greatest `rightTime` <=
-  * `leftTime` within the same key group; ties at equal time take the
-  * last right row in (key, time) order. Right rows with a NULL time
-  * never match; left rows with a NULL time match nothing (NULLs sort
-  * first, so they precede every candidate). Key columns compare with
-  * the window-grouping convention: NULL keys form a group that joins
-  * to NULL-key right rows (same as `Window.partitionBy`).
+  * Semantics (DuckDB `ASOF JOIN`): for every left row, the right row
+  * with the greatest `rightTime` <= `leftTime` within the same key
+  * group; ties at equal time take the last right row in (key, time)
+  * order. Right rows with a NULL time never match; left rows with a
+  * NULL time match nothing (NULLs sort first, so they precede every
+  * candidate). Key columns compare with the window-grouping convention:
+  * NULL keys form a group that joins to NULL-key right rows (same as
+  * `Window.partitionBy`).
   */
 case class AsOfJoinNode(
     left: LogicalPlan,
@@ -53,7 +48,7 @@ case class AsOfJoinNode(
 
 /** Plans [[AsOfJoinNode]] into [[AsOfJoinExec]]; inert on every other
   * node. Registered via `GraftExtensions` (spark.sql.extensions) or
-  * injected by [[AsOfMerge.join]] through `experimental.extraStrategies`. */
+  * injected by `AsOf.join` through `experimental.extraStrategies`. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case n: AsOfJoinNode =>
@@ -72,8 +67,7 @@ object AsOfJoinStrategy extends SparkStrategy {
   * itself consumes (keys/time/sort columns). `ScanOperation` folds the
   * stacked Projects at physical planning, so the prune reaches the
   * file scan's ReadSchema. (The as-of right side needs no rule —
-  * [[AsOfMerge.join]] already wraps it in a minimal fresh-alias
-  * Project.) */
+  * `AsOf.join` already wraps it in a minimal fresh-alias Project.) */
 object PruneAsOfColumns extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
   import org.apache.spark.sql.catalyst.expressions.AttributeSet
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
@@ -193,112 +187,4 @@ case class AsOfJoinExec(
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): AsOfJoinExec =
     copy(left = newLeft, right = newRight)
-}
-
-/** Column-name-level entry point mirroring `AsOf.join`'s contract:
-  * output = every left column + `rightVals` (NULL-filled when no right
-  * row qualifies). Injects [[AsOfJoinStrategy]] into the session's
-  * experimental strategies when the `GraftExtensions` hook isn't
-  * installed, so it works on any session. */
-object AsOfMerge {
-  def join(left: DataFrame, right: DataFrame, keys: Seq[String],
-      leftTime: String, rightTime: String,
-      rightVals: Seq[String]): DataFrame = {
-    require(keys.nonEmpty, "as-of join requires at least one key column")
-    // same fail-fast as AsOf.join: output would otherwise carry duplicate
-    // column names (any later select throws AMBIGUOUS_REFERENCE, and
-    // joinWithTolerance's own rename crashes on it)
-    val dup = rightVals.filter(left.columns.contains)
-    require(dup.isEmpty, "rightVals collide with left columns: " +
-      dup.mkString(", ") + " — rename before the as-of join")
-    Bridge.ensureStrategy(left.sparkSession, AsOfJoinStrategy)
-    Bridge.ensureOptimizerRule(left.sparkSession, PruneAsOfColumns)
-    val lPlan = left.queryExecution.analyzed
-    val rPlan = right.queryExecution.analyzed
-    // resolve with the session's resolver (case-insensitive by default,
-    // like every other column-name API) and REJECT ambiguity — silently
-    // binding the first of two same-named columns joins on the wrong one
-    val resolver = left.sparkSession.sessionState.conf.resolver
-    def attr(plan: LogicalPlan, name: String, side: String): Attribute = {
-      val matches = plan.output.filter(a => resolver(a.name, name))
-      if (matches.isEmpty) throw new IllegalArgumentException(
-        s"$side column '$name' not found among ${plan.output.map(_.name).mkString(", ")}")
-      require(matches.length == 1,
-        s"$side column '$name' is ambiguous: ${matches.length} columns match")
-      matches.head
-    }
-    // Self-join safety: when left and right derive from the same plan
-    // they share exprIds; the analyzer's DeduplicateRelations re-instances
-    // the right subtree but cannot remap this node's attribute fields.
-    // Referencing the right side only through FRESH aliases (alias ids
-    // survive deduplication; the alias children get remapped inside the
-    // subtree like any self-join) keeps the node's references unambiguous —
-    // and doubles as right-side column pruning.
-    // the merge compares key/time rows with a shared natural ordering —
-    // both sides must agree on types exactly (no implicit coercion here)
-    keys.foreach { k =>
-      val (l, r) = (attr(lPlan, k, "left"), attr(rPlan, k, "right"))
-      require(l.dataType == r.dataType,
-        s"as-of key '$k' type mismatch: left ${l.dataType} vs right ${r.dataType}")
-      // float keys: -0.0 vs 0.0 and non-canonical NaNs split key groups
-      // (NormalizeFloatingNumbers never fires on custom nodes) — reject
-      // rather than silently diverge from the window form
-      require(l.dataType != org.apache.spark.sql.types.DoubleType &&
-          l.dataType != org.apache.spark.sql.types.FloatType,
-        s"as-of key '$k' is ${l.dataType}: float/double equality keys are " +
-          "not supported (-0.0/NaN grouping diverges) — cast or bucket first")
-    }
-    require(attr(lPlan, leftTime, "left").dataType ==
-        attr(rPlan, rightTime, "right").dataType,
-      s"as-of time type mismatch: left '$leftTime' is " +
-        s"${attr(lPlan, leftTime, "left").dataType}, right '$rightTime' is " +
-        s"${attr(rPlan, rightTime, "right").dataType}")
-    val rNeeded: Seq[Attribute] =
-      ((keys :+ rightTime) ++ rightVals).map(attr(rPlan, _, "right")).distinct
-    val rAliases = rNeeded.map(a => Alias(a, a.name)())
-    val rFresh = Project(rAliases, rPlan)
-    val fresh: Map[String, Attribute] =
-      rAliases.map(al => al.name -> al.toAttribute).toMap
-    val node = AsOfJoinNode(lPlan, rFresh,
-      keys.map(attr(lPlan, _, "left")), keys.map(fresh),
-      attr(lPlan, leftTime, "left"), fresh(rightTime),
-      rightVals.map(fresh))
-    Bridge.ofRows(left.sparkSession, node)
-  }
-
-  /** [[join]] with `AsOf.join`'s `maxLookback` tolerance: matches older
-    * than `leftTime - maxLookback` null out (all rightVals together —
-    * they come from one matched row). Implemented by carrying the
-    * matched right time through the merge and nulling stale rows above
-    * the exec, so the physical operator stays tolerance-free. */
-  def joinWithTolerance(left: DataFrame, right: DataFrame, keys: Seq[String],
-      leftTime: String, rightTime: String, rightVals: Seq[String],
-      maxLookback: org.apache.spark.sql.Column): DataFrame = {
-    import org.apache.spark.sql.functions.{col, when}
-    // collision-free matched-time column (a user column named `_mt`
-    // would otherwise be silently overwritten)
-    val mt = graft.operators.AsOf.freshPrefix(
-      left.columns ++ right.columns) + "mt"
-    val carried = join(left, right.withColumn(mt, col(rightTime)),
-      keys, leftTime, rightTime, rightVals :+ mt)
-    val fresh = col(mt).isNotNull &&
-      col(leftTime) - col(mt) <= maxLookback
-    rightVals.foldLeft(carried) { (df, v) =>
-      df.withColumn(v, when(fresh, col(v)))
-    }.drop(mt)
-  }
-
-  /** Forward as-of through the merge exec (pandas
-    * `direction='forward'`): the EARLIEST right row at-or-after each
-    * left time — the backward merge on the NEGATED time axis, so it
-    * keeps the exec's shape (co-partitioned streaming merge, O(1) task
-    * memory) and contracts (NULL right times never match, unmatched
-    * rows NULL-filled). Numeric time columns only. The composition
-    * itself lives in [[graft.operators.AsOf.forwardVia]] — shared with
-    * the window form so the two entry points cannot drift. */
-  def joinForward(left: DataFrame, right: DataFrame, keys: Seq[String],
-      leftTime: String, rightTime: String,
-      rightVals: Seq[String]): DataFrame =
-    graft.operators.AsOf.forwardVia(join(_, _, _, _, _, _))(
-      left, right, keys, leftTime, rightTime, rightVals)
 }

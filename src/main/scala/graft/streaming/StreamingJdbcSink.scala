@@ -191,6 +191,7 @@ object StreamingJdbcSink {
         .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
           if (rows.hasNext) {
             val c = JdbcHooks.connect(url, connProps)
+            var failed: Throwable = null
             try {
               c.setAutoCommit(false)
               val ps = c.prepareStatement(deleteSql)
@@ -201,7 +202,16 @@ object StreamingJdbcSink {
                 if (n % maxBatch == 0) ps.executeBatch()
               }
               ps.executeBatch(); ps.close(); c.commit()
-            } finally c.close()
+            } catch {
+              case t: Throwable =>
+                failed = t
+                // roll back first: a connection with an open transaction
+                // refuses to close, and that error would mask this one
+                try c.rollback() catch { case _: Throwable => () }
+                throw t
+            } finally {
+              try c.close() catch { case e: Throwable => if (failed == null) throw e }
+            }
           }
         }
       DataCopier.writeJdbc(

@@ -68,6 +68,16 @@ class LibraryApiSpec extends SparkTestBase {
     assert(viaNearest.columns.toSet == Set("k", "t", "_t", "_neg_t", "price"))
     assert(r2.getAs[String]("_t") == "keep_t" &&
       r2.getAs[Double]("price") == 50.0)
+    // the tolerance path carries the matched time under a fresh name
+    val viaTolerance = AsOf.join(purchases, quotes, Seq("k"), "t", "qt",
+      Seq("price"), maxLookback = Some(lit(5L)))
+    assert(viaTolerance.columns.toSeq == viaJoin.columns.toSeq)
+    assert(viaTolerance.collect()(0) == r1)
+    // the forward path negates both times under fresh names
+    val viaForward = AsOf.joinForward(purchases,
+      quotes.withColumn("qt", lit(15L)), Seq("k"), "t", "qt", Seq("price"))
+    assert(viaForward.columns.toSeq == viaJoin.columns.toSeq)
+    assert(viaForward.collect()(0) == r1)
     // a rightVals/left collision now fails fast instead of corrupting
     val e = intercept[IllegalArgumentException] {
       AsOf.join(purchases, quotes.withColumnRenamed("price", "t"),
@@ -129,6 +139,26 @@ class LibraryApiSpec extends SparkTestBase {
       .map(r => r.getString(0) ->
         (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
     assert(got == Map("near" -> Some(100.0), "stale" -> None))
+  }
+
+  test("AsOf.join maxLookback on TimestampType times takes an INTERVAL") {
+    import spark.implicits._
+    import java.sql.Timestamp.{valueOf => ts}
+    val purchases = Seq((1L, ts("2024-01-01 10:03:00"), "near"),
+        (1L, ts("2024-01-01 10:05:00"), "edge"),
+        (1L, ts("2024-01-01 10:30:00"), "stale"))
+      .toDF("k", "t", "tag")
+    val quotes = Seq((1L, ts("2024-01-01 10:00:00"), 100.0))
+      .toDF("k", "qt", "price")
+    val got = AsOf.join(purchases, quotes, Seq("k"), "t", "qt",
+        Seq("price"), maxLookback = Some(expr("INTERVAL 5 MINUTES")))
+      .select("tag", "price").collect()
+      .map(r => r.getString(0) ->
+        (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
+    assert(got == Map(
+      "near" -> Some(100.0),
+      "edge" -> Some(100.0), // exactly maxLookback old still matches
+      "stale" -> None))
   }
 
   test("Dedup.minhashLshPairs rejects numHashes not divisible by bands") {
@@ -560,26 +590,25 @@ class LibraryApiSpec extends SparkTestBase {
   }
 
   test("AsOf.join: a NULL right time NEVER matches, even when it is the " +
-      "only right row for the key (window form ≡ merge-exec contract)") {
+      "only right row for the key (≡ naive as-of scan)") {
     import spark.implicits._
     val left = Seq((1L, 10L, "a"), (2L, 10L, "b")).toDF("k", "t", "tag")
     // key 1: ONLY a null-time quote; key 2: null-time plus a real quote
     val right = Seq((1L, Option.empty[Long], 50.0),
       (2L, Option.empty[Long], 70.0), (2L, Some(5L), 20.0))
       .toDF("k", "qt", "price")
-    val viaWindow = AsOf.join(left, right, Seq("k"), "t", "qt", Seq("price"))
+    val viaMerge = AsOf.join(left, right, Seq("k"), "t", "qt", Seq("price"))
       .select("tag", "price").collect()
       .map(r => r.getString(0) ->
         (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
-    assert(viaWindow == Map(
+    assert(viaMerge == Map(
       "a" -> None,        // the NULL-time row must not be carried
       "b" -> Some(20.0))) // the real quote wins, not the NULL-time one
-    val viaMerge = graft.plans.AsOfMerge.join(
+    val naive = graft.AsOfReference.scan(
         left, right, Seq("k"), "t", "qt", Seq("price"))
-      .select("tag", "price").collect()
-      .map(r => r.getString(0) ->
-        (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
-    assert(viaMerge == viaWindow, "window and merge forms must agree")
+      .map(r => r.getString(2) ->
+        (if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toMap
+    assert(viaMerge == naive, "merge join and the naive scan must agree")
   }
 
   test("float/double grouping keys are rejected by the custom operators " +
@@ -591,7 +620,7 @@ class LibraryApiSpec extends SparkTestBase {
     }
     assert(e1.getMessage.contains("float/double"))
     val e2 = intercept[IllegalArgumentException] {
-      graft.plans.AsOfMerge.join(df, df.select(col("fk"), col("t").as("rt"),
+      AsOf.join(df, df.select(col("fk"), col("t").as("rt"),
         col("v").as("rv")), Seq("fk"), "t", "rt", Seq("rv"))
     }
     assert(e2.getMessage.contains("float/double"))

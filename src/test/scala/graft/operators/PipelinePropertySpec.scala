@@ -26,11 +26,9 @@ class PipelinePropertySpec extends SparkTestBase {
         .collect()
         .map(row => row.getLong(0) ->
           (if (row.isNullAt(1)) None else Some(row.getLong(1)))).toMap
-      val expect = lefts.map { case (lid, k, lt) =>
-        val cand = rights.filter(x => x._1 == k && x._2 <= lt)
-        lid -> (if (cand.isEmpty) None
-                else Some(cand.maxBy(_._2)._3))
-      }.toMap
+      val expect = graft.AsOfReference.scan(l, r, Seq("k"), "lt", "rt", Seq("v"))
+        .map(row => row.getLong(0) ->
+          (if (row.isNullAt(3)) None else Some(row.getLong(3)))).toMap
       assert(got == expect, s"seed $seed")
     }
   }

@@ -431,12 +431,14 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
-  test("asof_nearest: two windowed carries, no nested-loop or cartesian join") {
+  test("asof_nearest: two AsOfJoin merges, no window, nested-loop or " +
+      "cartesian join") {
     val plan = planOf("asof_nearest")
     assert(!plan.contains("BroadcastNestedLoopJoin") &&
       !plan.contains("CartesianProduct"), s"pair blow-up:\n$plan")
-    assert(plan.contains("WindowExec") || plan.contains("Window"),
-      s"no windowed carry:\n$plan")
+    assert(plan.linesIterator.count(_.contains("AsOfJoin ")) == 2,
+      s"expected two merge joins:\n$plan")
+    assert(!plan.contains("Window"), s"windowed carry in the plan:\n$plan")
   }
 
   test("sweep: zero unpartitioned Window nodes over unbounded input across " +

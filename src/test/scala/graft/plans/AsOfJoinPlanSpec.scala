@@ -2,12 +2,12 @@ package graft.plans
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import graft.{SparkTestBase, Tables}
+import graft.{AsOfReference, SparkTestBase, Tables}
 import graft.operators.AsOf
 
-/** The custom as-of physical operator: correctness against the
-  * union-window composition (an independent implementation of the same
-  * semantics, itself oracle-checked against DuckDB ASOF JOIN), plan
+/** The custom as-of physical operator behind `AsOf`: correctness
+  * against the naive as-of scan ([[AsOfReference]]; the registered
+  * queries are also oracle-checked against DuckDB ASOF JOIN), plan
   * shape (merge exec, two exchanges, no window/union), and the
   * null/edge contract. */
 class AsOfJoinPlanSpec extends SparkTestBase {
@@ -22,21 +22,19 @@ class AsOfJoinPlanSpec extends SparkTestBase {
     (purchases, signups)
   }
 
-  test("merge exec ≡ union-window composition on the events fixture") {
+  test("AsOf.join ≡ naive as-of scan on the events fixture") {
     val (p, s) = sides()
-    val viaExec = AsOfMerge.join(p, s, Seq("user_id"), "ts", "ts", Seq("signup_sec"))
-      .select("event_id", "user_id", "sec", "signup_sec")
-    val viaWindow = AsOf.join(p, s, Seq("user_id"), "ts", "ts", Seq("signup_sec"))
-      .select("event_id", "user_id", "sec", "signup_sec")
+    val viaExec = AsOf.join(p, s, Seq("user_id"), "ts", "ts", Seq("signup_sec"))
     val a = viaExec.collect().map(_.toSeq).sortBy(_.toString)
-    val b = viaWindow.collect().map(_.toSeq).sortBy(_.toString)
+    val b = AsOfReference.scan(p, s, Seq("user_id"), "ts", "ts", Seq("signup_sec"))
+      .map(_.toSeq).sortBy(_.toString)
     assert(a.length == b.length && a.length > 0)
     assert(a.sameElements(b))
   }
 
   test("plan: AsOfJoinExec with two key exchanges, no window, no union") {
     val (p, s) = sides()
-    val df = AsOfMerge.join(p, s, Seq("user_id"), "ts", "ts", Seq("signup_sec"))
+    val df = AsOf.join(p, s, Seq("user_id"), "ts", "ts", Seq("signup_sec"))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("AsOfJoin "), s"no merge exec:\n$plan") // nodeName strips "Exec"
     assert(!plan.contains("WindowExec") && !plan.contains("Union"),
@@ -45,8 +43,8 @@ class AsOfJoinPlanSpec extends SparkTestBase {
     assert(exchanges == 2, s"expected 2 key exchanges, got $exchanges:\n$plan")
   }
 
-  test("joinForward (merge exec) ≡ AsOf.joinForward (window form) on " +
-      "random event sets, and it plans on AsOfJoinExec") {
+  test("AsOf.joinForward ≡ naive earliest-at-or-after scan on random " +
+      "event sets, and it plans on AsOfJoinExec") {
     import spark.implicits._
     for (seed <- 1 to 3) {
       val rnd = new scala.util.Random(seed)
@@ -57,7 +55,7 @@ class AsOfJoinPlanSpec extends SparkTestBase {
         (for (k <- 0L until 7L; t <- 0L until 100L) yield (k, t)).toList)
         .take(80).map { case (k, t) => (k, t, k * 1000 + t) }
         .toDF("k", "rt", "v")
-      val viaExec = AsOfMerge.joinForward(left, right, Seq("k"), "lt", "rt",
+      val viaExec = AsOf.joinForward(left, right, Seq("k"), "lt", "rt",
         Seq("v"))
       if (seed == 1)
         assert(viaExec.queryExecution.executedPlan.toString
@@ -65,12 +63,11 @@ class AsOfJoinPlanSpec extends SparkTestBase {
       val a = viaExec.select("lid", "v").collect()
         .map(r => r.getLong(0) ->
           (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
-      val b = graft.operators.AsOf.joinForward(left, right, Seq("k"),
-          "lt", "rt", Seq("v"))
-        .select("lid", "v").collect()
+      val b = AsOfReference.scan(left, right, Seq("k"), "lt", "rt", Seq("v"),
+          forward = true)
         .map(r => r.getLong(0) ->
-          (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
-      assert(a == b, s"seed $seed: merge and window forward joins diverged")
+          (if (r.isNullAt(3)) None else Some(r.getLong(3)))).toMap
+      assert(a == b, s"seed $seed: forward join diverged from the naive scan")
     }
   }
 
@@ -79,7 +76,7 @@ class AsOfJoinPlanSpec extends SparkTestBase {
     val left = Seq((1L, 10L, "a"), (1L, 5L, "b"), (2L, 10L, "c"))
       .toDF("k", "t", "tag")
     val right = Seq((1L, 7L, 70.0)).toDF("k", "t", "v")
-    val df = AsOfMerge.join(left, right, Seq("k"), "t", "t", Seq("v"))
+    val df = AsOf.join(left, right, Seq("k"), "t", "t", Seq("v"))
     val rows = df.collect()
     val matched = rows.count(!_.isNullAt(3))
     val exec = org.apache.spark.sql.graftbridge.Bridge
@@ -99,7 +96,7 @@ class AsOfJoinPlanSpec extends SparkTestBase {
         (1L, java.lang.Long.valueOf(9L), "r9"),
         (3L, java.lang.Long.valueOf(1L), "r1"))
       .toDF("k", "t", "v")
-    val out = AsOfMerge.join(left, right, Seq("k"), "t", "t", Seq("v"))
+    val out = AsOf.join(left, right, Seq("k"), "t", "t", Seq("v"))
       .select("k", "t", "tag", "v").collect().toSet
     assert(out == Set(
       Row(1L, 10L, "a", "r9"),  // latest at-or-before 10 is t=9 (null-t row skipped)
@@ -111,7 +108,7 @@ class AsOfJoinPlanSpec extends SparkTestBase {
     import spark.implicits._
     val left = Seq((1L, 5L)).toDF("k", "t")
     val right = Seq((1L, 5L, "early"), (1L, 5L, "late")).toDF("k", "t", "v")
-    val out = AsOfMerge.join(left, right, Seq("k"), "t", "t", Seq("v")).collect()
+    val out = AsOf.join(left, right, Seq("k"), "t", "t", Seq("v")).collect()
     assert(out.length == 1 && out.head.getString(2) == "late")
   }
 
@@ -123,7 +120,7 @@ class AsOfJoinPlanSpec extends SparkTestBase {
     // join carries all lineitem columns into the node; the query only
     // uses 2 — the injected rule must narrow the left side to
     // {l_quantity} + key {l_orderkey} + time {l_linenumber}
-    val df = AsOfMerge.join(lineitem, orders, Seq("l_orderkey"),
+    val df = AsOf.join(lineitem, orders, Seq("l_orderkey"),
         "l_linenumber", "o_seq", Seq("o_orderdate"))
       .select("l_quantity", "o_orderdate")
     val plan = df.queryExecution.executedPlan.toString
@@ -135,22 +132,21 @@ class AsOfJoinPlanSpec extends SparkTestBase {
       s"left scan not pruned: $leftRead")
   }
 
-  test("randomized equivalence: merge exec ≡ union-window form across seeds") {
+  test("randomized equivalence: AsOf.join ≡ naive as-of scan across seeds") {
     import spark.implicits._
     for (seed <- Seq(7, 42, 1234)) {
       val rnd = new scala.util.Random(seed)
       val left = Seq.fill(300)((rnd.nextInt(6).toLong, rnd.nextInt(80).toLong,
         rnd.nextInt(1000))).toDF("k", "t", "payload")
-      // right (k, t) kept unique so tie-breaking is well-defined in both
-      // implementations
+      // right (k, t) kept unique so "latest" is unambiguous
       val right = rnd.shuffle((0 until 90).toList).take(60)
         .map(t => (rnd.nextInt(6).toLong, t.toLong, rnd.nextInt(1000)))
         .distinct.groupBy(r => (r._1, r._2)).map(_._2.head).toSeq
         .toDF("k", "t", "v")
-      val a = AsOfMerge.join(left, right, Seq("k"), "t", "t", Seq("v"))
+      val a = AsOf.join(left, right, Seq("k"), "t", "t", Seq("v"))
         .collect().map(_.toSeq).sortBy(_.toString)
-      val b = AsOf.join(left, right, Seq("k"), "t", "t", Seq("v"))
-        .collect().map(_.toSeq).sortBy(_.toString)
+      val b = AsOfReference.scan(left, right, Seq("k"), "t", "t", Seq("v"))
+        .map(_.toSeq).sortBy(_.toString)
       assert(a.length == 300 && a.sameElements(b), s"diverged at seed $seed")
     }
   }
@@ -161,10 +157,10 @@ class AsOfJoinPlanSpec extends SparkTestBase {
       .toDF("k1", "k2", "t", "tag").repartition(13)
     val right = (0L until 400L by 2).map(i => (i % 7, i % 3, i, i * 10))
       .toDF("k1", "k2", "t", "v").repartition(17)
-    val viaExec = AsOfMerge.join(left, right, Seq("k1", "k2"), "t", "t", Seq("v"))
-    val viaWindow = AsOf.join(left, right, Seq("k1", "k2"), "t", "t", Seq("v"))
+    val viaExec = AsOf.join(left, right, Seq("k1", "k2"), "t", "t", Seq("v"))
     val a = viaExec.collect().map(_.toSeq).sortBy(_.toString)
-    val b = viaWindow.collect().map(_.toSeq).sortBy(_.toString)
+    val b = AsOfReference.scan(left, right, Seq("k1", "k2"), "t", "t", Seq("v"))
+      .map(_.toSeq).sortBy(_.toString)
     assert(a.length == 400 && a.sameElements(b))
   }
 }

@@ -54,6 +54,32 @@ class StreamingSinkSpec extends SparkTestBase {
     assert(count("SELECT COUNT(*) FROM up_t_mutex") == 0)
   }
 
+  test("upsertBatch: a failing keyed DELETE surfaces its own error, not " +
+      "the connection close's") {
+    import spark.implicits._
+    val c = conn()
+    c.createStatement().executeUpdate(
+      """CREATE TABLE fk_parent (
+        | k BIGINT NOT NULL PRIMARY KEY, val VARCHAR(32), batch_id BIGINT)""".stripMargin)
+    c.createStatement().executeUpdate(
+      "CREATE TABLE fk_child (id BIGINT NOT NULL, pk BIGINT REFERENCES fk_parent (k))")
+    c.createStatement().executeUpdate("INSERT INTO fk_parent VALUES (1, 'a0', 0)")
+    c.createStatement().executeUpdate("INSERT INTO fk_child VALUES (10, 1)")
+    c.close()
+    StreamingJdbcSink.ensureLedger(url, "fk_parent")
+    // key 1 has a child row, so the keyed DELETE violates the foreign key
+    val e = intercept[Exception] {
+      StreamingJdbcSink.upsertBatch(Seq((1L, "a1")).toDF("k", "val"), 0L,
+        url, "fk_parent", Seq("k"))
+    }
+    val states = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collect { case q: java.sql.SQLException => q.getSQLState }.toList
+    assert(states.contains("23503") && !states.contains("25001"),
+      s"SQLStates in the cause chain: $states")
+    assert(count("SELECT COUNT(*) FROM fk_parent WHERE val = 'a0'") == 1)
+    assert(count("SELECT COUNT(*) FROM fk_parent_mutex") == 0)
+  }
+
   test("foreachBatch sink: multi-batch write, replay skip, partial-write recovery") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
