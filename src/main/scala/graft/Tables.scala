@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import graft.catalog.IndexSpec
 
 /** Parquet-backed loaders for the driver fixtures (TESTDATA.md) and shared
@@ -9,6 +13,10 @@ import graft.catalog.IndexSpec
   * Scale posture: `spark.read.parquet` is a distributed columnar scan —
   * projection and predicates push down to the parquet reader, so the same
   * call shape works unchanged on a 1000-executor cluster reading 100 TB.
+  *
+  * `apply` infers a file's schema once per JVM, keyed by the files'
+  * (path, length, modification time) and the session's `spark.sql.*`
+  * settings, so a rewritten file or other settings infer afresh.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -43,7 +51,50 @@ object Tables {
       Seq(("s_nationkey", true)), unique = false)))
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    normalizeDates(normalizeTs(spark.read.parquet(s"$dir/$name.parquet")))
+    normalizeDates(normalizeTs(readParquet(spark, s"$dir/$name.parquet")))
+
+  /** What a schema was inferred under: every data file's (qualified
+    * path, length, modification time) and the session's `spark.sql.*`
+    * settings, which inference reads (e.g. `nanosAsLong`). */
+  private final case class SchemaKey(files: Seq[(String, Long, Long)],
+      sqlConf: Map[String, String])
+
+  /** One entry per qualified path: a miss replaces the path's entry, so
+    * rewrites cannot grow the memo. */
+  private val inferred = new ConcurrentHashMap[String, (SchemaKey, StructType)]()
+
+  /** `spark.read.parquet(path)` without its schema-inference job once
+    * the path's schema is memoized under the same [[SchemaKey]]: a read
+    * with a given schema starts no job. */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = SchemaKey(fileStatuses(fs, p),
+      spark.conf.getAll.filter(_._1.startsWith("spark.sql.")))
+    val slot = fs.makeQualified(p).toString
+    val schema = Option(inferred.get(slot)).collect {
+      case (k, s) if k == key => s
+    }.getOrElse {
+      val s = spark.read.parquet(path).schema
+      inferred.put(slot, (key, s))
+      s
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** (qualified path, length, modification time) of `p`, or of every
+    * file under it when `p` is a directory. */
+  private def fileStatuses(fs: FileSystem, p: Path): Seq[(String, Long, Long)] = {
+    val st = fs.getFileStatus(p)
+    val leaves =
+      if (!st.isDirectory) Iterator(st)
+      else {
+        val it = fs.listFiles(p, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      }
+    leaves.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .toSeq.sorted
+  }
 
   /** Normalize the event-time encoding at the load boundary. Fixture
     * generations have shipped `events.ts` both as parquet timestamp[ns]

@@ -131,7 +131,7 @@ object ConverterApp {
           Tables.names.filterNot(_ == "embeddings").map { t =>
             val df = Tables(spark, source, t)
             (specFromStruct(t, df.schema, enforceablePks(t),
-              Tables.indexes.getOrElse(t, Nil)), () => Tables(spark, source, t))
+              Tables.indexes.getOrElse(t, Nil)), () => df)
           }
       }
 

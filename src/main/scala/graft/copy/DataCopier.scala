@@ -104,10 +104,10 @@ object DataCopier {
               s"upload worker exceeded ${cfg.uploadWorkerMaxWaitMinutes} minutes for $table")
         val setters = schema.fields.map(f => setter(f.dataType))
         val width = setters.length
-        val conn = JdbcHooks.connect(url, connProps)
-        var failed: Throwable = null
-        try {
-          conn.setAutoCommit(false)
+        // a failure rolls back before close, so close() cannot mask it,
+        // and the task exception fails the job (X6 fix — the reference
+        // silently swallowed worker errors)
+        JdbcHooks.inTransaction(url, connProps) { conn =>
           val ps = conn.prepareStatement(insertSql)
           var inBatch = 0L
           var sinceCommit = 0L
@@ -135,18 +135,6 @@ object DataCopier {
           ps.close()
           records.add(taskRecords)
           bytes.add(taskBytes)
-        } catch {
-          case t: Throwable =>
-            failed = t
-            // roll back the open transaction so close() doesn't mask the
-            // real failure; the task exception fails the job (X6 fix —
-            // the reference silently swallowed worker errors).
-            try conn.rollback() catch { case _: Throwable => () }
-            throw t
-        } finally {
-          try conn.close() catch {
-            case c: Throwable => if (failed == null) throw c
-          }
         }
       }
     }

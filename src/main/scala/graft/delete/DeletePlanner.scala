@@ -129,10 +129,7 @@ object DeletePlanner {
     * connection closes, so its own error is the one thrown. */
   def execute(url: String, table: String, strategy: DeleteStrategy,
       connProps: Map[String, String] = Map.empty): Long = {
-    val conn = JdbcHooks.connect(url, connProps)
-    var failed: Throwable = null
-    try {
-      conn.setAutoCommit(false)
+    JdbcHooks.inTransaction(url, connProps) { conn =>
       strategy match {
         case DeleteStrategy.SingleStatement =>
           val st = conn.createStatement()
@@ -150,13 +147,6 @@ object DeletePlanner {
             } finally ps.close()
           }.sum
       }
-    } catch {
-      case t: Throwable =>
-        failed = t
-        try conn.rollback() catch { case _: Throwable => () }
-        throw t
-    } finally {
-      try conn.close() catch { case c: Throwable => if (failed == null) throw c }
     }
   }
 }

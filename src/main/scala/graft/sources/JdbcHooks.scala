@@ -4,9 +4,9 @@ import java.sql.{Connection, DriverManager}
 
 import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects}
 
-/** The one JDBC connection opener, plus the per-connection dialect
-  * hooks shared by every JDBC-opening path (the V2 partition reader,
-  * the delete/copy split-point probes). */
+/** The one JDBC connection opener and transaction guard, plus the
+  * per-connection dialect hooks shared by every JDBC-opening path (the
+  * V2 partition reader, the delete/copy split-point probes). */
 object JdbcHooks {
 
   /** Open `url` with `props` as the driver's connection properties. */
@@ -14,6 +14,28 @@ object JdbcHooks {
     val p = new java.util.Properties()
     props.foreach { case (k, v) => p.setProperty(k, v) }
     DriverManager.getConnection(url, p)
+  }
+
+  /** Run `body` on a fresh connection with autocommit off; `body`
+    * commits at its own cadence. On failure the open transaction rolls
+    * back before the connection closes (Derby refuses to close with a
+    * transaction open, 25001), and a rollback or close error is
+    * suppressed into the first error, never thrown in its place. */
+  def inTransaction[T](url: String, props: Map[String, String])(
+      body: Connection => T): T = {
+    val conn = connect(url, props)
+    val result =
+      try {
+        conn.setAutoCommit(false)
+        body(conn)
+      } catch {
+        case t: Throwable =>
+          try conn.rollback() catch { case r: Throwable => t.addSuppressed(r) }
+          try conn.close() catch { case c: Throwable => t.addSuppressed(c) }
+          throw t
+      }
+    conn.close()
+    result
   }
 
   /** Run every matching dialect's `beforeFetch` hook (the snapshot-pin

@@ -190,10 +190,7 @@ object StreamingJdbcSink {
         .distinct()
         .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
           if (rows.hasNext) {
-            val c = JdbcHooks.connect(url, connProps)
-            var failed: Throwable = null
-            try {
-              c.setAutoCommit(false)
+            JdbcHooks.inTransaction(url, connProps) { c =>
               val ps = c.prepareStatement(deleteSql)
               var n = 0
               rows.foreach { r =>
@@ -202,15 +199,6 @@ object StreamingJdbcSink {
                 if (n % maxBatch == 0) ps.executeBatch()
               }
               ps.executeBatch(); ps.close(); c.commit()
-            } catch {
-              case t: Throwable =>
-                failed = t
-                // roll back first: a connection with an open transaction
-                // refuses to close, and that error would mask this one
-                try c.rollback() catch { case _: Throwable => () }
-                throw t
-            } finally {
-              try c.close() catch { case e: Throwable => if (failed == null) throw e }
             }
           }
         }

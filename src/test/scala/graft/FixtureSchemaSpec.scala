@@ -1,7 +1,11 @@
 package graft
 
-import org.apache.spark.sql.Row
+import java.nio.file.{Files, StandardCopyOption}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** Pins the load-boundary invariant that broke round 6: `events.ts`
@@ -131,5 +135,61 @@ class FixtureSchemaSpec extends SparkTestBase {
     } yield s"$table.$name: expected $want, got ${got.getOrElse("MISSING")}"
     assert(drifts.isEmpty,
       s"fixture schema drift (regen changed encodings?):\n  ${drifts.mkString("\n  ")}")
+  }
+
+  /** The Spark jobs `body` starts, counted on a drained listener bus. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    Bridge.awaitListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      Bridge.awaitListenerBus(sc)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a second Tables.apply of a table starts no Spark job") {
+    Tables(spark, sfDir, "orders")
+    assert(jobsOf(Tables(spark, sfDir, "orders")) === 0)
+  }
+
+  test("every fixture frame equals a plain parquet read, normalized") {
+    Tables.names.foreach { t =>
+      Tables(spark, sfDir, t)
+      val memo = Tables(spark, sfDir, t)
+      val plain = Tables.normalizeDates(Tables.normalizeTs(
+        spark.read.parquet(s"$sfDir/$t.parquet")))
+      assert(memo.schema === plain.schema, t)
+      assert(memo.exceptAll(plain).isEmpty && plain.exceptAll(memo).isEmpty,
+        s"$t: rows differ from the plain read")
+    }
+  }
+
+  test("a fixture file rewritten at the same path loads with its new schema") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-fixture-rewrite")
+    /** `df` as one parquet file at `dir/t.parquet`, the fixture layout. */
+    def writeFixture(df: DataFrame, run: String): Unit = {
+      val out = dir.resolve(run)
+      df.coalesce(1).write.parquet(out.toString)
+      val part = Files.list(out).filter { f =>
+        val n = f.getFileName.toString
+        n.startsWith("part-") && n.endsWith(".parquet")
+      }.findFirst().get()
+      Files.copy(part, dir.resolve("t.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    }
+    writeFixture(Seq(1L, 2L).toDF("a"), "w1")
+    assert(Tables(spark, dir.toString, "t").schema.fieldNames.toSeq === Seq("a"))
+    writeFixture(Seq(("x", 7)).toDF("a", "b"), "w2")
+    val after = Tables(spark, dir.toString, "t")
+    assert(after.schema.map(f => f.name -> f.dataType) ===
+      Seq("a" -> StringType, "b" -> IntegerType))
+    assert(after.collect().toSeq === Seq(Row("x", 7)))
   }
 }

@@ -464,4 +464,29 @@ class DerbyEndToEndSpec extends SparkTestBase {
     assert(messages.exists(_.contains("upload worker exceeded")),
       s"no deadline failure in: $messages")
   }
+
+  test("writeJdbc: a failing INSERT batch rolls back and surfaces its own " +
+      "error, not the connection close's") {
+    import spark.implicits._
+    val c = conn()
+    c.createStatement().executeUpdate(
+      "CREATE TABLE dup_t (k BIGINT NOT NULL, v VARCHAR(8), PRIMARY KEY (k))")
+    c.createStatement().executeUpdate("INSERT INTO dup_t VALUES (3, 'old')")
+    c.close()
+    // one partition, one transaction: key 3 is already in the table, so
+    // the batch's INSERT violates the primary key before any commit
+    val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").coalesce(1)
+    val e = intercept[Exception](DataCopier.writeJdbc(df, url, "dup_t"))
+    val states = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collect { case q: java.sql.SQLException => q.getSQLState }.toList
+    assert(states.contains("23505") && !states.contains("25001"),
+      s"SQLStates in the cause chain: $states")
+    val left = conn()
+    try {
+      val rs = left.createStatement().executeQuery("SELECT k, v FROM dup_t")
+      val rows = Iterator.continually(rs).takeWhile(_.next())
+        .map(r => r.getLong(1) -> r.getString(2)).toList
+      assert(rows == List(3L -> "old"), s"rolled-back table holds $rows")
+    } finally left.close()
+  }
 }
