@@ -28,7 +28,9 @@ import graft.sources.JdbcHooks
   *    indexes; source discovery `SRC/data/DataCopier.java:108-126`),
   *    DDL runs against the destination, and each table is read as a
   *    PK-range-partitioned Spark scan (`DataCopier.readJdbc`) and
-  *    batch-INSERTed; or
+  *    batch-INSERTed. Discovery counts each PK table's source rows once
+  *    (the reference's prepare-phase count, A1), and the scan has the
+  *    reference's worker count, `CopyPlanner.readPartitions` (X2); or
   *  - a fixture parquet directory (testing convenience) — schemas come
   *    from the parquet footers and the fixture PK/index registry.
   *
@@ -111,10 +113,17 @@ object ConverterApp {
         case Some(c) =>
           // the reference's real flow: introspect the live source catalog
           // (tables/columns/PKs/indexes) and read each table as a
-          // PK-range-partitioned scan pushed down to the source
+          // PK-range-partitioned scan pushed down to the source, in as
+          // many partitions as the reference has upload workers. The
+          // count only sizes the read: the scan's own probe and
+          // half-open ranges still cover every row.
           Catalog.introspectAll(c, Dialect.forUrl(source)).map { spec =>
+            val partitions =
+              if (!spec.hasPrimaryKey) 1
+              else CopyPlanner.readPartitions(
+                JdbcHooks.count(c, DataCopier.sourceTable(spec)), cfg)
             (spec, () => DataCopier.readJdbc(spark, source, spec,
-              new java.util.Properties(), cfg.maxNumberOfWorkers, None))
+              new java.util.Properties(), partitions, None))
           }
         case None =>
           // fixture mode: schemas from parquet footers, PKs/indexes from
@@ -175,14 +184,10 @@ object ConverterApp {
             case Right(s) => s
           }
           val st = conn.createStatement()
-          val destCount = try {
-            script.foreach(st.executeUpdate)
+          try script.foreach(st.executeUpdate) finally st.close()
+          val destCount =
             if (script.nonEmpty || !existing.contains(t.toUpperCase)) 0L
-            else {
-              val rs = st.executeQuery(s"SELECT COUNT(*) FROM $t")
-              try { rs.next(); rs.getLong(1) } finally rs.close()
-            }
-          } finally st.close()
+            else JdbcHooks.count(conn, t)
           if (mode == ConvertMode.SkipAll ||
               (mode == ConvertMode.SkipExisting && destCount > 0))
             Plan(spec, read, copyData = false, s"mode=$mode, destRows=$destCount")

@@ -3,16 +3,23 @@ package graft.copy
 import graft.catalog.TableSpec
 import graft.config.ConverterConfig
 
-/** Commit sizing lifted from the reference's prepare phase (its real
+/** Copy sizing lifted from the reference's prepare phase (its real
   * "physical planner" — SURVEY §4), with the reference's exact
   * constants: 20,000 mutations/commit cap and 100-row floor
-  * (ConverterUtils.java:25-40). The copy's intra-table fan-out is
-  * `DataCopier.readJdbc`'s partition count, not a worker formula.
+  * (ConverterUtils.java:25-40), and 10,000 rows per upload worker
+  * (GenericJdbcTableWorker.java:68-72).
   */
 object CopyPlanner {
 
   val MutationsPerCommitCap = 20000L
   val RowsPerCommitFloor = 100L
+  val RowsPerWorker = 10000L
+
+  /** X2: a table's read partitions (the reference's upload workers),
+    * `min(rows / RowsPerWorker + 1, maxNumberOfWorkers)` from the
+    * source row count — GenericJdbcTableWorker.java:68-72. */
+  def readPartitions(rows: Long, cfg: ConverterConfig): Int =
+    math.min(rows / RowsPerWorker + 1, cfg.maxNumberOfWorkers.toLong).toInt
 
   /** X3: rows per commit under both the byte budget and Spanner's 20k
     * mutation/commit limit — ConverterUtils.java:25-40.

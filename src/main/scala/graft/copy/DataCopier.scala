@@ -37,6 +37,11 @@ final case class CopyReport(records: Long, bytes: Long, elapsedMillis: Long)
   */
 object DataCopier {
 
+  /** The source table `readJdbc` reads: `schema.name`, or the bare name
+    * when the spec has no schema. */
+  def sourceTable(spec: TableSpec): String =
+    spec.schema.map(s => s"$s.${spec.name}").getOrElse(spec.name)
+
   /** Partitioned JDBC source read (S1/S2): one `graft-jdbc` scan with
     * the spec's PK as the split key. The source probes `numPartitions - 1`
     * PK boundary tuples on the database (index-served OFFSET/FETCH, no
@@ -58,10 +63,9 @@ object DataCopier {
       props: java.util.Properties, numPartitions: Int,
       @unused pkBounds: Option[(Long, Long)]): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val table = spec.schema.map(s => s"$s.${spec.name}").getOrElse(spec.name)
     spark.read.format("graft-jdbc")
       .options(props.stringPropertyNames.asScala.map(k => k -> props.getProperty(k)).toMap)
-      .option("url", url).option("dbtable", table)
+      .option("url", url).option("dbtable", sourceTable(spec))
       .option("pk", spec.primaryKey.mkString(","))
       .option("partitions", numPartitions.toString)
       .load()

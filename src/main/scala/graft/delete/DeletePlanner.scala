@@ -70,13 +70,7 @@ object DeletePlanner {
       // pinned probe sees the same state the pinned scan will)
       JdbcHooks.beforeFetchAll(conn = conn, url = url,
         props = hookProps.getOrElse(connProps))
-      val n = {
-        val st = conn.createStatement()
-        try {
-          val rs = st.executeQuery(s"SELECT COUNT(*) FROM $table")
-          rs.next(); rs.getLong(1)
-        } finally st.close()
-      }
+      val n = JdbcHooks.count(conn, table)
       if (n == 0) return Seq.empty
       val step = (n + workers - 1) / workers
       val pks = pkCols.mkString(", ")

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 import graft.Tables
+import graft.config.ConverterConfig
+import graft.copy.CopyPlanner
 import graft.operators.CoreQueries.money
 
 /** Queries re-expressing the reference's ETL operator surface (SURVEY.md §2)
@@ -248,12 +250,14 @@ object EtlQueries {
     },
     // X2: the reference's upload-worker count formula
     // min(totalRecords/batchSize + 1, maxNumberOfWorkers)
-    // (GenericJdbcTableWorker.java:68-72) with batch=10000, max=10.
+    // (GenericJdbcTableWorker.java:68-72), with the divisor and cap the
+    // copy sizes its reads by (CopyPlanner.readPartitions).
     "x2_worker_plan" -> { (s, dir) =>
       Tables(s, dir, "lineitem")
         .agg(count(lit(1)).as("n_records"))
         .select(col("n_records"),
-          least(expr("n_records div 10000") + 1, lit(10)).as("n_workers"))
+          least(expr(s"n_records div ${CopyPlanner.RowsPerWorker}") + 1,
+            lit(ConverterConfig().maxNumberOfWorkers)).as("n_workers"))
     },
     // P4: true lexicographic composite-PK range (the reference's per-column
     // box predicate is only correct for single-column PKs — SURVEY §2.2 P4).

@@ -4,9 +4,9 @@ import java.sql.{Connection, DriverManager}
 
 import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects}
 
-/** The one JDBC connection opener and transaction guard, plus the
-  * per-connection dialect hooks shared by every JDBC-opening path (the
-  * V2 partition reader, the delete/copy split-point probes). */
+/** The one JDBC connection opener, transaction guard and row count,
+  * plus the per-connection dialect hooks shared by every JDBC-opening
+  * path (the V2 partition reader, the delete/copy split-point probes). */
 object JdbcHooks {
 
   /** Open `url` with `props` as the driver's connection properties. */
@@ -36,6 +36,16 @@ object JdbcHooks {
       }
     conn.close()
     result
+  }
+
+  /** `SELECT COUNT(*)` of `table` (used as written, unquoted) on
+    * `conn`; the statement and its result set close on every path. */
+  def count(conn: Connection, table: String): Long = {
+    val st = conn.createStatement()
+    try {
+      val rs = st.executeQuery(s"SELECT COUNT(*) FROM $table")
+      try { rs.next(); rs.getLong(1) } finally rs.close()
+    } finally st.close()
   }
 
   /** Run every matching dialect's `beforeFetch` hook (the snapshot-pin

@@ -1,6 +1,7 @@
 package graft.copy
 
 import java.sql.DriverManager
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
@@ -258,6 +259,59 @@ class DerbyEndToEndSpec extends SparkTestBase {
       assert(one("SELECT COUNT(*), SUM(balance) FROM accounts") == ((na, sa)))
       assert(one("SELECT COUNT(*), SUM(amount) FROM ledger") == ((nl, sl)))
     } finally dc.close()
+  }
+
+  test("ConverterApp JDBC mode sizes each table's copy by the reference's " +
+      "worker formula: 1 write task for 5 rows, 3 for 25,000") {
+    val srcUrl = "jdbc:derby:memory:graftFanSrc"
+    val dstUrl = "jdbc:derby:memory:graftFanDst"
+    val sizes = Map("FEW" -> 5, "MANY" -> 25000)
+    val c = DriverManager.getConnection(srcUrl + ";create=true")
+    try {
+      for ((t, n) <- sizes) {
+        c.createStatement().executeUpdate(
+          s"CREATE TABLE $t (id BIGINT NOT NULL, v VARCHAR(16), PRIMARY KEY (id))")
+        val ps = c.prepareStatement(s"INSERT INTO $t VALUES (?, ?)")
+        for (i <- 0 until n) { ps.setLong(1, i); ps.setString(2, s"v$i"); ps.addBatch() }
+        ps.executeBatch(); ps.close()
+      }
+    } finally c.close()
+
+    // each table's copy runs its write job under the description
+    // "convert <table>"; its tasks are the copy's read partitions
+    val sc = spark.sparkContext
+    val stageTable = new java.util.concurrent.ConcurrentHashMap[Int, String]
+    val tasks = new java.util.concurrent.ConcurrentHashMap[String, Int]
+    val Convert = "convert (\\w+)".r
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .collect { case Convert(t) => e.stageIds.foreach(stageTable.put(_, t)) }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(stageTable.get(e.stageId)).foreach(tasks.merge(_, 1, _ + _))
+    }
+    Bridge.awaitListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      graft.app.ConverterApp.run(
+        Array(srcUrl, dstUrl, "DropAndRecreate", "--yes"), spark)
+      Bridge.awaitListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    assert(tasks.asScala.toMap == Map("FEW" -> 1, "MANY" -> 3))
+
+    def sig(u: String, t: String): (Long, Long, Long) = {
+      val c = DriverManager.getConnection(u)
+      try {
+        val rs = c.createStatement().executeQuery(
+          s"SELECT COUNT(*), SUM(id), SUM(LENGTH(v)) FROM $t")
+        rs.next(); val r = (rs.getLong(1), rs.getLong(2), rs.getLong(3)); rs.close(); r
+      } finally c.close()
+    }
+    for ((t, n) <- sizes) {
+      assert(sig(dstUrl, t) == sig(srcUrl, t))
+      assert(sig(dstUrl, t)._1 == n.toLong)
+    }
   }
 
   /** Runs ConverterApp and returns each copied table's
