@@ -492,7 +492,8 @@ object Dedup {
     * count grows with the corpus so bucket size stays bounded.
     *
     * Input: `vectors` as (`vec_id`, `v: array<double>`); `centroids` as
-    * produced by [[Similarity.meanCentroids]] (broadcast — small).
+    * produced by [[Similarity.meanCentroids]] (collected once and
+    * broadcast to the [[Similarity.ivfAssign]] kernel).
     * Output: (`vec_id`, `cluster_id` = min vec_id of its near-dup
     * component, `keep` = is that representative).
     *

@@ -215,24 +215,8 @@ object HybridQueries {
   // the sim_ann_ivf pipeline (rounded per-label mean centroids → argmin
   // assignment → same-bucket probe) ranked to top-20
   private val denseIvfSql: String =
-    """m AS (
-      | SELECT label, dim, ROUND(AVG(val), 4) AS m FROM (
-      |  SELECT label, CAST(unnest(range(len(embedding))) AS INT) AS dim,
-      |   CAST(unnest(embedding) AS DOUBLE) AS val
-      |  FROM embeddings) t GROUP BY 1, 2),
-      |cent AS (
-      | SELECT label AS c_label, list(m ORDER BY dim) AS c FROM m GROUP BY label),
-      |cent2 AS (
-      | SELECT c_label, c,
-      |  list_aggregate(list_transform(c, x -> x * x), 'sum') AS cnorm2
-      | FROM cent),
-      |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |assign AS (
-      | SELECT vec_id, c_label AS centroid FROM (
-      |  SELECT vec_id, c_label,
-      |   ROW_NUMBER() OVER (PARTITION BY vec_id
-      |     ORDER BY cnorm2 - 2 * list_dot_product(v, c), c_label) AS rn
-      |  FROM v, cent2) t WHERE rn = 1),
+    s"""${SimilarityQueries.centroidCtes},
+      |${SimilarityQueries.assignCte("= 1")},
       |dense AS (
       | SELECT query_id, doc_id, rnk AS rnk_d FROM (
       |  SELECT q.vec_id AS query_id, c.vec_id AS doc_id,

@@ -83,10 +83,11 @@ object Recall {
     *
     * `assignment` is (vec_id, centroid) — pass the deployed shared-stage
     * single assignment to audit `dedup_semantic` as served, or a
-    * multi-probe assignment (`Similarity.ivfAssignN`, one row per
-    * (vec_id, probed centroid)) to measure the recall the nprobe dial
-    * buys: a pair is then a candidate when the probe SETS intersect
-    * (distinct-ed, so double-shared buckets don't inflate n_cand). */
+    * multi-probe assignment (`Similarity.ivfAssignN`, the same
+    * nearest-centroid kernel, one row per (vec_id, probed centroid)) to
+    * measure the recall the nprobe dial buys: a pair is then a
+    * candidate when the probe SETS intersect (distinct-ed, so
+    * double-shared buckets don't inflate n_cand). */
   def ivfCandidateRecall(vectors: DataFrame, assignment: DataFrame,
       tau: Double): DataFrame = {
     guard(vectors, "vectors")

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.{CentroidTable, NearestCentroids}
 import graft.functions.SketchExpressions._
 
 /** User-facing similarity-search library: DataFrame in → DataFrame out,
@@ -16,8 +17,11 @@ import graft.functions.SketchExpressions._
   * Scale design: the exact path broadcasts the (small) query batch so
   * the corpus is scanned once and never shuffled; the approximate paths
   * replace the cartesian with bucket equi-joins (hyperplane LSH tables,
-  * IVF centroid buckets). The registered `SimilarityQueries` entries are
-  * thin wrappers over these with the driver fixture's parameters. */
+  * IVF centroid buckets). Every centroid assignment (IVF at any probe
+  * count, PQ per block, k-means training and seeding) runs the one
+  * [[NearestCentroids]] kernel. The registered `SimilarityQueries`
+  * entries are thin wrappers over these with the driver fixture's
+  * parameters. */
 object Similarity {
 
   private def topK(scored: DataFrame, k: Int): DataFrame = {
@@ -96,11 +100,23 @@ object Similarity {
       .select(col("label").as("c_label"), expr("transform(dm, s -> s.m)").as("c"))
       .withColumn("cnorm2", expr("aggregate(c, 0D, (a, x) -> a + x * x)"))
 
+  /** The nearest-centroid kernel's best `(centroid, score)` for each
+    * row's `v`. */
+  private def nearest1(spark: SparkSession, table: CentroidTable,
+      from: Int = 0, width: Int = -1): Column =
+    NearestCentroids(spark, table, 1, from, width).getItem(0)
+
   /** IVF coarse quantizer: each vector `(vec_id, v)` → nearest centroid
-    * by L2 (argmin over |c|² − 2·v·c; |v|² is constant per vector).
-    * Centroids broadcast (small). Output `(vec_id, centroid)`. */
+    * by L2 (argmin over |c|² − 2·v·c; |v|² is constant per vector), ties
+    * by label. The centroids `(c_label, c, cnorm2)` are collected once
+    * and broadcast to the [[NearestCentroids]] kernel, so the plan is one
+    * narrow map (no join, window or exchange) that also runs inside an
+    * append-mode stream. A NULL vector, a NULL element or a length other
+    * than the centroids' fails the task, naming the `vec_id`. Output
+    * `(vec_id, centroid)`, the centroid keeping `c_label`'s type. */
   def ivfAssign(vectors: DataFrame, centroids: DataFrame): DataFrame =
-    ivfAssignN(vectors, centroids, 1).drop("probe_rank")
+    vectors.select(col("vec_id"), nearest1(vectors.sparkSession,
+      CentroidTable.collect(centroids)).getField("centroid").as("centroid"))
 
   /** `(c_label, c, cnorm2)` frame from driver-local centroids. cnorm2
     * uses the same sequential left fold as the SQL aggregate()/
@@ -134,8 +150,9 @@ object Similarity {
     * oracle-exact): components quantize to BIGINT (`floor(x·1e6+0.5)`)
     * BEFORE the re-mean group sum (order-free reduction), and the new
     * component is `floor(sum_q/n + 0.5)/1e6` — one IEEE division +
-    * floor over exact integers, bit-identical on any engine. Ties in
-    * the assign step break by centroid label (same as [[ivfAssignN]]).
+    * floor over exact integers, bit-identical on any engine. The assign
+    * step is the [[NearestCentroids]] kernel of [[ivfAssign]] over the
+    * driver-held centroids, ties by centroid label.
     *
     * Empty clusters reseed deterministically from the farthest-point
     * vectors: the vectors with the largest distance to their assigned
@@ -175,19 +192,16 @@ object Similarity {
             "cannot seed k distinct centroids")
         seeds
     }
-    def frame(c: Array[(Long, Array[Double])]): DataFrame = centroidFrame(spark, c)
     def q(x: Double): Long = math.floor(x * 1e6 + 0.5).toLong
     var it = 0
     var done = maxIter == 0
     while (!done) {
-      val centDf = frame(cent)
-      // persisted: the re-mean always reads it, and a reseed round
-      // reads it a second time — without the persist that second read
-      // re-runs the whole broadcast-score-argmin pass over the corpus
-      val assign = ivfAssign(vectors, centDf).persist()
+      // each vector with its nearest (centroid, score): one narrow map
+      val assigned = vectors.select(col("vec_id"), col("v"),
+        nearest1(spark, CentroidTable.local(cent)).as("best"))
       // quantized per-(centroid, dim) sums: one order-free shuffle
-      val sums = vectors.join(assign, "vec_id")
-        .select(col("centroid"), posexplode(col("v")))
+      val sums = assigned
+        .select(col("best.centroid").as("centroid"), posexplode(col("v")))
         .select(col("centroid"), col("pos").as("dim"),
           expr("cast(floor(col * 1e6 + 0.5d) as bigint)").as("q"))
         .groupBy("centroid", "dim")
@@ -209,12 +223,11 @@ object Similarity {
       }
       val empties = next.collect { case (l, null) => l }
       if (empties.nonEmpty) {
-        // deterministic farthest-point reseed: max dist² to the assigned
-        // centroid, ties by vec_id, one reseed vector per empty label
-        val far = vectors.join(assign, "vec_id")
-          .join(broadcast(centDf), col("centroid") === col("c_label"))
-          .withColumn("dist2", col("cnorm2") -
-            lit(2) * dot_product(col("v"), col("c")) +
+        // deterministic farthest-point reseed: max dist² (score + |v|²)
+        // to the assigned centroid, ties by vec_id, one reseed vector
+        // per empty label; rare, so it re-runs the assign map
+        val far = assigned
+          .withColumn("dist2", col("best.score") +
             expr("aggregate(v, 0D, (a, x) -> a + x * x)"))
           .orderBy(col("dist2").desc, col("vec_id"))
           .limit(empties.length)
@@ -230,7 +243,6 @@ object Similarity {
           case ok => ok
         }
       }
-      assign.unpersist(blocking = false)
       // quantized max component shift; reseeded clusters count too
       val shift = cent.zip(next).iterator.flatMap { case ((_, a), (_, b)) =>
         a.iterator.zip(b.iterator).map { case (x, y) => math.abs(q(x) - q(y)) }
@@ -239,7 +251,7 @@ object Similarity {
       it += 1
       done = it >= maxIter || shift == 0L || shift / 1e6 < tol
     }
-    frame(cent)
+    centroidFrame(spark, cent)
   }
 
   /** Mean bucket size the adaptive coarse quantizer holds constant.
@@ -338,52 +350,18 @@ object Similarity {
   }
 
   /** Multi-probe IVF assignment: each vector's `nprobe` nearest
-    * centroids with their probe rank. Queries probe several adjacent
-    * buckets to recover the recall lost at bucket boundaries, at a
-    * bounded extra cost (nprobe × bucket size) — the corpus itself
-    * stays single-assigned. */
+    * centroids with their probe rank, from the same kernel as
+    * [[ivfAssign]] (one narrow map and an explode). Queries probe several
+    * adjacent buckets to recover the recall lost at bucket boundaries,
+    * at a bounded extra cost (nprobe × bucket size) — the corpus itself
+    * stays single-assigned. Output `(vec_id, centroid, probe_rank)`. */
   def ivfAssignN(vectors: DataFrame, centroids: DataFrame,
       nprobe: Int): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val w = Window.partitionBy("vec_id").orderBy(col("score"), col("c_label"))
-    vectors.crossJoin(broadcast(centroids))
-      .withColumn("score", col("cnorm2") - lit(2) *
-        dot_product(col("v"), col("c")))
-      .withColumn("probe_rank", row_number().over(w).cast("long"))
-      .filter(col("probe_rank") <= nprobe)
-      .select(col("vec_id"), col("c_label").as("centroid"), col("probe_rank"))
-  }
-
-  /** Streaming-safe twin of [[ivfAssign]]: the argmin runs per row
-    * against the centroid table folded in as a literal array, so the
-    * plan is a NARROW map — no window, no aggregate, no state — and
-    * works unchanged inside an append-mode stream (`readStream` →
-    * assign → sink), which is how an ingest pipeline tags each new
-    * vector with its bucket on arrival without retraining anything.
-    * The centroids (tiny by contract) are collected at plan-build time.
-    *
-    * Bit-compatible with [[ivfAssign]]: the score is the same ordered
-    * multiply-add sequence (`zip_with` then in-order fold ≡ the fused
-    * DotProduct kernel) and ties break by centroid label, so the two
-    * paths produce identical assignments. */
-  def ivfAssignNarrow(vectors: DataFrame, centroids: DataFrame): DataFrame = {
-    val cents = centroids.select("c_label", "c", "cnorm2").collect()
-      .map(r => (r.get(0).asInstanceOf[Number].longValue(),
-        r.getSeq[Double](1), r.getDouble(2)))
-      .sortBy(_._1)
-    require(cents.nonEmpty, "ivfAssignNarrow needs at least one centroid")
-    val centArr = array(cents.map { case (l, c, n2) =>
-      struct(lit(n2).as("cnorm2"), typedLit(c).as("c"), lit(l).as("c_label"))
-    }: _*)
-    vectors
-      .withColumn("_cents", centArr)
-      .withColumn("_best", expr(
-        """array_sort(transform(_cents, s -> struct(
-          |  s.cnorm2 - 2 * aggregate(zip_with(v, s.c, (a, b) -> a * b),
-          |                           0D, (acc, x) -> acc + x) AS score,
-          |  s.c_label AS c_label)))[0].c_label""".stripMargin))
-      .drop("_cents")
-      .withColumnRenamed("_best", "centroid")
+    vectors.select(col("vec_id"), posexplode(NearestCentroids(
+        vectors.sparkSession, CentroidTable.collect(centroids), nprobe)))
+      .select(col("vec_id"), col("col.centroid").as("centroid"),
+        (col("pos") + 1).cast("long").as("probe_rank"))
   }
 
   /** IVF search: probe only the query's centroid bucket, exact top-k
@@ -484,30 +462,26 @@ object Similarity {
   /** Product-quantization code assignment — the storage scale path past
     * int8: `v` splits into `blocks` equal sub-vectors, each assigned to
     * its nearest sub-centroid by L2 (argmin over |c|² − 2·v·c per
-    * block), so a vector stores as `blocks` small codes instead of
-    * `dim` floats. The codebook (centroids × blocks sub-slices) is
-    * broadcast; the corpus is scanned once with a narrow explode —
-    * no shuffle of the vectors beyond the per-(vec, block) argmin
-    * window on already-colocated rows.
+    * block, ties by label), so a vector stores as `blocks` small codes
+    * instead of `dim` floats. The codebook is collected once and each
+    * block runs the [[NearestCentroids]] kernel on its sub-centroids:
+    * one narrow map and an explode, no join, window or shuffle.
     *
     * Input: `vectors` as `(vec_id, v)`, `centroids` as `(c_label, c)`
     * (e.g. from [[meanCentroids]]). Output: `(vec_id, block, code)`. */
   def pqAssign(vectors: DataFrame, centroids: DataFrame,
       blocks: Int, dim: Int): DataFrame = {
     require(dim % blocks == 0, s"dim ($dim) must split evenly into $blocks blocks")
-    val d = dim / blocks
-    val vb = vectors
-      .select(col("vec_id"), explode(expr(
-        s"transform(sequence(0, ${blocks - 1}), " +
-          s"b -> struct(cast(b as bigint) as block, slice(v, b * $d + 1, $d) as vb))")).as("e"))
-      .select(col("vec_id"), col("e.block").as("block"), col("e.vb").as("vb"))
     val cb = pqCodebook(centroids, blocks, dim)
-    val w = Window.partitionBy("vec_id", "block").orderBy(col("score"), col("c_label"))
-    vb.join(broadcast(cb), "block")
-      .withColumn("score", col("cbnorm2") - lit(2) * dot_product(col("vb"), col("cb")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("block"), col("c_label").as("code"))
+      .select("c_label", "cb", "cbnorm2", "block").collect().toSeq
+    val codes = (0 until blocks).map { b =>
+      val table = CentroidTable.fromRows(centroids.schema("c_label").dataType,
+        cb.filter(_.getLong(3) == b))
+      nearest1(vectors.sparkSession, table, from = b * (dim / blocks), width = dim)
+        .getField("centroid")
+    }
+    vectors.select(col("vec_id"), posexplode(array(codes: _*)))
+      .select(col("vec_id"), col("pos").cast("long").as("block"), col("col").as("code"))
   }
 
   /** PQ asymmetric-distance search (ADC): the corpus is represented ONLY
@@ -614,16 +588,14 @@ object Similarity {
       cand ++= v2.orderBy("vec_id").limit(1).select("vec_id", "v").collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       for (round <- 1 to rounds) {
-        val cd = centroidFrame(spark, cand.zipWithIndex
+        val seeds = CentroidTable.local(cand.zipWithIndex
           .map { case ((_, arr), i) => (i.toLong, arr) }.toArray)
-        // per-vector min dist² to the current seed set: broadcast the
-        // (small) seeds, one keyed partial-aggregated shuffle
-        val d2 = v2.crossJoin(broadcast(cd))
-          .groupBy("vec_id")
-          .agg(min(col("cnorm2") - lit(2) * dot_product(col("v"), col("c")) +
-            col("vnorm2")).as("d2"),
-            first("v").as("v"))
-          .withColumn("d2", greatest(col("d2"), lit(0.0))) // fp guard
+        // per-vector min dist² to the current seed set: the kernel's
+        // top-1 score + |v|² (rounding is monotone, so
+        // min(sᵢ + x) = min(sᵢ) + x), one narrow map
+        val d2 = v2.select(col("vec_id"), col("v"),
+            greatest(nearest1(spark, seeds).getField("score") + col("vnorm2"),
+              lit(0.0)).as("d2")) // fp guard
           .persist()
         // phi via order-free integer reduction: a raw double SUM would
         // accumulate in partition order and its last ulps could flip a
@@ -650,8 +622,8 @@ object Similarity {
       // weight candidates by attracted corpus mass (one assign pass)
       val candArr = cand.zipWithIndex
         .map { case ((_, arr), i) => (i.toLong, arr) }.toArray
-      val weights = ivfAssign(v2.select("vec_id", "v"),
-          centroidFrame(spark, candArr))
+      val weights = v2.select(nearest1(spark, CentroidTable.local(candArr))
+          .getField("centroid").as("centroid"))
         .groupBy("centroid").count().collect()
         .map(r => r.get(0).asInstanceOf[Number].longValue() -> r.getLong(1))
         .toMap
@@ -811,10 +783,10 @@ object Similarity {
     spark.read.parquet(s"$path/pq_codebook.parquet")
 
   /** One-call serving path over a [[saveIndex]] directory: load the
-    * centroids and corpus assignment, bucket the query batch (the
-    * narrow kernel at `nprobe = 1` — no window/aggregate, usable from
-    * a stream too; [[ivfAssignN]] multi-probe above that, the serve-
-    * time recall knob [[ivfTopKWithRecall]] tunes), and probe each
+    * centroids and corpus assignment, bucket the query batch with
+    * [[ivfAssignN]] at `nprobe` (the serve-time recall knob
+    * [[ivfTopKWithRecall]] tunes; one narrow map at any count, usable
+    * from a stream too), and probe each
     * query's bucket(s) for its exact top-k. `corpus` must be the
     * vector table the index was built over, as `(vec_id, v)` — the
     * index stores assignments, not vectors, so the raw corpus scan
@@ -832,10 +804,8 @@ object Similarity {
     // re-run the assignment — a whole extra job per call on the
     // per-micro-batch serve path (searchIndexStream). Batch-sized
     // (|queries| × nprobe rows), never corpus-sized.
-    val buckets =
-      (if (nprobe == 1) ivfAssignNarrow(qv, cent).select("vec_id", "centroid")
-       else ivfAssignN(qv, cent, nprobe).select("vec_id", "centroid"))
-        .localCheckpoint()
+    val buckets = ivfAssignN(qv, cent, nprobe).select("vec_id", "centroid")
+      .localCheckpoint()
     // The probed bucket set is collected up front — bounded by
     // min(|batch| × nprobe, nCentroids) distinct labels, i.e. driver-
     // safe by construction — and pushed into the assignment scan as a
@@ -899,9 +869,9 @@ object Similarity {
   /** Incremental index maintenance: bucket `newVectors` against the
     * SAVED centroids and append their assignments to the index — the
     * steady-state ingest path (a coarse quantizer is retrained rarely;
-    * arrivals just take a bucket). Uses the narrow streaming-safe
-    * kernel, so the same call shape serves a batch backfill or a
-    * `foreachBatch` micro-batch sink. Appending never rewrites the
+    * arrivals just take a bucket). Uses [[ivfAssign]]'s narrow,
+    * streaming-safe kernel, so the same call shape serves a batch
+    * backfill or a `foreachBatch` micro-batch sink. Appending never rewrites the
     * existing assignment files, and the result is bit-identical to
     * re-assigning the union from scratch (same centroids, same
     * per-vector argmin). Caller contract: `vec_id`s not already in the
@@ -909,17 +879,16 @@ object Similarity {
   def appendToIndex(newVectors: DataFrame, path: String): Unit = {
     val spark = newVectors.sparkSession
     val cent = spark.read.parquet(s"$path/centroids.parquet")
-    // match the saved assignment's column types exactly — the narrow
-    // kernel emits a LongType label, but the saved index may carry the
-    // original (e.g. int) label type, and a parquet append with a
-    // different schema would poison later reads. The append also
-    // mirrors the saved LAYOUT: bucket-partitioned appends land in the
+    // match the saved assignment's column types exactly — the kernel
+    // emits the saved centroids' label type, which need not be the
+    // saved assignment's, and a parquet append with a different schema
+    // would poison later reads. The append also mirrors the saved LAYOUT: bucket-partitioned appends land in the
     // matching centroid_b= directories (partition pruning keeps
     // working across appends), flat pre-r8 dirs stay flat until a
     // compaction/saveIndex upgrades them.
     val (raw, partitioned) = readAssignment(spark, path)
     val saved = raw.schema
-    val rows = ivfAssignNarrow(newVectors, cent)
+    val rows = ivfAssign(newVectors, cent)
       .select(col("vec_id").cast(saved("vec_id").dataType),
         col("centroid").cast(saved("centroid").dataType))
     if (partitioned) writeAssignment(rows, s"$path/assignment.parquet",

@@ -46,9 +46,9 @@ object SimilarityQueries {
 
   /** The corpus-wide nprobe-2 assignment `(vec_id, centroid,
     * probe_rank)`, memoized per (session, fixture) exactly like
-    * [[sharedStages]] — round 15: `ivf_assign_capped` and
-    * `dedup_semantic_probe2` each re-ran this one window pass
-    * (corpus-keyed shuffle + rank) per call. Same 100 TB rationale as
+    * [[sharedStages]] and read by `ivf_assign_capped`,
+    * `dedup_semantic_probe2` and `sim_ann_ivf_probe2`, so none of them
+    * plans the kernel's explode itself. Same 100 TB rationale as
     * the single-probe stage: the index's assignment is built once and
     * served to every search; the frame is narrow (two ids + a rank,
     * no floats). */
@@ -240,16 +240,12 @@ object SimilarityQueries {
           .join(second, "vec_id")
           .select(col("vec_id"), col("centroid"), lit(true).as("spilled")))
     },
-    // The streaming-safe narrow assign kernel (per-row argmin over the
-    // centroid literal — no window, no aggregate; what an append-mode
-    // ingest stream runs on arrival). Bit-compatible with ivf_assign,
-    // so it shares the same DuckDB oracle — the oracle gate proves the
-    // two kernels agree, and StreamingSpec drives it through an actual
-    // MemoryStream.
+    // The assignment ivf_assign caches, planned fresh: the narrow
+    // nearest-centroid map an append-mode ingest stream runs on arrival
+    // (no window, no aggregate; StreamingSpec drives it through a
+    // MemoryStream). Same DuckDB oracle as ivf_assign.
     "ivf_assign_narrow" -> { (s, dir) =>
-      Similarity.ivfAssignNarrow(vecs(s, dir), sharedStages(s, dir)._1)
-        .select(col("vec_id"),
-          col("centroid").cast("int").as("centroid")) // match ivf_assign's label type
+      Similarity.ivfAssign(vecs(s, dir), sharedStages(s, dir)._1)
     },
     // SemDeDup-style semantic dedup: IVF-cluster the embeddings, call a
     // pair near-duplicate when cosine >= 0.3 WITHIN a cluster, keep the
@@ -373,13 +369,14 @@ object SimilarityQueries {
     // vectors near bucket boundaries, at 2× bounded probe cost.
     "sim_ann_ivf_probe2" -> { (s, dir) =>
       val e = vecs(s, dir)
-      val (cent, assign) = sharedStages(s, dir)
-      // query side probes its 2 nearest buckets (a fresh, tiny argmin
-      // over the shared centroids); the corpus keeps its shared
-      // single-bucket assignment — per-vector argmin is independent, so
-      // filtering the shared assignment equals assigning the filtered set.
+      val assign = sharedStages(s, dir)._2
+      // query side probes its 2 nearest buckets (the shared nprobe-2
+      // assignment); the corpus keeps its shared single-bucket
+      // assignment — per-vector argmin is independent, so filtering the
+      // shared assignment equals assigning the filtered set.
       val q = e.filter(col("vec_id") < 10)
-        .join(Similarity.ivfAssignN(e.filter(col("vec_id") < 10), cent, 2), "vec_id")
+        .join(sharedAssign2(s, dir).filter(col("vec_id") < 10)
+          .select("vec_id", "centroid"), "vec_id")
         .select(col("vec_id").as("query_id"), col("v").as("va"), col("centroid"))
       val c = e.filter(col("vec_id") >= 10)
         .join(assign, "vec_id")
@@ -623,7 +620,7 @@ object SimilarityQueries {
     * expectations regenerated from the engine, not this SQL —
     * `AdaptiveQuantizerSpec` pins the regime boundary from both
     * sides. */
-  private val centroidCtes: String =
+  private[operators] val centroidCtes: String =
     """m AS (
       | SELECT label, dim, ROUND(AVG(val), 4) AS m FROM (
       |  SELECT label, CAST(unnest(range(len(embedding))) AS INT) AS dim,
@@ -638,6 +635,19 @@ object SimilarityQueries {
       |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"""
       .stripMargin
 
+  /** The oracles' argmin assignment CTE `name`: each vector's
+    * centroid(s) of rank `rank` (e.g. "= 1", "<= 2") by
+    * |c|² − 2·v·c over `cents`, ties by label — the SQL twin of the
+    * [[graft.functions.NearestCentroids]] kernel. */
+  private[operators] def assignCte(rank: String, name: String = "assign",
+      cents: String = "cent2"): String =
+    s"""$name AS (
+      | SELECT vec_id, c_label AS centroid FROM (
+      |  SELECT vec_id, c_label,
+      |   ROW_NUMBER() OVER (PARTITION BY vec_id
+      |     ORDER BY cnorm2 - 2 * list_dot_product(v, c), c_label) AS rn
+      |  FROM v, $cents) t WHERE rn $rank)""".stripMargin
+
   private val ivfAssignOracle: String =
     s"""WITH $centroidCtes
       |SELECT vec_id, c_label AS centroid FROM (
@@ -649,12 +659,7 @@ object SimilarityQueries {
   val oracles: Map[String, String] = Map(
     "vec_ivf_balance" ->
       s"""WITH $centroidCtes,
-        |assign AS (
-        | SELECT vec_id, c_label AS centroid FROM (
-        |  SELECT vec_id, c_label,
-        |   ROW_NUMBER() OVER (PARTITION BY vec_id
-        |     ORDER BY cnorm2 - 2 * list_dot_product(v, c), c_label) AS rn
-        |  FROM v, cent2) t WHERE rn = 1),
+        |${assignCte("= 1")},
         |per AS (
         | SELECT centroid, CAST(COUNT(*) AS BIGINT) AS n_vecs
         | FROM assign GROUP BY 1),
@@ -703,28 +708,11 @@ object SimilarityQueries {
         |SELECT r.vec_id, s.centroid, TRUE AS spilled
         |FROM ranked r JOIN two s ON s.vec_id = r.vec_id AND s.rn = 2
         |WHERE r.crk > 40""".stripMargin,
-    // same oracle on purpose: the gate proves the narrow streaming
-    // kernel and the window-argmin kernel produce identical assignments
+    // same oracle on purpose: the same kernel, cached or planned fresh
     "ivf_assign_narrow" -> ivfAssignOracle,
     "dedup_semantic" ->
-      """WITH RECURSIVE m AS (
-        | SELECT label, dim, ROUND(AVG(val), 4) AS m FROM (
-        |  SELECT label, CAST(unnest(range(len(embedding))) AS INT) AS dim,
-        |   CAST(unnest(embedding) AS DOUBLE) AS val
-        |  FROM embeddings) t GROUP BY 1, 2),
-        |cent AS (
-        | SELECT label AS c_label, list(m ORDER BY dim) AS c FROM m GROUP BY label),
-        |cent2 AS (
-        | SELECT c_label, c,
-        |  list_aggregate(list_transform(c, x -> x * x), 'sum') AS cnorm2
-        | FROM cent),
-        |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |assign AS (
-        | SELECT vec_id, c_label AS centroid FROM (
-        |  SELECT vec_id, c_label,
-        |   ROW_NUMBER() OVER (PARTITION BY vec_id
-        |     ORDER BY cnorm2 - 2 * list_dot_product(v, c), c_label) AS rn
-        |  FROM v, cent2) t WHERE rn = 1),
+      s"""WITH RECURSIVE $centroidCtes,
+        |${assignCte("= 1")},
         |pairs AS (
         | SELECT a.vec_id AS a_id, b.vec_id AS b_id
         | FROM assign a JOIN assign b ON a.centroid = b.centroid
@@ -741,24 +729,8 @@ object SimilarityQueries {
         |SELECT id AS vec_id, MIN(r) AS cluster_id, (id = MIN(r)) AS keep
         |FROM reach GROUP BY id""".stripMargin,
     "dedup_semantic_probe2" ->
-      """WITH RECURSIVE m AS (
-        | SELECT label, dim, ROUND(AVG(val), 4) AS m FROM (
-        |  SELECT label, CAST(unnest(range(len(embedding))) AS INT) AS dim,
-        |   CAST(unnest(embedding) AS DOUBLE) AS val
-        |  FROM embeddings) t GROUP BY 1, 2),
-        |cent AS (
-        | SELECT label AS c_label, list(m ORDER BY dim) AS c FROM m GROUP BY label),
-        |cent2 AS (
-        | SELECT c_label, c,
-        |  list_aggregate(list_transform(c, x -> x * x), 'sum') AS cnorm2
-        | FROM cent),
-        |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |assign AS (
-        | SELECT vec_id, c_label AS centroid FROM (
-        |  SELECT vec_id, c_label,
-        |   ROW_NUMBER() OVER (PARTITION BY vec_id
-        |     ORDER BY cnorm2 - 2 * list_dot_product(v, c), c_label) AS rn
-        |  FROM v, cent2) t WHERE rn <= 2),
+      s"""WITH RECURSIVE $centroidCtes,
+        |${assignCte("<= 2")},
         |pairs AS (
         | SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
         | FROM assign a JOIN assign b ON a.centroid = b.centroid
@@ -775,24 +747,8 @@ object SimilarityQueries {
         |SELECT id AS vec_id, MIN(r) AS cluster_id, (id = MIN(r)) AS keep
         |FROM reach GROUP BY id""".stripMargin,
     "sim_ann_ivf" ->
-      """WITH m AS (
-        | SELECT label, dim, ROUND(AVG(val), 4) AS m FROM (
-        |  SELECT label, CAST(unnest(range(len(embedding))) AS INT) AS dim,
-        |   CAST(unnest(embedding) AS DOUBLE) AS val
-        |  FROM embeddings) t GROUP BY 1, 2),
-        |cent AS (
-        | SELECT label AS c_label, list(m ORDER BY dim) AS c FROM m GROUP BY label),
-        |cent2 AS (
-        | SELECT c_label, c,
-        |  list_aggregate(list_transform(c, x -> x * x), 'sum') AS cnorm2
-        | FROM cent),
-        |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |assign AS (
-        | SELECT vec_id, c_label AS centroid FROM (
-        |  SELECT vec_id, c_label,
-        |   ROW_NUMBER() OVER (PARTITION BY vec_id
-        |     ORDER BY cnorm2 - 2 * list_dot_product(v, c), c_label) AS rn
-        |  FROM v, cent2) t WHERE rn = 1)
+      s"""WITH $centroidCtes,
+        |${assignCte("= 1")}
         |SELECT query_id, neighbor_id, rnk FROM (
         | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
         |  ROW_NUMBER() OVER (PARTITION BY q.vec_id
@@ -885,12 +841,7 @@ object SimilarityQueries {
         |) t WHERE rnk <= 5""".stripMargin,
     "sim_range_search" ->
       s"""WITH $centroidCtes,
-        |assign AS (
-        | SELECT vec_id, c_label AS centroid FROM (
-        |  SELECT vec_id, c_label,
-        |   ROW_NUMBER() OVER (PARTITION BY vec_id
-        |     ORDER BY cnorm2 - 2 * list_dot_product(v, c), c_label) AS rn
-        |  FROM v, cent2) t WHERE rn = 1)
+        |${assignCte("= 1")}
         |SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id
         |FROM assign q
         |JOIN assign c ON q.centroid = c.centroid
@@ -901,24 +852,8 @@ object SimilarityQueries {
     // The sim_ann_ivf pipeline and the brute-force pipeline, joined into
     // a per-query hit count — recall@3 audit with all-integer outputs.
     "sim_recall_at_k" ->
-      """WITH m AS (
-        | SELECT label, dim, ROUND(AVG(val), 4) AS m FROM (
-        |  SELECT label, CAST(unnest(range(len(embedding))) AS INT) AS dim,
-        |   CAST(unnest(embedding) AS DOUBLE) AS val
-        |  FROM embeddings) t GROUP BY 1, 2),
-        |cent AS (
-        | SELECT label AS c_label, list(m ORDER BY dim) AS c FROM m GROUP BY label),
-        |cent2 AS (
-        | SELECT c_label, c,
-        |  list_aggregate(list_transform(c, x -> x * x), 'sum') AS cnorm2
-        | FROM cent),
-        |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |assign AS (
-        | SELECT vec_id, c_label AS centroid FROM (
-        |  SELECT vec_id, c_label,
-        |   ROW_NUMBER() OVER (PARTITION BY vec_id
-        |     ORDER BY cnorm2 - 2 * list_dot_product(v, c), c_label) AS rn
-        |  FROM v, cent2) t WHERE rn = 1),
+      s"""WITH $centroidCtes,
+        |${assignCte("= 1")},
         |ann AS (
         | SELECT query_id, neighbor_id FROM (
         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -948,18 +883,7 @@ object SimilarityQueries {
         | ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
         |GROUP BY 1""".stripMargin,
     "sim_ann_ivf_probe2" ->
-      """WITH m AS (
-        | SELECT label, dim, ROUND(AVG(val), 4) AS m FROM (
-        |  SELECT label, CAST(unnest(range(len(embedding))) AS INT) AS dim,
-        |   CAST(unnest(embedding) AS DOUBLE) AS val
-        |  FROM embeddings) t GROUP BY 1, 2),
-        |cent AS (
-        | SELECT label AS c_label, list(m ORDER BY dim) AS c FROM m GROUP BY label),
-        |cent2 AS (
-        | SELECT c_label, c,
-        |  list_aggregate(list_transform(c, x -> x * x), 'sum') AS cnorm2
-        | FROM cent),
-        |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH $centroidCtes,
         |ranked AS (
         | SELECT vec_id, c_label AS centroid,
         |  ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -980,24 +904,8 @@ object SimilarityQueries {
         |) t WHERE rnk <= 3""".stripMargin,
     // the ivf_assign pipeline + a (centroid, dim) re-mean — one Lloyd step
     "vec_kmeans_step" ->
-      """WITH m AS (
-        | SELECT label, dim, ROUND(AVG(val), 4) AS m FROM (
-        |  SELECT label, CAST(unnest(range(len(embedding))) AS INT) AS dim,
-        |   CAST(unnest(embedding) AS DOUBLE) AS val
-        |  FROM embeddings) t GROUP BY 1, 2),
-        |cent AS (
-        | SELECT label AS c_label, list(m ORDER BY dim) AS c FROM m GROUP BY label),
-        |cent2 AS (
-        | SELECT c_label, c,
-        |  list_aggregate(list_transform(c, x -> x * x), 'sum') AS cnorm2
-        | FROM cent),
-        |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |assign AS (
-        | SELECT vec_id, c_label AS centroid FROM (
-        |  SELECT vec_id, c_label,
-        |   ROW_NUMBER() OVER (PARTITION BY vec_id
-        |     ORDER BY cnorm2 - 2 * list_dot_product(v, c), c_label) AS rn
-        |  FROM v, cent2) t WHERE rn = 1)
+      s"""WITH $centroidCtes,
+        |${assignCte("= 1")}
         |SELECT centroid, dim, CAST(SUM(q) AS BIGINT) AS sum_q,
         | CAST(COUNT(*) AS BIGINT) AS n
         |FROM (
@@ -1012,24 +920,8 @@ object SimilarityQueries {
     // ordered fold (validated bit-equal elsewhere) or a single IEEE
     // division/floor over exact integers, so the compare is exact.
     "vec_kmeans_train2" ->
-      """WITH m AS (
-        | SELECT label, dim, ROUND(AVG(val), 4) AS m FROM (
-        |  SELECT label, CAST(unnest(range(len(embedding))) AS INT) AS dim,
-        |   CAST(unnest(embedding) AS DOUBLE) AS val
-        |  FROM embeddings) t GROUP BY 1, 2),
-        |cent AS (
-        | SELECT label AS c_label, list(m ORDER BY dim) AS c FROM m GROUP BY label),
-        |cent2 AS (
-        | SELECT c_label, c,
-        |  list_aggregate(list_transform(c, x -> x * x), 'sum') AS cnorm2
-        | FROM cent),
-        |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |a1 AS (
-        | SELECT vec_id, c_label AS centroid FROM (
-        |  SELECT vec_id, c_label,
-        |   ROW_NUMBER() OVER (PARTITION BY vec_id
-        |     ORDER BY cnorm2 - 2 * list_dot_product(v, c), c_label) AS rn
-        |  FROM v, cent2) t WHERE rn = 1),
+      s"""WITH $centroidCtes,
+        |${assignCte("= 1", "a1")},
         |s1 AS (
         | SELECT centroid, dim, CAST(SUM(q) AS BIGINT) AS sum_q,
         |  CAST(COUNT(*) AS BIGINT) AS n
@@ -1049,12 +941,7 @@ object SimilarityQueries {
         | SELECT c_label, c,
         |  list_aggregate(list_transform(c, x -> x * x), 'sum') AS cnorm2
         | FROM cent1),
-        |a2 AS (
-        | SELECT vec_id, c_label AS centroid FROM (
-        |  SELECT vec_id, c_label,
-        |   ROW_NUMBER() OVER (PARTITION BY vec_id
-        |     ORDER BY cnorm2 - 2 * list_dot_product(v, c), c_label) AS rn
-        |  FROM v, cent12) t WHERE rn = 1),
+        |${assignCte("= 1", "a2", cents = "cent12")},
         |s2 AS (
         | SELECT centroid, dim, CAST(SUM(q) AS BIGINT) AS sum_q,
         |  CAST(COUNT(*) AS BIGINT) AS n
@@ -1234,24 +1121,8 @@ object SimilarityQueries {
         |  ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY d2, neighbor_id) AS rnk
         | FROM scored) t WHERE rnk <= 5""".stripMargin,
     "sim_ann_ivfpq" ->
-      """WITH m AS (
-        | SELECT label, dim, ROUND(AVG(val), 4) AS m FROM (
-        |  SELECT label, CAST(unnest(range(len(embedding))) AS INT) AS dim,
-        |   CAST(unnest(embedding) AS DOUBLE) AS val
-        |  FROM embeddings) t GROUP BY 1, 2),
-        |cent AS (
-        | SELECT label AS c_label, list(m ORDER BY dim) AS c FROM m GROUP BY label),
-        |cent2 AS (
-        | SELECT c_label, c,
-        |  list_aggregate(list_transform(c, x -> x * x), 'sum') AS cnorm2
-        | FROM cent),
-        |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |assign AS (
-        | SELECT vec_id, c_label AS centroid FROM (
-        |  SELECT vec_id, c_label,
-        |   ROW_NUMBER() OVER (PARTITION BY vec_id
-        |     ORDER BY cnorm2 - 2 * list_dot_product(v, c), c_label) AS rn
-        |  FROM v, cent2) t WHERE rn = 1),
+      s"""WITH $centroidCtes,
+        |${assignCte("= 1")},
         |blocks AS (SELECT CAST(unnest(range(4)) AS BIGINT) AS block),
         |cb2 AS (
         | SELECT c_label, block, cb,

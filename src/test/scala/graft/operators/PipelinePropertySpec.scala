@@ -145,22 +145,48 @@ class PipelinePropertySpec extends SparkTestBase {
     }
   }
 
-  test("ivfAssignNarrow ≡ ivfAssign on random vectors and centroids") {
+  test("centroid kernel ≡ reference argmin: nprobe 1-3, PQ, ties") {
     import spark.implicits._
+    // the reference: |c|² and v·c as sequential left folds in element
+    // order, score = |c|² − 2·v·c, ranked by (score, label)
+    def ranked(v: Seq[Double], cents: Seq[(Long, Seq[Double])]): Seq[Long] =
+      cents.map { case (l, c) =>
+        val dot = v.zip(c).foldLeft(0.0) { case (a, (x, y)) => a + x * y }
+        (c.foldLeft(0.0)((a, x) => a + x * x) - 2.0 * dot, l)
+      }.sortWith { case ((sa, la), (sb, lb)) => sa < sb || (sa == sb && la < lb) }
+        .map(_._2)
     for (seed <- 1 to 4) {
       val rnd = new scala.util.Random(seed)
-      val dim = 1 + rnd.nextInt(16)
-      val vecs = (0 until 200).map(i =>
-        (i.toLong, Seq.fill(dim)(rnd.nextGaussian()))).toDF("vec_id", "v")
-      val cents = (0 until 1 + rnd.nextInt(9)).map(c =>
-        (c.toLong, Seq.fill(dim)(rnd.nextGaussian()))).toDF("c_label", "c")
+      val blocks = 1 + rnd.nextInt(3)
+      val dim = blocks * (1 + rnd.nextInt(6))
+      val vecs = (0 until 150).map(i =>
+        (i.toLong, Seq.fill(dim)(rnd.nextGaussian())))
+      val distinct = Seq.fill(2 + rnd.nextInt(7))(Seq.fill(dim)(rnd.nextGaussian()))
+      // every distinct centroid twice, under shuffled labels: each
+      // vector's best score is a tie the label must break
+      val cents = rnd.shuffle((distinct ++ distinct).zipWithIndex
+        .map { case (c, i) => (i.toLong * 7 % 101, c) })
+      val vecDf = vecs.toDF("vec_id", "v")
+      val centDf = cents.toDF("c_label", "c")
         .withColumn("cnorm2", expr("aggregate(c, 0D, (a, x) -> a + x * x)"))
-      val wide = Similarity.ivfAssign(vecs, cents)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val narrow = Similarity.ivfAssignNarrow(vecs, cents)
-        .select("vec_id", "centroid")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(narrow == wide, s"seed $seed: kernels diverged")
+      val want = vecs.map { case (id, v) => id -> ranked(v, cents) }.toMap
+      for (nprobe <- 1 to 3) {
+        val got = Similarity.ivfAssignN(vecDf, centDf, nprobe).collect()
+          .groupBy(_.getLong(0)).map { case (id, rows) =>
+            id -> rows.sortBy(_.getLong(2)).map(_.getLong(1)).toSeq }
+        assert(got == want.map { case (id, r) => id -> r.take(nprobe) },
+          s"seed $seed nprobe $nprobe: kernel and reference diverged")
+      }
+      val one = Similarity.ivfAssign(vecDf, centDf).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(one == want.map { case (id, r) => id -> r.head }, s"seed $seed: ivfAssign")
+      val d = dim / blocks
+      val pq = Similarity.pqAssign(vecDf, centDf, blocks, dim).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      val pqWant = (for ((id, v) <- vecs; b <- 0 until blocks) yield
+        (id, b.toLong) -> ranked(v.slice(b * d, b * d + d),
+          cents.map { case (l, c) => (l, c.slice(b * d, b * d + d)) }).head).toMap
+      assert(pq == pqWant, s"seed $seed: pqAssign over $blocks blocks diverged")
     }
   }
 

@@ -360,4 +360,48 @@ class SimilaritySpec extends SparkTestBase {
         s"dim $d: got ${out(d)}, want (${expect(d)}, ${vecs.length})")
     }
   }
+
+  test("centroid assignment plans one narrow map: ivfAssign, " +
+      "ivfAssignN(2) and pqAssign run no window, exchange or nested-loop join") {
+    val cent = Similarity.meanCentroids(Tables(spark, sfDir, "embeddings")
+      .selectExpr("label", "transform(embedding, x -> cast(x as double)) AS v"))
+    for ((name, df) <- Seq(
+        "ivfAssign" -> Similarity.ivfAssign(vecsDf, cent),
+        "ivfAssignN(2)" -> Similarity.ivfAssignN(vecsDf, cent, 2),
+        "pqAssign" -> Similarity.pqAssign(vecsDf, cent, blocks = 4, dim = 64))) {
+      assert(df.count() > 0, s"$name returned no rows")
+      val plan = df.queryExecution.executedPlan.toString
+      Seq("WindowExec", "Window ", "Exchange", "BroadcastNestedLoopJoin",
+          "CartesianProduct").foreach { op =>
+        assert(!plan.contains(op), s"$name plans $op:\n$plan")
+      }
+    }
+  }
+
+  test("a NULL vector, a NULL element or a wrong length fails the " +
+      "assignment loudly, naming the vec_id") {
+    import spark.implicits._
+    val cent = Seq((0L, Seq(1.0, 0.0, 0.0)), (1L, Seq(0.0, 1.0, 0.0)))
+      .toDF("c_label", "c")
+      .withColumn("cnorm2", expr("aggregate(c, 0D, (a, x) -> a + x * x)"))
+    val ok = Seq(1.0, 0.0, 0.0)
+    val bad: Seq[(String, Option[Seq[java.lang.Double]])] = Seq(
+      "NULL" -> None,
+      "NULL element" -> Some(Seq[java.lang.Double](null, 1.0, 0.0)),
+      "short" -> Some(Seq[java.lang.Double](0.0, 1.0)),
+      "long" -> Some(Seq[java.lang.Double](0.0, 1.0, 0.0, 0.0)))
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    for ((what, v) <- bad) {
+      val vecs = Seq((1L, Some(ok.map(Double.box))), (7L, v)).toDF("vec_id", "v")
+      for ((name, run) <- Seq[(String, () => Unit)](
+          "ivfAssign" -> (() => Similarity.ivfAssign(vecs, cent).collect()),
+          "ivfAssignN" -> (() => Similarity.ivfAssignN(vecs, cent, 2).collect()),
+          "pqAssign" -> (() => Similarity.pqAssign(vecs, cent, 1, 3).collect()))) {
+        val e = intercept[Exception](run())
+        assert(messages(e).contains("vec_id=7"),
+          s"$name on a $what vector: the error does not name vec_id=7: ${messages(e)}")
+      }
+    }
+  }
 }

@@ -320,8 +320,7 @@ class StreamingSpec extends SparkTestBase {
     val rows = vdf.collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
     val stream = MemoryStream[(Long, Seq[Double])]
     val q = graft.operators.Similarity
-      .ivfAssignNarrow(stream.toDF().toDF("vec_id", "v"), cent)
-      .select("vec_id", "centroid")
+      .ivfAssign(stream.toDF().toDF("vec_id", "v"), cent)
       .writeStream.format("memory").queryName("assign_stream")
       .outputMode("append").start()
     try {
@@ -330,7 +329,7 @@ class StreamingSpec extends SparkTestBase {
       stream.addData(rows.drop(10).toSeq: _*)
       q.processAllAvailable()
       val got = spark.table("assign_stream").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        .map(r => r.getLong(0) -> r.get(1).asInstanceOf[Number].longValue()).toMap
       val batch = graft.operators.Similarity.ivfAssign(vdf, cent).collect()
         .map(r => r.getLong(0) ->
           r.get(1).asInstanceOf[Number].longValue()).toMap
