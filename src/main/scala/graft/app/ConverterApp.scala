@@ -1,6 +1,6 @@
 package graft.app
 
-import java.sql.Types
+import java.sql.{Connection, Types}
 import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicReference
 import scala.concurrent.duration._
@@ -16,8 +16,12 @@ import graft.ddl.DdlGenerator
 import graft.sources.JdbcHooks
 
 /** The reference's `Converter.main` re-expressed (SURVEY §3.1): given a
-  * source and a destination JDBC URL, run the 3-stage pipeline
-  * tables → (indexes) → data with mode gates, then report totals.
+  * source and a destination JDBC URL, run the pipeline with mode gates,
+  * then report totals. Each new destination table is created bare, its
+  * rows are copied, and then its primary key and secondary indexes are
+  * built over the loaded rows (the reference creates the key and indexes
+  * before the data, Converter.java:69-83; a dialect that cannot add a key
+  * later, Spanner, keeps it in CREATE TABLE).
   *
   * Usage: ConverterApp <source> <destJdbcUrl> [mode] [--yes]
   *
@@ -161,37 +165,37 @@ object ConverterApp {
       val t0 = System.currentTimeMillis()
 
       // --- phase 1 (sequential, driver-side): DDL with mode gates (J2).
-      // The reference also runs DDL before any data moves
-      // (Converter.java:69-83).
+      // Each table's DDL plan splits around its copy: the DROP and the
+      // bare CREATE TABLE run here, before any data moves; its `afterLoad`
+      // (ADD PRIMARY KEY, then CREATE INDEX) runs once its rows are in.
+      // rows-per-commit still counts the carried indexes, the reference's
+      // X3/A5 formula (each secondary index one extra mutation per row).
       final case class Plan(spec: graft.catalog.TableSpec,
           read: () => org.apache.spark.sql.DataFrame,
-          copyData: Boolean, reason: String)
-      // tables stage + index stage 2 run from the same spec: DdlGenerator
-      // emits CREATE TABLE then CREATE INDEX per table (Converter.java:
-      // 69-83 runs IndexConverter right after TableConverter), and the
-      // carried indexes raise the per-row mutation count in rows-per-commit
-      // (X3/A5 — each secondary index is one extra mutation per row).
+          copyData: Boolean, reason: String, afterLoad: Seq[String])
       val plans = sourceTables.map { case (spec0, read) =>
         // destination tables are unqualified: the source schema (e.g.
         // Derby APP) has no meaning in the destination catalog
         val spec = spec0.copy(schema = None)
         val t = spec.name
-        if (!spec.hasPrimaryKey) Plan(spec, read, copyData = false, "no primary key")
+        if (!spec.hasPrimaryKey) Plan(spec, read, copyData = false, "no primary key", Nil)
         else {
-          val script = DdlGenerator.script(spec, destDialect, mode,
+          val ddl = DdlGenerator.plan(spec, destDialect, mode,
             existing.contains(t.toUpperCase), cfg) match {
             case Left(err) => throw new IllegalStateException(err)
-            case Right(s) => s
+            case Right(p) => p
           }
-          val st = conn.createStatement()
-          try script.foreach(st.executeUpdate) finally st.close()
+          execute(conn, ddl.beforeLoad)
           val destCount =
-            if (script.nonEmpty || !existing.contains(t.toUpperCase)) 0L
+            if (ddl.beforeLoad.nonEmpty || !existing.contains(t.toUpperCase)) 0L
             else JdbcHooks.count(conn, t)
           if (mode == ConvertMode.SkipAll ||
-              (mode == ConvertMode.SkipExisting && destCount > 0))
-            Plan(spec, read, copyData = false, s"mode=$mode, destRows=$destCount")
-          else Plan(spec, read, copyData = true, "")
+              (mode == ConvertMode.SkipExisting && destCount > 0)) {
+            // a table created here but left empty gets its key and
+            // indexes at once
+            execute(conn, ddl.afterLoad)
+            Plan(spec, read, copyData = false, s"mode=$mode, destRows=$destCount", Nil)
+          } else Plan(spec, read, copyData = true, "", ddl.afterLoad)
         }
       }
 
@@ -199,12 +203,16 @@ object ConverterApp {
       // concurrent per-table Spark jobs, the Spark shape of the
       // reference's fixed table-worker pool (DataCopier.java:167-190).
       // The jobs share the context's scheduler, FIFO unless the session
-      // was started with another `spark.scheduler.mode`. Failures
-      // propagate (X6 fix) and are final: the first failed copy cancels
+      // was started with another `spark.scheduler.mode`. Each table's
+      // key and indexes are built on its own connection right after its
+      // rows are written, and the `[convert]` line's ms covers both.
+      // Failures — of a copy or of its key and index DDL — propagate
+      // (X6 fix) and are final: the first failed table cancels
       // the run's job group, and `run` rethrows it (the others'
       // failures suppressed) only once every table's copy has ended, so
-      // nothing writes to the destination after `run` throws. The pool
-      // is shut down on every exit so no idle worker threads remain.
+      // nothing writes to the destination after `run` throws; once a
+      // table has failed, no other table builds its key or indexes. The
+      // pool is shut down on every exit so no idle worker threads remain.
       val sc = spark.sparkContext
       val jobGroup = s"graft-convert-${java.util.UUID.randomUUID()}"
       val firstFailure = new AtomicReference[Throwable]()
@@ -221,13 +229,21 @@ object ConverterApp {
               val rpc = CopyPlanner.rowsPerCommit(p.spec, cfg)
               val df = p.read()
               val report = DataCopier.writeJdbc(df, url, p.spec.name, cfg, rpc)
-              println(s"[convert] ${p.spec.name}: ${report.records} records, " +
-                s"${report.bytes} bytes, rowsPerCommit=$rpc, ${report.elapsedMillis} ms")
+              if (firstFailure.get == null) {
+                val ddlStart = System.currentTimeMillis()
+                if (p.afterLoad.nonEmpty) {
+                  val c = JdbcHooks.connect(url, Map.empty)
+                  try execute(c, p.afterLoad) finally c.close()
+                }
+                val ms = report.elapsedMillis + System.currentTimeMillis() - ddlStart
+                println(s"[convert] ${p.spec.name}: ${report.records} records, " +
+                  s"${report.bytes} bytes, rowsPerCommit=$rpc, $ms ms")
+              }
               (report.records, report.bytes)
             } catch { case e: Throwable =>
               if (firstFailure.compareAndSet(null, e))
                 sc.cancelJobGroupAndFutureJobs(jobGroup,
-                  s"table ${p.spec.name} failed to copy")
+                  s"table ${p.spec.name} failed")
               throw e
             }
           }
@@ -250,4 +266,11 @@ object ConverterApp {
       srcConn.foreach(c => try c.close() catch { case _: Exception => })
     }
   }
+
+  /** Runs DDL statements in order on `conn`. */
+  private def execute(conn: Connection, ddl: Seq[String]): Unit =
+    if (ddl.nonEmpty) {
+      val st = conn.createStatement()
+      try ddl.foreach(st.executeUpdate) finally st.close()
+    }
 }

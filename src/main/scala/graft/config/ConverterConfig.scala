@@ -23,6 +23,10 @@ sealed trait Dialect {
   /** PK clause inside the column list (PostgreSQL) vs trailing after the
     * close-paren (Spanner) — TableConverter.java:220-245. */
   def pkInsideColumnList: Boolean
+  /** Whether `ALTER TABLE … ADD PRIMARY KEY` can key an existing table,
+    * so a migration can build the key after loading the rows (Derby,
+    * PostgreSQL). Spanner's key is part of its CREATE TABLE. */
+  def canAddPrimaryKey: Boolean
   /** system schemas excluded from every catalog scan —
     * ConverterConfiguration.java:38-41,63-68. */
   def isSystemSchema(schema: String): Boolean
@@ -41,6 +45,7 @@ object Dialect {
 
   case object Spanner extends Dialect {
     val pkInsideColumnList = false
+    val canAddPrimaryKey = false
     def isSystemSchema(s: String): Boolean =
       s != null && (s.equalsIgnoreCase("INFORMATION_SCHEMA") ||
         s.toUpperCase.startsWith("PG_"))
@@ -48,6 +53,7 @@ object Dialect {
   }
   case object PostgreSql extends Dialect {
     val pkInsideColumnList = true
+    val canAddPrimaryKey = true
     def isSystemSchema(s: String): Boolean =
       s != null && (s.equalsIgnoreCase("INFORMATION_SCHEMA") ||
         s.toUpperCase.startsWith("PG_"))
@@ -56,6 +62,7 @@ object Dialect {
   /** Embedded Derby — test dialect (not in the reference). */
   case object Derby extends Dialect {
     val pkInsideColumnList = true
+    val canAddPrimaryKey = true
     def isSystemSchema(s: String): Boolean =
       s != null && s.toUpperCase.startsWith("SYS")
     val defaultSchema = "APP"

@@ -152,18 +152,21 @@ class DerbyEndToEndSpec extends SparkTestBase {
     val ix = IndexSpec("idx_sup_name", Seq(("s_name", true)), unique = true)
     val spec = graft.app.ConverterApp.specFromStruct(
       "sup_ix", src.schema, Seq("s_suppkey"), Seq(ix))
-    // stage 1+2: table then index DDL from one script (Converter.java:69-83)
+    // one script: the bare table, then the key and the index that
+    // ConverterApp builds after the load
     val script = DdlGenerator.script(spec, Dialect.Derby,
       ConvertMode.SkipExisting, existsInDestination = false) match {
       case Right(s) => s
       case Left(e) => fail(e)
     }
-    assert(script.size == 2 && script(1) ==
-      "CREATE UNIQUE INDEX idx_sup_name ON sup_ix (s_name)")
+    assert(script.size == 3 &&
+      script(1) == "ALTER TABLE sup_ix ADD PRIMARY KEY (s_suppkey)" &&
+      script(2) == "CREATE UNIQUE INDEX idx_sup_name ON sup_ix (s_name)", script)
     script.foreach(st.executeUpdate)
-    // re-introspection sees the UNIQUE index back, and the PK-backing
-    // index is still correctly skipped (J3)
+    // re-introspection sees the key and the UNIQUE index back, and the
+    // PK-backing index is still correctly skipped (J3)
     val seen = Catalog.introspectTable(c, Some("APP"), "SUP_IX")
+    assert(seen.primaryKey.map(_.toUpperCase) == Seq("S_SUPPKEY"))
     assert(seen.indexes.exists(i =>
       i.name.equalsIgnoreCase("idx_sup_name") && i.unique &&
         i.columns.map(_._1.toUpperCase) == Seq("S_NAME")))
@@ -182,8 +185,9 @@ class DerbyEndToEndSpec extends SparkTestBase {
       "partitioned copy to a Derby destination — zero parquet") {
     val srcUrl = "jdbc:derby:memory:graftJ2Jsrc"
     val dstUrl = "jdbc:derby:memory:graftJ2Jdst"
-    // --- seed the SOURCE database: 2 PK tables (one with a secondary
-    // index, one composite-PK) + 1 PK-less table the app must skip
+    // --- seed the SOURCE database: 2 PK tables (one with two secondary
+    // indexes, one composite-PK with a UNIQUE index over a DESC column)
+    // + 1 PK-less table the app must skip
     val sc = DriverManager.getConnection(srcUrl + ";create=true")
     try {
       val st = sc.createStatement()
@@ -194,10 +198,13 @@ class DerbyEndToEndSpec extends SparkTestBase {
           | acct_id BIGINT NOT NULL, owner VARCHAR(40), balance DOUBLE,
           | PRIMARY KEY (acct_id))""".stripMargin)
       st.executeUpdate("CREATE INDEX idx_accounts_owner ON accounts (owner)")
+      st.executeUpdate("CREATE INDEX idx_accounts_bal ON accounts (balance DESC, owner)")
       st.executeUpdate(
         """CREATE TABLE ledger (
           | acct_id BIGINT NOT NULL, seq INTEGER NOT NULL, amount DOUBLE,
           | PRIMARY KEY (acct_id, seq))""".stripMargin)
+      st.executeUpdate(
+        "CREATE UNIQUE INDEX ux_ledger_amount ON ledger (amount DESC, seq)")
       st.executeUpdate("CREATE TABLE notes (txt VARCHAR(40))") // no PK
       val pa = sc.prepareStatement("INSERT INTO accounts VALUES (?, ?, ?)")
       for (i <- 0 until 500) {
@@ -241,6 +248,18 @@ class DerbyEndToEndSpec extends SparkTestBase {
       // composite PK survived
       assert(Catalog.introspectTable(dc, Some("APP"), "LEDGER")
         .primaryKey.map(_.toUpperCase) == Seq("ACCT_ID", "SEQ"))
+      // the key and indexes built after the load match the source's:
+      // key columns and order; index names, columns, direction, uniqueness
+      val source = DriverManager.getConnection(srcUrl)
+      try for (t <- Seq("ACCOUNTS", "LEDGER")) {
+        val want = Catalog.introspectTable(source, Some("APP"), t)
+        val got = Catalog.introspectTable(dc, Some("APP"), t)
+        assert(got.primaryKey == want.primaryKey, t)
+        assert(got.indexes == want.indexes, t)
+      } finally source.close()
+      assert(Catalog.introspectTable(dc, Some("APP"), "LEDGER").indexes == Seq(
+        graft.catalog.IndexSpec("UX_LEDGER_AMOUNT", Seq(("AMOUNT", false), ("SEQ", true)),
+          unique = true)))
       // the PK-less table was skipped, as the reference does
       assert(!Catalog.listTables(dc, Dialect.Derby)
         .map(_._2.toUpperCase).contains("NOTES"))
@@ -259,6 +278,68 @@ class DerbyEndToEndSpec extends SparkTestBase {
       assert(one("SELECT COUNT(*), SUM(balance) FROM accounts") == ((na, sa)))
       assert(one("SELECT COUNT(*), SUM(amount) FROM ledger") == ((nl, sl)))
     } finally dc.close()
+  }
+
+  test("ConverterApp SkipAll into an empty destination creates every table " +
+      "with its key and indexes, and copies no row") {
+    val dstUrl = "jdbc:derby:memory:graftSkipAll"
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+      graft.app.ConverterApp.run(Array(sfDir, dstUrl, "SkipAll"), spark)
+    }
+    val log = out.toString("UTF-8")
+    // lineitem has no enforceable key and embeddings no JDBC mapping:
+    // neither is created
+    val created = Tables.names.filterNot(Set("lineitem", "embeddings"))
+    val dc = DriverManager.getConnection(dstUrl)
+    try {
+      assert(Catalog.listTables(dc, Dialect.Derby).map(_._2.toUpperCase).toSet ==
+        created.map(_.toUpperCase).toSet)
+      for (t <- created) {
+        val T = t.toUpperCase
+        assert(log.contains(s"[convert] $t: data skipped (mode=SkipAll"), log)
+        val seen = Catalog.introspectTable(dc, Some("APP"), T)
+        assert(seen.primaryKey == Tables.primaryKeys(t).map(_.toUpperCase), T)
+        assert(seen.indexes == Tables.indexes.getOrElse(t, Nil).map(ix =>
+          ix.copy(name = ix.name.toUpperCase,
+            columns = ix.columns.map { case (c, asc) => (c.toUpperCase, asc) })), T)
+        assert(graft.sources.JdbcHooks.count(dc, T) == 0L, T)
+      }
+    } finally dc.close()
+    assert(log.contains("[convert] TOTAL: 0 records, 0 bytes"), log)
+  }
+
+  test("a duplicate key in the source fails the run loudly: SQLState 23505 " +
+      "naming the table, and no TOTAL line") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-dupkey")
+    try {
+      for (t <- Tables.names.filterNot(_ == "region"))
+        java.nio.file.Files.copy(java.nio.file.Paths.get(sfDir, s"$t.parquet"),
+          dir.resolve(s"$t.parquet"))
+      // region with its first row twice
+      val region = spark.read.parquet(s"$sfDir/region.parquet")
+      region.union(region.limit(1)).coalesce(1)
+        .write.parquet(dir.resolve("region.parquet").toString)
+      val out = new java.io.ByteArrayOutputStream()
+      val ex = Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+        intercept[Exception] {
+          graft.app.ConverterApp.run(Array(dir.toString,
+            "jdbc:derby:memory:graftDupKey", "DropAndRecreate", "--yes"), spark)
+        }
+      }
+      val chain = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).toList
+      assert(chain.exists {
+        case q: java.sql.SQLException => q.getSQLState == "23505"
+        case _ => false
+      }, chain)
+      assert(chain.exists(e => Option(e.getMessage).exists(_.contains("REGION"))), chain)
+      assert(!out.toString("UTF-8").contains("[convert] TOTAL"), out.toString("UTF-8"))
+    } finally {
+      val files = java.nio.file.Files.walk(dir)
+      try files.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally files.close()
+    }
   }
 
   test("ConverterApp JDBC mode sizes each table's copy by the reference's " +

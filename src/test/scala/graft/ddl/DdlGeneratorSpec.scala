@@ -61,11 +61,69 @@ class DdlGeneratorSpec extends AnyFunSuite {
   }
 
   test("script: DropAndRecreate emits drop, create table, create index in order") {
+    // the key follows the load with the indexes: drop, bare create table,
+    // add primary key, create index
     val Right(script) = DdlGenerator.script(users, Dialect.PostgreSql,
       ConvertMode.DropAndRecreate, existsInDestination = true)
-    assert(script.length == 3)
+    assert(script.length == 4)
     assert(script(0).startsWith("DROP TABLE"))
-    assert(script(1).startsWith("CREATE TABLE"))
-    assert(script(2).startsWith("CREATE INDEX"))
+    assert(script(1).startsWith("CREATE TABLE") && !script(1).contains("PRIMARY KEY"))
+    assert(script(2) == "ALTER TABLE users ADD PRIMARY KEY (id)")
+    assert(script(3).startsWith("CREATE INDEX"))
+  }
+
+  /** A composite key listed out of column order, a UNIQUE index with a
+    * DESC column and a plain one. */
+  private val ledger = TableSpec(None, None, "ledger",
+    Seq(
+      ColumnSpec("acct", Types.BIGINT, 19, 0, nullable = false),
+      ColumnSpec("seq", Types.INTEGER, 10, 0, nullable = false),
+      ColumnSpec("amount", Types.DOUBLE, 0, 0, nullable = true)),
+    primaryKey = Seq("seq", "acct"),
+    indexes = Seq(
+      IndexSpec("ux_ledger_amount", Seq(("amount", false), ("acct", true)), unique = true),
+      IndexSpec("ix_ledger_acct", Seq(("acct", true)), unique = false)))
+
+  private val ledgerIndexes = Seq(
+    "CREATE UNIQUE INDEX ux_ledger_amount ON ledger (amount DESC, acct)",
+    "CREATE INDEX ix_ledger_acct ON ledger (acct)")
+
+  test("plan: Derby and PostgreSQL create the table bare, then add the key " +
+      "(KEY_SEQ order) and the indexes after the load") {
+    for ((dialect, dbl) <- Seq(Dialect.Derby -> "DOUBLE", Dialect.PostgreSql -> "DOUBLE PRECISION")) {
+      val Right(p) = DdlGenerator.plan(ledger, dialect,
+        ConvertMode.DropAndRecreate, existsInDestination = true)
+      assert(p.beforeLoad == Seq("DROP TABLE ledger",
+        s"CREATE TABLE ledger (acct BIGINT NOT NULL, seq INTEGER NOT NULL, amount $dbl)"),
+        dialect)
+      assert(p.afterLoad ==
+        "ALTER TABLE ledger ADD PRIMARY KEY (seq, acct)" +: ledgerIndexes, dialect)
+    }
+  }
+
+  test("plan: Spanner keeps its key in CREATE TABLE and defers only the indexes") {
+    val Right(p) = DdlGenerator.plan(ledger, Dialect.Spanner,
+      ConvertMode.SkipExisting, existsInDestination = false)
+    assert(p.beforeLoad == Seq("CREATE TABLE ledger (acct INT64 NOT NULL, " +
+      "seq INT64 NOT NULL, amount FLOAT64) PRIMARY KEY (seq, acct)"))
+    assert(p.afterLoad == ledgerIndexes)
+  }
+
+  test("script is the plan's beforeLoad ++ afterLoad for every mode, " +
+      "dialect and existence") {
+    import ConvertMode._
+    for {
+      mode <- Seq(SkipAll, SkipExisting, DropAndRecreate, ThrowExceptionIfExists)
+      dialect <- Seq(Dialect.Derby, Dialect.PostgreSql, Dialect.Spanner)
+      exists <- Seq(false, true)
+      spec <- Seq(users, ledger)
+    } {
+      val plan = DdlGenerator.plan(spec, dialect, mode, exists)
+      assert(DdlGenerator.script(spec, dialect, mode, exists) ==
+        plan.map(p => p.beforeLoad ++ p.afterLoad), (mode, dialect, exists, spec.name))
+    }
+    // a skipped table gets no DDL on either side of the load
+    assert(DdlGenerator.plan(users, Dialect.Derby, SkipExisting,
+      existsInDestination = true) == Right(DdlPlan(Nil, Nil)))
   }
 }
